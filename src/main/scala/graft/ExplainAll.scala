@@ -21,14 +21,16 @@ object ExplainAll {
     sb.append("plan-affecting changes. Review points: ReadSchema column pruning,\n")
     sb.append("PushedFilters at the scan, BroadcastHashJoin for small dims,\n")
     sb.append("WholeStageCodegen span width, no unnecessary Exchange.\n")
-    def add(name: String, note: String, df: => org.apache.spark.sql.DataFrame): Unit =
+    def section(name: String, note: String, artifact: => String): Unit =
       try {
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
-        sb.append(s"\n## $name\n\n$note\n\n```\n$plan```\n")
+        val text = artifact
+        sb.append(s"\n## $name\n\n$note\n\n```\n$text```\n")
       } catch { case e: Throwable =>
         sb.append(s"\n## $name\n\nEXPLAIN FAILED: ${e.getMessage}\n")
       }
+    def add(name: String, note: String, df: => org.apache.spark.sql.DataFrame): Unit =
+      section(name, note, df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
     SparkEntry.queries.toSeq.sortBy(_._1).filter(_._1.startsWith("q")).foreach {
       case (name, fn) => add(name, "", fn(spark, sfDir))
     }
@@ -110,17 +112,20 @@ object ExplainAll {
       "The eval-set side (explode+distinct) runs once at filter-build time, " +
       "not per corpus row.",
       SparkEntry.queries("x24_decontam_bloom")(spark, sfDir))
-    add("x23 HostRank — one PageRank power iteration",
-      "Review point: one Exchange for the contribution sum keyed by " +
-      "dst host, one for the node left-join back; contributions are " +
-      "LONGS (quantized) so the partial aggregate is exact under any " +
-      "partitioning. The iterated plan is lineage-truncated every 4th " +
-      "hop (localCheckpoint), like connected components.",
+    section("x23 HostRank — one PageRank power iteration (RDD lineage)",
+      "Review point: this is RDD lineage, not a Catalyst plan — the loop " +
+      "is planless. Each hop is ONE ShuffledRDD carrying the per-dst " +
+      "contributions plus each map partition's dangling-mass partial " +
+      "(addressed to every reducer), between two zipPartitions over the " +
+      "co-partitioned node table; no per-hop action. All shuffled values " +
+      "are LONGS (quantized), so the sums are exact under any partitioning. " +
+      "The node-table subtree (the setup shuffles) prints once per " +
+      "reference but runs once, in the node-count action.",
       {
         val edges = spark.createDataFrame(Seq(
           ("a", "b", 1.0), ("b", "c", 2.0), ("c", "a", 1.0)))
           .toDF("src", "dst", "weight")
-        graft.functions.HostRank.pageRank(edges, iters = 1, truncateFinal = false)
+        graft.functions.HostRank.pageRank(edges, iters = 1).rdd.toDebugString + "\n"
       })
     add("x27 IVF+PQ queryCoded over the coded index",
       "Review point: the scan is the CODES table (16-byte binary codes, " +

@@ -2413,11 +2413,7 @@ object SparkEntry {
         .select(col("source").as("src"),
           concat(lit("ext"), (col("doc_id") % 3).cast("string")).as("dst"),
           lit(0.5).as("weight"))
-      // truncateFinal=false (r6): the 5th hop folds into the caller's
-      // own action instead of paying a separate eager checkpoint job —
-      // lineage is still truncated at hop 4 (it % 4 == 3).
-      graft.functions.HostRank.pageRank(mainE.unionByName(extE), iters = 5,
-          truncateFinal = false)
+      graft.functions.HostRank.pageRank(mainE.unionByName(extE), iters = 5)
         .select(col("host"),
           round(col("rank") * lit(1e12)).cast("long").as("rank_x1e12"))
         .orderBy("host")

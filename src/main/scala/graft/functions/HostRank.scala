@@ -1,172 +1,146 @@
 package graft.functions
 
 import graft.util.Checkpoints
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.storage.StorageLevel
 
 /** PageRank over the host link graph (the x22 outlink aggregate) — the
   * crawl-quality prior: frontier schedulers and quality filters weight
   * hosts by link-graph centrality, the standard web-scale companion to
   * main-content extraction.
   *
-  * Scale shape: ONE shuffle and ONE action per power iteration — the
-  * dangling-mass reduction is a broadcast one-row aggregate folded into
-  * the same job as the contribution join, not a separate driver action.
-  * Ranks and weights are per HOST (~10^7-10^8 rows at crawl scale, not
-  * 10^12 pages). Lineage is truncated every 4th iteration via
-  * [[Checkpoints.truncator]]: `spark.graft.cc.checkpointDir` switches it
-  * to reliable checkpoints for fleet runs.
+  * Scale shape: the co-partitioned RDD iteration of the Spark RDD paper.
+  * Setup builds the node table (each host with its out-edge fractions)
+  * under one `HashPartitioner` and counts it — the only setup action.
+  * Then ONE job runs every hop, each hop ONE shuffle: ranks zip with
+  * their node partition (narrow) and emit per-destination contributions
+  * plus the partition's dangling-mass partial, addressed once to every
+  * reduce partition; each reducer sums its inflow AND the whole dangling
+  * mass from that same shuffle and left-joins against its node
+  * partition. No Catalyst planning and no driver action per hop; the
+  * caller's action re-reads only the last hop's shuffle output. Ranks
+  * and weights are per HOST (~10^7-10^8 rows at crawl scale, not 10^12
+  * pages). The partition count follows the input's estimated size
+  * against `spark.sql.adaptive.advisoryPartitionSizeInBytes`, capped at
+  * `spark.sql.shuffle.partitions`, so a small graph runs one task per
+  * stage. With `spark.graft.cc.checkpointDir` set (fleet runs), every
+  * 4th hop is reliably checkpointed so executor loss never replays more
+  * than 4 hops; without it, shuffle lineage is the recovery path.
   *
   * Determinism: EVERY floating sum in the pipeline is quantized to 1e-9
   * units (longs) BEFORE it is shuffled — input edge weights on entry
   * (so multi-edge weights, out-weights and their ratios are exact for
   * ARBITRARY double weights, not just integral ones), and per-edge rank
-  * contributions per iteration. Integer addition is associative, so
-  * ranks are bit-identical under any partitioning. Sub-quantum edges
-  * (weight < 0.5e-9) drop out — their source becomes dangling, which is
-  * the honest reading of a zero-quantum link. Weights must be
-  * non-negative and below ~9.2e9 (long range at Q = 1e9).
+  * contributions and dangling mass per iteration. Integer addition is
+  * associative, so ranks are bit-identical under any partitioning and
+  * equal [[pageRankLocal]]. Sub-quantum edges (weight < 0.5e-9) drop out
+  * — their source becomes dangling, which is the honest reading of a
+  * zero-quantum link. Weights must be non-negative and below ~9.2e9
+  * (long range at Q = 1e9).
   */
 object HostRank {
 
   final val Q = 1e9
 
   /** Spark's Round-on-double semantics (HALF_UP over the decimal value,
-    * scala BigDecimal) then a long cast — the driver-side mirror must
-    * round EXACTLY this way or values within 1 ULP of .5 diverge from
-    * the distributed `round(x).cast("long")`. */
+    * scala BigDecimal) then a long cast — every in-loop quantization
+    * must round EXACTLY this way or values within 1 ULP of .5 diverge
+    * from the entry projection's `round(x).cast("long")`. */
   private def roundQ(x: Double): Long =
     BigDecimal(x).setScale(0, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble.toLong
 
-  /** edges: (src, dst, weight) host-level multi-edge list. Returns
-    * (host, rank) with sum(rank) ~= 1. `truncateFinal = false` keeps the
-    * last iteration's full lineage (ExplainAll publishes the one-hop
-    * plan as a reviewable artifact; a checkpoint would hide it). */
-  def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-      truncateFinal: Boolean = true): DataFrame =
-    graft.util.SessionTuning.withCachedPlanAqe(edges.sparkSession) {
-      pageRankImpl(edges, iters, damping, truncateFinal)
-    }
+  /** A host's out-edges as parallel arrays; empty = dangling. */
+  private final case class Links(dsts: Array[String], fracs: Array[Double])
 
-  private def pageRankImpl(edges: DataFrame, iters: Int, damping: Double,
-      truncateFinal: Boolean): DataFrame = {
+  /** Routes a hop's shuffle: `Right(host)` contributions go where the
+    * node table keeps that host; `Left(p)` is a dangling-mass partial
+    * addressed to reduce partition `p`. */
+  private final class HopPartitioner(hosts: HashPartitioner) extends Partitioner {
+    def numPartitions: Int = hosts.numPartitions
+    def getPartition(key: Any): Int = key match {
+      case Left(p: Int) => p
+      case Right(h)     => hosts.getPartition(h)
+    }
+  }
+
+  /** edges: (src, dst, weight) host-level multi-edge list. Returns
+    * (host, rank) with sum(rank) ~= 1. */
+  def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
     val spark = edges.sparkSession
-    val truncate0 = Checkpoints.truncator(spark)
-    // quantize each input weight BEFORE any aggregation: long sums are
-    // partitioning-invariant where double sums are not
-    val e = edges.select(col("src").cast("string").as("src"),
-      col("dst").cast("string").as("dst"),
-      round(col("weight").cast("double") * Q).cast("long").as("w_q"))
-      .groupBy("src", "dst").agg(sum(col("w_q")).as("w_q"))
-      .filter(col("w_q") > 0)
-      .persist()
-    val outW = e.groupBy(col("src")).agg(sum(col("w_q")).as("out_w_q"))
-    // r6b: weighted persists LAZILY — its cache fills from cached `e`
-    // during the first job that reads it (the hop-3 checkpoint), so the
-    // dedicated eager `weighted.count()` action is gone. `e` stays
-    // pinned until after the loop so that fill reads the cache, not the
-    // source.
-    val weighted = e.join(outW, Seq("src"))
-      .select(col("src"), col("dst"), (col("w_q") / col("out_w_q")).as("frac"))
-      .persist()
-    // r6: the dangling classification (host has no outlink) is FIXED
-    // for the whole run, so it is computed ONCE here as a boolean on
-    // the node table and carried through every hop's rank rows.
-    // r6b: built as ONE aggregation (max of a per-occurrence boolean)
-    // instead of distinct + distinct + left join — same host set, same
-    // has_out flag, two fewer exchanges inside the setup action.
-    val nodes = e.select(col("src").as("host"), lit(true).as("has_out"))
-      .unionByName(e.select(col("dst").as("host"), lit(false).as("has_out")))
-      .groupBy(col("host")).agg(max(col("has_out")).as("has_out"))
-      .persist()
-    val n = nodes.count() // the ONLY setup action: fills e + nodes caches
+    val reliable = Checkpoints.reliableDir(spark).isDefined
+    // quantize each input weight BEFORE any aggregation, with Spark's
+    // HALF_UP Round: long sums are partitioning-invariant where double
+    // sums are not
+    val quantized = edges.select(col("src").cast("string"), col("dst").cast("string"),
+      round(col("weight").cast("double") * Q).cast("long"))
+    val conf = spark.sessionState.conf
+    val parts = (quantized.queryExecution.optimizedPlan.stats.sizeInBytes /
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
+      .min(conf.numShufflePartitions).toInt
+    val hosts = new HashPartitioner(parts)
+    val wq = quantized.rdd
+      .flatMap(r => if (r.isNullAt(2)) None else Some(((r.getString(0), r.getString(1)), r.getLong(2))))
+      .reduceByKey(hosts, _ + _)
+      .filter(_._2 > 0)
+    val adjacency = wq.map { case ((s, d), w) => (s, (d, w)) }.groupByKey(hosts)
+      .mapValues { ds =>
+        val a = ds.toArray
+        val outW = a.map(_._2).sum.toDouble
+        Links(a.map(_._1), a.map(_._2.toDouble / outW))
+      }
+    val noLinks = Links(Array.empty, Array.empty)
+    val nodes = adjacency
+      .fullOuterJoin(wq.map { case ((_, d), _) => (d, ()) }.reduceByKey(hosts, (u, _) => u), hosts)
+      .mapValues(_._1.getOrElse(noLinks))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = nodes.count() // the ONLY setup action
     // loud failure beats Infinity ranks from 1/0 (the IvfIndex seeding
-    // lesson: degenerate inputs must not produce silent garbage) — and
-    // the failure path must release what it pinned
+    // lesson: degenerate inputs must not produce silent garbage)
     if (n == 0) {
-      e.unpersist(); weighted.unpersist(); nodes.unpersist()
+      nodes.unpersist()
       throw new IllegalArgumentException(
         "HostRank.pageRank: no hosts to rank (empty edge list, or every weight quantized to zero)")
     }
     val base = (1.0 - damping) / n
-    // r6b: no eager checkpoint of the INITIAL ranks — it is a 1-deep
-    // projection over the pinned `nodes` cache, so truncating its
-    // lineage bought nothing and cost a full driver action; the hop
-    // truncation every 4th iteration still bounds recompute depth.
-    var ranks = nodes.select(col("host"), lit(1.0 / n).as("rank"), col("has_out"))
-    // r6: non-checkpoint iterations persist LAZILY instead of
-    // persist+count — each eager count was a full driver action (job
-    // + scheduling) per hop, the dominant cost of a small-graph run
-    // (q76 bench: 5 hops, ~10 actions). The caches fill during the
-    // next checkpoint's job: each hop's dangling broadcast is built
-    // before the main stage and materializes the previous hop's rank
-    // partitions on the way, so within-job consumers still reuse
-    // rather than recompute; shuffle/broadcast exchanges between hops
-    // are additionally deduped by Spark's exchange reuse. Lineage is
-    // still truncated every 4th hop, bounding recompute depth.
-    // Unpersists move to AFTER the loop: releasing a lazily-persisted
-    // hop before any action has run would silently discard the cache.
-    val pinnedHops = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    // r6b: in LOCAL mode (no reliable checkpoint dir) every hop is a
-    // LAZY localCheckpoint — the hop's logical plan collapses to a
-    // LogicalRDD leaf, so per-hop plans stay CONSTANT-size instead of
-    // doubling per hop (dangling + inflow each reference the previous
-    // ranks: depth-4 lineage meant ~2^4 copies of the setup subtree and
-    // a measured ~0.9 s optimizer stall before the checkpoint job, plus
-    // 0.2-0.3 s AQE replans of the mega-tree per late stage). Lazy means
-    // no dedicated driver action; AQE materializes the hop's exchange
-    // stages on construction and the final map segment runs inside
-    // whichever job consumes the hop. Hop storage is freed by the
-    // ContextCleaner when the run's references drop. With a reliable
-    // checkpoint dir set (fleet runs), the every-4th-hop EAGER
-    // checkpoint + lazy-persist design is kept: executor loss must not
-    // lose hop state, which localCheckpoint cannot guarantee.
-    val localMode = spark.conf.getOption(Checkpoints.ConfKey).isEmpty
-    var it = 0
-    while (it < iters) {
-      // dangling hosts (no outlinks) spread their mass uniformly; the
-      // one-row aggregate rides the SAME job as the contribution join
-      // via a broadcast cross join — a map-side filter on the carried
-      // has_out flag (r6), no join
-      val dangling = ranks.filter(!col("has_out"))
-        .agg(coalesce(sum(round(col("rank") * Q).cast("long")), lit(0L)).as("dangling_q"))
-      val inflow = ranks.join(weighted, ranks("host") === weighted("src"))
-        .select(col("dst").as("host"),
-          round(col("rank") * col("frac") * Q).cast("long").as("contrib_q"))
-        .groupBy(col("host"))
-        .agg(sum(col("contrib_q")).as("inflow_q"))
-      val nextRaw = nodes.join(inflow, Seq("host"), "left")
-        .crossJoin(broadcast(dangling))
-        .select(col("host"),
-          (lit(base) + lit(damping) *
-            (coalesce(col("inflow_q"), lit(0L)) / Q +
-              col("dangling_q") / lit(Q) / lit(n.toDouble))).as("rank"),
-          col("has_out"))
-      val last = it == iters - 1
-      val next =
-        if (localMode) {
-          if (last && !truncateFinal) nextRaw // folds into the caller's action
-          else if (last) truncate0(nextRaw)   // eager: contract says final is materialized
-          else nextRaw.localCheckpoint(eager = false)
-        } else {
-          val truncate = (it % 4 == 3 || last) && (truncateFinal || !last)
-          if (truncate) truncate0(nextRaw)
-          else { val p = nextRaw.persist(); pinnedHops += p; p }
+    val hop = new HopPartitioner(hosts)
+    var ranks: RDD[(String, Double)] = nodes.mapValues(_ => 1.0 / n)
+    for (it <- 0 until iters) {
+      val sums = ranks.zipPartitions(nodes) { (rs, ns) =>
+        val rank = rs.toMap
+        var danglingQ = 0L
+        val inflow: Iterator[(Either[Int, String], Long)] = ns.flatMap { case (h, l) =>
+          val r = rank(h)
+          if (l.dsts.isEmpty) { danglingQ += roundQ(r * Q); Iterator.empty }
+          else l.dsts.indices.iterator.map(i => (Right(l.dsts(i)), roundQ(r * l.fracs(i) * Q)))
         }
-      ranks = next
-      it += 1
+        // `++` is lazy: the partials are emitted after inflow is drained
+        inflow ++ Iterator.tabulate(parts)(p => (Left(p), danglingQ))
+      }.reduceByKey(hop, _ + _)
+      ranks = sums.zipPartitions(nodes) { (ss, ns) =>
+        var danglingQ = 0L
+        val inflowQ = scala.collection.mutable.HashMap.empty[String, Long]
+        ss.foreach {
+          case (Left(_), q)  => danglingQ = q
+          case (Right(h), q) => inflowQ(h) = q
+        }
+        ns.map { case (h, _) =>
+          h -> (base + damping * (inflowQ.getOrElse(h, 0L) / Q + danglingQ / Q / n))
+        }
+      }
+      if (reliable && it % 4 == 3 && it < iters - 1) { ranks.checkpoint(); ranks.count() }
     }
-    pinnedHops.foreach(_.unpersist())
-    // release pinned executor storage: with truncateFinal the returned
-    // ranks are checkpoint-materialized and depend on neither; without
-    // it the lineage can recompute them (slower, never wrong). A
-    // long-lived session invoking pageRank repeatedly must not
-    // accumulate pinned node/weight sets (the r2 lshCandidatePairs
-    // lesson).
-    e.unpersist()
-    weighted.unpersist()
+    // the loop job: every hop runs here, against the pinned node table.
+    // The caller's actions then re-read only the last hop's shuffle
+    // output (and the setup shuffles for the node table), so nothing
+    // stays pinned after return — a long-lived session invoking
+    // pageRank repeatedly accumulates no node sets.
+    ranks.count()
     nodes.unpersist()
-    ranks.select(col("host"), col("rank"))
+    spark.createDataFrame(ranks).toDF("host", "rank")
   }
 
   /** Driver-side reference implementation (tests): identical

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Product quantization (PQ) ANN — the memory-bound half of the
   * billion-scale ANN stack. IVF prunes WHICH vectors a query scans
@@ -71,10 +72,7 @@ object PqSketch {
     * the k lowest vec_ids' subvectors — no dense-id assumption, the
     * IvfIndex seeding lesson). One distributed pass per iteration
     * computes ALL m subspace assignments. */
-  def fit(emb: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 2): Codebooks =
-    fitImpl(emb, m, k, iters)
-
-  private def fitImpl(emb: DataFrame, m: Int, k: Int, iters: Int): Codebooks = {
+  def fit(emb: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 2): Codebooks = {
     val spark = emb.sparkSession
     import spark.implicits._
     // r6: pinned for the duration of fit ONLY (unpersisted before
@@ -89,11 +87,13 @@ object PqSketch {
     // work). An RDD treeAggregate is one planless job per iteration
     // with a fixed-size accumulator, the classic distributed-Lloyd
     // shape. Same math.round quantized-long sums, integer addition is
-    // associative → centroids bit-identical (PqSpec).
+    // associative → centroids bit-identical (PqSpec). MEMORY_AND_DISK:
+    // vectors beyond memory spill instead of being dropped and
+    // re-read from the source on every iteration.
     val vrdd = emb.select(col("vec_id").cast("long"), col("embedding"))
       .as[(Long, Array[Float])].rdd
       .map { case (id, v) => (id, l2normalize(v)) }
-      .persist()
+      .persist(StorageLevel.MEMORY_AND_DISK)
     val seeds = vrdd.takeOrdered(k)(Ordering.by(_._1)).sortBy(_._1).map(_._2)
     if (seeds.length < 2) {
       vrdd.unpersist() // release before the loud failure

@@ -13,11 +13,18 @@ object Checkpoints {
 
   final val ConfKey = "spark.graft.cc.checkpointDir"
 
+  /** The reliable checkpoint directory, registered with the
+    * SparkContext; None in local mode. */
+  def reliableDir(spark: SparkSession): Option[String] = {
+    val ckptDir = spark.conf.getOption(ConfKey)
+    ckptDir.foreach(spark.sparkContext.setCheckpointDir)
+    ckptDir
+  }
+
   /** Resolve the truncator ONCE per operator invocation (the conf read
     * and setCheckpointDir happen at resolution, not per iteration). */
   def truncator(spark: SparkSession): DataFrame => DataFrame = {
-    val ckptDir = spark.conf.getOption(ConfKey)
-    ckptDir.foreach(spark.sparkContext.setCheckpointDir)
-    df => if (ckptDir.isDefined) df.checkpoint(eager = true) else df.localCheckpoint(true)
+    val reliable = reliableDir(spark).isDefined
+    df => if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(true)
   }
 }

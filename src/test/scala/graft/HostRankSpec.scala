@@ -1,6 +1,10 @@
 package graft
 
 import graft.functions.HostRank
+import graft.util.Checkpoints
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,6 +20,40 @@ class HostRankSpec extends AnyFunSuite {
     import spark.implicits._
     val df = spark.createDataset(edges).toDF("src", "dst", "weight").repartition(parts)
     HostRank.pageRank(df).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+  }
+
+  /** Spark jobs started by `body`. Listener events arrive asynchronously,
+    * so a marker job runs afterwards and its end event is awaited: the
+    * listener bus delivers in order, so every job of `body` is counted
+    * by then. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val phase = "graft.spec.phase"
+    val jobs = new AtomicInteger
+    @volatile var marker = -1
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(phase)).foreach {
+          case "body"   => jobs.incrementAndGet()
+          case "marker" => marker = e.jobId
+          case _        =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == marker) drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(phase, "body")
+      body
+      sc.setLocalProperty(phase, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
+    } finally {
+      sc.setLocalProperty(phase, null)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
   }
 
   test("3-cycle converges to uniform ranks") {
@@ -84,11 +122,57 @@ class HostRankSpec extends AnyFunSuite {
     // recompute (and re-cache) on next use. This replaces the old
     // `assume`-cancel with a real assertion in the full-suite run.
     spark.catalog.clearCache()
+    // RDD persists are invisible to the cache manager. Compared by id:
+    // the ContextCleaner may release earlier suites' RDDs meanwhile,
+    // which must not mask (or fake) a leak of this operator's own.
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     val edges = Seq(("a", "b", 1.0), ("b", "a", 1.0))
     (1 to 3).foreach(_ => rankDf(edges, 2))
-    // node/weight sets must be explicitly freed per call; rank sets are
-    // localCheckpoint blocks, which the ContextCleaner releases on GC
     assert(spark.sharedState.cacheManager.isEmpty, "cached plans leaked")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
+    assert(leaked.isEmpty, s"persisted RDDs leaked: $leaked")
+  }
+
+  test("all hops run in one job: the job count does not grow with iters") {
+    import spark.implicits._
+    val edges = spark.createDataset(Seq(
+      ("a", "b", 1.0), ("b", "c", 2.0), ("c", "a", 1.0), ("c", "d", 0.5)))
+      .toDF("src", "dst", "weight")
+    val jobs5 = jobsOf(HostRank.pageRank(edges, iters = 5).collect())
+    val jobs10 = jobsOf(HostRank.pageRank(edges, iters = 10).collect())
+    assert(jobs5 == jobs10, s"a per-hop action is back: $jobs5 jobs at 5 hops, $jobs10 at 10")
+    assert(jobs5 <= 4, s"$jobs5 jobs: setup count + loop + collect should be 3")
+  }
+
+  test("bit-identical at 1 and 7 shuffle partitions and in fleet (reliable checkpoint) mode") {
+    val edges = (0 until 50).map { i =>
+      (s"p${i % 11}", s"p${(i * 7 + 3) % 11}", 0.2 + (i % 5) * 0.35 + i * 1e-5)
+    } ++ Seq(("p0", "sink", 0.9)) // dangling
+    val expected = HostRank.pageRankLocal(edges)
+    val partsKey = "spark.sql.shuffle.partitions"
+    val advisoryKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val partsBefore = spark.conf.get(partsKey)
+    def ranksAt(parts: Int) = {
+      spark.conf.set(partsKey, parts.toString)
+      import spark.implicits._
+      val df = spark.createDataset(edges).toDF("src", "dst", "weight")
+      assert(HostRank.pageRank(df, iters = 1).rdd.getNumPartitions == parts)
+      rankDf(edges, 3)
+    }
+    // a 1-byte advisory size spreads even this tiny graph over every
+    // shuffle partition, so the 7-partition run really runs 7
+    spark.conf.set(advisoryKey, "1")
+    val (r1, r7) = try (ranksAt(1), ranksAt(7))
+      finally { spark.conf.set(partsKey, partsBefore); spark.conf.unset(advisoryKey) }
+    assert(r1 == r7)
+    // fleet mode: 10 hops take reliable checkpoints after hops 4 and 8
+    spark.conf.set(Checkpoints.ConfKey,
+      java.nio.file.Files.createTempDirectory("hostrank_ckpt").toString)
+    val fleet = try rankDf(edges, 3) finally spark.conf.unset(Checkpoints.ConfKey)
+    assert(spark.conf.getOption(Checkpoints.ConfKey).isEmpty)
+    assert(fleet == r1)
+    assert(r1.keySet == expected.keySet)
+    expected.foreach { case (h, v) => assert(r1(h) == v, s"host $h: ${r1(h)} != $v") }
   }
 
   test("dangling mass is redistributed: ranks still sum to ~1") {
