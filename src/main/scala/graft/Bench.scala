@@ -4,6 +4,7 @@ import graft.extract.ExtractMode
 import graft.gen.SynthCorpus
 import graft.icelite.IceLite
 import graft.pipeline.Pipeline
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness (driver-run per round → BENCH_r{N}.json).
@@ -20,32 +21,25 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  private def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", (2 * cores).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // At cluster scale the 128MB default yields ~800k splits per 100TB;
-      // at bench scale (a few GB) it caps scan tasks below core count.
-      .config("spark.sql.files.maxPartitionBytes", (8 * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
-  private def timed[T](f: => T): (T, Double) = {
+  private[graft] def timed[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime()
     val r = f
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
+  private[graft] def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+
+  /** IceLite root of the seed-fixed bench corpus, generated on first use:
+    * `SPARK_GRAFT_BENCH_DOCS` docs (default 2M, so fixed costs amortize at 32 cores). */
+  private[graft] def benchPages(s: SparkSession): String = {
+    val docs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "2000000").toLong
+    val root = s"${SparkEntry.SynthRoot}/bench_${docs}_v${SynthCorpus.GenVersion}/pages"
+    if (!IceLite.exists(s, root)) IceLite.commit(s, root, SynthCorpus.pages(s, docs).toDF())
+    root
+  }
+
   /** Headline query subset (one per operator family). */
-  private val headline = Seq(
+  private[graft] val headline = Seq(
     "q01_pricing_summary", "q02_nation_revenue", "q05_first_event",
     "q08_token_prf", "q09_dedup_exact", "q10_minhash_band",
     "q12_ngram_jaccard", "q13_cosine_topk", "q16_token_count",
@@ -63,12 +57,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    // big enough that fixed stage/scheduling costs amortize at 32 cores
-    val benchDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "2000000").toLong
-    val benchRoot = s"${SparkEntry.SynthRoot}/bench_${benchDocs}_v${graft.gen.SynthCorpus.GenVersion}"
 
     // ---- phase 1: headline queries at the driver-requested parallelism
-    val s1 = session(cpus)
+    val s1 = Sessions.local(cpus)
     // session warmup: pay one-time codegen/file-listing costs outside
     // the timed region (first-query-in-session was measured 6.9s vs
     // 0.25s steady-state for the same aggregation)
@@ -82,8 +73,7 @@ object Bench {
       name -> t
     }
     // materialize the bench corpus once (generation NOT timed)
-    if (!IceLite.exists(s1, s"$benchRoot/pages"))
-      IceLite.commit(s1, s"$benchRoot/pages", SynthCorpus.pages(s1, benchDocs).toDF())
+    val pagesRoot = benchPages(s1)
     s1.stop()
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
@@ -104,9 +94,9 @@ object Bench {
     // per-level bests.
     final case class Pass(n: Long, sec: Double, secChunked: Double, secSalted: Double)
     def onePass(cores: Int, warm: Boolean): Pass = {
-      val s = session(cores)
+      val s = Sessions.local(cores)
       try {
-        val pages = IceLite.read(s, s"$benchRoot/pages")
+        val pages = IceLite.read(s, pagesRoot)
         // untimed warmup on the first pass per level: JIT-compiles the
         // kernel hot loops (JIT state persists across sessions in-JVM) and
         // pays the one-time codegen for the agg plan (the codegen cache is
@@ -162,7 +152,6 @@ object Bench {
     // the real story (KERNEL.md) — publish the spread
     def pairEffs(f: Pass => Double): Seq[Double] =
       pairs.map(m => (f(m.p8) / f(m.p32)) / 4.0)
-    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
     val n8 = pairs.head.p8.n
     val n32 = pairs.head.p32.n
     val sec8 = pairs.map(_.p8.sec).min

@@ -3,7 +3,6 @@ package graft.extract
 import graft.classify.BlockClassifier
 import graft.html.{Block, Dom, Html5Tokenizer}
 import graft.pdf.PdfParser
-import java.nio.charset.StandardCharsets.UTF_8
 
 /** Byte span into the ORIGINAL payload (BASELINE.json: span offsets). */
 final case class Span(start: Long, end: Long, kind: String)
@@ -88,7 +87,7 @@ object Extractor {
   private def extractHtml(bytes: Array[Byte], mode: ExtractMode): ExtractResult = {
     // ONE ThreadLocal fetch per document for all kernel scratch (r6b)
     val ks = graft.html.KernelScratch.get()
-    val blocks = Dom.blocksStreamingBuf(bytes, ks) // fused: no token list (DiagPhase)
+    val blocks = Dom.blocksStreamingBuf(bytes, ks) // fused: no token list
     // mode-specific selection predicate (density gate unless the user
     // pointed at a region — reference '[red] OCR:' / box prompts).
     // Takes the already-computed keep verdict so the classifier runs
@@ -190,6 +189,4 @@ object Extractor {
     while (i >= 0) { c += 1; i = s.indexOf(sub, i + sub.length) }
     c
   }
-
-  def textBytes(r: ExtractResult): Array[Byte] = r.text.getBytes(UTF_8)
 }

@@ -217,7 +217,7 @@ object Dom {
 
   /** Fused path: bytes → blocks in one scan, no token materialization
     * (the per-doc token array, TextRun strings and comment bodies were
-    * ~40% of html kernel cost — DiagPhase). */
+    * measured at ~40% of html kernel cost). */
   def blocksStreaming(bytes: Array[Byte]): Vector[Block] = {
     val sink = new BlockSink
     Html5Tokenizer.stream(bytes, sink)
@@ -226,9 +226,6 @@ object Dom {
 
   /** Buffer variant for the extraction hot loop (r6): skips the
     * Vector conversion; same blocks in the same order. */
-  private[graft] def blocksStreamingBuf(bytes: Array[Byte]): ArrayBuffer[Block] =
-    blocksStreamingBuf(bytes, KernelScratch.get())
-
   private[graft] def blocksStreamingBuf(bytes: Array[Byte],
       ks: KernelScratch): ArrayBuffer[Block] = {
     val sink = new BlockSink(ks)
@@ -416,7 +413,7 @@ object Dom {
           } else if (tableDepth > 0) {
             name match {
               case "td" | "th" if tableDepth == 1 =>
-                if (inCell) { tblRow += Dom.normalize(tblCell); inCell = false }
+                if (inCell) { tblRow += Dom.normalize(tblCell, null, ks); inCell = false }
               case "tr" if tableDepth == 1 =>
                 if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
               case _ => ()

@@ -143,13 +143,11 @@ object Html5Tokenizer {
     '', '‘', '’', '“', '”', '•', '–', '—',
     '˜', '™', 'š', '›', 'œ', '', 'ž', 'Ÿ')
 
-  /** Lenient decode with byte-offset tracking. Invalid UTF-8 sequences
-    * become U+FFFD advancing one byte (never throws). */
   /** Per-thread reusable decode buffers: the decoder's 6-bytes-per-input-
     * byte transient allocation was the kernel's dominant GC pressure at
     * high parallelism (allocation-stall measured at local[32]); the
     * tokenizer consumes the Decoded fully before the next document, so
-    * within `tokenize` the scratch is safe to reuse. */
+    * the scratch is safe to reuse. */
   private val scratchChars = new ThreadLocal[Array[Char]] {
     override def initialValue(): Array[Char] = new Array[Char](64 * 1024)
   }
@@ -157,20 +155,16 @@ object Html5Tokenizer {
     override def initialValue(): Array[Int] = new Array[Int](64 * 1024 + 1)
   }
 
-  def decode(bytes: Array[Byte], charset: String): Decoded =
-    decodeImpl(bytes, charset, reuse = false)
-
-  private def decodeImpl(bytes: Array[Byte], charset: String, reuse: Boolean): Decoded = {
+  /** Charset sniff + lenient decode with byte-offset tracking, into the
+    * per-thread scratch (also timed alone by `graft.Probe kernel phase`).
+    * Invalid UTF-8 sequences become U+FFFD advancing one byte (never throws). */
+  private[graft] def decode(bytes: Array[Byte]): Decoded = {
+    val charset = sniffCharset(bytes)
     val n = bytes.length
     // worst case one char per byte (+1 offset sentinel); primitive arrays,
     // no boxing — this runs once per document byte
-    val chars =
-      if (!reuse) new Array[Char](n)
-      else {
-        var c = scratchChars.get()
-        if (c.length < n) { c = new Array[Char](n + (n >> 1)); scratchChars.set(c) }
-        c
-      }
+    var chars = scratchChars.get()
+    if (chars.length < n) { chars = new Array[Char](n + (n >> 1)); scratchChars.set(chars) }
     charset match {
       case "iso-8859-1" | "windows-1252" =>
         // single-byte charsets: char index == byte offset, no offs array
@@ -189,13 +183,8 @@ object Html5Tokenizer {
     var asc = 0
     while (asc < n && bytes(asc) >= 0) { chars(asc) = bytes(asc).toChar; asc += 1 }
     if (asc == n) return new Decoded(chars, null, n, identityOffs = true)
-    val offs =
-      if (!reuse) new Array[Int](n + 1)
-      else {
-        var o = scratchOffs.get()
-        if (o.length < n + 1) { o = new Array[Int](n + (n >> 1) + 1); scratchOffs.set(o) }
-        o
-      }
+    var offs = scratchOffs.get()
+    if (offs.length < n + 1) { offs = new Array[Int](n + (n >> 1) + 1); scratchOffs.set(offs) }
     var k = 0
     @inline def put(c: Char, at: Int): Unit = { chars(k) = c; offs(k) = at; k += 1 }
     // identity offsets for the already-decoded ASCII prefix
@@ -228,19 +217,12 @@ object Html5Tokenizer {
     new Decoded(chars, offs, k)
   }
 
-  def tokenize(bytes: Array[Byte]): scala.collection.immutable.ArraySeq[HtmlToken] = {
-    val d = decodeImpl(bytes, sniffCharset(bytes), reuse = true)
-    tokenizeDecoded(d)
-  }
-
-  /** Diagnostic hook (DiagPhase): charset-sniff + decode only, no token
-    * scan — isolates the decode loop's share of tokenizer cost. */
-  private[graft] def decodeOnly(bytes: Array[Byte]): Decoded =
-    decodeImpl(bytes, sniffCharset(bytes), reuse = true)
+  def tokenize(bytes: Array[Byte]): scala.collection.immutable.ArraySeq[HtmlToken] =
+    tokenizeDecoded(decode(bytes))
 
   /** Streaming consumer of the token scan — the fused path (Dom builds
     * blocks directly from these events with no token materialization;
-    * DiagPhase measured the token list + replay at ~2x the event cost).
+    * the token list + replay was measured at ~2x the event cost).
     *
     * Contract: `text`'s `buf` is a REUSED buffer, valid only during the
     * call — copy (append) immediately, never retain. `comment`/`doctype`
@@ -265,8 +247,7 @@ object Html5Tokenizer {
 
   /** Tokenize straight into a sink — decode + single scan, no token list. */
   def stream(bytes: Array[Byte], sink: TokenSink): Unit =
-    streamDecoded(decodeImpl(bytes, sniffCharset(bytes), reuse = true), sink,
-      KernelScratch.get())
+    streamDecoded(decode(bytes), sink, KernelScratch.get())
 
   def tokenizeDecoded(d: Decoded): scala.collection.immutable.ArraySeq[HtmlToken] = {
     val out = Array.newBuilder[HtmlToken]

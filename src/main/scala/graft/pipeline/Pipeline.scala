@@ -165,7 +165,7 @@ object Pipeline {
           Seq(ChunkRow(url, ts, 0, 1, text,
             text.substring(0, math.min(text.length, Chunker.ThumbnailChars))))
         case "html" =>
-          val blocks = Dom.blocksStreaming(html) // fused: no token list (DiagPhase)
+          val blocks = Dom.blocksStreaming(html) // fused: no token list
           val kept = Extractor.suppressRepeats(blocks.filter(BlockClassifier.keep))
           val segs = Chunker.segments(kept)
           val thumb = Chunker.thumbnail(kept)

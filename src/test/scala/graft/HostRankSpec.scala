@@ -1,10 +1,8 @@
 package graft
 
 import graft.functions.HostRank
+import graft.obs.StageListener
 import graft.util.Checkpoints
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,39 +20,9 @@ class HostRankSpec extends AnyFunSuite {
     HostRank.pageRank(df).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
   }
 
-  /** Spark jobs started by `body`. Listener events arrive asynchronously,
-    * so a marker job runs afterwards and its end event is awaited: the
-    * listener bus delivers in order, so every job of `body` is counted
-    * by then. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val phase = "graft.spec.phase"
-    val jobs = new AtomicInteger
-    @volatile var marker = -1
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(phase)).foreach {
-          case "body"   => jobs.incrementAndGet()
-          case "marker" => marker = e.jobId
-          case _        =>
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == marker) drained.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(phase, "body")
-      body
-      sc.setLocalProperty(phase, "marker")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus did not drain")
-    } finally {
-      sc.setLocalProperty(phase, null)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
+  /** Spark jobs started by `body`. */
+  private def jobsOf(body: => Unit): Int =
+    StageListener.record(spark.sparkContext)(body)._2.jobs.size
 
   test("3-cycle converges to uniform ranks") {
     val edges = Seq(("a", "b", 1.0), ("b", "c", 1.0), ("c", "a", 1.0))
@@ -142,6 +110,17 @@ class HostRankSpec extends AnyFunSuite {
     val jobs10 = jobsOf(HostRank.pageRank(edges, iters = 10).collect())
     assert(jobs5 == jobs10, s"a per-hop action is back: $jobs5 jobs at 5 hops, $jobs10 at 10")
     assert(jobs5 <= 4, s"$jobs5 jobs: setup count + loop + collect should be 3")
+  }
+
+  test("stage listener: a groupBy count over 3 partitions records its shuffle stages") {
+    val df = spark.range(0, 300, 1, 3).selectExpr("id % 7 AS k")
+    val (rows, rec) = StageListener.record(spark.sparkContext)(df.groupBy("k").count().collect())
+    assert(rows.length == 7)
+    assert(rec.stages.size >= 2, s"stages: ${rec.stages}")
+    assert(rec.stages.map(_.shuffleWriteBytes).sum > 0, s"stages: ${rec.stages}")
+    rec.jobs.foreach { j =>
+      assert(rec.stages.filter(_.jobId == j.id).map(_.tasks).sum == j.tasks, s"$rec")
+    }
   }
 
   test("bit-identical at 1 and 7 shuffle partitions and in fleet (reliable checkpoint) mode") {
