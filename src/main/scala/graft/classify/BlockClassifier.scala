@@ -42,14 +42,4 @@ object BlockClassifier {
       b.words >= MinListItemWords && b.linkDensity <= 0.2
     else b.words >= MinFreeTextWords
   }
-
-  /** Per-doc classification stats (kept, dropped, keptChars) for the
-    * lineage table (SURVEY.md A9). */
-  def stats(blocks: Seq[Block]): (Long, Long, Long) = {
-    var kept = 0L; var dropped = 0L; var keptChars = 0L
-    blocks.foreach { b =>
-      if (keep(b)) { kept += 1; keptChars += b.text.length } else dropped += 1
-    }
-    (kept, dropped, keptChars)
-  }
 }

@@ -1,11 +1,10 @@
 package graft.extract
 
-import graft.html.Block
-
 /** Document chunking — the analog of the reference's multi-crop tiling
-  * (`dynamic_preprocess`, GOT/demo/run_ocr_2.0_crop.py:57-95): split an
-  * oversized document into 1..6 ordered segments plus one "thumbnail"
-  * summary, extract per segment, reassemble by index.
+  * (`dynamic_preprocess`, GOT/demo/run_ocr_2.0_crop.py:57-95): cut the
+  * blocks one Plain extraction emits into 1..6 ordered segments plus one
+  * "thumbnail" summary (the text cut to `ThumbnailChars`). The
+  * segments joined in index order are the Plain text itself.
   */
 object Chunker {
 
@@ -55,37 +54,28 @@ object Chunker {
   /** Thumbnail length (chars of plain text). */
   final val ThumbnailChars = 200
 
-  /** Split the block list into 1..6 contiguous, order-preserving
-    * segments of roughly equal character mass. Reassembling the per-
-    * segment extractions in index order is identical to extracting the
-    * whole list (chunk→reassemble identity, property-tested). */
-  def segments(blocks: Vector[Block]): Vector[Vector[Block]] = {
-    if (blocks.isEmpty) return Vector(Vector.empty)
-    val totalChars = blocks.map(_.text.length.toLong).sum
+  /** Split the emitted blocks, given by their text lengths, into 1..6
+    * contiguous, order-preserving segments of roughly equal character
+    * mass; returns each segment's end (exclusive block index). The last
+    * cut may land on the final block, which leaves one segment fewer; no
+    * blocks is one empty segment, `Array(0)`. */
+  def segmentEnds(lens: Array[Int]): Array[Int] = {
+    var totalChars = 0L
+    lens.foreach(totalChars += _)
     val n = math.min(MaxSegments,
       math.max(1L, (totalChars + SegCharBudget - 1) / SegCharBudget)).toInt
-    if (n == 1) return Vector(blocks)
     val perSeg = totalChars.toDouble / n
-    val out = Vector.newBuilder[Vector[Block]]
-    var cur = Vector.newBuilder[Block]
+    val ends = Array.newBuilder[Int]
     var acc = 0L
-    var emitted = 0
-    blocks.foreach { b =>
-      cur += b
-      acc += b.text.length
-      if (emitted < n - 1 && acc >= perSeg * (emitted + 1)) {
-        out += cur.result(); cur = Vector.newBuilder[Block]; emitted += 1
-      }
+    var cuts = 0
+    var last = 0
+    var i = 0
+    while (i < lens.length) {
+      acc += lens(i)
+      i += 1
+      if (cuts < n - 1 && acc >= perSeg * (cuts + 1)) { ends += i; cuts += 1; last = i }
     }
-    val last = cur.result()
-    if (last.nonEmpty) out += last
-    out.result()
-  }
-
-  /** Thumbnail = leading slice of the plain rendering (the reference
-    * appends a downscaled whole-image tile; ours is a summary prefix). */
-  def thumbnail(blocks: Vector[Block]): String = {
-    val full = blocks.map(_.text).mkString("\n")
-    if (full.length <= ThumbnailChars) full else full.substring(0, ThumbnailChars)
+    if (last < lens.length || lens.isEmpty) ends += lens.length
+    ends.result()
   }
 }

@@ -1,8 +1,9 @@
 package graft.extract
 
 import graft.classify.BlockClassifier
-import graft.html.{Block, Dom, Html5Tokenizer}
+import graft.html.{Block, Dom, KernelScratch}
 import graft.pdf.PdfParser
+import scala.collection.mutable.ArrayBuilder
 
 /** Byte span into the ORIGINAL payload (BASELINE.json: span offsets). */
 final case class Span(start: Long, end: Long, kind: String)
@@ -61,14 +62,21 @@ object Extractor {
     }
   }
 
-  def extract(bytes: Array[Byte], mode: ExtractMode): Either[String, ExtractResult] = {
+  def extract(bytes: Array[Byte], mode: ExtractMode): Either[String, ExtractResult] =
+    extract(bytes, mode, null)
+
+  /** `emitted`, when non-null, receives the text length of every block
+    * the HTML path emits, in output order: the block boundaries
+    * `Chunker.segmentEnds` cuts on. A PDF emits none. */
+  private[graft] def extract(bytes: Array[Byte], mode: ExtractMode,
+      emitted: ArrayBuilder.ofInt): Either[String, ExtractResult] = {
     try {
       if (bytes.length > MaxDocBytes) Left("too_large")
       else payloadKind(bytes) match {
         case "empty"  => Left("empty")
         case "binary" => Left("binary_payload")
         case "pdf"    => Right(extractPdf(bytes))
-        case _        => Right(extractHtml(bytes, mode))
+        case _        => Right(extractHtml(bytes, mode, emitted))
       }
     } catch {
       // never-throw contract: anything unexpected is quarantined
@@ -77,17 +85,15 @@ object Extractor {
   }
 
   private def extractPdf(bytes: Array[Byte]): ExtractResult = {
-    val text0 = PdfParser.extractText(bytes)
-    val text = if (text0.length > MaxOutChars) text0.substring(0, MaxOutChars) else text0
+    val text = cut(PdfParser.extractText(bytes), MaxOutChars)
     ExtractResult(text,
       if (text.isEmpty) Vector.empty else Vector(Span(0L, bytes.length.toLong, "pdf")),
       DocMetrics(bytes.length.toLong, 1L, 0L, 0L, 0L, 0L, text.length.toLong))
   }
 
-  private def extractHtml(bytes: Array[Byte], mode: ExtractMode): ExtractResult = {
-    // ONE ThreadLocal fetch per document for all kernel scratch (r6b)
-    val ks = graft.html.KernelScratch.get()
-    val blocks = Dom.blocksStreamingBuf(bytes, ks) // fused: no token list
+  private def extractHtml(bytes: Array[Byte], mode: ExtractMode,
+      emitted: ArrayBuilder.ofInt): ExtractResult = {
+    val blocks = Dom.blocksStreaming(bytes) // fused: no token list
     // mode-specific selection predicate (density gate unless the user
     // pointed at a region — reference '[red] OCR:' / box prompts).
     // Takes the already-computed keep verdict so the classifier runs
@@ -104,7 +110,7 @@ object Extractor {
     val format = mode == ExtractMode.Format
     // single pass: select -> repeat-suppress -> render -> span, no
     // intermediate block Vectors (per-doc allocation is the scale cost)
-    val sb = { val b = ks.outText; b.setLength(0); b } // thread-reused (r6b)
+    val sb = { val b = KernelScratch.get().outText; b.setLength(0); b } // thread-reused (r6b)
     val spans = Vector.newBuilder[Span]
     var seen: scala.collection.mutable.HashSet[String] = null // lazy: rare
     var kept = 0L; var dropped = 0L; var keptChars = 0L
@@ -124,13 +130,12 @@ object Extractor {
           if (sb.length > 0) sb.append('\n')
           if (format) sb.append(renderBlock(b, format = true)) else sb.append(b.text)
           spans += Span(b.startByte, b.endByte, b.kind)
+          if (emitted != null) emitted += b.text.length
         }
       }
       bi += 1
     }
-    var text = sb.toString
-    if (format) text = repairLeftRight(text)
-    if (text.length > MaxOutChars) text = text.substring(0, MaxOutChars)
+    val text = cut(if (format) repairLeftRight(sb.toString) else sb.toString, MaxOutChars)
     ExtractResult(text, spans.result(),
       DocMetrics(bytes.length.toLong, 0L, blocks.length.toLong,
         kept, dropped, keptChars, text.length.toLong))
@@ -140,14 +145,12 @@ object Extractor {
     b.cls == color || b.cls.split(' ').contains(color) ||
       b.style.replace(" ", "").contains("color:" + color)
 
-  /** O4: emit an exact-duplicate long block only once. */
-  def suppressRepeats(blocks: Vector[Block]): Vector[Block] = {
-    val seen = scala.collection.mutable.HashSet.empty[String]
-    blocks.filter { b =>
-      if (b.words < NoRepeatWords) true
-      else seen.add(b.text)
-    }
-  }
+  /** `s` cut to `n` chars, one char shorter when the cut would end on a
+    * high surrogate: a lone surrogate is not encodable, and Spark's UTF-8
+    * row encode would store it as '?'. */
+  private[graft] def cut(s: String, n: Int): String =
+    if (s.length <= n) s
+    else s.substring(0, if (Character.isHighSurrogate(s.charAt(n - 1))) n - 1 else n)
 
   /** Structure-preserving rendering (Format mode): headings get markdown
     * marks, list items get dashes, tables render as \begin{tabular} so

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Html5Tokenizer, HtmlToken, TagClose, TagOpen, TextRun}
+import graft.html.{Html5Tokenizer, TagOpen}
 import scala.collection.mutable.ArrayBuffer
 
 /** Outlink extraction — the web-graph construction operator a crawl-scale

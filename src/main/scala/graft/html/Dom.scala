@@ -195,48 +195,19 @@ object Dom {
     new String(outBuf, out, k)
   }
 
-  /** Replay a materialized token list into the block builder — kept for
-    * tests and callers that already hold tokens; the extraction kernel
-    * uses the fused `blocksStreaming` (no token list, one pass). Both
-    * paths share ONE builder (`BlockSink`), so they cannot diverge. */
-  def blocks(tokens: scala.collection.IndexedSeq[HtmlToken]): Vector[Block] = {
-    val sink = new BlockSink
-    var ti = 0
-    val tn = tokens.length
-    while (ti < tn) {
-      tokens(ti) match {
-        case t: TagOpen  => sink.tagOpen(t)
-        case t: TagClose => sink.tagClose(t.name, t.startByte, t.endByte)
-        case t: TextRun  => sink.text(t.text, t.startByte, t.endByte)
-        case _           => () // comments, doctype
-      }
-      ti += 1
-    }
-    sink.result()
-  }
-
   /** Fused path: bytes → blocks in one scan, no token materialization
     * (the per-doc token array, TextRun strings and comment bodies were
-    * measured at ~40% of html kernel cost). */
-  def blocksStreaming(bytes: Array[Byte]): Vector[Block] = {
-    val sink = new BlockSink
-    Html5Tokenizer.stream(bytes, sink)
-    sink.result()
-  }
-
-  /** Buffer variant for the extraction hot loop (r6): skips the
-    * Vector conversion; same blocks in the same order. */
-  private[graft] def blocksStreamingBuf(bytes: Array[Byte],
-      ks: KernelScratch): ArrayBuffer[Block] = {
+    * measured at ~40% of html kernel cost). Returns the builder's own
+    * buffer: a fresh one per call, no Vector copy. */
+  def blocksStreaming(bytes: Array[Byte]): ArrayBuffer[Block] = {
+    val ks = KernelScratch.get()
     val sink = new BlockSink(ks)
-    Html5Tokenizer.stream(bytes, sink)
+    Html5Tokenizer.streamDecoded(Html5Tokenizer.decode(bytes), sink, ks)
     sink.resultBuffer()
   }
 
   /** The single block-building state machine, fed by tokenizer events. */
   final class BlockSink(ks: KernelScratch) extends Html5Tokenizer.TokenSink {
-    def this() = this(KernelScratch.get())
-
     /** The sink reads attributes only on table (class) and block-start
       * tags (class/style via startBlock) — inline tags (a/span/b/img,
       * which carry most crawl-HTML attributes, href above all) skip
@@ -450,8 +421,6 @@ object Dom {
           }
         }
     }
-
-    def result(): Vector[Block] = resultBuffer().toVector
 
     private[graft] def resultBuffer(): ArrayBuffer[Block] = {
       flush(0L)

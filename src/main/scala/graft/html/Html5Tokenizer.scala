@@ -1,7 +1,5 @@
 package graft.html
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Tokens carry the BYTE span [startByte, endByte) they were decoded from,
   * so downstream span offsets always index into the original payload
   * (BASELINE.json: "per-url extracted text and span offsets").
@@ -217,19 +215,15 @@ object Html5Tokenizer {
     new Decoded(chars, offs, k)
   }
 
-  def tokenize(bytes: Array[Byte]): scala.collection.immutable.ArraySeq[HtmlToken] =
-    tokenizeDecoded(decode(bytes))
-
   /** Streaming consumer of the token scan — the fused path (Dom builds
     * blocks directly from these events with no token materialization;
     * the token list + replay was measured at ~2x the event cost).
     *
     * Contract: `text`'s `buf` is a REUSED buffer, valid only during the
     * call — copy (append) immediately, never retain. `comment`/`doctype`
-    * pass a raw char range for the same reason. Event order and text-run
-    * batching are IDENTICAL to the token list `tokenize` returns — the
-    * builder adapter below is the proof (it reconstructs exactly the old
-    * output), and the goldens pin both paths byte-for-byte. */
+    * pass a raw char range for the same reason. A token list is these
+    * events materialized as `HtmlToken`s; the test sources build one and
+    * replay it through `Dom.BlockSink` as the fused path's reference. */
   trait TokenSink {
     /** Sinks that never read some tags' attributes can return false to
       * skip attr STRING construction for those names (r6b) — the
@@ -248,25 +242,6 @@ object Html5Tokenizer {
   /** Tokenize straight into a sink — decode + single scan, no token list. */
   def stream(bytes: Array[Byte], sink: TokenSink): Unit =
     streamDecoded(decode(bytes), sink, KernelScratch.get())
-
-  def tokenizeDecoded(d: Decoded): scala.collection.immutable.ArraySeq[HtmlToken] = {
-    val out = Array.newBuilder[HtmlToken]
-    streamDecoded(d, new TokenSink {
-      def tagOpen(t: TagOpen): Unit = out += t
-      def tagClose(name: String, startByte: Int, endByte: Int): Unit =
-        out += TagClose(name, startByte, endByte)
-      def text(buf: CharSequence, startByte: Int, endByte: Int): Unit =
-        out += TextRun(buf.toString, startByte, endByte)
-      def comment(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit =
-        out += CommentTok(new String(chars, from, len), startByte, endByte)
-      def doctype(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit =
-        out += DoctypeTok(new String(chars, from, len), startByte, endByte)
-    })
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(out.result())
-  }
-
-  def streamDecoded(d: Decoded, sink: TokenSink): Unit =
-    streamDecoded(d, sink, KernelScratch.get())
 
   private[html] def streamDecoded(d: Decoded, sink: TokenSink, ks: KernelScratch): Unit = {
     val s = d.chars

@@ -1,11 +1,9 @@
 package graft.pipeline
 
-import graft.extract.{DocMetrics, ExtractMode, Extractor, Span}
-import graft.html.{Dom, Html5Tokenizer}
-import graft.classify.BlockClassifier
-import graft.extract.Chunker
+import graft.extract.{Chunker, DocMetrics, ExtractMode, Extractor, Span}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuilder
 
 /** One extracted document (SURVEY.md §1.2 answer-record mapping).
   * `status` is "ok" or a quarantine reason — failures are routed to a
@@ -14,9 +12,6 @@ import org.apache.spark.sql.functions._
 final case class ExtractedDoc(url: String, warc_ts: java.sql.Timestamp,
     mode: String, text: String, spans: Seq[Span], status: String,
     metrics: DocMetrics)
-
-final case class ChunkRow(url: String, warc_ts: java.sql.Timestamp,
-    chunk_idx: Int, n_chunks: Int, text: String, thumbnail: String)
 
 /** The distributed extraction pipeline (SURVEY.md §3 entry-point
   * mappings): narrow select (column-pruning help — Catalyst cannot see
@@ -67,7 +62,7 @@ object Pipeline {
   /** Per-row-mode extraction: input carries (url, warc_ts, html, mode,
     * mode_args) — the golden-eval shape where each fixture names its own
     * query mode (reference gt entries carry their prompt). */
-  def extractWithModes(rows: DataFrame, numPartitions: Int = 0): Dataset[ExtractedDoc] = {
+  def extractWithModes(rows: DataFrame): Dataset[ExtractedDoc] = {
     val spark = rows.sparkSession
     import spark.implicits._
     val narrowed =
@@ -115,31 +110,36 @@ object Pipeline {
         count(lit(1)).as("n_parts"))
   }
 
-  /** Multi-crop pipeline (entry point 2, SURVEY.md §3): kernel chunks
-    * each document into ≤6 ordered segments (+ thumbnail), segments
-    * shuffle independently, reassembly is an ordered concat — the
-    * sequence-concat of GOT_ocr_2_0.py:151 as a relational group-agg.
-    * Output text is identical to Plain extraction (identity property). */
-  /** All chunks of a document are produced by the SAME kernel call, so
-    * reassembly is local — chunk → render → ordered concat inside one
-    * map, ZERO shuffle. (A groupBy(url) reassembly here would sort-agg
-    * the whole rendered corpus for nothing; the genuinely distributed
-    * group case — parts arriving as separate input ROWS — is multipage,
-    * `reassembleMultiPage`.) The chunk→concat identity property (x04)
-    * still mirrors the reference's per-tile encode + sequence concat
-    * (GOT_ocr_2_0.py:151). */
-  def extractChunked(pages: DataFrame, numPartitions: Int = 0): DataFrame = {
+  /** Multi-crop pipeline (entry point 2, SURVEY.md §3): the reference
+    * tiles a page, encodes every tile and concatenates them in order
+    * (GOT_ocr_2_0.py:151). Here each document goes through the SAME
+    * kernel call as Plain extraction, and the chunk columns are derived
+    * from it: `Chunker` cuts the emitted blocks into ≤6 ordered segments
+    * (`n_chunks`; a PDF is one) and `thumbnail` is the text cut to
+    * `Chunker.ThumbnailChars` like the output cap. All chunks of a
+    * document come from one call, so reassembly needs no shuffle.
+    *
+    * One row per input row, columns `url, status, text, n_chunks,
+    * thumbnail`. `status` is the kernel's: on "ok" rows `text` is
+    * identical to Plain text and `n_chunks ≥ 1`; a quarantined row
+    * carries its reason with `text = ""`, `n_chunks = 0` and
+    * `thumbnail = ""`. */
+  def extractChunked(pages: DataFrame): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val narrowed = pages.select(col("url"), col("warc_ts"), col("html"))
-    narrowed.as[(String, java.sql.Timestamp, Array[Byte])]
-      .flatMap { case (url, ts, html) =>
-        val rows = chunkOne(url, ts, html)
-        if (rows.isEmpty) None
-        else Some((url, rows.map(_.text).mkString("\n"), rows.length,
-          rows.head.thumbnail))
+    pages.select(col("url"), col("html")).as[(String, Array[Byte])]
+      .mapPartitions { it =>
+        val lens = new ArrayBuilder.ofInt
+        it.map { case (url, html) =>
+          lens.clear()
+          Extractor.extract(html, ExtractMode.Plain, lens) match {
+            case Right(res) => (url, "ok", res.text, Chunker.segmentEnds(lens.result()).length,
+              Extractor.cut(res.text, Chunker.ThumbnailChars))
+            case Left(reason) => (url, reason, "", 0, "")
+          }
+        }
       }
-      .toDF("url", "text", "n_chunks", "thumbnail")
+      .toDF("url", "status", "text", "n_chunks", "thumbnail")
   }
 
   /** The classify-then-aggregate stage at corpus scale: per-host content
@@ -155,28 +155,4 @@ object Pipeline {
         sum(col("metrics.bytes_in")).as("bytes_in"),
         sum(col("metrics.blocks_kept")).as("blocks_kept"),
         sum(col("metrics.out_chars")).as("out_chars"))
-
-  private def chunkOne(url: String, ts: java.sql.Timestamp,
-      html: Array[Byte]): Seq[ChunkRow] = {
-    try {
-      Extractor.payloadKind(html) match {
-        case "pdf" =>
-          val text = graft.pdf.PdfParser.extractText(html)
-          Seq(ChunkRow(url, ts, 0, 1, text,
-            text.substring(0, math.min(text.length, Chunker.ThumbnailChars))))
-        case "html" =>
-          val blocks = Dom.blocksStreaming(html) // fused: no token list
-          val kept = Extractor.suppressRepeats(blocks.filter(BlockClassifier.keep))
-          val segs = Chunker.segments(kept)
-          val thumb = Chunker.thumbnail(kept)
-          // thumbnail rides only on chunk 0: shuffling one copy per doc,
-          // not one per chunk
-          segs.zipWithIndex.map { case (seg, idx) =>
-            ChunkRow(url, ts, idx, segs.length, seg.map(_.text).mkString("\n"),
-              if (idx == 0) thumb else "")
-          }
-        case _ => Seq.empty
-      }
-    } catch { case _: Throwable => Seq.empty }
-  }
 }

@@ -1,13 +1,13 @@
 package graft
 
 import graft.extract.{ExtractMode, Extractor}
-import graft.html.{Dom, Html5Tokenizer}
+import graft.html.Dom
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** The fused path (bytes → BlockSink via TokenSink events) and the
-  * token-list path (tokenize → ArraySeq → replay) share one state
-  * machine, but the EVENT STREAM itself could diverge from the token
+  * token-list path (`TokenList`: tokenize → ArraySeq → replay) share one
+  * state machine, but the EVENT STREAM itself could diverge from the token
   * list (run batching, CDATA direct-append, comment ranges, EOF
   * flushes). This fuzzes seeded hostile token soup through both and
   * demands identical blocks — and identical kernel extraction output.
@@ -42,7 +42,7 @@ class FusedPathFuzzSpec extends AnyFunSuite {
     (0 until 500).foreach { i =>
       val s = soup(r)
       val bytes = s.getBytes(UTF_8)
-      val viaTokens = Dom.blocks(Html5Tokenizer.tokenize(bytes))
+      val viaTokens = TokenList.blocks(TokenList.tokenize(bytes))
       val viaStream = Dom.blocksStreaming(bytes)
       assert(viaStream == viaTokens, s"iter $i diverged on: ${s.take(200)}")
     }
@@ -108,7 +108,7 @@ class FusedPathFuzzSpec extends AnyFunSuite {
       val bytes = s.getBytes(UTF_8)
       Extractor.extract(bytes, ExtractMode.Plain) match {
         case Right(res) =>
-          val blocks = Dom.blocks(Html5Tokenizer.tokenize(bytes))
+          val blocks = TokenList.blocks(TokenList.tokenize(bytes))
           val kept = blocks.filter(graft.classify.BlockClassifier.keep)
           val seen = scala.collection.mutable.HashSet.empty[String]
           val expected = kept

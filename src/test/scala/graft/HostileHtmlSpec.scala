@@ -143,6 +143,21 @@ class HostileHtmlSpec extends AnyFunSuite {
       == "before\n\nafter\nsecond paragraph")
   }
 
+  test("output cap never ends on half a surrogate pair") {
+    // U+1F600 is a pair; its high half sits at index MaxOutChars - 1
+    val cap = Extractor.MaxOutChars
+    val text = plain("<p>" + "a" * (cap - 1) + "\ud83d\ude00 tail</p>")
+    // compare lengths and the last char only: a failure message holding
+    // the 1M-char text would carry the lone surrogate into the report
+    val n = text.length
+    val last = text.charAt(n - 1).toInt
+    assert(n == cap - 1)
+    assert(!Character.isHighSurrogate(last.toChar), f"ends in U+$last%04X")
+    // the chunked thumbnail uses the same cut
+    assert(Extractor.cut("ab\ud83d\ude00c", 3) == "ab")
+    assert(Extractor.cut("ab\ud83d\ude00c", 4) == "ab\ud83d\ude00")
+  }
+
   test("spans on hostile inputs stay within payload and ascend") {
     val cases = Seq(
       "<p>alpha beta<h2>Heading words",

@@ -61,6 +61,32 @@ class PipelineSpec extends AnyFunSuite {
     assert(rows.exists(_.getAs[Int]("n_chunks") > 1), "no doc produced >1 chunk")
   }
 
+  test("chunked extraction keeps every input row: status and text equal plain's") {
+    val pages = IceLite.read(spark, dirs._1)
+    val n = pages.count()
+    assert(pages.select("url").distinct().count() == n, "urls must key the join")
+    val chunkedAll = Pipeline.extractChunked(pages)
+    val plainAll = Pipeline.extract(pages, ExtractMode.Plain).toDF()
+    assert(chunkedAll.count() == n, "chunked extraction dropped input rows")
+    assert(plainAll.count() == n)
+    val chunked = chunkedAll.select(col("url").as("c_url"), col("status").as("c_status"),
+      col("text").as("c_text"), col("n_chunks"))
+    val plain = plainAll.select(col("url").as("p_url"), col("status").as("p_status"),
+      col("text").as("p_text"))
+    val rows = chunked.join(plain, col("c_url") === col("p_url"), "full_outer").collect()
+    assert(rows.length == n)
+    val unmatched = rows.filter(r => r.isNullAt(r.fieldIndex("c_url")) || r.isNullAt(r.fieldIndex("p_url")))
+    assert(unmatched.isEmpty, s"${unmatched.length} urls on one side only")
+    rows.foreach { r =>
+      val url = r.getAs[String]("c_url")
+      val status = r.getAs[String]("c_status")
+      assert(status == r.getAs[String]("p_status"), s"status differs for $url")
+      if (status == "ok") assert(r.getAs[String]("c_text") == r.getAs[String]("p_text"), s"text differs for $url")
+      else assert(r.getAs[Int]("n_chunks") == 0, s"quarantined $url has chunks")
+    }
+    assert(rows.exists(_.getAs[String]("c_status") != "ok"), "no quarantined row: the check is vacuous")
+  }
+
   test("resume: kill after first batch, rerun completes exactly the remainder") {
     val base = s"${SparkEntry.SynthRoot}/resume_test_${System.nanoTime()}"
     val out = s"$base/extracted"

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class TokenizerSpec extends AnyFunSuite {
 
-  private def toks(s: String) = Html5Tokenizer.tokenize(s.getBytes(UTF_8))
+  private def toks(s: String) = TokenList.tokenize(s.getBytes(UTF_8))
 
   test("basic tags, text and attributes") {
     val t = toks("""<p class="x" id=y>hi <b>world</b></p>""")
@@ -60,7 +60,7 @@ class TokenizerSpec extends AnyFunSuite {
   test("charset sniffing: latin-1 page decodes") {
     val head = """<html><head><meta charset="iso-8859-1"></head><body><p>"""
     val bytes = head.getBytes(UTF_8) ++ Array(0xe9.toByte) ++ "</p>".getBytes(UTF_8)
-    val t = Html5Tokenizer.tokenize(bytes)
+    val t = TokenList.tokenize(bytes)
     assert(t.collect { case x: TextRun => x.text }.mkString == "é")
   }
 
@@ -84,8 +84,8 @@ class TokenizerSpec extends AnyFunSuite {
     (0 until 500).foreach { _ =>
       val n = r.nextInt(600)
       val bytes = Array.fill(n)((r.nextLong() & 0xff).toByte)
-      val a = Html5Tokenizer.tokenize(bytes)
-      val b = Html5Tokenizer.tokenize(bytes)
+      val a = TokenList.tokenize(bytes)
+      val b = TokenList.tokenize(bytes)
       assert(a == b)
     }
   }
@@ -100,13 +100,13 @@ class TokenizerSpec extends AnyFunSuite {
     (0 until 500).foreach { _ =>
       val s = (0 until r.nextInt(40)).map(_ => pieces(r.nextInt(pieces.length))).mkString
       val bytes = s.getBytes(UTF_8)
-      val t = Html5Tokenizer.tokenize(bytes)
+      val t = TokenList.tokenize(bytes)
       t.foreach { tok =>
         assert(tok.startByte >= 0 && tok.endByte <= bytes.length)
         assert(tok.startByte <= tok.endByte)
       }
       // blocks must be total on hostile inputs too
-      val blocks = Dom.blocks(t)
+      val blocks = TokenList.blocks(t)
       blocks.foreach(b => assert(b.text != null))
     }
   }
@@ -115,7 +115,7 @@ class TokenizerSpec extends AnyFunSuite {
     // same markup, ascii-only payload: offsets must equal char indices
     val s = "<div><p id=a>hello &amp; goodbye</p><br><pre>x\n y</pre></div>"
     val bytes = s.getBytes(UTF_8)
-    val t = Html5Tokenizer.tokenize(bytes)
+    val t = TokenList.tokenize(bytes)
     t.foreach { tok =>
       assert(tok.startByte >= 0 && tok.endByte <= bytes.length && tok.startByte <= tok.endByte)
     }
@@ -124,7 +124,7 @@ class TokenizerSpec extends AnyFunSuite {
     assert(run.startByte == s.indexOf("hello")) // identity: char idx == byte off
     // appending one multi-byte char at the END must not change earlier offsets
     val s2 = s + "é"
-    val t2 = Html5Tokenizer.tokenize(s2.getBytes(UTF_8))
+    val t2 = TokenList.tokenize(s2.getBytes(UTF_8))
     val run2 = t2.collect { case x: TextRun => x }.head
     assert(run2.startByte == run.startByte && run2.endByte == run.endByte)
   }

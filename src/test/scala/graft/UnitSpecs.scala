@@ -2,7 +2,6 @@ package graft
 
 import graft.classify.BlockClassifier
 import graft.extract.{Chunker, ExtractMode, Extractor}
-import graft.html.{Dom, Html5Tokenizer}
 import graft.pdf.{PdfParser, PdfWriter}
 import graft.pipeline.{Metrics, Render}
 import graft.util.{Hash64, SplitMix64}
@@ -27,7 +26,7 @@ class HashSpec extends AnyFunSuite {
 }
 
 class DomSpec extends AnyFunSuite {
-  private def blocks(s: String) = Dom.blocks(Html5Tokenizer.tokenize(s.getBytes(UTF_8)))
+  private def blocks(s: String) = TokenList.blocks(TokenList.tokenize(s.getBytes(UTF_8)))
 
   test("block segmentation: p, headings, list items, pre") {
     val b = blocks("<body><h1>T</h1><p>para one</p><ul><li>item alpha</li><li>item beta</li></ul><pre>a\n b</pre></body>")
@@ -104,15 +103,22 @@ class ChunkerSpec extends AnyFunSuite {
   test("segments: contiguous, order-preserving, ≤6, reassembly identity") {
     val r = new SplitMix64(7L)
     (0 until 50).foreach { _ =>
-      val blocks = Vector.tabulate(1 + r.nextInt(60)) { i =>
-        graft.html.Block("p", "x" * (1 + r.nextInt(800)) + i.toString, Vector.empty,
-          "", "", 0, 10, false, 0, 0, 0, 0)
-      }
-      val segs = Chunker.segments(blocks)
-      assert(segs.length <= Chunker.MaxSegments)
-      assert(segs.flatten == blocks) // identity under reassembly
-      assert(segs.forall(_.nonEmpty) || blocks.isEmpty)
+      val lens = Array.fill(1 + r.nextInt(60))(1 + r.nextInt(800))
+      val ends = Chunker.segmentEnds(lens)
+      assert(ends.length >= 1 && ends.length <= Chunker.MaxSegments)
+      // contiguous and order-preserving: strictly ascending cuts that
+      // end on the last block, so no segment is empty
+      val starts = 0 +: ends.init
+      assert(starts.zip(ends).forall { case (a, b) => a < b })
+      assert(ends.last == lens.length)
+      // reassembly identity: the segments' lengths sum to the total
+      val segLens = starts.zip(ends).map { case (a, b) => lens.slice(a, b).map(_.toLong).sum }
+      assert(segLens.sum == lens.map(_.toLong).sum)
     }
+    // a single block above the whole budget is still one segment
+    assert(Chunker.segmentEnds(Array(Chunker.MaxSegments * Chunker.SegCharBudget * 2)).toSeq == Seq(1))
+    // no emitted blocks: one empty segment
+    assert(Chunker.segmentEnds(Array.emptyIntArray).toSeq == Seq(0))
   }
 }
 
