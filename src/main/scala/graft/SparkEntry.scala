@@ -22,7 +22,9 @@ object SparkEntry {
 
   // ------------------------------------------------------- synth corpora
 
-  final val SynthRoot = "/root/repo/target/synth"
+  /** Synth corpora and index caches: `target/synth` under the working
+    * directory (the checkout, for sbt's forked `test` and `runMain`). */
+  val SynthRoot: String = new java.io.File("target/synth").getAbsolutePath
   final val MicroDocs = 400L
 
   /** Micro pages+golden tables, IceLite-committed once per JVM/disk. */

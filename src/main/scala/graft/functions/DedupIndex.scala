@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.util.IndexManifest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -8,10 +9,10 @@ import org.apache.spark.sql.functions._
   * ONCE and persisted; each incoming crawl delta probes new-vs-old and
   * new-vs-new WITHOUT ever recomputing old-vs-old (at 10^12 docs the
   * full-corpus x08 pass costs what it costs — paying it per ingest
-  * batch is the thing this index exists to avoid). Follows the
-  * IvfIndex/PostingsIndex persisted-operator discipline: partitioned
-  * parquet + XOR-maintained staleness MANIFEST + append that equals
-  * rebuild.
+  * batch is the thing this index exists to avoid). A persisted
+  * operator like IvfIndex/PostingsIndex: partitioned parquet + the
+  * XOR-maintained staleness manifest of `graft.util.IndexManifest` +
+  * append that equals rebuild.
   *
   * Layout under `dir`:
   *   hashes/hb=<0..255>/   (h STRING md5, rep_id LONG)  — one row per
@@ -20,8 +21,8 @@ import org.apache.spark.sql.functions._
   *                         sig ARRAY<LONG>) — band rows of exact-dup
   *                         REPRESENTATIVES only (exact members never
   *                         band — same as lshCandidatePairs)
-  *   MANIFEST              rows + bit_xor(xxhash64(doc_id, text)) +
-  *                         build params
+  *   manifest              [[IndexManifest]] of (doc_id, text) +
+  *                         bands, minhashK
   *
   * Probe reads are PRUNED twice: partition elimination on hb/kb (a
   * small delta touches few of the 256 buckets) and an equi-semi-join
@@ -37,10 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object DedupIndex extends Serializable {
 
-  // agg + join-back, never a window over the content hash — see
-  // TextSketch.withRep for the mega-key reasoning (VERDICT r4 #1)
-  private def withRep(docs: DataFrame): DataFrame = TextSketch.withRep(docs)
-
   private def bandRows(uniqueDocs: DataFrame): DataFrame = {
     val spark = uniqueDocs.sparkSession
     import spark.implicits._
@@ -55,39 +52,27 @@ object DedupIndex extends Serializable {
       .withColumn("kb", pmod(col("key"), lit(256)).cast("int"))
   }
 
-  private def fingerprint(docs: DataFrame): (Long, Long) = {
-    val r = docs.select(xxhash64(col("doc_id"), col("text")).as("x"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(x)").as("fp")).head()
-    // bit_xor over zero rows is NULL — an empty corpus/delta (a crawl
-    // round that fetched nothing) fingerprints as 0, not an NPE
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  /** Hash and band rows of `repRows` (h, doc_id = its own rep, text):
+    * build and append both write through here. */
+  private def writeReps(repRows: DataFrame, dir: String, mode: String): Unit = {
+    repRows.select(col("h"), col("doc_id").as("rep_id"))
+      .withColumn("hb", conv(substring(col("h"), 1, 2), 16, 10).cast("int"))
+      .write.mode(mode).partitionBy("hb").parquet(s"$dir/hashes")
+    bandRows(repRows.select(col("doc_id"), col("text")))
+      .write.mode(mode).partitionBy("kb").parquet(s"$dir/bands")
   }
 
-  // manifest I/O goes through the Hadoop FS of `dir` (graft.util.FsText)
-  // so the index can live on HDFS/S3 alongside its parquet (ADVICE r4)
-  private def hconf(spark: SparkSession) =
-    spark.sparkContext.hadoopConfiguration
+  private def stats(docs: DataFrame): IndexManifest.Stats =
+    IndexManifest.stats(docs, col("doc_id"), col("text"))
 
-  private def writeManifest(spark: SparkSession, dir: String, rows: Long,
-      fp: Long): Unit =
-    graft.util.FsText.write(hconf(spark), s"$dir/MANIFEST",
-      s"""{"rows":$rows,"fingerprint":$fp,"bands":${TextSketch.Bands},"minhashK":${TextSketch.MinHashK}}""")
-
-  private def readManifest(spark: SparkSession, dir: String): (Long, Long) = {
-    val txt = graft.util.FsText.read(hconf(spark), s"$dir/MANIFEST")
-    val rows = "\"rows\":(-?\\d+)".r.findFirstMatchIn(txt).get.group(1).toLong
-    val fp = "\"fingerprint\":(-?\\d+)".r.findFirstMatchIn(txt).get.group(1).toLong
-    (rows, fp)
-  }
+  private val params: Seq[(String, Any)] =
+    Seq("bands" -> TextSketch.Bands, "minhashK" -> TextSketch.MinHashK)
 
   /** True iff the index at `dir` was built from exactly this corpus
     * (same rows, same order-independent content fingerprint). */
   def isCurrent(dir: String, docs: DataFrame): Boolean =
-    graft.util.FsText.exists(hconf(docs.sparkSession), s"$dir/MANIFEST") && {
-      val (rows, fp) = fingerprint(
-        docs.select(col("doc_id").cast("long").as("doc_id"), col("text")))
-      readManifest(docs.sparkSession, dir) == ((rows, fp))
-    }
+    IndexManifest.isCurrent(docs.sparkSession, dir,
+      stats(docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))), params)
 
   /** Build the index from the full corpus (doc_id, text). */
   def build(docs: DataFrame, dir: String): Unit = {
@@ -96,20 +81,13 @@ object DedupIndex extends Serializable {
     // its input twice per evaluation — persist like append() does, or
     // a build costs ~6 corpus scans with md5 recomputed each time
     // (review finding)
-    val reps = withRep(docs)
+    val reps = TextSketch.withRep(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // one row per distinct h, map-only off withRep's join (the rep
       // row is the one whose doc_id IS the rep)
-      reps.filter(col("doc_id") === col("rep_id"))
-        .select(col("h"), col("rep_id"))
-        .withColumn("hb", conv(substring(col("h"), 1, 2), 16, 10).cast("int"))
-        .write.mode("overwrite").partitionBy("hb").parquet(s"$dir/hashes")
-      bandRows(reps.filter(col("doc_id") === col("rep_id"))
-          .select(col("doc_id"), col("text")))
-        .write.mode("overwrite").partitionBy("kb").parquet(s"$dir/bands")
-      val (n, fp) = fingerprint(reps)
-      writeManifest(docs.sparkSession, dir, n, fp)
+      writeReps(reps.filter(col("doc_id") === col("rep_id")), dir, "overwrite")
+      IndexManifest.write(docs.sparkSession, dir, stats(reps), params)
     } finally reps.unpersist()
   }
 
@@ -121,20 +99,15 @@ object DedupIndex extends Serializable {
   def append(spark: SparkSession, dir: String, newDocs: DataFrame): Unit = {
     // the two index writes and the manifest fingerprint all walk the
     // delta lineage — one delta-sized cache instead of three passes
-    val reps = withRep(newDocs)
+    val reps = TextSketch.withRep(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val oldHashes = spark.read.parquet(s"$dir/hashes")
       val fresh = reps.filter(col("doc_id") === col("rep_id"))
         .join(oldHashes.select(col("h")), Seq("h"), "left_anti")
-      fresh.select(col("h"), col("doc_id").as("rep_id"))
-        .withColumn("hb", conv(substring(col("h"), 1, 2), 16, 10).cast("int"))
-        .write.mode("append").partitionBy("hb").parquet(s"$dir/hashes")
-      bandRows(fresh.select(col("doc_id"), col("text")))
-        .write.mode("append").partitionBy("kb").parquet(s"$dir/bands")
-      val (oldN, oldFp) = readManifest(spark, dir)
-      val (dn, dfp) = fingerprint(reps)
-      writeManifest(spark, dir, oldN + dn, oldFp ^ dfp)
+      writeReps(fresh, dir, "append")
+      IndexManifest.write(spark, dir,
+        IndexManifest.read(spark, dir).plus(stats(reps)), params)
     } finally reps.unpersist()
   }
 
@@ -149,7 +122,7 @@ object DedupIndex extends Serializable {
     * shuffle hashed on its bucket column (all rows of a bucket land in
     * one task → one file per bucket dir), write-then-swap so the lazy
     * read never sees its own output dir. The indexed corpus is
-    * unchanged: MANIFEST is untouched, [[isCurrent]] holds across a
+    * unchanged: the manifest is restored verbatim, [[isCurrent]] holds across a
     * compact, and probeDelta results are identical before and after
     * (spec-pinned). Cost: one full read+write of the index — amortize
     * over many appends, exactly like Lucene merges. */
@@ -165,18 +138,12 @@ object DedupIndex extends Serializable {
       fs.delete(src, true)
       fs.rename(tmp, src)
     }
-    // crash-safety discipline (review finding): the delete-then-rename
-    // swap has a window where a data dir is gone — so the MANIFEST (the
-    // validity marker every reader checks first) is taken DOWN before
-    // the swap and restored after. A driver death mid-compact leaves
-    // isCurrent() == false and the caller rebuilds, instead of a
-    // "current" index that throws path-not-found on the next probe.
-    val manifestTxt = graft.util.FsText.read(hconf(spark), s"$dir/MANIFEST")
-    val mp = new org.apache.hadoop.fs.Path(s"$dir/MANIFEST")
-    mp.getFileSystem(conf).delete(mp, false)
-    swapOneFilePerBucket("hashes", "hb")
-    swapOneFilePerBucket("bands", "kb")
-    graft.util.FsText.write(hconf(spark), s"$dir/MANIFEST", manifestTxt)
+    // the delete-then-rename swap has a window where a data dir is gone:
+    // the manifest is down across it (crash-safe, see IndexManifest)
+    IndexManifest.takenDown(spark, dir) {
+      swapOneFilePerBucket("hashes", "hb")
+      swapOneFilePerBucket("bands", "kb")
+    }
   }
 
   /** All near-dup pairs of (indexed corpus ∪ newDocs) touching at
@@ -199,7 +166,7 @@ object DedupIndex extends Serializable {
     // collects below force two eager jobs over the delta lineage, and
     // the returned plan evaluates it once more — without these persists
     // every MinHash signature would compute three times per probe
-    val reps = withRep(newDocs)
+    val reps = TextSketch.withRep(newDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // -- exact dups vs the indexed corpus: hb-pruned equi-join

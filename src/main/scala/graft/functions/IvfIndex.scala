@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.IndexManifest
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF (inverted-file) ANN index — the production form of
@@ -14,62 +15,56 @@ import org.apache.spark.sql.functions._
   *   centroids/  (cell INT, centroid ARRAY<DOUBLE>)   — K rows, tiny
   *   cells/cell=<i>/...parquet (vec_id LONG, embedding ARRAY<FLOAT>)
   */
-object IvfIndex {
+object IvfIndex extends Serializable {
 
-  /** Order-independent content fingerprint of the embeddings input:
-    * bit-XOR of xxhash64(vec_id, embedding) over all rows. Cheap (one
-    * map + one agg), partitioning-invariant, and any in-place content
-    * change — re-embedding, id remap — flips it even when the row count
-    * is preserved (the failure mode a count-only manifest waves through).
-    * XOR lets PAIRS of identical duplicate rows cancel; acceptable for a
-    * staleness check (vec_id participates, so ids are never identical). */
-  def contentFingerprint(emb: DataFrame): Long = manifestStats(emb)._2
-
-  /** (row count, content fingerprint) in ONE scan — build/isCurrent need
-    * both, and at 10^9 vectors two separate passes double the manifest
-    * cost for no reason. */
-  private def manifestStats(emb: DataFrame): (Long, Long) = {
-    val r = emb.select(xxhash64(col("vec_id"), col("embedding")).as("h"))
-      .agg(count(lit(1)).as("n"), expr("bit_xor(h)").as("fp")).head()
-    (r.getLong(0), r.getLong(1))
-  }
-
-  private def manifestJson(stats: (Long, Long), nCells: Int, iters: Int): String =
-    s"""{"rows":${stats._1},"fingerprint":${stats._2},"nCells":$nCells,"iters":$iters}"""
-
-  /** Deterministic centroid seeds: the nCells lowest vec_ids — WITHOUT
-    * assuming ids are dense from 0 (an id space starting above nCells
-    * would otherwise yield an empty seed set and a silently degenerate
-    * index). Fails loudly below 2 seeds. */
-  private[functions] def seedCentroids(vecs: org.apache.spark.sql.Dataset[(Long, Array[Float])],
-      nCells: Int): Array[Array[Double]] = {
-    val idCol = vecs.columns.head // "vec_id" or "_1" depending on caller
-    val seeds = vecs.orderBy(col(idCol)).limit(nCells)
-      .collect().sortBy(_._1).map(_._2.map(_.toDouble))
-    require(seeds.length >= 2,
-      s"IVF needs >= 2 seed vectors, got ${seeds.length} — input empty or near-empty")
-    seeds
-  }
-
-  /** Fit centroids (deterministic quantized Lloyd, identical to
-    * ivfTopK's) and write the partitioned index. */
-  def build(emb: DataFrame, dir: String, nCells: Int = 16, iters: Int = 2): Unit = {
+  /** (vec_id LONG, embedding): the one read of an embeddings table. */
+  private[functions] def vectors(emb: DataFrame): Dataset[(Long, Array[Float])] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val vecs = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    var centroids: Array[Array[Double]] = seedCentroids(vecs, nCells)
-    def nearest(cs: Array[Array[Double]], v: Array[Float]): Int = {
-      var best = 0; var bestCos = -2.0
-      var c = 0
-      while (c < cs.length) {
-        val cos = TextSketch.cosineD(cs(c), v)
-        if (cos > bestCos) { bestCos = cos; best = c }
-        c += 1
-      }
-      best
+    emb.select(col("vec_id").cast("long"), col("embedding")).as[(Long, Array[Float])]
+  }
+
+  /** Fixed-point scale of the Lloyd sums. Components are quantized to
+    * longs before summing: integer addition is associative and
+    * commutative, so centroids are bit-identical under ANY partitioning
+    * or parallelism (ADVICE r1: double reduceGroups order depends on
+    * partitioning; fp addition is non-associative). The 1e-6
+    * quantization is far below any cell-assignment decision boundary,
+    * and 2^63 / 1e6 leaves ~9e12 unit-scale vectors per cell of
+    * headroom. PqSketch's codebook fit uses the same scale. */
+  private[functions] final val Q = 1e6
+
+  /** Index of the centroid with the highest cosine; first wins ties. */
+  private[functions] def nearest(cs: Array[Array[Double]], v: Array[Float]): Int = {
+    var best = 0; var bestCos = -2.0
+    var c = 0
+    while (c < cs.length) {
+      val cos = TextSketch.cosineD(cs(c), v)
+      if (cos > bestCos) { bestCos = cos; best = c }
+      c += 1
     }
-    val Q = 1e6 // fixed-point sums: order-independent means (see ivfTopK)
+    best
+  }
+
+  /** The `nProbe` cells a query probes, highest cosine first. */
+  private def probes(cs: Array[Array[Double]], v: Array[Float], nProbe: Int): Seq[Int] =
+    cs.indices.sortBy(c => -TextSketch.cosineD(cs(c), v)).take(nProbe)
+
+  /** The centroid fit shared by ivfTopK and both index builds. Seeds:
+    * the nCells lowest vec_ids — WITHOUT assuming ids are dense from 0
+    * (an id space starting above nCells would otherwise yield an empty
+    * seed set and a silently degenerate index); fails loudly below 2.
+    * Then `iters` Lloyd iterations: assign (a map over the centroids) ->
+    * per-cell quantized sums (one groupBy of K rows) -> a collect of the
+    * K means; a cell that loses every vector keeps its centroid. */
+  private[functions] def fit(vecs: Dataset[(Long, Array[Float])], nCells: Int,
+      iters: Int): Array[Array[Double]] = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    var centroids = vecs.orderBy(col(vecs.columns.head)).limit(nCells)
+      .collect().sortBy(_._1).map(_._2.map(_.toDouble))
+    require(centroids.length >= 2,
+      s"IVF needs >= 2 seed vectors, got ${centroids.length} — input empty or near-empty")
     (1 to iters).foreach { _ =>
       val cs = centroids
       val means = vecs
@@ -84,31 +79,81 @@ object IvfIndex {
         .collect().toMap
       centroids = centroids.indices.map(c => means.getOrElse(c, centroids(c))).toArray
     }
-    val cs = centroids
-    cs.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
-      .toDF("cell", "centroid")
+    centroids
+  }
+
+  /** (cell, vec_id, embedding): every vector under its nearest cell. */
+  private[functions] def assign(vecs: Dataset[(Long, Array[Float])],
+      cs: Array[Array[Double]]): DataFrame = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    vecs.map { case (id, v) => (nearest(cs, v), id, v) }.toDF("cell", "vec_id", "embedding")
+  }
+
+  /** (cell, query_id, qv): one row per query per probed cell. */
+  private[functions] def probeRows(queries: Dataset[(Long, Array[Float])],
+      cs: Array[Array[Double]], nProbe: Int): DataFrame = {
+    val spark = queries.sparkSession
+    import spark.implicits._
+    queries.flatMap { case (id, v) => probes(cs, v, nProbe).map(c => (c, id, v)) }
+      .toDF("cell", "query_id", "qv")
+  }
+
+  /** Exact cosine within the probed cells: [[assign]]-shaped `cells`
+    * joined to the broadcast [[probeRows]] on cell, self-matches dropped,
+    * a vector reached via several probed cells deduped by max, then the
+    * bounded per-query top-k ([[TopK.neighbors]], score cos_x10000). */
+  private[functions] def scoreProbed(cells: DataFrame, probed: DataFrame, k: Int,
+      audit: Column*): DataFrame = {
+    val spark = cells.sparkSession
+    import spark.implicits._
+    val scored = cells.join(broadcast(probed), Seq("cell"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), col("qv"), col("embedding"))
+      .as[(Long, Long, Array[Float], Array[Float])]
+      .map { case (qid, vid, qv, v) => (qid, vid, TextSketch.cosine(qv, v)) }
+      .toDF("query_id", "id", "score")
+      .groupBy(col("query_id"), col("id"))
+      .agg(max(col("score")).as("score"))
+    TopK.neighbors(scored, k, "cos_x10000", audit: _*)
+  }
+
+  private def fitAndWriteCentroids(vecs: Dataset[(Long, Array[Float])], dir: String,
+      nCells: Int, iters: Int): Array[Array[Double]] = {
+    val spark = vecs.sparkSession
+    import spark.implicits._
+    val cs = fit(vecs, nCells, iters)
+    cs.zipWithIndex.map { case (v, c) => (c, v) }.toSeq.toDF("cell", "centroid")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    vecs.map { case (id, v) => (nearest(cs, v), id, v) }
-      .toDF("cell", "vec_id", "embedding")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
-    // staleness manifest: reuse decisions compare this against the
-    // current input — row count AND content fingerprint AND the build
-    // params that shape the index (an index dir surviving an in-place
-    // input change would otherwise serve stale neighbors silently)
-    graft.util.FsText.write(spark.sparkContext.hadoopConfiguration,
-      s"$dir/MANIFEST", manifestJson(manifestStats(emb), nCells, iters))
+    cs
+  }
+
+  private def readCentroids(spark: SparkSession, dir: String): Array[Array[Double]] = {
+    import spark.implicits._
+    spark.read.parquet(s"$dir/centroids")
+      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
+  }
+
+  private def stats(emb: DataFrame): IndexManifest.Stats =
+    IndexManifest.stats(emb, col("vec_id"), col("embedding"))
+
+  private def ivfParams(nCells: Int, iters: Int): Seq[(String, Any)] =
+    Seq("nCells" -> nCells, "iters" -> iters)
+
+  /** Fit centroids (the same fit as ivfTopK) and write the partitioned
+    * index plus its staleness manifest. */
+  def build(emb: DataFrame, dir: String, nCells: Int = 16, iters: Int = 2): Unit = {
+    val vecs = vectors(emb)
+    val cs = fitAndWriteCentroids(vecs, dir, nCells, iters)
+    assign(vecs, cs).write.mode("overwrite").partitionBy("cell").parquet(s"$dir/cells")
+    IndexManifest.write(emb.sparkSession, dir, stats(emb), ivfParams(nCells, iters))
   }
 
   /** True when a usable index exists at `dir` AND its manifest matches
     * the given input (row count + content fingerprint + build params). */
   def isCurrent(spark: SparkSession, dir: String, emb: DataFrame,
-      nCells: Int = 16, iters: Int = 2): Boolean = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    graft.util.FsText.exists(hc, s"$dir/MANIFEST") && {
-      graft.util.FsText.read(hc, s"$dir/MANIFEST") ==
-        manifestJson(manifestStats(emb), nCells, iters)
-    }
-  }
+      nCells: Int = 16, iters: Int = 2): Boolean =
+    IndexManifest.isCurrent(spark, dir, stats(emb), ivfParams(nCells, iters))
 
   // ------------------------------------------------- IVF + PQ composed
 
@@ -124,38 +169,8 @@ object IvfIndex {
       m: Int = 16, kCodes: Int = 16, iters: Int = 2, pqIters: Int = 4): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val vecs = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    var centroids: Array[Array[Double]] = seedCentroids(vecs, nCells)
-    def nearest(cs: Array[Array[Double]], v: Array[Float]): Int = {
-      var best = 0; var bestCos = -2.0
-      var c = 0
-      while (c < cs.length) {
-        val cos = TextSketch.cosineD(cs(c), v)
-        if (cos > bestCos) { bestCos = cos; best = c }
-        c += 1
-      }
-      best
-    }
-    val Q = 1e6
-    (1 to iters).foreach { _ =>
-      val cs = centroids
-      val means = vecs
-        .map { case (_, v) => (nearest(cs, v), (v.map(x => math.round(x.toDouble * Q)), 1L)) }
-        .groupByKey(_._1)
-        .reduceGroups { (a, b) =>
-          val s = a._2._1.clone()
-          var i = 0; while (i < s.length) { s(i) += b._2._1(i); i += 1 }
-          (a._1, (s, a._2._2 + b._2._2))
-        }
-        .map { case (cell, (_, (sum, n))) => (cell, sum.map(x => x.toDouble / (n * Q))) }
-        .collect().toMap
-      centroids = centroids.indices.map(c => means.getOrElse(c, centroids(c))).toArray
-    }
-    val cs = centroids
-    cs.zipWithIndex.map { case (v, c) => (c, v) }.toSeq
-      .toDF("cell", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
+    val vecs = vectors(emb)
+    val cs = fitAndWriteCentroids(vecs, dir, nCells, iters)
     val cb = PqSketch.fit(emb, m, kCodes, pqIters)
     cb.cents.zipWithIndex.flatMap { case (codes, s) =>
       codes.zipWithIndex.map { case (cent, c) => (s, c, cent) }
@@ -166,22 +181,23 @@ object IvfIndex {
       (nearest(cs, v), id, PqSketch.encodeOne(v, bcCb.value))
     }.toDF("cell", "vec_id", "codes")
       .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
-    graft.util.FsText.write(spark.sparkContext.hadoopConfiguration,
-      s"$dir/MANIFEST_PQ", manifestJson(manifestStats(emb), nCells, iters) +
-        s"""|{"m":$m,"kCodes":$kCodes,"pqIters":$pqIters}""")
+    IndexManifest.write(spark, dir, stats(emb),
+      codedParams(nCells, m, kCodes, iters, pqIters), CodedManifest)
   }
+
+  /** The coded form's own manifest: one `dir` can hold both forms. */
+  private final val CodedManifest = "MANIFEST_PQ"
+
+  private def codedParams(nCells: Int, m: Int, kCodes: Int, iters: Int,
+      pqIters: Int): Seq[(String, Any)] =
+    ivfParams(nCells, iters) ++ Seq("m" -> m, "kCodes" -> kCodes, "pqIters" -> pqIters)
 
   /** True when a coded index at `dir` matches the input + params. */
   def isCurrentCoded(spark: SparkSession, dir: String, emb: DataFrame,
       nCells: Int = 16, m: Int = 16, kCodes: Int = 16,
-      iters: Int = 2, pqIters: Int = 4): Boolean = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    graft.util.FsText.exists(hc, s"$dir/MANIFEST_PQ") && {
-      graft.util.FsText.read(hc, s"$dir/MANIFEST_PQ") ==
-        manifestJson(manifestStats(emb), nCells, iters) +
-          s"""|{"m":$m,"kCodes":$kCodes,"pqIters":$pqIters}"""
-    }
-  }
+      iters: Int = 2, pqIters: Int = 4): Boolean =
+    IndexManifest.isCurrent(spark, dir, stats(emb),
+      codedParams(nCells, m, kCodes, iters, pqIters), CodedManifest)
 
   /** Query the coded index: probe nProbe cells per query (IVF), then
     * ADC-score ONLY the probed cells' code partitions (partition
@@ -190,23 +206,14 @@ object IvfIndex {
   def queryCoded(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int = 5, nProbe: Int = 4): DataFrame = {
     import spark.implicits._
-    val cs = spark.read.parquet(s"$dir/centroids")
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
-    val cbRows = spark.read.parquet(s"$dir/codebooks")
+    val cs = readCentroids(spark, dir)
+    val cents = spark.read.parquet(s"$dir/codebooks")
       .as[(Int, Int, Array[Double])].collect()
-    val m = cbRows.map(_._1).max + 1
-    val kCodes = cbRows.map(_._2).max + 1
-    val subDim = cbRows.head._3.length
-    val cents = Array.ofDim[Array[Double]](m, kCodes)
-    cbRows.foreach { case (s, c, cent) => cents(s)(c) = cent }
-    val cb = PqSketch.Codebooks(m, kCodes, subDim, cents.map(_.toArray))
+      .groupBy(_._1).toArray.sortBy(_._1).map(_._2.sortBy(_._2).map(_._3))
+    val cb = PqSketch.Codebooks(cents.length, cents.head.length, cents.head.head.length, cents)
     // per-query probed cells + ADC table (bounded: queries are few)
-    val qs = queries.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect().sortBy(_._1)
-      .map { case (id, raw) =>
-        val probed = cs.indices.sortBy(c => -TextSketch.cosineD(cs(c), raw)).take(nProbe)
-        (id, probed, PqSketch.adcTable(raw, cb))
-      }
+    val qs = vectors(queries).collect().sortBy(_._1)
+      .map { case (id, raw) => (id, probes(cs, raw, nProbe), PqSketch.adcTable(raw, cb)) }
     val probedCells = qs.flatMap(_._2).distinct.toSeq
     val bc = spark.sparkContext.broadcast(qs)
     val codes = spark.read.parquet(s"$dir/codes")
@@ -216,20 +223,12 @@ object IvfIndex {
     val scored = codes.flatMap { case (cell, id, cds) =>
       bc.value.iterator
         .filter { case (qid, probed, _) => qid != id && probed.contains(cell) }
-        .map { case (qid, _, tab) =>
-          var sc = 0.0
-          var s = 0
-          while (s < cds.length) { sc += tab(s)(cds(s) & 0xff); s += 1 }
-          (qid, id, sc)
-        }
+        .map { case (qid, _, tab) => (qid, id, PqSketch.adcScore(tab, cds)) }
     }.toDF("query_id", "id", "score")
       .groupBy(col("query_id"), col("id"))
       .agg(max(col("score")).as("score"))
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        floor(col("score") * 10000).cast("long").as("adc_x10000"),
-        lit(nProbe).as("n_probe"), lit(cs.length).as("n_cells"))
-      .orderBy("query_id", "rank")
+    TopK.neighbors(scored, k, "adc_x10000",
+      lit(nProbe).as("n_probe"), lit(cs.length).as("n_cells"))
   }
 
   /** Query the persisted index: probe each query's nProbe nearest cells;
@@ -246,31 +245,12 @@ object IvfIndex {
   def query(spark: SparkSession, dir: String, queries: DataFrame,
       k: Int = 5, nProbe: Int = 4): DataFrame = {
     import spark.implicits._
-    val cs = spark.read.parquet(s"$dir/centroids")
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
-    val q = queries.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, v) =>
-        cs.indices.sortBy(c => -TextSketch.cosineD(cs(c), v)).take(nProbe)
-          .map(c => (c, id, v))
-      }
-      .toDF("cell", "query_id", "qv")
+    val cs = readCentroids(spark, dir)
+    val q = probeRows(vectors(queries), cs, nProbe)
     val probedCells = q.select(col("cell")).distinct().as[Int].collect().toSeq
     // partition pruning: only the probed cell directories are scanned
     val cells = spark.read.parquet(s"$dir/cells")
       .filter(col("cell").isin(probedCells: _*))
-    val scored = cells.join(broadcast(q), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("qv"), col("embedding"))
-      .as[(Long, Long, Array[Float], Array[Float])]
-      .map { case (qid, vid, qv, v) => (qid, vid, TextSketch.cosine(qv, v)) }
-      .toDF("query_id", "id", "score")
-      .groupBy(col("query_id"), col("id"))
-      .agg(max(col("score")).as("score"))
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        floor(col("score") * 10000).cast("long").as("cos_x10000"),
-        lit(nProbe).as("n_probe"), lit(cs.length).as("n_cells"))
-      .orderBy("query_id", "rank")
+    scoreProbed(cells, q, k, lit(nProbe).as("n_probe"), lit(cs.length).as("n_cells"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.util.{FsText, IndexManifest}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,19 +29,18 @@ import org.apache.spark.sql.functions._
   *   stats/seg=<k>/…                one row of SIGNED deltas
   *                                  (n_docs_delta, sum_dl_delta); totals
   *                                  are exact integer sums, no rescan
-  *   MANIFEST                       staleness: row count +
-  *                                  order-independent content fingerprint
-  *                                  + nBuckets ([[IvfIndex]] discipline)
+  *   manifest                       [[IndexManifest]] of (doc_id, text)
+  *                                  + nBuckets, layout
   *   SEGS                           segment count
   *
-  * The manifest fingerprint is an XOR, so [[upsert]] maintains it
-  * EXACTLY without touching unchanged rows (XOR out the old rows' hashes,
-  * XOR in the new rows') — after an upsert, [[isCurrent]] against the
-  * full new corpus holds, which the spec uses to prove the incremental
-  * bookkeeping introduces no drift. Document frequencies are computed
-  * in-query from the live (bucket-pruned, tombstone-filtered) postings —
-  * df is corpus state, and only the query's own terms' df is ever
-  * needed, so no df table has to be maintained under churn.
+  * [[upsert]] maintains the manifest EXACTLY from the delta alone (XOR
+  * out the old rows' hashes, XOR in the new rows') — after an upsert,
+  * [[isCurrent]] against the full new corpus holds, which the spec uses
+  * to prove the incremental bookkeeping introduces no drift. Document
+  * frequencies are computed in-query from the live (bucket-pruned,
+  * tombstone-filtered) postings — df is corpus state, and only the
+  * query's own terms' df is ever needed, so no df table has to be
+  * maintained under churn.
   *
   * Bucketing uses `pmod(xxhash64(term), nBuckets)` — the SAME Catalyst
   * expression at build and query time, so routing agrees by
@@ -64,45 +64,20 @@ object PostingsIndex {
   private def bucketOf(term: Column, nBuckets: Int): Column =
     pmod(xxhash64(term), lit(nBuckets.toLong))
 
-  /** (row count, XOR content fingerprint, total token count) in one
-    * scan. The XOR fingerprint (cf. [[IvfIndex.contentFingerprint]]) is
-    * partitioning-invariant, flips on any in-place text change, and —
-    * the property [[upsert]] leans on — is removable/addable per row. */
-  private def corpusStats(docs: DataFrame): (Long, Long, Long) = {
-    val r = docs
-      .select(xxhash64(col("doc_id"), col("text")).as("h"),
-        size(split(col("text"), " ")).cast("long").as("dl"))
-      .agg(count(lit(1)).as("n"),
-        coalesce(expr("bit_xor(h)"), lit(0L)).as("fp"),
-        coalesce(sum(col("dl")), lit(0L)).as("dl")).head()
-    (r.getLong(0), r.getLong(1), r.getLong(2))
+  /** Manifest stats of (doc_id, text) plus the total token count, in
+    * one scan. */
+  private def corpusStats(docs: DataFrame): (IndexManifest.Stats, Long) = {
+    val (st, r) = IndexManifest.statsWith(docs, Seq(col("doc_id"), col("text")),
+      coalesce(sum(size(split(col("text"), " ")).cast("long")), lit(0L)))
+    (st, r.getLong(2))
   }
 
   /** `layout` versions the on-disk shape: bumping it invalidates every
     * pre-segment-model index (same rows/fingerprint, incompatible
     * directory structure), forcing a rebuild instead of a runtime
     * missing-column failure on a stale cache. */
-  private def manifestJson(rows: Long, fp: Long, nBuckets: Int): String =
-    s"""{"rows":$rows,"fingerprint":$fp,"nBuckets":$nBuckets,"layout":2}"""
-
-  // manifest/segment-counter I/O goes through the Hadoop FS of `dir`
-  // (graft.util.FsText) so the index can live on HDFS/S3 alongside its
-  // parquet (ADVICE r4)
-  private def hconf(spark: SparkSession) =
-    spark.sparkContext.hadoopConfiguration
-
-  private def writeText(spark: SparkSession, path: String, txt: String): Unit =
-    graft.util.FsText.write(hconf(spark), path, txt)
-
-  private def readLong(spark: SparkSession, dir: String, file: String,
-      key: String): Long = {
-    val txt = graft.util.FsText.read(hconf(spark), s"$dir/$file")
-    (s""""$key":(-?\\d+)""").r.findFirstMatchIn(txt) match {
-      case Some(m) => m.group(1).toLong
-      case None => throw new IllegalStateException(
-        s"PostingsIndex $file at $dir has no $key")
-    }
-  }
+  private def params(nBuckets: Int): Seq[(String, Any)] =
+    Seq("nBuckets" -> nBuckets, "layout" -> 2)
 
   /** Tokenization shared with q44: whitespace-delimited terms. */
   private def termFreqs(docs: DataFrame): DataFrame = {
@@ -115,12 +90,16 @@ object PostingsIndex {
       .agg(count(lit(1)).cast("long").as("tf"), first(col("dl")).as("dl"))
   }
 
+  /** Segment `seg`'s signed stats delta, then the segment count. */
   private def writeStatsSeg(spark: SparkSession, dir: String, seg: Int,
-      nDocsDelta: Long, sumDlDelta: Long): Unit =
+      nDocsDelta: Long, sumDlDelta: Long): Unit = {
     spark.range(1)
       .select(lit(nDocsDelta).as("n_docs_delta"),
         lit(sumDlDelta).as("sum_dl_delta"))
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/stats/seg=$seg")
+    FsText.write(spark.sparkContext.hadoopConfiguration, s"$dir/SEGS",
+      s"""{"segs":${seg + 1}}""")
+  }
 
   /** Build segment 0 from the full corpus. One explode + one
     * (doc, term)-keyed agg (absorbs mega-terms map-side); the bucket
@@ -134,10 +113,9 @@ object PostingsIndex {
     termFreqs(docs).withColumn("bucket", bucketOf(col("term"), nBuckets))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/postings/seg=0")
-    val (rows, fp, dl) = corpusStats(docs)
-    writeStatsSeg(spark, dir, 0, rows, dl)
-    writeText(spark, s"$dir/MANIFEST", manifestJson(rows, fp, nBuckets))
-    writeText(spark, s"$dir/SEGS", """{"segs":1}""")
+    val (st, dl) = corpusStats(docs)
+    writeStatsSeg(spark, dir, 0, st.rows, dl)
+    IndexManifest.write(spark, dir, st, params(nBuckets))
   }
 
   /** Apply a snapshot delta WITHOUT a rebuild. `oldDocs` = the
@@ -151,20 +129,18 @@ object PostingsIndex {
     * the DELTA, never the corpus. */
   def upsert(dir: String, oldDocs: DataFrame, newDocs: DataFrame): Unit = {
     val spark = oldDocs.sparkSession
-    val nb = readLong(spark, dir, "MANIFEST", "nBuckets").toInt
-    val seg = readLong(spark, dir, "SEGS", "segs").toInt
-    val (nOld, fpOld, dlOld) = corpusStats(oldDocs)
-    val (nNew, fpNew, dlNew) = corpusStats(newDocs)
+    val nb = IndexManifest.readLong(spark, dir, "nBuckets").toInt
+    val seg = IndexManifest.readLong(spark, dir, "segs", "SEGS").toInt
+    val (stOld, dlOld) = corpusStats(oldDocs)
+    val (stNew, dlNew) = corpusStats(newDocs)
     termFreqs(newDocs).withColumn("bucket", bucketOf(col("term"), nb))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$dir/postings/seg=$seg")
     oldDocs.select(col("doc_id").cast("long").as("doc_id")).distinct()
       .write.mode("overwrite").parquet(s"$dir/tombstones/seg=$seg")
-    writeStatsSeg(spark, dir, seg, nNew - nOld, dlNew - dlOld)
-    val rows = readLong(spark, dir, "MANIFEST", "rows") + nNew - nOld
-    val fp = readLong(spark, dir, "MANIFEST", "fingerprint") ^ fpOld ^ fpNew
-    writeText(spark, s"$dir/MANIFEST", manifestJson(rows, fp, nb))
-    writeText(spark, s"$dir/SEGS", s"""{"segs":${seg + 1}}""")
+    writeStatsSeg(spark, dir, seg, stNew.rows - stOld.rows, dlNew - dlOld)
+    IndexManifest.write(spark, dir,
+      IndexManifest.read(spark, dir).minus(stOld).plus(stNew), params(nb))
   }
 
   /** Merge all segments back into one — the Lucene compaction step that
@@ -172,13 +148,12 @@ object PostingsIndex {
     * Segments cost queries an ever-growing tombstone anti-join and
     * multi-directory scan; compaction materializes the LIVE rows
     * (tombstones applied) as a fresh segment 0 and drops the tombstone
-    * and delta history. The corpus is unchanged, so the MANIFEST is
-    * untouched — [[isCurrent]] holds across a compact, and query
+    * and delta history. The corpus is unchanged, so the manifest is
+    * restored verbatim — [[isCurrent]] holds across a compact, and query
     * results are identical before and after (spec-pinned). Cost: one
     * full read + write of the live postings — amortize over many
     * upserts, exactly like Lucene merges. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    val nb = readLong(spark, dir, "MANIFEST", "nBuckets").toInt
     val tot = spark.read.parquet(s"$dir/stats")
       .agg(coalesce(sum(col("n_docs_delta")), lit(0L)).as("n"),
         coalesce(sum(col("sum_dl_delta")), lit(0L)).as("dl")).head()
@@ -193,22 +168,17 @@ object PostingsIndex {
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/.compact-tmp")
     val fs = tmp.getFileSystem(conf)
     live.write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
-    // crash-safety discipline (shared with DedupIndex.compact): take
-    // the MANIFEST — the validity marker readers check first — DOWN
-    // across the destructive swap, restore it after; a driver death
-    // mid-swap leaves isCurrent() false (rebuild) instead of a
-    // "current" index missing its postings dir
-    val manifestTxt = graft.util.FsText.read(hconf(spark), s"$dir/MANIFEST")
-    val mp = new org.apache.hadoop.fs.Path(s"$dir/MANIFEST")
-    mp.getFileSystem(conf).delete(mp, false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/stats"), true)
-    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/postings"))
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$dir/postings/seg=0"))
-    writeStatsSeg(spark, dir, 0, totN, totDl)
-    writeText(spark, s"$dir/SEGS", """{"segs":1}""")
-    graft.util.FsText.write(hconf(spark), s"$dir/MANIFEST", manifestTxt)
+    // the manifest is down across the destructive swap (crash-safe,
+    // see IndexManifest): a crash mid-swap forces a rebuild
+    // instead of a "current" index missing its postings dir
+    IndexManifest.takenDown(spark, dir) {
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/postings"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/stats"), true)
+      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/postings"))
+      fs.rename(tmp, new org.apache.hadoop.fs.Path(s"$dir/postings/seg=0"))
+      writeStatsSeg(spark, dir, 0, totN, totDl)
+    }
   }
 
   /** Kill postings of docs rewritten in LATER segments (a tombstone at
@@ -216,7 +186,7 @@ object PostingsIndex {
     * [[compact]]. */
   private def applyTombstones(spark: SparkSession, dir: String,
       post: DataFrame): DataFrame = {
-    if (!graft.util.FsText.exists(hconf(spark), s"$dir/tombstones"))
+    if (!FsText.exists(spark.sparkContext.hadoopConfiguration, s"$dir/tombstones"))
       return post
     val tombs = spark.read.parquet(s"$dir/tombstones")
       .select(col("doc_id").as("t_doc_id"), col("seg").as("t_seg"))
@@ -230,13 +200,8 @@ object PostingsIndex {
     * whether the index got there by [[build]] or by a chain of
     * [[upsert]]s. */
   def isCurrent(spark: SparkSession, dir: String, docs: DataFrame,
-      nBuckets: Int = 32): Boolean = {
-    graft.util.FsText.exists(hconf(spark), s"$dir/MANIFEST") && {
-      val (rows, fp, _) = corpusStats(docs)
-      graft.util.FsText.read(hconf(spark), s"$dir/MANIFEST") ==
-        manifestJson(rows, fp, nBuckets)
-    }
-  }
+      nBuckets: Int = 32): Boolean =
+    IndexManifest.isCurrent(spark, dir, corpusStats(docs)._1, params(nBuckets))
 
   /** BM25 top-k over the persisted index. `queryTerms` is
     * (query_id LONG, term STRING, tidx INT) with tidx ∈ {1,2} — the
@@ -251,8 +216,8 @@ object PostingsIndex {
     * produced under. */
   def query(spark: SparkSession, dir: String, queryTerms: DataFrame,
       k: Int = 5): DataFrame = {
-    val nb = readLong(spark, dir, "MANIFEST", "nBuckets").toInt
-    val nSegs = readLong(spark, dir, "SEGS", "segs").toInt
+    val nb = IndexManifest.readLong(spark, dir, "nBuckets").toInt
+    val nSegs = IndexManifest.readLong(spark, dir, "segs", "SEGS").toInt
     val qt = queryTerms.select(col("query_id").cast("long").as("query_id"),
         col("term"), col("tidx").cast("int").as("tidx"))
       .withColumn("bucket", bucketOf(col("term"), nb))

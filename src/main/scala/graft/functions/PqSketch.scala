@@ -73,8 +73,6 @@ object PqSketch {
     * IvfIndex seeding lesson). One distributed pass per iteration
     * computes ALL m subspace assignments. */
   def fit(emb: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 2): Codebooks = {
-    val spark = emb.sparkSession
-    import spark.implicits._
     // r6: pinned for the duration of fit ONLY (unpersisted before
     // return) — each Lloyd iteration plus the seed scan previously
     // re-read the parquet and re-normalized every vector; the cache is
@@ -90,8 +88,7 @@ object PqSketch {
     // associative → centroids bit-identical (PqSpec). MEMORY_AND_DISK:
     // vectors beyond memory spill instead of being dropped and
     // re-read from the source on every iteration.
-    val vrdd = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].rdd
+    val vrdd = IvfIndex.vectors(emb).rdd
       .map { case (id, v) => (id, l2normalize(v)) }
       .persist(StorageLevel.MEMORY_AND_DISK)
     val seeds = vrdd.takeOrdered(k)(Ordering.by(_._1)).sortBy(_._1).map(_._2)
@@ -107,7 +104,7 @@ object PqSketch {
     var cents: Array[Array[Array[Double]]] = Array.tabulate(m)(s =>
       Array.tabulate(kEff)(j =>
         Array.tabulate(subDim)(i => seeds(j)(s * subDim + i).toDouble)))
-    val Q = 1e6
+    val Q = IvfIndex.Q
     // flat accumulator: per (s, code) a run of subDim quantized sums
     // followed by the count — m·k·(subDim+1) longs, broadcast-tiny;
     // treeAggregate keeps the driver merge bounded at fleet partition
@@ -182,13 +179,20 @@ object PqSketch {
     })
   }
 
+  /** ADC score of one coded vector: m table lookups summed in
+    * subspace order. */
+  private[functions] def adcScore(tab: Array[Array[Double]], codes: Array[Byte]): Double = {
+    var sc = 0.0
+    var s = 0
+    while (s < codes.length) { sc += tab(s)(codes(s) & 0xff); s += 1 }
+    sc
+  }
+
   /** Map-only encode: (vec_id, m one-byte codes). */
   def encode(emb: DataFrame, cb: Codebooks): Dataset[(Long, Array[Byte])] = {
     val spark = emb.sparkSession
     import spark.implicits._
-    emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-      .map { case (id, raw) => (id, encodeOne(raw, cb)) }
+    IvfIndex.vectors(emb).map { case (id, raw) => (id, encodeOne(raw, cb)) }
   }
 
   /** ADC cosine-approx top-k for the first `nQueries` vec_ids: per-query
@@ -201,23 +205,16 @@ object PqSketch {
     import spark.implicits._
     val cb = fit(emb, m, kCodes, iters)
     val codes = encode(emb, cb)
-    val tables: Array[(Long, Array[Array[Double]])] = emb.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])].collect() // nQueries rows — bounded
+    val tables: Array[(Long, Array[Array[Double]])] =
+      IvfIndex.vectors(emb.filter(col("vec_id") < nQueries)).collect() // nQueries rows — bounded
       .sortBy(_._1)
       .map { case (qid, raw) => qid -> adcTable(raw, cb) }
     val bc = spark.sparkContext.broadcast(tables)
     val scored = codes.flatMap { case (id, cds) =>
       bc.value.iterator.filter(_._1 != id).map { case (qid, tab) =>
-        var sc = 0.0
-        var s = 0
-        while (s < cds.length) { sc += tab(s)(cds(s) & 0xff); s += 1 }
-        (qid, id, sc)
+        (qid, id, adcScore(tab, cds))
       }
     }.toDF("query_id", "id", "score")
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        floor(col("score") * 10000).cast("long").as("adc_x10000"))
-      .orderBy("query_id", "rank")
+    TopK.neighbors(scored, k, "adc_x10000")
   }
 }

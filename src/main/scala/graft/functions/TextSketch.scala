@@ -450,8 +450,7 @@ object TextSketch extends Serializable {
   def annTopK(emb: DataFrame, nQueries: Int = 5, k: Int = 5, nBits: Int = 4): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val bucketed = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
+    val bucketed = IvfIndex.vectors(emb)
       .map { case (id, v) => (id, hyperplaneBucket(v, nBits), v) }
       .toDF("vec_id", "bucket", "v")
     val q = bucketed.filter(col("vec_id") < nQueries)
@@ -464,10 +463,7 @@ object TextSketch extends Serializable {
       .toDF("query_id", "id", "score")
     // bounded top-k aggregate: only k rows per (map partition, query)
     // shuffle — no per-query full sort (VERDICT r1 #8)
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        floor(col("score") * 10000).cast("long").as("cos_x10000"))
-      .orderBy("query_id", "rank")
+    TopK.neighbors(scored, k, "cos_x10000")
   }
 
   /** IVF (inverted-file) ANN — the second scale path beside the
@@ -480,68 +476,10 @@ object TextSketch extends Serializable {
     * table and queries join on the cell key — never all-pairs. */
   def ivfTopK(emb: DataFrame, nQueries: Int = 5, k: Int = 5,
       nCells: Int = 16, nProbe: Int = 4, iters: Int = 2): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val vecs = emb.select(col("vec_id").cast("long"), col("embedding"))
-      .as[(Long, Array[Float])]
-    // deterministic seed centroids: the nCells lowest vec_ids (no
-    // dense-from-0 id assumption; loud failure on an empty input)
-    var centroids: Array[Array[Double]] = IvfIndex.seedCentroids(vecs, nCells)
-    def nearest(cs: Array[Array[Double]], v: Array[Float]): Int = {
-      var best = 0; var bestCos = -2.0
-      var c = 0
-      while (c < cs.length) {
-        val cos = cosineD(cs(c), v)
-        if (cos > bestCos) { bestCos = cos; best = c }
-        c += 1
-      }
-      best
-    }
-    // Lloyd iterations: assign (map) -> per-cell mean (one shuffle of
-    // partial sums) -> tiny driver collect. Components are quantized to
-    // fixed-point longs before summing: integer addition is associative
-    // and commutative, so centroids are bit-identical under ANY
-    // partitioning / parallelism (ADVICE r1: double reduceGroups order
-    // depends on partitioning; fp addition is non-associative). The 1e-6
-    // quantization is far below any cell-assignment decision boundary,
-    // and 2^63 / 1e6 leaves ~9e12 unit-scale vectors per cell of headroom.
-    val Q = 1e6
-    (1 to iters).foreach { _ =>
-      val cs = centroids
-      val means = vecs
-        .map { case (_, v) => (nearest(cs, v), (v.map(x => math.round(x.toDouble * Q)), 1L)) }
-        .groupByKey(_._1)
-        .reduceGroups { (a, b) =>
-          val s = a._2._1.clone()
-          var i = 0; while (i < s.length) { s(i) += b._2._1(i); i += 1 }
-          (a._1, (s, a._2._2 + b._2._2))
-        }
-        .map { case (cell, (_, (sum, n))) => (cell, sum.map(x => x.toDouble / (n * Q))) }
-        .collect().toMap
-      centroids = centroids.indices.map(c => means.getOrElse(c, centroids(c))).toArray
-    }
-    val cs = centroids
-    val indexed = vecs.map { case (id, v) => (nearest(cs, v), id, v) }
-      .toDF("cell", "vec_id", "v")
-    // each query probes its nProbe nearest cells
-    val queries = vecs.filter(_._1 < nQueries).flatMap { case (id, v) =>
-      val byCos = cs.indices.sortBy(c => -cosineD(cs(c), v)).take(nProbe)
-      byCos.map(c => (c, id, v))
-    }.toDF("cell", "query_id", "qv")
-    val scored = indexed.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"), col("qv"), col("v"))
-      .as[(Long, Long, Array[Float], Array[Float])]
-      .map { case (qid, vid, qv, v) => (qid, vid, cosine(qv, v)) }
-      .toDF("query_id", "id", "score")
-      // a vector can be reached via several probed cells -> dedupe
-      .groupBy(col("query_id"), col("id"))
-      .agg(max(col("score")).as("score"))
-    // bounded top-k aggregate instead of a per-query full sort
-    TopK.perQuery(scored, k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        floor(col("score") * 10000).cast("long").as("cos_x10000"))
-      .orderBy("query_id", "rank")
+    val vecs = IvfIndex.vectors(emb)
+    val cs = IvfIndex.fit(vecs, nCells, iters)
+    IvfIndex.scoreProbed(IvfIndex.assign(vecs, cs),
+      IvfIndex.probeRows(vecs.filter(_._1 < nQueries), cs, nProbe), k)
   }
 
   def cosineD(a: Array[Double], b: Array[Float]): Double = {

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Encoder}
+import org.apache.spark.sql.{Column, DataFrame, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -86,4 +86,14 @@ object TopK {
       }
       .toDF("query_id", "rank", "id", "score")
   }
+
+  /** [[perQuery]] in the nearest-neighbor result shape shared by the ANN
+    * operators: (query_id, rank, neighbor_id, `scoreName` =
+    * floor(score * 10000), audit…), ordered by (query_id, rank). */
+  private[functions] def neighbors(scored: DataFrame, k: Int, scoreName: String,
+      audit: Column*): DataFrame =
+    perQuery(scored, k)
+      .select(Seq(col("query_id"), col("rank"), col("id").as("neighbor_id"),
+        floor(col("score") * 10000).cast("long").as(scoreName)) ++ audit: _*)
+      .orderBy("query_id", "rank")
 }

@@ -156,6 +156,17 @@ class DedupIndexSpec extends AnyFunSuite {
     assert(DedupIndex.isCurrent(dir, df(oldDocs ++ new1Docs ++ new2Docs)))
   }
 
+  test("truncated manifest makes the index stale instead of throwing") {
+    val dir = Files.createTempDirectory("dedup_idx7").toString
+    DedupIndex.build(df(oldDocs), dir)
+    assert(DedupIndex.isCurrent(dir, df(oldDocs)))
+    // what a reader can see of a manifest half-copied on a store
+    // without atomic rename
+    graft.util.FsText.write(spark.sparkContext.hadoopConfiguration,
+      s"$dir/MANIFEST", """{"rows":1""")
+    assert(!DedupIndex.isCurrent(dir, df(oldDocs)))
+  }
+
   test("materialized probe releases its delta caches") {
     val dir = Files.createTempDirectory("dedup_idx5").toString
     DedupIndex.build(df(oldDocs), dir)

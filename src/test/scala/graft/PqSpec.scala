@@ -100,6 +100,19 @@ class PqSpec extends AnyFunSuite {
     assert(!graft.functions.IvfIndex.isCurrentCoded(spark, dir, emb, m = 8))
   }
 
+  test("coded and float IVF builds fit row-identical centroids") {
+    val float = java.nio.file.Files.createTempDirectory("ivf_float").toString
+    val coded = java.nio.file.Files.createTempDirectory("ivf_coded").toString
+    graft.functions.IvfIndex.build(emb, float, nCells = 12, iters = 3)
+    graft.functions.IvfIndex.buildCoded(emb, coded, nCells = 12, iters = 3)
+    def centroids(dir: String): Seq[(Int, Seq[Double])] =
+      spark.read.parquet(s"$dir/centroids").collect()
+        .map(r => (r.getInt(0), r.getSeq[Double](1))).sortBy(_._1).toSeq
+    val a = centroids(float)
+    assert(a.length == 12)
+    assert(a == centroids(coded))
+  }
+
   test("degenerate input fails loudly; odd dims rejected") {
     import spark.implicits._
     val empty = spark.emptyDataset[(Long, Array[Float])]

@@ -242,6 +242,18 @@ class ScaleGuardSpec extends AnyFunSuite {
     assert(!graft.functions.IvfIndex.isCurrent(spark, dir, emb, nCells = 8))
   }
 
+  test("IVF index staleness: an empty input is not current (no NPE on its fingerprint)") {
+    import spark.implicits._
+    val emb = (0L until 40L)
+      .map(i => (i, Array.tabulate(8)(d => ((i * 31 + d * 7) % 11).toFloat - 5f)))
+      .toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("ivf_empty").toString
+    graft.functions.IvfIndex.build(emb, dir)
+    assert(graft.functions.IvfIndex.isCurrent(spark, dir, emb))
+    // bit_xor over zero rows is NULL: the empty input must mismatch, not throw
+    assert(!graft.functions.IvfIndex.isCurrent(spark, dir, emb.limit(0)))
+  }
+
   test("IVF seeding survives a sparse id space (no dense-from-0 assumption)") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
