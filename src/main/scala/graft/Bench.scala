@@ -6,6 +6,7 @@ import graft.icelite.IceLite
 import graft.pipeline.Pipeline
 import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Benchmark harness (driver-run per round → BENCH_r{N}.json).
   *
@@ -69,7 +70,7 @@ object Bench {
         SparkEntry.queries(name)(s1, sfDir).count() // plan+codegen warmup
         val (_, sec) = timed(SparkEntry.queries(name)(s1, sfDir).count())
         sec
-      } catch { case _: Throwable => -1.0 }
+      } catch { case NonFatal(_) => -1.0 }
       name -> t
     }
     // materialize the bench corpus once (generation NOT timed)
@@ -114,7 +115,7 @@ object Bench {
         val secChunked = timed(Pipeline.perHostStats(
           Pipeline.extract(pages, ExtractMode.Plain).toDF()).count())._2
         val secSalted = timed(Pipeline.extract(pages, ExtractMode.Plain,
-          numPartitions = 2 * cores, repartitionByHost = true).count())._2
+          repartitionByHost = true).count())._2
         Pass(n, sec, secChunked, secSalted)
       } finally {
         s.stop()

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.apache.spark.sql.functions.col
+import scala.util.control.NonFatal
 
 /** Dumps `explain("formatted")` for every relational query to PLANS.md —
   * the plan-review artifact (scan pruning, pushed filters, broadcast
@@ -9,11 +10,7 @@ import org.apache.spark.sql.functions.col
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans for oracle-checked queries\n\n")
@@ -25,7 +22,7 @@ object ExplainAll {
       try {
         val text = artifact
         sb.append(s"\n## $name\n\n$note\n\n```\n$text```\n")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         sb.append(s"\n## $name\n\nEXPLAIN FAILED: ${e.getMessage}\n")
       }
     def add(name: String, note: String, df: => org.apache.spark.sql.DataFrame): Unit =
@@ -293,9 +290,9 @@ object ExplainAll {
       })
     spark.experimental.extraOptimizations = Nil
     spark.conf.unset(graft.plans.RangeJoinRewrite.WidthConf)
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("/root/repo/PLANS.md"),
-      sb.toString)
-    println("wrote /root/repo/PLANS.md")
+    val out = java.nio.file.Paths.get("PLANS.md").toAbsolutePath
+    java.nio.file.Files.writeString(out, sb.toString)
+    println(s"wrote $out")
     spark.stop()
   }
 }

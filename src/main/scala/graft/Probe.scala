@@ -81,8 +81,7 @@ object Probe {
     else {
       val runs = timedRuns(s, 3) {
         if (what == "chunked") Pipeline.extractChunked(pages).count()
-        else Pipeline.extract(pages, ExtractMode.Plain, numPartitions = 2 * cores,
-          repartitionByHost = what == "salted").count()
+        else Pipeline.extract(pages, ExtractMode.Plain, repartitionByHost = what == "salted").count()
       }
       runs.zipWithIndex.foreach { case ((n, sec, gcMs, rec), i) =>
         println(f"EXTRACT pass=${i + 1} cores=$cores variant=$what docs=$n secs=$sec%.2f dps=${n / sec}%.0f gc_ms=$gcMs")

@@ -100,16 +100,4 @@ object HammingNearDup extends Serializable {
       .withColumn("dist", bit_count(col("a_sig").bitwiseXOR(col("b_sig"))))
       .filter(col("dist") <= maxDist)
   }
-
-  /** Convenience: SimHash the text column, then pair. */
-  def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxDist: Int = 3): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val sigs = df.select(col(idCol).cast("long"), col(textCol))
-      .as[(Long, String)]
-      .map { case (id, text) => (id, TextSketch.simhash64(text)) }
-      .toDF(idCol, "simhash")
-    pairs(sigs, idCol, "simhash", maxDist)
-  }
 }

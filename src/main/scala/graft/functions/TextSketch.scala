@@ -19,7 +19,6 @@ object TextSketch extends Serializable {
   final val ShingleWords = 3
   final val MinHashK = 32
   final val Bands = 8
-  final val RowsPerBand: Int = MinHashK / Bands
 
   def tokensOf(text: String): Array[String] =
     text.split("\\s+").filter(_.nonEmpty)

@@ -10,8 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   * skip collapsing (one leading newline stripped, HTML5 rule).
   *
   * `startByte`/`endByte` span the raw source region of the block's text
-  * (first to last non-whitespace text run); `elemStartByte`/`elemEndByte`
-  * span the whole element including its tags.
+  * (first to last non-whitespace text run).
   */
 final case class Block(
     kind: String,
@@ -24,8 +23,6 @@ final case class Block(
     inBoilerplateContainer: Boolean,
     startByte: Long,
     endByte: Long,
-    elemStartByte: Long,
-    elemEndByte: Long,
     nSeps: Int = -1) {
   // `nSeps` is the separator (' '/'\n') count of `text`, fused into the
   // builder's normalize pass (r6b — `words` was a second full scan over
@@ -225,8 +222,6 @@ object Dom {
     private var curKind = "body"
     private var curCls = ""
     private var curStyle = ""
-    private var curElemStart = 0L
-    private var curElemEnd = 0L
     // Flat char accumulator for the current block's text (r6b): a
     // StringBuilder here paid coder checks (LATIN1/UTF16 inflation) on
     // every append plus a full getChars copy into normalize's scratch;
@@ -266,7 +261,6 @@ object Dom {
     // table accumulation
     private var tableDepth = 0
     private var tblCls = ""
-    private var tblElemStart = 0L
     private val tblRows = new ArrayBuffer[Vector[String]]
     private val tblRow = new ArrayBuffer[String]
     private val tblCell = new java.lang.StringBuilder
@@ -276,7 +270,7 @@ object Dom {
 
     private val sepsBox = new Array[Int](1)
 
-    private def flush(elemEnd: Long): Unit = {
+    private def flush(): Unit = {
       val text =
         if (curPre) {
           // in-place sentinel scan over the flat accumulator (r6b: no
@@ -296,15 +290,13 @@ object Dom {
         } else normalizeArr(tBuf, tLen, sepsBox, ks)
       if (text.nonEmpty) {
         out += Block(curKind, text, Vector.empty, curCls, curStyle, curLink,
-          text.length, boilerDepth > 0, spanStart, spanEnd, curElemStart,
-          if (elemEnd > 0) elemEnd else spanEnd, nSeps = sepsBox(0))
+          text.length, boilerDepth > 0, spanStart, spanEnd, nSeps = sepsBox(0))
       }
       tLen = 0; curLink = 0; spanStart = -1L; spanEnd = -1L
     }
 
-    private def startBlock(kind: String, cls: String, style: String, elemStart: Long): Unit = {
+    private def startBlock(kind: String, cls: String, style: String): Unit = {
       curKind = kind; curCls = cls; curStyle = style
-      curElemStart = elemStart; curElemEnd = 0L
       curPre = kind == "pre"
     }
 
@@ -329,9 +321,8 @@ object Dom {
         } else if (suppressDepth == 0) {
           if (name == "table") {
             if (tableDepth == 0) {
-              flush(0L)
+              flush()
               tblCls = t.attrOrEmpty("class")
-              tblElemStart = t.startByte.toLong
               tblRows.clear(); tblRow.clear(); tblCell.setLength(0); inCell = false
               tblSpanStart = -1L; tblSpanEnd = -1L
             }
@@ -354,10 +345,10 @@ object Dom {
             // links never nest in practice; guard runaway depth
             if (linkDepth > 32) linkDepth = 32
           } else if ((fl & FBlock) != 0) {
-            flush(0L)
+            flush()
             if ((fl & FBoiler) != 0) boilerDepth += 1
             stack += name
-            startBlock(name, t.attrOrEmpty("class"), t.attrOrEmpty("style"), t.startByte.toLong)
+            startBlock(name, t.attrOrEmpty("class"), t.attrOrEmpty("style"))
           }
           // other inline tags (b, i, em, span, code, …) are transparent
         }
@@ -377,9 +368,9 @@ object Dom {
                 val text = rows.map(_.mkString(" ")).mkString("\n")
                 val total = text.length
                 out += Block("table", text, rows, tblCls, "", 0, total, boilerDepth > 0,
-                  tblSpanStart, tblSpanEnd, tblElemStart, endByte.toLong)
+                  tblSpanStart, tblSpanEnd)
               }
-              startBlock(if (stack.nonEmpty) stack.last else "body", "", "", endByte.toLong)
+              startBlock(if (stack.nonEmpty) stack.last else "body", "", "")
             }
           } else if (tableDepth > 0) {
             name match {
@@ -392,11 +383,11 @@ object Dom {
           } else if (name == "a") {
             if (linkDepth > 0) linkDepth -= 1
           } else if ((fl & FBlock) != 0) {
-            flush(endByte.toLong)
+            flush()
             if ((fl & FBoiler) != 0 && boilerDepth > 0) boilerDepth -= 1
             val idx = stack.lastIndexOf(name)
             if (idx >= 0) stack.remove(idx, stack.length - idx)
-            startBlock(if (stack.nonEmpty) stack.last else "body", "", "", endByte.toLong)
+            startBlock(if (stack.nonEmpty) stack.last else "body", "", "")
           }
         }
     }
@@ -423,7 +414,7 @@ object Dom {
     }
 
     private[graft] def resultBuffer(): ArrayBuffer[Block] = {
-      flush(0L)
+      flush()
       out
     }
   }

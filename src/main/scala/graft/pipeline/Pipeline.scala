@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.extract.{Chunker, DocMetrics, ExtractMode, Extractor, Span}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuilder
 
@@ -32,9 +32,6 @@ object Pipeline {
       xxhash64(parse_url(col("url"), lit("HOST"))),
       pmod(xxhash64(col("url")), lit(Salts)))
 
-  private def shufflePartitions(spark: SparkSession): Int =
-    spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-
   /** Single-mode extraction over a `pages`-shaped DataFrame.
     *
     * Map-only by default: extraction is a pure per-row function, so the
@@ -44,15 +41,18 @@ object Pipeline {
     * The salted url-host repartition (north rule) applies where a
     * shuffle is REQUIRED anyway: grouped reassembly (multipage/chunked),
     * per-host aggregation, and the lineage shard assignment — pass
-    * `repartitionByHost = true` to force it here too (e.g. when source
-    * files are host-clustered AND pathologically size-skewed). */
+    * `repartitionByHost = true` to force it here too, into
+    * `spark.sql.shuffle.partitions` partitions (e.g. when source files
+    * are host-clustered AND pathologically size-skewed). */
   def extract(pages: DataFrame, mode: ExtractMode,
-      numPartitions: Int = 0, repartitionByHost: Boolean = false): Dataset[ExtractedDoc] = {
+      repartitionByHost: Boolean = false): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val p = if (numPartitions > 0) numPartitions else shufflePartitions(spark)
     val narrowed0 = pages.select(col("url"), col("warc_ts"), col("html"))
-    val narrowed = if (repartitionByHost) saltedByHost(narrowed0, p) else narrowed0
+    val narrowed =
+      if (repartitionByHost)
+        saltedByHost(narrowed0, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+      else narrowed0
     val modeName = mode.name
     narrowed.as[(String, java.sql.Timestamp, Array[Byte])].mapPartitions { it =>
       it.map { case (url, ts, html) => extractOne(url, ts, html, mode, modeName) }

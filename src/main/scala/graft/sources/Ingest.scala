@@ -1,8 +1,8 @@
 package graft.sources
 
-import graft.icelite.IceLite
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Raw-file ingestion into the `pages` table shape (BASELINE.json
   * input_hint: url, warc_ts, html, text, lang) — how a user of the
@@ -46,9 +46,5 @@ object Ingest {
   /** WARC-Date (ISO-8601 Zulu) → java.sql.Timestamp; null if malformed. */
   def parseWarcTs(iso: String): java.sql.Timestamp =
     try java.sql.Timestamp.from(java.time.Instant.parse(iso))
-    catch { case _: Throwable => null }
-
-  /** Ingest into an IceLite-committed `pages` snapshot. */
-  def commitPages(spark: SparkSession, df: DataFrame, tableRoot: String): Long =
-    IceLite.commit(spark, tableRoot, df)
+    catch { case NonFatal(_) => null }
 }

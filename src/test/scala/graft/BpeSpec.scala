@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.Bpe
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * single-threaded reference, and partition invariance. */
 class BpeSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bpe-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   // the classic learn_bpe example vocabulary (Sennrich et al. §3.2 shape)
   private val vocab = Seq(

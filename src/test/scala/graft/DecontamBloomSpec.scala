@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** x24 (Bloom-filter decontamination, map-only) must agree with q28
@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * deterministic, not flaky. */
 class DecontamBloomSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("decontam-bloom-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   test("x24 bloom decontamination equals q28 exact on sf0.001") {
     val dir = "/root/testdata/sf0.001"

@@ -1,8 +1,9 @@
 package graft
 
 import graft.functions.{DedupIndex, TextSketch}
+import graft.util.Sessions
 import java.nio.file.Files
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,12 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * manifest, kb partition pruning visible in the plan. */
 class DedupIndexSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dedup-index-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private def baseText(f: Int): Array[String] = {
     val r = new graft.util.SplitMix64(f * 77L + 5L)

@@ -2,19 +2,14 @@ package graft
 
 import graft.functions.ZhSegment
 import graft.pipeline.Metrics
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Per-category formatted eval (J2+A2, reference eval_ocr_format.py) and
   * the deterministic zh word segmenter (jieba stand-in). */
 class EvalAndZhSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("eval-zh-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   test("x17: per-category means over the golden corpus are sane and degraded") {
     val rows = SparkEntry.queries("x17_category_eval")(spark, "").collect()

@@ -2,7 +2,8 @@ package graft
 
 import graft.functions.Funnel
 import graft.functions.Funnel.Stage
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Sessions
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract for the reusable funnel operator: matchStages must equal an
@@ -13,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * that instance cross-engine). */
 class FunnelSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("funnel-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   // seeded fixture: 40 keys, dense event streams over 4 types with
   // heavy ts collisions so window boundaries and ties are exercised

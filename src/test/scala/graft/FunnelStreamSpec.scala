@@ -3,8 +3,8 @@ package graft
 import graft.functions.Funnel
 import graft.functions.Funnel.Stage
 import graft.streaming.{FunnelEvent, StreamingExtract}
+import graft.util.Sessions
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -18,13 +18,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * expressions (used by batch). */
 class FunnelStreamSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("funnel-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.streaming.schemaInference", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private val win = Some(300L)
   private val stages = Seq(Stage("view", "view"), Stage("click", "click", win),

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.HammingNearDup
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contract for the Manku multi-block Hamming near-dup join: candidate
@@ -11,12 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cannot produce). */
 class HammingNearDupSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("hamming-near-dup-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private def bruteForce(sigs: Seq[(Long, Long)], maxDist: Int): Set[(Long, Long, Int)] =
     (for {

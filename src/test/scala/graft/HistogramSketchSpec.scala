@@ -1,7 +1,8 @@
 package graft
 
 import graft.functions.HistogramSketch
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * computation at bin granularity, and fail-fast parameter checks. */
 class HistogramSketchSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("histogram-sketch-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private def df(rows: Seq[(String, Long)]): DataFrame = {
     import spark.implicits._

@@ -2,17 +2,12 @@ package graft
 
 import graft.functions.HostRank
 import graft.obs.StageListener
-import graft.util.Checkpoints
-import org.apache.spark.sql.SparkSession
+import graft.util.{Checkpoints, Sessions}
 import org.scalatest.funsuite.AnyFunSuite
 
 class HostRankSpec extends AnyFunSuite {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("hostrank-spec").getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private def rankDf(edges: Seq[(String, String, Double)], parts: Int) = {
     import spark.implicits._

@@ -1,7 +1,8 @@
 package graft
 
 import graft.functions.{AsofJoin, CountMin, RangeJoin}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,12 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partitioning-invariant. */
 class JoinOpsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("join-ops-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   // ---- AsofJoin ----
 

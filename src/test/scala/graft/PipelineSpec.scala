@@ -3,7 +3,7 @@ package graft
 import graft.extract.ExtractMode
 import graft.icelite.IceLite
 import graft.pipeline.{Pipeline, ResumableRun}
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,14 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * resume contract (kill after k commits → rerun → equals single-shot). */
 class PipelineSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private lazy val dirs = SparkEntry.microTables(spark)
 
@@ -128,12 +121,16 @@ class PipelineSpec extends AnyFunSuite {
   test("extraction output is invariant under partitioning (1 vs 16 partitions)") {
     import graft.extract.ExtractMode
     val pages = IceLite.read(spark, dirs._1)
-    def run(p: Int) = Pipeline.extract(pages.repartition(p), ExtractMode.Plain)
-      .collect().sortBy(_.url)
-      .map(d => (d.url, d.status, d.text, d.spans.mkString(","), d.metrics))
+    def run(p: Int, salted: Boolean = false) =
+      Pipeline.extract(pages.repartition(p), ExtractMode.Plain, repartitionByHost = salted)
+        .collect().sortBy(_.url)
+        .map(d => (d.url, d.status, d.text, d.spans.mkString(","), d.metrics))
     val one = run(1)
     val many = run(16)
+    // the salted url-host repartition: a shuffle into spark.sql.shuffle.partitions
+    val salted = run(1, salted = true)
     assert(one.length == many.length && one.sameElements(many))
+    assert(one.length == salted.length && one.sameElements(salted))
   }
 
   test("multipage reassembly is ordered by part index, not shuffle order") {

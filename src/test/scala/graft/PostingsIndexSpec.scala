@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.PostingsIndex
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,12 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * scan, and the staleness manifest detects in-place corpus changes. */
 class PostingsIndexSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("postings-index-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.{PqSketch, TextSketch}
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,12 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * code shape, and ADC ranking quality vs brute-force cosine. */
 class PqSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pq-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private lazy val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 

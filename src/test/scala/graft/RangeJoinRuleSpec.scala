@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * it cannot prove (inclusive upper bound). */
 class RangeJoinRuleSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("range-join-rule-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private def withRule[T](f: => T): T = {
     spark.experimental.extraOptimizations = Seq(graft.plans.RangeJoinRewrite)

@@ -2,8 +2,8 @@ package graft
 
 import graft.functions.{TextSketch, TopK}
 import graft.sources.Warc
+import graft.util.Sessions
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,12 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * determinism under arbitrary partitioning, WARC per-record resilience. */
 class ScaleGuardSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("scale-guard-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   test("TopK.perQuery matches the sort-based reference incl. tie-break") {
     import spark.implicits._

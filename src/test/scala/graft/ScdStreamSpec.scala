@@ -1,8 +1,8 @@
 package graft
 
 import graft.streaming.{ScdEvent, StreamingExtract}
+import graft.util.Sessions
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,12 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * aggregate row-for-row. */
 class ScdStreamSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("scd-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   /** Independent reference: chronological fold, written differently
     * from StreamingExtract.scdIntervalize — and deliberately NOT

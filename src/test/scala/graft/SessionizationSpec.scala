@@ -1,7 +1,7 @@
 package graft
 
 import graft.streaming.{HostSession, PageEvent, StreamingExtract}
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-host crawl sessionization with data-dependent session boundaries. */
 class SessionizationSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sessionization-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private def ev(host: String, ts: String, bytes: Long = 100L): PageEvent =
     PageEvent(host, java.sql.Timestamp.valueOf(ts), bytes)

@@ -1,18 +1,13 @@
 package graft
 
 import graft.sources.{Ingest, Warc}
+import graft.util.Sessions
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 class SourcesSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sources-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private def mkRecords = Seq(
     Warc.Record("https://a.example.com/x", "2024-01-02T03:04:05Z",
@@ -72,6 +67,14 @@ class SourcesSpec extends AnyFunSuite {
     } finally {
       dir.listFiles().foreach(_.delete()); dir.delete()
     }
+  }
+
+  test("WARC-Date parse: exact instant, null when malformed") {
+    assert(Ingest.parseWarcTs("2024-01-02T03:04:05Z") ==
+      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1704164645L)))
+    assert(Ingest.parseWarcTs("2024-13-45 nonsense") == null)
+    assert(Ingest.parseWarcTs("") == null)
+    assert(Ingest.parseWarcTs(null) == null)
   }
 
   test("ingest binary files: one page per file, pages schema") {

@@ -2,7 +2,7 @@ package graft
 
 import graft.functions.CountMin
 import graft.streaming.StreamingExtract
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,12 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the streamed grid must equal batch estimates. */
 class StreamCountMinSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("stream-countmin-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   test("streamed counters == batch counters; estimates match") {
     import spark.implicits._

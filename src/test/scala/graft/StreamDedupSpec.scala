@@ -1,7 +1,7 @@
 package graft
 
 import graft.streaming.StreamingExtract
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * restored state store. */
 class StreamDedupSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("stream-dedup-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private def writeBatch(dir: String, ids: Seq[Int], urlPrefix: String, hour: Int): Unit = {
     import spark.implicits._

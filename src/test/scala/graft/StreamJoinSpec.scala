@@ -1,8 +1,8 @@
 package graft
 
 import graft.streaming.StreamingExtract
+import graft.util.Sessions
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,13 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (the case that exercises buffered join state). */
 class StreamJoinSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("stream-join-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   private val T0 = 1700000000000L
   private def ts(min: Long) = new Timestamp(T0 + min * 60000L)

@@ -2,19 +2,14 @@ package graft
 
 import graft.functions.{Multimodal, TextSketch}
 import graft.icelite.IceLite
+import graft.util.Sessions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingAndMultimodalSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test2")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark = Sessions.local(4)
 
   test("availableNow streaming extraction drains the snapshot and is resumable") {
     val (pagesDir, _) = SparkEntry.microTables(spark)
@@ -156,8 +151,9 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
 
   test("GraftExtensions injects cosine_sim into sessions via spark.sql.extensions") {
     spark // force the shared session (and its SparkContext) to exist
-    // getOrCreate returns the default session (ignoring new confs), so
-    // clear it to force a NEW SparkSession (same context) with extensions
+    // getOrCreate returns the default session (applying only the runtime
+    // SQL confs, never extensions), so clear it to force a NEW
+    // SparkSession (same context) with extensions
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()

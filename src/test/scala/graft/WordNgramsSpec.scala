@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.WordNgrams
+import graft.util.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,11 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fused expression must equal the interpreted form element-for-element. */
 class WordNgramsSpec extends AnyFunSuite {
 
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("word-ngrams-spec").getOrCreate()
+  private lazy val spark = Sessions.local(4)
   import spark.implicits._
 
   private val texts = Seq(
