@@ -291,8 +291,21 @@ object ExplainAll {
     spark.experimental.extraOptimizations = Nil
     spark.conf.unset(graft.plans.RangeJoinRewrite.WidthConf)
     val out = java.nio.file.Paths.get("PLANS.md").toAbsolutePath
-    java.nio.file.Files.writeString(out, sb.toString)
+    java.nio.file.Files.writeString(out, mask(sb.toString, sfDir))
     println(s"wrote $out")
     spark.stop()
+  }
+
+  /** `plans` with what changes from run to run masked (expression, plan
+    * and RDD ids, lambda classes, identity hash codes, run ids, the input
+    * and working directories), so two regenerations differ only where a
+    * plan changed. */
+  private[graft] def mask(plans: String, sfDir: String): String = {
+    def abs(p: String) = java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
+    val paths = plans.replace("file:" + abs(sfDir), "file:<input>").replace("file:" + abs(""), "file:<cwd>")
+    Seq("""#\d+""" -> "#N", """plan_id=\d+""" -> "plan_id=N", """(RDD\d?)\[\d+\]""" -> "$1[N]",
+      """\$\$Lambda[$/0-9a-fx]*@[0-9a-f]+""" -> "\\$\\$Lambda", """([A-Z][\w$]*)@[0-9a-f]{1,8}\b""" -> "$1@H",
+      """\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b""" -> "<uuid>")
+      .foldLeft(paths) { case (t, (re, to)) => t.replaceAll(re, to) }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.extract.{ExtractMode, Extractor}
-import graft.html.{Dom, Html5Tokenizer}
+import graft.html.{Dom, Html5Tokenizer, KernelScratch}
 import graft.icelite.IceLite
 import graft.obs.StageListener
 import graft.pipeline.Pipeline
@@ -176,7 +176,9 @@ object Probe {
     readDump(file)(dump += _)
     val docs = dump.result().filter(b => !phases || Extractor.payloadKind(b) == "html")
     val extract: Array[Byte] => Any = Extractor.extract(_, ExtractMode.Plain)
-    val steps = if (phases) Array(Html5Tokenizer.decode _, Dom.blocksStreaming _, extract) else Array(extract)
+    val ks = KernelScratch.get()
+    val decode: Array[Byte] => Any = Html5Tokenizer.decode(_, ks)
+    val steps = if (phases) Array(decode, Dom.blocksStreaming _, extract) else Array(extract)
     (1 to 2).foreach(_ => docs.foreach(extract))
     anchor()
     val perRep = (1 to reps).map { _ =>

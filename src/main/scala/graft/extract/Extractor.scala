@@ -4,6 +4,7 @@ import graft.classify.BlockClassifier
 import graft.html.{Block, Dom, KernelScratch}
 import graft.pdf.PdfParser
 import scala.collection.mutable.ArrayBuilder
+import scala.util.control.NonFatal
 
 /** Byte span into the ORIGINAL payload (BASELINE.json: span offsets). */
 final case class Span(start: Long, end: Long, kind: String)
@@ -76,11 +77,16 @@ object Extractor {
         case "empty"  => Left("empty")
         case "binary" => Left("binary_payload")
         case "pdf"    => Right(extractPdf(bytes))
-        case _        => Right(extractHtml(bytes, mode, emitted))
+        case _ =>
+          val ks = KernelScratch.get()
+          try Right(extractHtml(bytes, mode, emitted, ks)) finally KernelScratch.release(ks)
       }
     } catch {
-      // never-throw contract: anything unexpected is quarantined
-      case e: Throwable => Left("kernel_error:" + e.getClass.getSimpleName)
+      // never-throw contract: anything unexpected is quarantined, a stack
+      // overflow (hostile nesting) included; other VM errors (OOM) and
+      // interrupts escape to the task
+      case e @ (NonFatal(_) | _: StackOverflowError) =>
+        Left("kernel_error:" + e.getClass.getSimpleName)
     }
   }
 
@@ -92,8 +98,8 @@ object Extractor {
   }
 
   private def extractHtml(bytes: Array[Byte], mode: ExtractMode,
-      emitted: ArrayBuilder.ofInt): ExtractResult = {
-    val blocks = Dom.blocksStreaming(bytes) // fused: no token list
+      emitted: ArrayBuilder.ofInt, ks: KernelScratch): ExtractResult = {
+    val blocks = Dom.blocks(bytes, ks) // fused: no token list
     // mode-specific selection predicate (density gate unless the user
     // pointed at a region — reference '[red] OCR:' / box prompts).
     // Takes the already-computed keep verdict so the classifier runs
@@ -110,7 +116,7 @@ object Extractor {
     val format = mode == ExtractMode.Format
     // single pass: select -> repeat-suppress -> render -> span, no
     // intermediate block Vectors (per-doc allocation is the scale cost)
-    val sb = { val b = KernelScratch.get().outText; b.setLength(0); b } // thread-reused (r6b)
+    val sb = { val b = ks.outText; b.setLength(0); b } // thread-reused (r6b)
     val spans = Vector.newBuilder[Span]
     var seen: scala.collection.mutable.HashSet[String] = null // lazy: rare
     var kept = 0L; var dropped = 0L; var keptChars = 0L

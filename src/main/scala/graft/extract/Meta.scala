@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Dom, Html5Tokenizer, TagOpen}
+import graft.html.{Dom, Html5Tokenizer, KernelScratch, TagOpen}
 import scala.util.control.ControlThrowable
 
 /** Page metadata extraction — title, description, OpenGraph, canonical
@@ -47,6 +47,7 @@ object Meta {
     if (Extractor.payloadKind(bytes) != "html") return Empty
     var title = ""; var desc = ""; var ogt = ""; var ogd = ""
     var canon = ""; var pub = ""; var lang = ""
+    val ks = KernelScratch.get()
     val sink = new Html5Tokenizer.TokenSink {
       private var inTitle = false
       private val titleBuf = new java.lang.StringBuilder
@@ -82,17 +83,16 @@ object Meta {
       def tagClose(name: String, startByte: Int, endByte: Int): Unit =
         name match {
           case "title" =>
-            if (inTitle) { title = Dom.normalize(titleBuf); inTitle = false }
+            if (inTitle) { title = Dom.normalize(titleBuf, ks); inTitle = false }
           case "head" => throw new Done
           case _      => ()
         }
-      def text(buf: CharSequence, startByte: Int, endByte: Int): Unit =
-        if (inTitle) titleBuf.append(buf)
-      def comment(c: Array[Char], f: Int, l: Int, sb: Int, eb: Int): Unit = ()
-      def doctype(c: Array[Char], f: Int, l: Int, sb: Int, eb: Int): Unit = ()
+      def text(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit =
+        if (inTitle) titleBuf.append(chars, from, len)
     }
-    try Html5Tokenizer.stream(bytes, sink)
+    try Html5Tokenizer.stream(bytes, sink, ks)
     catch { case _: Done => () }
+    finally KernelScratch.release(ks)
     PageMeta(title, desc, ogt, ogd, canon, pub, lang)
   }
 }

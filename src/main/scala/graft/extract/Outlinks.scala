@@ -103,10 +103,8 @@ object Outlinks {
       }
       def tagClose(name: String, startByte: Int, endByte: Int): Unit =
         if (name == "a") close()
-      def text(buf: CharSequence, startByte: Int, endByte: Int): Unit =
-        if (href != null) anchor.append(buf)
-      def comment(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit = ()
-      def doctype(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit = ()
+      def text(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit =
+        if (href != null) anchor.append(chars, from, len)
     }
     Html5Tokenizer.stream(bytes, sink)
     sink.close() // EOF closes an open anchor (lenient on truncated payloads)

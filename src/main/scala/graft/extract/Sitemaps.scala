@@ -47,12 +47,10 @@ object Sitemaps {
         case "url" | "sitemap" => closeEntry()
         case _ => ()
       }
-      def text(buf: CharSequence, startByte: Int, endByte: Int): Unit = {
-        if (inLoc) loc.append(buf)
-        if (inLastmod) lastmod.append(buf)
+      def text(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit = {
+        if (inLoc) loc.append(chars, from, len)
+        if (inLastmod) lastmod.append(chars, from, len)
       }
-      def comment(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit = ()
-      def doctype(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit = ()
       def close(): Unit = closeEntry() // lenient on truncated payloads
     }
     Html5Tokenizer.stream(bytes, sink)

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Dom, Html5Tokenizer, TagOpen}
+import graft.html.{Dom, Html5Tokenizer, KernelScratch, TagOpen}
 import scala.collection.mutable.ArrayBuffer
 
 /** HTML table → GitHub-flavored-markdown extraction — the web-payload
@@ -61,6 +61,7 @@ object TableMd {
   def extract(bytes: Array[Byte]): Seq[Table] = {
     if (Extractor.payloadKind(bytes) != "html") return Nil
     val out = ArrayBuffer.empty[Table]
+    val ks = KernelScratch.get()
     class TableSink extends Html5Tokenizer.TokenSink {
       private var depth = 0
       private val rows = ArrayBuffer.empty[Vector[String]]
@@ -73,7 +74,7 @@ object TableMd {
       private var cellPad = 0 // colspan-1 empty cells to append
 
       private def closeCell(): Unit = if (inCell) {
-        row += Dom.normalize(cell)
+        row += Dom.normalize(cell, ks)
         var i = 0
         while (i < cellPad) { row += ""; i += 1 }
         if (!cellTh) rowAllTh = false
@@ -129,15 +130,15 @@ object TableMd {
           case "tr" if depth == 1        => closeRow()
           case _                         => ()
         }
-      def text(buf: CharSequence, startByte: Int, endByte: Int): Unit =
-        if (depth >= 1 && inCell) cell.append(buf)
-      def comment(c: Array[Char], f: Int, l: Int, sb: Int, eb: Int): Unit = ()
-      def doctype(c: Array[Char], f: Int, l: Int, sb: Int, eb: Int): Unit = ()
+      def text(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit =
+        if (depth >= 1 && inCell) cell.append(chars, from, len)
     }
     val sink = new TableSink
-    Html5Tokenizer.stream(bytes, sink)
-    // EOF closes any open table (truncated payloads keep complete rows)
-    sink.finish()
+    try {
+      Html5Tokenizer.stream(bytes, sink, ks)
+      // EOF closes any open table (truncated payloads keep complete rows)
+      sink.finish()
+    } finally KernelScratch.release(ks)
     out.toSeq
   }
 }

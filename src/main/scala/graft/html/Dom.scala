@@ -115,81 +115,53 @@ object Dom {
 
   /** Collapse [ \t\n\r\f]+ → ' ', honor BR sentinels as hard newlines;
     * leading/trailing hard newlines are stripped. Single streaming pass
-    * (this runs once per block — no regex, no intermediate strings). */
-  private[graft] def normalize(raw: CharSequence): String =
-    normalize(raw, null, KernelScratch.get())
-
-  /** `sepsOut(0)`, when non-null, receives the separator (' '/'\n')
-    * count of the RETURNED string — computed on the emit branches only
-    * (the common write path pays nothing), so `Block.words` needs no
-    * second scan over the text. `ks` carries the flat scratch array:
-    * input copy in [0, len), output in [len, len + outLen) — a bulk
-    * getChars plus a primitive write loop instead of per-char virtual
-    * charAt + StringBuilder appends; fully consumed before return, so
-    * per-thread reuse is safe. Passed in by the sink (r6b) because a
+    * (this runs once per block or cell — no regex, no intermediate
+    * strings). The builder's chars are copied into `ks.normBuf` and
+    * collapsed there. `ks` is passed in by the caller (r6b) because a
     * ThreadLocal.get per BLOCK was itself hot on executor threads —
     * Spark threads carry long ThreadLocalMap probe chains, and the
     * lookup showed at ~5% in the extract-stage profile. */
-  private[graft] def normalize(raw: CharSequence, sepsOut: Array[Int],
-      ks: KernelScratch): String = {
+  private[graft] def normalize(raw: java.lang.StringBuilder, ks: KernelScratch): String = {
     val len = raw.length
-    if (len == 0) { if (sepsOut != null) sepsOut(0) = 0; return "" }
-    // copy into the scratch, then run the zero-copy array form over it
-    var buf = ks.normBuf
-    if (buf.length < 2 * len) {
-      buf = new Array[Char](2 * len + (len >> 1))
-      ks.normBuf = buf
-    }
-    raw match {
-      case sb: java.lang.StringBuilder => sb.getChars(0, len, buf, 0)
-      case s: String                   => s.getChars(0, len, buf, 0)
-      case _ =>
-        var ci = 0
-        while (ci < len) { buf(ci) = raw.charAt(ci); ci += 1 }
-    }
-    normalizeArr(buf, len, sepsOut, ks)
+    val buf = KernelScratch.grow(ks.normBuf, len)
+    ks.normBuf = buf
+    raw.getChars(0, len, buf, 0)
+    normalizeArr(buf, len, null)
   }
 
-  /** Zero-copy form (r6b): reads the input chars DIRECTLY from `src`
-    * (the sink's flat accumulator) and writes the collapsed output into
-    * the scratch's norm region — one read pass, one write region, one
-    * final String copy; the old CharSequence form paid an extra full
-    * input copy per block. `src` may alias ks.normBuf's low region
-    * (the CharSequence wrapper above): output writes go to
-    * [src-len, ...) in that case, never below the read cursor. */
-  private[graft] def normalizeArr(src: Array[Char], len: Int,
-      sepsOut: Array[Int], ks: KernelScratch): String = {
+  /** In-place form (r6b): collapses `buf[0, len)` within `buf` itself —
+    * the sink's flat accumulator or the builder copy above — so a block
+    * costs one read-and-write pass and one final String copy, and no
+    * second buffer. Each input char writes at most one char past the
+    * whitespace it collapses, so the write cursor never passes the read
+    * cursor. `sepsOut(0)`, when non-null, receives the separator
+    * (' '/'\n') count of the RETURNED string — computed on the emit
+    * branches only (the common write path pays nothing), so
+    * `Block.words` needs no second scan over the text. */
+  private[graft] def normalizeArr(buf: Array[Char], len: Int, sepsOut: Array[Int]): String = {
     if (len == 0) { if (sepsOut != null) sepsOut(0) = 0; return "" }
-    var outBuf = ks.normBuf
-    val out = if (src eq outBuf) len else 0 // avoid clobbering aliased input
-    if (outBuf.length < out + len) {
-      outBuf = new Array[Char](out + len + (len >> 1))
-      if (out > 0) System.arraycopy(src, 0, outBuf, 0, len) // re-copy aliased input
-      ks.normBuf = outBuf
-    }
-    val in = if (src eq ks.normBuf) ks.normBuf else src
     var k = 0     // output length
     var seps = 0  // ' ' + '\n' emitted (word separators)
     var ws = false
     var i = 0
     while (i < len) {
-      val c = in(i)
+      val c = buf(i)
       val cls = if (c < 256) normCls(c) else 0
       if (cls == 0) {
-        if (ws && k > 0 && outBuf(out + k - 1) != '\n') { outBuf(out + k) = ' '; k += 1; seps += 1 }
+        if (ws && k > 0 && buf(k - 1) != '\n') { buf(k) = ' '; k += 1; seps += 1 }
         ws = false
-        outBuf(out + k) = c; k += 1
+        buf(k) = c; k += 1
       } else if (cls == 1) {
         ws = true
       } else { // BR sentinel
-        if (k > 0) { outBuf(out + k) = '\n'; k += 1; seps += 1 } // skip leading hard newlines
+        if (k > 0) { buf(k) = '\n'; k += 1; seps += 1 } // skip leading hard newlines
         ws = false
       }
       i += 1
     }
-    while (k > 0 && outBuf(out + k - 1) == '\n') { k -= 1; seps -= 1 }
+    while (k > 0 && buf(k - 1) == '\n') { k -= 1; seps -= 1 }
     if (sepsOut != null) sepsOut(0) = seps
-    new String(outBuf, out, k)
+    new String(buf, 0, k)
   }
 
   /** Fused path: bytes → blocks in one scan, no token materialization
@@ -198,8 +170,13 @@ object Dom {
     * buffer: a fresh one per call, no Vector copy. */
   def blocksStreaming(bytes: Array[Byte]): ArrayBuffer[Block] = {
     val ks = KernelScratch.get()
+    try blocks(bytes, ks) finally KernelScratch.release(ks)
+  }
+
+  /** `blocksStreaming` on a scratch the caller fetched (and releases). */
+  private[graft] def blocks(bytes: Array[Byte], ks: KernelScratch): ArrayBuffer[Block] = {
     val sink = new BlockSink(ks)
-    Html5Tokenizer.streamDecoded(Html5Tokenizer.decode(bytes), sink, ks)
+    Html5Tokenizer.stream(bytes, sink, ks)
     sink.resultBuffer()
   }
 
@@ -231,28 +208,9 @@ object Dom {
     private var tLen = 0
     private def tEnsure(extra: Int): Unit =
       if (tLen + extra > tBuf.length) {
-        val n = new Array[Char](math.max(tBuf.length * 2, tLen + extra))
-        System.arraycopy(tBuf, 0, n, 0, tLen)
-        tBuf = n; ks.sinkBuf = n
+        tBuf = KernelScratch.grow(tBuf, tLen + extra); ks.sinkBuf = tBuf
       }
     private def tAppend(c: Char): Unit = { tEnsure(1); tBuf(tLen) = c; tLen += 1 }
-    private def tAppend(cs: CharSequence): Unit = cs match {
-      case w: Html5Tokenizer.CharWindow =>
-        val l = w.length
-        tEnsure(l); System.arraycopy(w.arr, w.from, tBuf, tLen, l); tLen += l
-      case str: String =>
-        val l = str.length
-        tEnsure(l); str.getChars(0, l, tBuf, tLen); tLen += l
-      case sb: java.lang.StringBuilder =>
-        val l = sb.length
-        tEnsure(l); sb.getChars(0, l, tBuf, tLen); tLen += l
-      case _ =>
-        val l = cs.length
-        tEnsure(l)
-        var i = 0
-        while (i < l) { tBuf(tLen + i) = cs.charAt(i); i += 1 }
-        tLen += l
-    }
     private var curLink = 0
     private var spanStart = -1L
     private var spanEnd = -1L
@@ -287,7 +245,7 @@ object Dom {
           }
           sepsBox(0) = seps
           new String(tBuf, from, len - from)
-        } else normalizeArr(tBuf, tLen, sepsBox, ks)
+        } else normalizeArr(tBuf, tLen, sepsBox)
       if (text.nonEmpty) {
         out += Block(curKind, text, Vector.empty, curCls, curStyle, curLink,
           text.length, boilerDepth > 0, spanStart, spanEnd, nSeps = sepsBox(0))
@@ -300,18 +258,15 @@ object Dom {
       curPre = kind == "pre"
     }
 
-    private def hasNonWs(s: CharSequence): Boolean = {
-      var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
+    private def hasNonWs(chars: Array[Char], from: Int, len: Int): Boolean = {
+      var i = from
+      while (i < from + len) {
+        val c = chars(i)
         if (c != ' ' && c != '\t' && c != '\n' && c != '\r' && c != '\f') return true
         i += 1
       }
       false
     }
-
-    def comment(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit = ()
-    def doctype(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit = ()
 
     def tagOpen(t: TagOpen): Unit = {
         val name = t.name
@@ -375,7 +330,7 @@ object Dom {
           } else if (tableDepth > 0) {
             name match {
               case "td" | "th" if tableDepth == 1 =>
-                if (inCell) { tblRow += Dom.normalize(tblCell, null, ks); inCell = false }
+                if (inCell) { tblRow += Dom.normalize(tblCell, ks); inCell = false }
               case "tr" if tableDepth == 1 =>
                 if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
               case _ => ()
@@ -392,20 +347,20 @@ object Dom {
         }
     }
 
-    def text(cs: CharSequence, startByte: Int, endByte: Int): Unit = {
+    def text(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit = {
         if (suppressDepth == 0) {
           if (tableDepth > 0) {
             if (inCell) {
-              Html5Tokenizer.appendTo(tblCell, cs)
-              if (hasNonWs(cs)) {
+              tblCell.append(chars, from, len)
+              if (hasNonWs(chars, from, len)) {
                 if (tblSpanStart < 0) tblSpanStart = startByte.toLong
                 tblSpanEnd = endByte.toLong
               }
             }
           } else {
-            tAppend(cs)
-            if (linkDepth > 0) curLink += cs.length
-            if (hasNonWs(cs)) {
+            tEnsure(len); System.arraycopy(chars, from, tBuf, tLen, len); tLen += len
+            if (linkDepth > 0) curLink += len
+            if (hasNonWs(chars, from, len)) {
               if (spanStart < 0) spanStart = startByte.toLong
               spanEnd = endByte.toLong
             }

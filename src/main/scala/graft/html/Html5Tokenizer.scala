@@ -141,28 +141,20 @@ object Html5Tokenizer {
     '', '‘', '’', '“', '”', '•', '–', '—',
     '˜', '™', 'š', '›', 'œ', '', 'ž', 'Ÿ')
 
-  /** Per-thread reusable decode buffers: the decoder's 6-bytes-per-input-
-    * byte transient allocation was the kernel's dominant GC pressure at
-    * high parallelism (allocation-stall measured at local[32]); the
-    * tokenizer consumes the Decoded fully before the next document, so
-    * the scratch is safe to reuse. */
-  private val scratchChars = new ThreadLocal[Array[Char]] {
-    override def initialValue(): Array[Char] = new Array[Char](64 * 1024)
-  }
-  private val scratchOffs = new ThreadLocal[Array[Int]] {
-    override def initialValue(): Array[Int] = new Array[Int](64 * 1024 + 1)
-  }
-
   /** Charset sniff + lenient decode with byte-offset tracking, into the
-    * per-thread scratch (also timed alone by `graft.Probe kernel phase`).
-    * Invalid UTF-8 sequences become U+FFFD advancing one byte (never throws). */
-  private[graft] def decode(bytes: Array[Byte]): Decoded = {
+    * scratch's `decChars`/`decOffs`: the decoder's 6-bytes-per-input-byte
+    * transient allocation was the kernel's dominant GC pressure at high
+    * parallelism (allocation-stall measured at local[32]), and the
+    * tokenizer consumes the Decoded fully before the next document.
+    * Also timed alone by `graft.Probe kernel phase`. Invalid UTF-8
+    * sequences become U+FFFD advancing one byte (never throws). */
+  private[graft] def decode(bytes: Array[Byte], ks: KernelScratch): Decoded = {
     val charset = sniffCharset(bytes)
     val n = bytes.length
     // worst case one char per byte (+1 offset sentinel); primitive arrays,
     // no boxing — this runs once per document byte
-    var chars = scratchChars.get()
-    if (chars.length < n) { chars = new Array[Char](n + (n >> 1)); scratchChars.set(chars) }
+    val chars = KernelScratch.grow(ks.decChars, n)
+    ks.decChars = chars
     charset match {
       case "iso-8859-1" | "windows-1252" =>
         // single-byte charsets: char index == byte offset, no offs array
@@ -181,8 +173,8 @@ object Html5Tokenizer {
     var asc = 0
     while (asc < n && bytes(asc) >= 0) { chars(asc) = bytes(asc).toChar; asc += 1 }
     if (asc == n) return new Decoded(chars, null, n, identityOffs = true)
-    var offs = scratchOffs.get()
-    if (offs.length < n + 1) { offs = new Array[Int](n + (n >> 1) + 1); scratchOffs.set(offs) }
+    val offs = KernelScratch.grow(ks.decOffs, n + 1)
+    ks.decOffs = offs
     var k = 0
     @inline def put(c: Char, at: Int): Unit = { chars(k) = c; offs(k) = at; k += 1 }
     // identity offsets for the already-decoded ASCII prefix
@@ -219,11 +211,13 @@ object Html5Tokenizer {
     * blocks directly from these events with no token materialization;
     * the token list + replay was measured at ~2x the event cost).
     *
-    * Contract: `text`'s `buf` is a REUSED buffer, valid only during the
-    * call — copy (append) immediately, never retain. `comment`/`doctype`
-    * pass a raw char range for the same reason. A token list is these
-    * events materialized as `HtmlToken`s; the test sources build one and
-    * replay it through `Dom.BlockSink` as the fused path's reference. */
+    * Contract: every char-carrying event hands over a range
+    * `chars[from, from + len)` of a REUSED buffer (the decode buffer or
+    * the scratch's multi-segment text buffer), valid only during the
+    * call — copy it out immediately, never retain `chars`. A token list
+    * is these events materialized as `HtmlToken`s; the test sources
+    * build one and replay it through `Dom.BlockSink` as the fused path's
+    * reference. */
   trait TokenSink {
     /** Sinks that never read some tags' attributes can return false to
       * skip attr STRING construction for those names (r6b) — the
@@ -234,16 +228,23 @@ object Html5Tokenizer {
     def wantsAttrs(name: String): Boolean = true
     def tagOpen(t: TagOpen): Unit
     def tagClose(name: String, startByte: Int, endByte: Int): Unit
-    def text(buf: CharSequence, startByte: Int, endByte: Int): Unit
-    def comment(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit
-    def doctype(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit
+    /** Entity-decoded text; the byte span covers the raw (encoded) run. */
+    def text(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit
+    def comment(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit = ()
+    def doctype(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit = ()
   }
 
   /** Tokenize straight into a sink — decode + single scan, no token list. */
-  def stream(bytes: Array[Byte], sink: TokenSink): Unit =
-    streamDecoded(decode(bytes), sink, KernelScratch.get())
+  def stream(bytes: Array[Byte], sink: TokenSink): Unit = {
+    val ks = KernelScratch.get()
+    try stream(bytes, sink, ks) finally KernelScratch.release(ks)
+  }
 
-  private[html] def streamDecoded(d: Decoded, sink: TokenSink, ks: KernelScratch): Unit = {
+  /** `stream` on a scratch the caller fetched (and releases). */
+  private[graft] def stream(bytes: Array[Byte], sink: TokenSink, ks: KernelScratch): Unit =
+    streamDecoded(decode(bytes, ks), sink, ks)
+
+  private def streamDecoded(d: Decoded, sink: TokenSink, ks: KernelScratch): Unit = {
     val s = d.chars
     val identity = d.identityOffs
     val bo = d.byteOff
@@ -252,50 +253,55 @@ object Html5Tokenizer {
 
     // pending text accumulation. r6: a text run that is ONE contiguous
     // raw segment (the overwhelmingly common case — no entities, no
-    // CDATA splice) is never copied into the StringBuilder at all; it
-    // is emitted as a window view straight over the decode buffer
-    // (rawFrom/rawUntil pending below). Multi-segment runs materialize
-    // the pending segment first and fall back to the builder path.
-    val text = { val b = ks.tokText; b.setLength(0); b } // thread-scratch (r6b)
-    val window = new CharWindow(s)
+    // CDATA splice) is never copied at all; it is handed over as a range
+    // of the decode buffer (rawFrom/rawUntil pending below).
+    // Multi-segment runs materialize the pending segment first and
+    // collect in the scratch's `tokBuf` ([0, tLen)).
+    var tb = ks.tokBuf
+    var tLen = 0
     var rawFrom = -1   // pending not-yet-copied raw segment
     var rawUntil = -1
     var textStart = -1 // char index of first char in the run
     var textEnd = -1   // char index AFTER the last consumed char
+    @inline def reserve(extra: Int): Unit =
+      if (tLen + extra > tb.length) { tb = KernelScratch.grow(tb, tLen + extra); ks.tokBuf = tb }
+    @inline def appendChars(from: Int, len: Int): Unit = {
+      reserve(len); System.arraycopy(s, from, tb, tLen, len); tLen += len
+    }
     @inline def materializeRaw(): Unit = {
       if (rawFrom >= 0) {
-        text.append(s, rawFrom, rawUntil - rawFrom)
+        appendChars(rawFrom, rawUntil - rawFrom)
         rawFrom = -1; rawUntil = -1
       }
     }
     @inline def flushText(): Unit = {
-      if (text.length == 0 && rawFrom >= 0) {
-        window.set(rawFrom, rawUntil - rawFrom)
-        sink.text(window, off(textStart), off(textEnd))
+      if (tLen == 0 && rawFrom >= 0) {
+        sink.text(s, rawFrom, rawUntil - rawFrom, off(textStart), off(textEnd))
         rawFrom = -1; rawUntil = -1
       } else {
         materializeRaw()
-        if (text.length > 0) {
-          sink.text(text, off(textStart), off(textEnd))
-          text.setLength(0)
+        if (tLen > 0) {
+          sink.text(tb, 0, tLen, off(textStart), off(textEnd))
+          tLen = 0
         }
       }
       textStart = -1; textEnd = -1
     }
     @inline def addText(str: String, cs: Int, ce: Int): Unit = {
-      if (text.length == 0 && rawFrom < 0) textStart = cs
+      if (tLen == 0 && rawFrom < 0) textStart = cs
       materializeRaw()
-      text.append(str)
+      val l = str.length
+      reserve(l); str.getChars(0, l, tb, tLen); tLen += l
       textEnd = ce
     }
     // zero-copy variant for runs still sitting in the decode buffer
     @inline def addTextRaw(from: Int, until: Int): Unit = {
-      if (text.length == 0 && rawFrom < 0) {
+      if (tLen == 0 && rawFrom < 0) {
         textStart = from
         rawFrom = from; rawUntil = until
       } else {
         materializeRaw()
-        text.append(s, from, until - from)
+        appendChars(from, until - from)
       }
       textEnd = until
     }
@@ -385,9 +391,9 @@ object Html5Tokenizer {
                 // FusedPathFuzzSpec "<![CDATA[]]>" atom.
                 val bodyLen = math.max(0, (if (close >= 0) close else n) - (i + 9))
                 if (bodyLen > 0) {
-                  if (text.length == 0 && rawFrom < 0) textStart = i
+                  if (tLen == 0 && rawFrom < 0) textStart = i
                   materializeRaw()
-                  text.append(s, i + 9, bodyLen)
+                  appendChars(i + 9, bodyLen)
                   textEnd = end
                 }
                 flushText()
@@ -633,28 +639,5 @@ object Html5Tokenizer {
     def charAt(i: Int): Char = a(i)
     def subSequence(s: Int, e: Int): CharSequence = new String(a, s, e - s)
     override def toString: String = new String(a, 0, n)
-  }
-
-  /** Bulk append of a sink text buffer into a builder: CharWindow goes
-    * through the char[] fast path (StringBuilder's generic CharSequence
-    * append is per-char). */
-  @inline def appendTo(b: java.lang.StringBuilder, cs: CharSequence): Unit = cs match {
-    case w: CharWindow => b.append(w.arr, w.from, w.length)
-    case _             => b.append(cs)
-  }
-
-  /** Reusable window view over the decode buffer for single-segment
-    * text runs (r6 zero-copy path). Valid only during the sink.text
-    * call, like every text buffer this tokenizer hands out. Consumers
-    * that bulk-copy (Dom's BlockSink) read `arr`/`from` directly. */
-  final class CharWindow(val arr: Array[Char]) extends CharSequence {
-    private var from0 = 0
-    private var len0 = 0
-    private[Html5Tokenizer] def set(from: Int, len: Int): Unit = { from0 = from; len0 = len }
-    def from: Int = from0
-    def length: Int = len0
-    def charAt(i: Int): Char = arr(from0 + i)
-    def subSequence(s: Int, e: Int): CharSequence = new String(arr, from0 + s, e - s)
-    override def toString: String = new String(arr, from0, len0)
   }
 }

@@ -3,6 +3,7 @@ package graft.pdf
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.util.zip.Inflater
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** One positioned text line: (x, y) is the text-space position of the
   * line's first show op (PDF y grows upward). */
@@ -108,11 +109,20 @@ object PdfParser {
     Some(split)
   }
 
+  /** Inflated bytes one document may produce across all its streams
+    * (the kernel's input cap, `Extractor.MaxDocBytes`). A FlateDecode
+    * stream that would pass it is cut there like a truncated stream, and
+    * later ones inflate to nothing: a 16 MiB file of deflate bombs would
+    * otherwise ask for GiBs. */
+  final val MaxInflatedBytes: Int = 16 << 20
+
   /** Locate `stream ... endstream` payloads; inflate when the preceding
-    * dictionary mentions /FlateDecode, else use raw bytes. */
+    * dictionary mentions /FlateDecode (within [[MaxInflatedBytes]] per
+    * document), else use raw bytes. */
   private[pdf] def findStreams(bytes: Array[Byte]): Seq[Array[Byte]] = {
     val raw = new String(bytes, ISO_8859_1)
     val out = new ArrayBuffer[Array[Byte]]
+    var inflated = 0 // budget spent
     var from = 0
     while (from < raw.length) {
       val si = raw.indexOf("stream", from)
@@ -136,7 +146,8 @@ object PdfParser {
             val dict = raw.substring(dictStart, si)
             val payload = java.util.Arrays.copyOfRange(bytes, dataStart, dataEnd)
             val data =
-              if (dict.contains("/FlateDecode")) inflate(payload) else payload
+              if (!dict.contains("/FlateDecode")) payload
+              else { val d = inflate(payload, MaxInflatedBytes - inflated); inflated += d.length; d }
             if (data.nonEmpty) out += data
             from = ei + 9
           }
@@ -146,22 +157,26 @@ object PdfParser {
     out.toSeq
   }
 
-  private def inflate(data: Array[Byte]): Array[Byte] = {
+  /** At most `limit` inflated bytes of `data`: all of them when the
+    * stream ends first, the prefix before the damage when it is cut
+    * short, none when it is corrupt. */
+  private def inflate(data: Array[Byte], limit: Int): Array[Byte] = {
+    if (limit <= 0) return Array.emptyByteArray
+    val inf = new Inflater()
     try {
-      val inf = new Inflater()
       inf.setInput(data)
-      val out = new java.io.ByteArrayOutputStream(data.length * 4 + 64)
-      val buf = new Array[Byte](4096)
-      var guard = 0
-      while (!inf.finished() && guard < (1 << 16)) {
-        val n = inf.inflate(buf)
-        if (n == 0 && inf.needsInput()) guard = (1 << 16) // truncated
-        else out.write(buf, 0, n)
-        guard += 1
+      var out = new Array[Byte](math.min(limit, data.length * 4 + 64))
+      var n = 0
+      var stalled = false // no output with room to write: needs input or a dictionary
+      while (!stalled && !inf.finished() && n < limit) {
+        if (n == out.length) out = java.util.Arrays.copyOf(out, math.min(limit, 2 * n))
+        val k = inf.inflate(out, n, out.length - n)
+        stalled = k == 0
+        n += k
       }
-      inf.end()
-      out.toByteArray
-    } catch { case _: Throwable => Array.emptyByteArray }
+      if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+    } catch { case NonFatal(_) => Array.emptyByteArray }
+    finally inf.end() // frees zlib's native memory on every path
   }
 
   /** Parse one content stream, appending completed positioned lines.

@@ -48,6 +48,21 @@ class FusedPathFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("an entity-dense text run past the tokenizer's initial text buffer replays identically") {
+    // every '&' splits the run into segments, so the whole run collects in
+    // the tokenizer's scratch text buffer (4 K chars initially) and grows it
+    val run = (0 until 2500).map(i => s"w$i&amp;x&#65;").mkString(" ")
+    val decoded = (0 until 2500).map(i => s"w$i&xA").mkString(" ")
+    assert(run.length > 10 * 1024 && decoded.length > 4 * 1024)
+    val html = s"<title>$run</title><p>$run</p><table><tr><td>$run</td></tr></table>"
+    val bytes = html.getBytes(UTF_8)
+    val viaStream = Dom.blocksStreaming(bytes)
+    assert(viaStream == TokenList.blocks(TokenList.tokenize(bytes)))
+    assert(viaStream.map(_.text) == Seq(decoded, decoded))
+    assert(graft.extract.TableMd.extract(bytes).map(_.rows) == Seq(Vector(Vector(decoded))))
+    assert(graft.extract.Meta.extract(bytes).title == decoded)
+  }
+
   test("pdf-soup payloads never throw and never escape the Either contract") {
     val r = new scala.util.Random(0x9dfL)
     val pdfAtoms = Array("BT", "ET", "Tj", "TJ", "Td", "TD", "Tm", "T*", "TL",

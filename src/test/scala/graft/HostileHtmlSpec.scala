@@ -158,6 +158,20 @@ class HostileHtmlSpec extends AnyFunSuite {
     assert(Extractor.cut("ab\ud83d\ude00c", 4) == "ab\ud83d\ude00")
   }
 
+  test("text past MaxOutChars is cut, but the spans of blocks past the cut are kept") {
+    // four distinct 400k-char blocks: the fourth starts past the 1 Mi cap
+    val bodies = (0 until 4).map(b => (0 until 60000).map(w => s"b${b}w$w").mkString(" ").take(400000).trim)
+    val html = bodies.map(t => s"<p>$t</p>").mkString
+    val r = Extractor.extract(html.getBytes(UTF_8), ExtractMode.Plain).toOption.get
+    val full = bodies.mkString("\n")
+    assert(bodies.take(3).map(_.length + 1).sum > Extractor.MaxOutChars) // 4th block past the cut
+    assert(r.text.length == Extractor.MaxOutChars)
+    assert(r.text == full.take(Extractor.MaxOutChars))
+    val starts = bodies.indices.map(k => html.indexOf(bodies(k)).toLong)
+    assert(r.spans.map(s => (s.start, s.end, s.kind)) ==
+      bodies.indices.map(k => (starts(k), starts(k) + bodies(k).length, "p")))
+  }
+
   test("spans on hostile inputs stay within payload and ascend") {
     val cases = Seq(
       "<p>alpha beta<h2>Heading words",

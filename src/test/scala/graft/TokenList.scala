@@ -15,11 +15,11 @@ object TokenList {
       def tagOpen(t: TagOpen): Unit = out += t
       def tagClose(name: String, startByte: Int, endByte: Int): Unit =
         out += TagClose(name, startByte, endByte)
-      def text(buf: CharSequence, startByte: Int, endByte: Int): Unit =
-        out += TextRun(buf.toString, startByte, endByte)
-      def comment(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit =
+      def text(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit =
+        out += TextRun(new String(chars, from, len), startByte, endByte)
+      override def comment(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit =
         out += CommentTok(new String(chars, from, len), startByte, endByte)
-      def doctype(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit =
+      override def doctype(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit =
         out += DoctypeTok(new String(chars, from, len), startByte, endByte)
     })
     ArraySeq.unsafeWrapArray(out.result())
@@ -30,7 +30,9 @@ object TokenList {
     tokens.foreach {
       case t: TagOpen  => sink.tagOpen(t)
       case t: TagClose => sink.tagClose(t.name, t.startByte, t.endByte)
-      case t: TextRun  => sink.text(t.text, t.startByte, t.endByte)
+      case t: TextRun  =>
+        val chars = t.text.toCharArray
+        sink.text(chars, 0, chars.length, t.startByte, t.endByte)
       case _           => () // comments, doctype
     }
     sink.resultBuffer().toVector

@@ -296,3 +296,20 @@ class ExtractModeSpec extends AnyFunSuite {
     assert(Extractor.payloadKind(Array.emptyByteArray) == "empty")
   }
 }
+
+class ExplainAllSpec extends AnyFunSuite {
+  test("PLANS.md masking: run-specific tokens and absolute input paths") {
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath.toString
+    val raw = "Location: InMemoryFileIndex [file:/data/sf/lineitem.parquet]\n" +
+      s"Location: InMemoryFileIndex [file:$cwd/target/synth/ivf]\n" +
+      "Arguments: a.B$$$Lambda$3658/0x00007f5d9101a388@4f1cb802, l_qty#12L, plan_id=19, " +
+      "TopKAgg@4b808, runId = 12911bc7-dba0-48c3-8ad0-11280ce97f22, ## q01, x >= 1.5@2\n" +
+      " |  ZippedPartitionsRDD2[818] at zipPartitions at HostRank.scala:123 []"
+    assert(ExplainAll.mask(raw, "/data/sf") ==
+      "Location: InMemoryFileIndex [file:<input>/lineitem.parquet]\n" +
+      "Location: InMemoryFileIndex [file:<cwd>/target/synth/ivf]\n" +
+      "Arguments: a.B$$$Lambda, l_qty#NL, plan_id=N, " +
+      "TopKAgg@H, runId = <uuid>, ## q01, x >= 1.5@2\n" +
+      " |  ZippedPartitionsRDD2[N] at zipPartitions at HostRank.scala:123 []")
+  }
+}
