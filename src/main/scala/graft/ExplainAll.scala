@@ -1,19 +1,21 @@
 package graft
 
+import graft.queries.Query
 import graft.util.Sessions
 import org.apache.spark.sql.functions.col
 import scala.util.control.NonFatal
 
-/** Dumps `explain("formatted")` for every relational query to PLANS.md —
-  * the plan-review artifact (scan pruning, pushed filters, broadcast
-  * joins, whole-stage codegen spans are checked per SURVEY.md §4). */
+/** Dumps `explain("formatted")` for every declared query that has an
+  * oracle or a plan note, then for the operators behind the scale claims,
+  * to PLANS.md — the plan-review artifact (scan pruning, pushed filters,
+  * broadcast joins, whole-stage codegen spans are checked per SURVEY.md §4). */
 object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val spark = Sessions.local(8)
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans for oracle-checked queries\n\n")
+    sb.append("# PLANS — formatted physical plans for oracle-checked and plan-noted queries\n\n")
     sb.append(s"Input: `$sfDir`. Generated by `graft.ExplainAll`; re-run after\n")
     sb.append("plan-affecting changes. Review points: ReadSchema column pruning,\n")
     sb.append("PushedFilters at the scan, BroadcastHashJoin for small dims,\n")
@@ -28,12 +30,11 @@ object ExplainAll {
     def add(name: String, note: String, df: => org.apache.spark.sql.DataFrame): Unit =
       section(name, note, df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
-    SparkEntry.queries.toSeq.sortBy(_._1).filter(_._1.startsWith("q")).foreach {
-      case (name, fn) => add(name, "", fn(spark, sfDir))
-    }
+    Query.all.filter(q => q.oracle.isDefined || q.planNote.nonEmpty).sortBy(_.name)
+      .foreach(q => add(q.name, q.planNote, q.build(spark, sfDir)))
 
-    // ---- scale-claimed x-operator plans (the 100x claims as artifacts)
-    sb.append("\n# x-operator plans — the scale claims as reviewable artifacts\n")
+    // ---- operator plans that are not a declared query's
+    sb.append("\n# operator plans — the scale claims as reviewable artifacts\n")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     add("x08 lshCandidatePairs (operator form, unordered)",
@@ -43,15 +44,6 @@ object ExplainAll {
       "bucket key (band, key), buckets stream through a local " +
       "sortWithinPartitions.",
       graft.functions.TextSketch.lshCandidatePairs(docs))
-    add("x10 annTopK (hyperplane LSH)",
-      "Review point: bucket-key Exchange + ObjectHashAggregate partial/" +
-      "final for the bounded top-k; no per-query full sort.",
-      graft.functions.TextSketch.annTopK(emb))
-    add("x15 ivfTopK (query phase)",
-      "Review point: centroids are a broadcast-sized local array (fit = " +
-      "2 tiny groupBy iterations, not in this plan); the query phase is " +
-      "a map + bounded top-k aggregate, no all-pairs join.",
-      graft.functions.TextSketch.ivfTopK(emb))
     add("x19 connected components — one propagation hop",
       "Review point: ONE shuffle per hop (edge-label join + min " +
       "aggregate + left join back); labels are longs; the loop " +
@@ -95,20 +87,6 @@ object ExplainAll {
           .toDF("query_id", "term", "tidx")
         graft.functions.PostingsIndex.query(spark, idx, qt)
       })
-    add("x22 outlinks host-graph aggregate",
-      "Review point: link extraction is a map-side SerializeFromObject " +
-      "over the kernel flatMap (no payload shuffle); the ONLY Exchange " +
-      "is the (src_host, dst_host, external) edge aggregate with " +
-      "partial HashAggregate below it.",
-      SparkEntry.queries("x22_outlinks")(spark, sfDir))
-    add("x24 Bloom-filter decontamination (map-only scale path)",
-      "Review point: the corpus side is SerializeFromObject over ONE map " +
-      "(gram membership checked against the broadcast Bloom filter inside " +
-      "the closure) — no Generate/explode, no join; the only Exchange is " +
-      "the per-lang audit aggregate with a partial HashAggregate below it. " +
-      "The eval-set side (explode+distinct) runs once at filter-build time, " +
-      "not per corpus row.",
-      SparkEntry.queries("x24_decontam_bloom")(spark, sfDir))
     section("x23 HostRank — one PageRank power iteration (RDD lineage)",
       "Review point: this is RDD lineage, not a Catalyst plan — the loop " +
       "is planless. Each hop is ONE ShuffledRDD carrying the per-dst " +

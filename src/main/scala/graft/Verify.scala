@@ -4,11 +4,18 @@ import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. `Verify <sfDir>
-  * <outDir> [name,…]`: the list limits both to those queries (a dev loop). */
+  * <outDir> [name,…]`: the list limits both to those queries (a dev loop);
+  * a name that is no declared query fails the run before Spark starts. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Seq(sfDir, outDir, names @ _*) = args.toSeq
-    val wanted: String => Boolean = names.headOption.fold((_: String) => true)(_.split(",").toSet)
+    val listed = names.headOption.map(_.split(",").toSet)
+    val unknown = listed.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[verify] unknown query names: ${unknown.toSeq.sorted.mkString(", ")}")
+      sys.exit(2)
+    }
+    val wanted: String => Boolean = listed.getOrElse(_ => true)
     val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>

@@ -83,7 +83,7 @@ object Outlinks {
     if (Extractor.payloadKind(bytes) != "html") return Nil
     val baseHost = host(pageUrl)
     val out = ArrayBuffer.empty[Link]
-    val sink = new Html5Tokenizer.TokenSink {
+    final class AnchorSink extends Html5Tokenizer.TokenSink {
       private var href: String = null
       private val anchor = new java.lang.StringBuilder
       def close(): Unit = {
@@ -106,6 +106,7 @@ object Outlinks {
       def text(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit =
         if (href != null) anchor.append(chars, from, len)
     }
+    val sink = new AnchorSink
     Html5Tokenizer.stream(bytes, sink)
     sink.close() // EOF closes an open anchor (lenient on truncated payloads)
     out.toSeq

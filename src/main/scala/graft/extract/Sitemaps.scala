@@ -23,7 +23,7 @@ object Sitemaps {
 
   def parse(bytes: Array[Byte]): Seq[Entry] = {
     val out = ArrayBuffer.empty[Entry]
-    val sink = new Html5Tokenizer.TokenSink {
+    final class EntrySink extends Html5Tokenizer.TokenSink {
       private var inLoc = false
       private var inLastmod = false
       private val loc = new java.lang.StringBuilder
@@ -53,6 +53,7 @@ object Sitemaps {
       }
       def close(): Unit = closeEntry() // lenient on truncated payloads
     }
+    val sink = new EntrySink
     Html5Tokenizer.stream(bytes, sink)
     sink.close()
     out.toSeq
