@@ -167,7 +167,6 @@ object ExplainAll {
       "are structurally impossible (the is-new filter inside the " +
       "streaming bucket iterator).",
       {
-        import spark.implicits._
         val docsT = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
         val idx = s"${SparkEntry.SynthRoot}/dedup_index_plan"
         val old = docsT.filter(col("doc_id") % 5 =!= 0)
@@ -280,7 +279,9 @@ object ExplainAll {
     * plan changed. */
   private[graft] def mask(plans: String, sfDir: String): String = {
     def abs(p: String) = java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
-    val paths = plans.replace("file:" + abs(sfDir), "file:<input>").replace("file:" + abs(""), "file:<cwd>")
+    val cwd = abs("")
+    val paths = plans.replace("file:" + abs(sfDir), "file:<input>").replace("file:" + cwd, "file:<cwd>")
+      .replace(cwd + "/", "<cwd>/")
     Seq("""#\d+""" -> "#N", """plan_id=\d+""" -> "plan_id=N", """(RDD\d?)\[\d+\]""" -> "$1[N]",
       """\$\$Lambda[$/0-9a-fx]*@[0-9a-f]+""" -> "\\$\\$Lambda", """([A-Z][\w$]*)@[0-9a-f]{1,8}\b""" -> "$1@H",
       """\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b""" -> "<uuid>")

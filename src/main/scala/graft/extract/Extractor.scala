@@ -134,7 +134,7 @@ object Extractor {
         }
         if (!repeat) {
           if (sb.length > 0) sb.append('\n')
-          if (format) sb.append(renderBlock(b, format = true)) else sb.append(b.text)
+          sb.append(if (format) renderBlock(b) else b.text)
           spans += Span(b.startByte, b.endByte, b.kind)
           if (emitted != null) emitted += b.text.length
         }
@@ -163,9 +163,8 @@ object Extractor {
     * the reference's category-split regexes (eval_ocr.py:39-41: inline
     * \(..\), display \[..\], \begin{tabular}..\end{tabular}) classify
     * the output. */
-  def renderBlock(b: Block, format: Boolean): String = {
-    if (!format) b.text
-    else if (b.headingLevel > 0) ("#" * b.headingLevel) + " " + b.text
+  def renderBlock(b: Block): String = {
+    if (b.headingLevel > 0) ("#" * b.headingLevel) + " " + b.text
     else if (b.kind == "li") "- " + b.text
     else if (b.kind == "table" && b.cells.nonEmpty) renderTabular(b.cells)
     else if (b.kind == "blockquote") "> " + b.text

@@ -30,8 +30,6 @@ object RangeJoin extends Serializable {
   def rangeJoin(probe: DataFrame, xCol: String, ranges: DataFrame,
                 bucketWidth: Long): DataFrame = {
     require(bucketWidth > 0, "bucketWidth must be positive")
-    val spark = probe.sparkSession
-    import spark.implicits._
     val expanded = ranges
       .withColumn("__b0", expr(s"lo div $bucketWidth"))
       // hi is exclusive: the last covered bucket holds hi-1

@@ -19,7 +19,6 @@ final case class Block(
     cls: String,
     style: String,
     linkChars: Int,
-    totalChars: Int,
     inBoilerplateContainer: Boolean,
     startByte: Long,
     endByte: Long,
@@ -34,71 +33,18 @@ final case class Block(
     c
   }
   def linkDensity: Double =
-    if (totalChars == 0) 0.0 else linkChars.toDouble / totalChars.toDouble
+    if (text.isEmpty) 0.0 else linkChars.toDouble / text.length.toDouble
   def headingLevel: Int =
     if (kind.length == 2 && kind.charAt(0) == 'h' && kind.charAt(1).isDigit) kind.charAt(1) - '0' else 0
 }
 
 /** Builds the flat block list from the token stream — the lightweight
   * "DOM" (SURVEY.md §7 module `html/Dom.scala`). No tree is materialized;
-  * a tag stack tracks ancestry, which is all the classifier needs.
+  * a tag stack tracks ancestry, which is all the classifier needs. Which
+  * tags suppress content, start a block or mark a boilerplate container
+  * is `Tags.flags`: `Tags` owns every tag role.
   */
 object Dom {
-  /** Elements that start a new block. */
-  private val blockTags = Set("p", "h1", "h2", "h3", "h4", "h5", "h6", "li",
-    "pre", "blockquote", "div", "section", "article", "main", "nav",
-    "header", "footer", "aside", "ul", "ol", "dl", "dt", "dd", "figure",
-    "figcaption", "caption", "body", "tr", "hr", "address", "details", "summary")
-  /** Elements whose entire content is suppressed (never content). */
-  private val suppressTags = Set("script", "style", "noscript", "template",
-    "svg", "head", "title", "textarea", "select", "button", "iframe",
-    "object", "xmp", "noembed", "noframes")
-  /** Semantic-HTML5 boilerplate containers (classifier hard-drop). */
-  private val boilerContainers = Set("nav", "footer", "aside", "header", "form")
-
-  // r6: per-tag role flags resolved with ONE open-addressing probe
-  // instead of 3-4 immutable-Set lookups per tag event (Set.contains +
-  // String hashing walked the hash trie for every open AND close tag —
-  // ~10% of html kernel in the JFR profile). The table is seeded from
-  // the Sets above (which stay the source of truth); any name absent
-  // from every set probes to a null slot and returns 0. Same djb2 hash
-  // as the tokenizer's intern table; interned names hit the `eq`
-  // fast path.
-  private final val FSuppress = 1
-  private final val FBlock = 2
-  private final val FBoiler = 4
-  private final val FVoid = 8
-  private final val FlagMask = 255
-  private val flagNames = new Array[String](FlagMask + 1)
-  private val flagVals = new Array[Int](FlagMask + 1)
-  locally {
-    def add(n: String, f: Int): Unit = {
-      var h = 5381; var i = 0
-      while (i < n.length) { h = h * 33 + n.charAt(i); i += 1 }
-      var slot = h & FlagMask
-      while (flagNames(slot) != null && flagNames(slot) != n)
-        slot = (slot + 1) & FlagMask
-      flagNames(slot) = n
-      flagVals(slot) |= f
-    }
-    suppressTags.foreach(add(_, FSuppress))
-    blockTags.foreach(add(_, FBlock))
-    boilerContainers.foreach(add(_, FBoiler))
-    Html5Tokenizer.voidElements.foreach(add(_, FVoid))
-  }
-  @inline private def tagFlags(name: String): Int = {
-    var h = 5381; var i = 0
-    while (i < name.length) { h = h * 33 + name.charAt(i); i += 1 }
-    var slot = h & FlagMask
-    var e = flagNames(slot)
-    while (e != null) {
-      if ((e eq name) || e == name) return flagVals(slot)
-      slot = (slot + 1) & FlagMask
-      e = flagNames(slot)
-    }
-    0
-  }
-
   private final val BrSentinel = '\u0001'
 
   // r6b: char-class table for normalizeArr's inner loop — one bounds
@@ -187,7 +133,7 @@ object Dom {
       * which carry most crawl-HTML attributes, href above all) skip
       * attr string construction in the tokenizer entirely (r6b). */
     override def wantsAttrs(name: String): Boolean =
-      name == "table" || (tagFlags(name) & FBlock) != 0
+      name == "table" || (Tags.flags(name) & Tags.FBlock) != 0
     private val out = new ArrayBuffer[Block]
 
     private var suppressDepth = 0
@@ -248,7 +194,7 @@ object Dom {
         } else normalizeArr(tBuf, tLen, sepsBox)
       if (text.nonEmpty) {
         out += Block(curKind, text, Vector.empty, curCls, curStyle, curLink,
-          text.length, boilerDepth > 0, spanStart, spanEnd, nSeps = sepsBox(0))
+          boilerDepth > 0, spanStart, spanEnd, nSeps = sepsBox(0))
       }
       tLen = 0; curLink = 0; spanStart = -1L; spanEnd = -1L
     }
@@ -270,9 +216,9 @@ object Dom {
 
     def tagOpen(t: TagOpen): Unit = {
         val name = t.name
-        val fl = tagFlags(name)
-        if ((fl & FSuppress) != 0) {
-          if (!t.selfClosing && (fl & FVoid) == 0) suppressDepth += 1
+        val fl = Tags.flags(name)
+        if ((fl & Tags.FSuppress) != 0) {
+          if (!t.selfClosing) suppressDepth += 1
         } else if (suppressDepth == 0) {
           if (name == "table") {
             if (tableDepth == 0) {
@@ -299,9 +245,9 @@ object Dom {
             linkDepth += 1
             // links never nest in practice; guard runaway depth
             if (linkDepth > 32) linkDepth = 32
-          } else if ((fl & FBlock) != 0) {
+          } else if ((fl & Tags.FBlock) != 0) {
             flush()
-            if ((fl & FBoiler) != 0) boilerDepth += 1
+            if ((fl & Tags.FBoiler) != 0) boilerDepth += 1
             stack += name
             startBlock(name, t.attrOrEmpty("class"), t.attrOrEmpty("style"))
           }
@@ -310,8 +256,8 @@ object Dom {
     }
 
     def tagClose(name: String, startByte: Int, endByte: Int): Unit = {
-        val fl = tagFlags(name)
-        if ((fl & FSuppress) != 0) {
+        val fl = Tags.flags(name)
+        if ((fl & Tags.FSuppress) != 0) {
           if (suppressDepth > 0) suppressDepth -= 1
         } else if (suppressDepth == 0) {
           if (name == "table") {
@@ -321,8 +267,7 @@ object Dom {
               if (tblRows.nonEmpty) {
                 val rows = tblRows.toVector
                 val text = rows.map(_.mkString(" ")).mkString("\n")
-                val total = text.length
-                out += Block("table", text, rows, tblCls, "", 0, total, boilerDepth > 0,
+                out += Block("table", text, rows, tblCls, "", 0, boilerDepth > 0,
                   tblSpanStart, tblSpanEnd)
               }
               startBlock(if (stack.nonEmpty) stack.last else "body", "", "")
@@ -337,9 +282,9 @@ object Dom {
             }
           } else if (name == "a") {
             if (linkDepth > 0) linkDepth -= 1
-          } else if ((fl & FBlock) != 0) {
+          } else if ((fl & Tags.FBlock) != 0) {
             flush()
-            if ((fl & FBoiler) != 0 && boilerDepth > 0) boilerDepth -= 1
+            if ((fl & Tags.FBoiler) != 0 && boilerDepth > 0) boilerDepth -= 1
             val idx = stack.lastIndexOf(name)
             if (idx >= 0) stack.remove(idx, stack.length - idx)
             startBlock(if (stack.nonEmpty) stack.last else "body", "", "")

@@ -1,29 +1,19 @@
 package graft.html
 
-/** Tokens carry the BYTE span [startByte, endByte) they were decoded from,
-  * so downstream span offsets always index into the original payload
-  * (BASELINE.json: "per-url extracted text and span offsets").
+/** A start tag, the tokenizer's one materialized event. The span is the
+  * BYTE span [startByte, endByte) it was decoded from, so downstream
+  * span offsets always index into the original payload (BASELINE.json:
+  * "per-url extracted text and span offsets").
   */
-sealed trait HtmlToken { def startByte: Int; def endByte: Int }
 final case class TagOpen(name: String, attrs: List[(String, String)],
-    selfClosing: Boolean, startByte: Int, endByte: Int) extends HtmlToken {
-  def attr(k: String): Option[String] = {
-    var cur = attrs
-    while (cur.nonEmpty) { if (cur.head._1 == k) return Some(cur.head._2); cur = cur.tail }
-    None
-  }
-  /** Allocation-free variant for the hot path. */
+    selfClosing: Boolean, startByte: Int, endByte: Int) {
+  /** Allocation-free attribute lookup; "" when absent. */
   def attrOrEmpty(k: String): String = {
     var cur = attrs
     while (cur.nonEmpty) { if (cur.head._1 == k) return cur.head._2; cur = cur.tail }
     ""
   }
 }
-final case class TagClose(name: String, startByte: Int, endByte: Int) extends HtmlToken
-/** `text` is entity-decoded; the byte span covers the raw (encoded) run. */
-final case class TextRun(text: String, startByte: Int, endByte: Int) extends HtmlToken
-final case class CommentTok(text: String, startByte: Int, endByte: Int) extends HtmlToken
-final case class DoctypeTok(text: String, startByte: Int, endByte: Int) extends HtmlToken
 
 /** Decoded characters plus a char-index → byte-offset map. `nChars` is
   * the logical length (the arrays may be oversized reusable scratch);
@@ -37,52 +27,15 @@ final class Decoded(val chars: Array[Char], val byteOff: Array[Int], val nChars:
 
 /** From-scratch HTML5-style tokenizer (data / tag / attribute / comment /
   * doctype / RAWTEXT / RCDATA / CDATA states), lenient on hostile bytes:
-  * never throws, unterminated constructs are flushed at EOF.
+  * never throws, unterminated constructs are flushed at EOF. Tag and
+  * attribute names come from `Tags.intern`, and which start tags open a
+  * RAWTEXT or RCDATA state is `Tags.flags` — `Tags` owns every tag role.
   *
   * Replaces the reference's image-decode front end
   * (GOT/demo/run_ocr_2.0.py:35-41) with the web-payload analog mandated by
   * BASELINE.json (streaming HTML5 tokenizer over Common-Crawl pages).
   */
 object Html5Tokenizer {
-
-  /** Elements whose content is raw text (no entities, no nested tags). */
-  private val rawText = Set("script", "style", "xmp", "iframe", "noembed", "noframes")
-  /** Elements whose content is text with entities but no nested tags. */
-  private val rcdata = Set("textarea", "title")
-  val voidElements: Set[String] = Set("area", "base", "br", "col", "embed",
-    "hr", "img", "input", "link", "meta", "param", "source", "track", "wbr")
-
-  // r6: rawtext/rcdata membership as one open-addressing probe (same
-  // djb2 table shape as Dom's tag-flag table) instead of two
-  // immutable-Set trie walks per non-self-closing start tag.
-  private final val FRawtext = 1
-  private final val FRcdata = 2
-  private final val ModeMask = 63
-  private val modeNames = new Array[String](ModeMask + 1)
-  private val modeVals = new Array[Int](ModeMask + 1)
-  locally {
-    def add(n: String, f: Int): Unit = {
-      var slot = internHash(n) & ModeMask
-      while (modeNames(slot) != null && modeNames(slot) != n)
-        slot = (slot + 1) & ModeMask
-      modeNames(slot) = n
-      modeVals(slot) |= f
-    }
-    rawText.foreach(add(_, FRawtext))
-    rcdata.foreach(add(_, FRcdata))
-  }
-  @inline private def contentMode(name: String): Int = {
-    var h = 5381; var i = 0
-    while (i < name.length) { h = h * 33 + name.charAt(i); i += 1 }
-    var slot = h & ModeMask
-    var e = modeNames(slot)
-    while (e != null) {
-      if ((e eq name) || e == name) return modeVals(slot)
-      slot = (slot + 1) & ModeMask
-      e = modeNames(slot)
-    }
-    0
-  }
 
   /** Sniff charset from a `charset=` occurrence in the head bytes;
     * defaults to UTF-8. Supported: utf-8, iso-8859-1/latin-1, windows-1252
@@ -214,10 +167,9 @@ object Html5Tokenizer {
     * Contract: every char-carrying event hands over a range
     * `chars[from, from + len)` of a REUSED buffer (the decode buffer or
     * the scratch's multi-segment text buffer), valid only during the
-    * call — copy it out immediately, never retain `chars`. A token list
-    * is these events materialized as `HtmlToken`s; the test sources
-    * build one and replay it through `Dom.BlockSink` as the fused path's
-    * reference. */
+    * call — copy it out immediately, never retain `chars`. The test
+    * sources materialize these events as a token list and replay it
+    * through `Dom.BlockSink` as the fused path's reference. */
   trait TokenSink {
     /** Sinks that never read some tags' attributes can return false to
       * skip attr STRING construction for those names (r6b) — the
@@ -420,7 +372,7 @@ object Html5Tokenizer {
                 val end = if (j < n) j + 1 else n
                 var ne = i + 2
                 while (ne < j && !Character.isWhitespace(s(ne))) ne += 1
-                val name = lowerString(s, i + 2, math.max(0, ne - (i + 2)))
+                val name = Tags.intern(s, i + 2, math.max(0, ne - (i + 2)))
                 sink.tagClose(name, off(i), off(end))
                 i = end
               } else { addText("<", i, i + 1); i += 1 } // "</3" is text
@@ -430,9 +382,9 @@ object Html5Tokenizer {
               sink.tagOpen(tok)
               i = next
               if (!tok.selfClosing) {
-                val m = contentMode(tok.name)
-                if ((m & FRawtext) != 0) { rawMode = tok.name; rcdataMode = false }
-                else if ((m & FRcdata) != 0) { rawMode = tok.name; rcdataMode = true }
+                val m = Tags.flags(tok.name)
+                if ((m & Tags.FRawtext) != 0) { rawMode = tok.name; rcdataMode = false }
+                else if ((m & Tags.FRcdata) != 0) { rawMode = tok.name; rcdataMode = true }
               }
             } else { addText("<", i, i + 1); i += 1 }
           }
@@ -450,93 +402,6 @@ object Html5Tokenizer {
       }
     }
     flushText()
-  }
-
-  /** Pre-seeded intern table for tag/attribute names: the ~80 names that
-    * cover essentially every tag and attr a crawl serves. Hits return the
-    * SAME String instance — no allocation per tag, and (bigger) the
-    * instance's hashCode memoizes, so Dom's Set lookups stop re-hashing a
-    * fresh string per token. The table is FIXED (never installs new
-    * entries), so hostile unique-name floods cannot grow it; misses cost
-    * one probe chain to the first null. */
-  private final val InternMask = 511
-  private val internTable: Array[String] = {
-    val t = new Array[String](InternMask + 1)
-    val names = Seq(
-      // elements
-      "a", "abbr", "address", "area", "article", "aside", "b", "base",
-      "blockquote", "body", "br", "button", "caption", "code", "col", "dd",
-      "details", "div", "dl", "dt", "em", "embed", "fieldset", "figcaption",
-      "figure", "footer", "form", "h1", "h2", "h3", "h4", "h5", "h6", "head",
-      "header", "hr", "html", "i", "iframe", "img", "input", "label",
-      "legend", "li", "link", "main", "meta", "nav", "noscript", "object",
-      "ol", "option", "p", "param", "pre", "script", "section", "select",
-      "small", "source", "span", "strong", "style", "summary", "sup",
-      "svg", "table", "tbody", "td", "template", "textarea", "tfoot", "th",
-      "thead", "time", "title", "tr", "track", "u", "ul", "wbr",
-      // attributes
-      "class", "id", "href", "src", "style", "rel", "type", "name",
-      "content", "charset", "alt", "title", "width", "height", "lang",
-      "target", "value", "role", "data-src")
-    names.foreach { n =>
-      var slot = internHash(n) & InternMask
-      var placed = false
-      while (!placed) {
-        if (t(slot) == null) { t(slot) = n; placed = true }
-        else if (t(slot) == n) placed = true // dup seed (style, title)
-        else slot = (slot + 1) & InternMask
-      }
-    }
-    t
-  }
-  @inline private def internHash(s: String): Int = {
-    var h = 5381; var i = 0
-    while (i < s.length) { h = h * 33 + s.charAt(i); i += 1 }
-    h
-  }
-
-  /** ASCII-lowercased string from a char range — the HTML5 tag/attr name
-    * rule (ASCII case-insensitivity only). Common names come from the
-    * intern table (no allocation, memoized hash); the rest allocate as
-    * before. */
-  private def lowerString(a: Array[Char], from: Int, len: Int): String = {
-    // single pass: case-folded intern hash + uppercase detection
-    var h = 5381
-    var hasUpper = false
-    var k = 0
-    while (k < len) {
-      var c = a(from + k)
-      if (c >= 'A' && c <= 'Z') { hasUpper = true; c = (c + 32).toChar }
-      h = h * 33 + c
-      k += 1
-    }
-    var slot = h & InternMask
-    var entry = internTable(slot)
-    while (entry != null) {
-      if (entry.length == len) {
-        var j = 0
-        var eq = true
-        while (eq && j < len) {
-          var c = a(from + j)
-          if (c >= 'A' && c <= 'Z') c = (c + 32).toChar
-          if (c != entry.charAt(j)) eq = false
-          j += 1
-        }
-        if (eq) return entry
-      }
-      slot = (slot + 1) & InternMask
-      entry = internTable(slot)
-    }
-    if (!hasUpper) new String(a, from, len)
-    else {
-      val out = new Array[Char](len); var j = 0
-      while (j < len) {
-        val c = a(from + j)
-        out(j) = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
-        j += 1
-      }
-      new String(out)
-    }
   }
 
   private def indexOfLit(s: Array[Char], from: Int, n: Int, lit: String): Int = {
@@ -569,7 +434,7 @@ object Html5Tokenizer {
     var i = i0 + 1
     val nameStart = i
     while (i < n && (isLetterOrDigitF(s(i)) || s(i) == '-' || s(i) == ':')) i += 1
-    val name = lowerString(s, nameStart, i - nameStart)
+    val name = Tags.intern(s, nameStart, i - nameStart)
     // r6b: sinks that never read this tag's attributes (BlockSink on
     // inline tags — a/span/b/img carry the bulk of crawl attrs) skip
     // the name/value string building and entity decode entirely; the
@@ -592,7 +457,7 @@ object Html5Tokenizer {
         // attribute name
         val as = i
         while (i < n && !isWs(s(i)) && s(i) != '=' && s(i) != '>' && s(i) != '/') i += 1
-        val aname = if (want) lowerString(s, as, i - as) else null
+        val aname = if (want) Tags.intern(s, as, i - as) else null
         while (i < n && isWs(s(i))) i += 1
         var avalue = ""
         if (i < n && s(i) == '=') {

@@ -54,7 +54,7 @@ class DomSpec extends AnyFunSuite {
   test("link density accounting") {
     val b = blocks("""<p>xxxx <a href="/">yyyy</a></p>""")
     assert(b.head.linkChars == 4)
-    assert(b.head.totalChars == 9)
+    assert(b.head.text.length == 9)
   }
 
   test("boilerplate containers flag blocks") {
@@ -302,12 +302,14 @@ class ExplainAllSpec extends AnyFunSuite {
     val cwd = java.nio.file.Paths.get("").toAbsolutePath.toString
     val raw = "Location: InMemoryFileIndex [file:/data/sf/lineitem.parquet]\n" +
       s"Location: InMemoryFileIndex [file:$cwd/target/synth/ivf]\n" +
+      s"Arguments: FileSource[$cwd/target/synth/micro_v2/pages/data/*.parquet], [url#7]\n" +
       "Arguments: a.B$$$Lambda$3658/0x00007f5d9101a388@4f1cb802, l_qty#12L, plan_id=19, " +
       "TopKAgg@4b808, runId = 12911bc7-dba0-48c3-8ad0-11280ce97f22, ## q01, x >= 1.5@2\n" +
       " |  ZippedPartitionsRDD2[818] at zipPartitions at HostRank.scala:123 []"
     assert(ExplainAll.mask(raw, "/data/sf") ==
       "Location: InMemoryFileIndex [file:<input>/lineitem.parquet]\n" +
       "Location: InMemoryFileIndex [file:<cwd>/target/synth/ivf]\n" +
+      "Arguments: FileSource[<cwd>/target/synth/micro_v2/pages/data/*.parquet], [url#N]\n" +
       "Arguments: a.B$$$Lambda, l_qty#NL, plan_id=N, " +
       "TopKAgg@H, runId = <uuid>, ## q01, x >= 1.5@2\n" +
       " |  ZippedPartitionsRDD2[N] at zipPartitions at HostRank.scala:123 []")
