@@ -147,20 +147,40 @@ object Probe {
     } finally in.close()
   }
 
-  /** Output-identity checksum: total extracted chars and an order-sensitive
-    * FNV over every text, span and quarantine reason. */
+  /** Output-identity checksums: total extracted chars and an
+    * order-sensitive FNV over every Plain text, span and quarantine
+    * reason (`fnv`), and `fnv_all`, the same over the Plain, Format,
+    * Box and Color modes with each span's kind, the `DocMetrics` and
+    * the emitted block lengths `Chunker` cuts on. */
   private def sum(file: String): Unit = {
     var total = 0L
     var fnv = 0xcbf29ce484222325L
+    var fnvAll = 0xcbf29ce484222325L
     def mix(x: Long): Unit = fnv = (fnv ^ x) * 0x100000001b3L
-    readDump(file)(b => Extractor.extract(b, ExtractMode.Plain) match {
-      case Right(res) =>
-        total += res.text.length
-        res.text.foreach(c => mix(c))
-        res.spans.foreach { sp => mix(sp.start); mix(sp.end) }
-      case Left(reason) => reason.foreach(c => mix(c))
-    })
-    println(s"SUM total_chars=$total fnv=$fnv")
+    def mixAll(x: Long): Unit = fnvAll = (fnvAll ^ x) * 0x100000001b3L
+    val modes = Seq(ExtractMode.Plain, ExtractMode.Format, ExtractMode.Box(100, 900), ExtractMode.Color("red"))
+    val lens = new scala.collection.mutable.ArrayBuilder.ofInt
+    readDump(file) { b =>
+      Extractor.extract(b, ExtractMode.Plain) match {
+        case Right(res) =>
+          total += res.text.length
+          res.text.foreach(c => mix(c))
+          res.spans.foreach { sp => mix(sp.start); mix(sp.end) }
+        case Left(reason) => reason.foreach(c => mix(c))
+      }
+      modes.foreach { m =>
+        lens.clear()
+        Extractor.extract(b, m, lens) match {
+          case Right(res) =>
+            res.text.foreach(c => mixAll(c))
+            res.spans.foreach { sp => mixAll(sp.start); mixAll(sp.end); sp.kind.foreach(c => mixAll(c)) }
+            res.metrics.productIterator.foreach(x => mixAll(x.asInstanceOf[Long]))
+            lens.result().foreach(n => mixAll(n))
+          case Left(reason) => reason.foreach(c => mixAll(c))
+        }
+      }
+    }
+    println(s"SUM total_chars=$total fnv=$fnv fnv_all=$fnvAll")
   }
 
   /** `run` (all docs: extract cost per payload kind) and `phase` (html
