@@ -1,6 +1,6 @@
 package graft.classify
 
-import graft.html.Block
+import graft.html.{Block, Tags}
 
 /** Boilerpipe/Readability-family block classifier, re-derived natively:
   * deterministic text-density / link-density rules over flat blocks
@@ -22,24 +22,25 @@ object BlockClassifier {
   /** Structured content (li/dt/dd) needs a minimum of substance. */
   final val MinListItemWords = 2
 
-  /** Tags that are content whenever they carry text and pass the
-    * link-density gate. r6: a literal match (compiles to a hashCode
-    * switch over mostly hash-memoized interned names) instead of an
-    * immutable-Set trie walk — keep() runs once per block per doc. */
-  private def isContentTag(k: String): Boolean = k match {
-    case "p" | "pre" | "blockquote" | "table" | "caption" |
-         "figcaption" | "td" | "summary" => true
-    case _ => false
+  /** The rule over a block's fields: `flags` are the kind's `Tags.flags`
+    * (`FContent`: content whenever it carries text and passes the
+    * link-density gate; `FListItem`: structured, needs substance), `len`
+    * the text length and `words` its word count. The extractor calls it
+    * at block flush, with no `Block` built. */
+  def keep(flags: Int, headingLevel: Int, len: Int, words: Int, linkChars: Int,
+      inBoilerplateContainer: Boolean): Boolean = {
+    if (len == 0 || inBoilerplateContainer) false
+    else {
+      val linkDensity = linkChars.toDouble / len.toDouble
+      if (linkDensity > MaxLinkDensity) false
+      else if (headingLevel > 0) words >= 1
+      else if ((flags & Tags.FContent) != 0) true
+      else if ((flags & Tags.FListItem) != 0) words >= MinListItemWords && linkDensity <= 0.2
+      else words >= MinFreeTextWords
+    }
   }
 
-  def keep(b: Block): Boolean = {
-    if (b.text.isEmpty) false
-    else if (b.inBoilerplateContainer) false
-    else if (b.linkDensity > MaxLinkDensity) false
-    else if (b.headingLevel > 0) b.words >= 1
-    else if (isContentTag(b.kind)) true
-    else if (b.kind == "li" || b.kind == "dt" || b.kind == "dd")
-      b.words >= MinListItemWords && b.linkDensity <= 0.2
-    else b.words >= MinFreeTextWords
-  }
+  def keep(b: Block): Boolean =
+    keep(Tags.flags(b.kind), b.headingLevel, b.text.length, b.words, b.linkChars,
+      b.inBoilerplateContainer)
 }

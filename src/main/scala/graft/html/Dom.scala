@@ -22,145 +22,160 @@ final case class Block(
     inBoilerplateContainer: Boolean,
     startByte: Long,
     endByte: Long,
-    nSeps: Int = -1) {
-  // `nSeps` is the separator (' '/'\n') count of `text`, fused into the
-  // builder's normalize pass (r6b — `words` was a second full scan over
-  // every kept block's text, ~7% of the html kernel profile); -1 means
-  // "not precomputed" and falls back to the scan (table blocks, tests).
-  lazy val words: Int = if (text.isEmpty) 0 else if (nSeps >= 0) nSeps + 1 else {
-    var c = 1; var i = 0
-    while (i < text.length) { if (text.charAt(i) == ' ' || text.charAt(i) == '\n') c += 1; i += 1 }
-    c
-  }
-  def linkDensity: Double =
-    if (text.isEmpty) 0.0 else linkChars.toDouble / text.length.toDouble
-  def headingLevel: Int =
-    if (kind.length == 2 && kind.charAt(0) == 'h' && kind.charAt(1).isDigit) kind.charAt(1) - '0' else 0
+    nSeps: Int) {
+  /** `nSeps` is the separator (' '/'\n') count of `text`, counted by the
+    * builder as it writes the text (r6b: a second scan over every kept
+    * block's text was ~7% of the html kernel profile). */
+  def words: Int = if (text.isEmpty) 0 else nSeps + 1
+  def headingLevel: Int = Tags.headingLevel(kind)
 }
 
-/** Builds the flat block list from the token stream — the lightweight
+/** Builds the flat blocks from the token stream — the lightweight
   * "DOM" (SURVEY.md §7 module `html/Dom.scala`). No tree is materialized;
   * a tag stack tracks ancestry, which is all the classifier needs. Which
   * tags suppress content, start a block or mark a boilerplate container
   * is `Tags.flags`: `Tags` owns every tag role.
+  *
+  * `BlockSink` is the only code that sees a block's characters: it
+  * collapses whitespace as each text event arrives and, at the block's
+  * end, hands a `BlockView` to a `BlockConsumer`. The extractor
+  * classifies and assembles straight from the view; `blocksStreaming`
+  * is the consumer that builds `Block`s.
   */
 object Dom {
+  /** A U+0001 char in text is a hard newline, as `<br>` is: the builder
+    * once marked `<br>` with it in the raw text, and output keeps the rule. */
   private final val BrSentinel = '\u0001'
 
-  // r6b: char-class table for normalizeArr's inner loop — one bounds
-  // check + load + compare on the common (regular-char) path instead
-  // of the sentinel + five whitespace comparisons. 0=regular, 1=ws,
-  // 2=BR sentinel; chars >= 256 are always regular (the ws set and the
-  // sentinel are all < 256).
+  // Char classes of the collapse loops: 0=regular, 1=ws, 2=BR sentinel.
+  // Every whitespace char and the sentinel are <= ' ', so a char above
+  // ' ' is regular after one compare; the table covers the rest.
   private val normCls: Array[Byte] = {
-    val t = new Array[Byte](256)
+    val t = new Array[Byte](' ' + 1)
     t(' ') = 1; t('\t') = 1; t('\n') = 1; t('\r') = 1; t('\f') = 1
     t(BrSentinel) = 2
     t
   }
+  @inline private def charClass(c: Char): Int = if (c > ' ') 0 else normCls(c)
 
   /** Collapse [ \t\n\r\f]+ → ' ', honor BR sentinels as hard newlines;
-    * leading/trailing hard newlines are stripped. Single streaming pass
-    * (this runs once per block or cell — no regex, no intermediate
-    * strings). The builder's chars are copied into `ks.normBuf` and
-    * collapsed there. `ks` is passed in by the caller (r6b) because a
-    * ThreadLocal.get per BLOCK was itself hot on executor threads —
-    * Spark threads carry long ThreadLocalMap probe chains, and the
-    * lookup showed at ~5% in the extract-stage profile. */
+    * leading/trailing hard newlines are stripped. The builder's chars
+    * are copied into `ks.normBuf` and collapsed there in one pass (a
+    * table cell, a title). `ks` is passed in by the caller (r6b): a
+    * ThreadLocal.get per call was itself hot on executor threads. */
   private[graft] def normalize(raw: java.lang.StringBuilder, ks: KernelScratch): String = {
     val len = raw.length
     val buf = KernelScratch.grow(ks.normBuf, len)
     ks.normBuf = buf
     raw.getChars(0, len, buf, 0)
-    normalizeArr(buf, len, null)
-  }
-
-  /** In-place form (r6b): collapses `buf[0, len)` within `buf` itself —
-    * the sink's flat accumulator or the builder copy above — so a block
-    * costs one read-and-write pass and one final String copy, and no
-    * second buffer. Each input char writes at most one char past the
-    * whitespace it collapses, so the write cursor never passes the read
-    * cursor. `sepsOut(0)`, when non-null, receives the separator
-    * (' '/'\n') count of the RETURNED string — computed on the emit
-    * branches only (the common write path pays nothing), so
-    * `Block.words` needs no second scan over the text. */
-  private[graft] def normalizeArr(buf: Array[Char], len: Int, sepsOut: Array[Int]): String = {
-    if (len == 0) { if (sepsOut != null) sepsOut(0) = 0; return "" }
-    var k = 0     // output length
-    var seps = 0  // ' ' + '\n' emitted (word separators)
+    var k = 0 // output length; never passes the read cursor
     var ws = false
     var i = 0
     while (i < len) {
       val c = buf(i)
-      val cls = if (c < 256) normCls(c) else 0
+      val cls = charClass(c)
       if (cls == 0) {
-        if (ws && k > 0 && buf(k - 1) != '\n') { buf(k) = ' '; k += 1; seps += 1 }
+        if (ws && k > 0 && buf(k - 1) != '\n') { buf(k) = ' '; k += 1 }
         ws = false
         buf(k) = c; k += 1
-      } else if (cls == 1) {
-        ws = true
-      } else { // BR sentinel
-        if (k > 0) { buf(k) = '\n'; k += 1; seps += 1 } // skip leading hard newlines
+      } else if (cls == 1) ws = true
+      else { // BR sentinel: skip leading hard newlines
+        if (k > 0) { buf(k) = '\n'; k += 1 }
         ws = false
       }
       i += 1
     }
-    while (k > 0 && buf(k - 1) == '\n') { k -= 1; seps -= 1 }
-    if (sepsOut != null) sepsOut(0) = seps
+    while (k > 0 && buf(k - 1) == '\n') k -= 1
     new String(buf, 0, k)
   }
 
-  /** Fused path: bytes → blocks in one scan, no token materialization
-    * (the per-doc token array, TextRun strings and comment bodies were
-    * measured at ~40% of html kernel cost). Returns the builder's own
-    * buffer: a fresh one per call, no Vector copy. */
-  def blocksStreaming(bytes: Array[Byte]): ArrayBuffer[Block] = {
-    val ks = KernelScratch.get()
-    try blocks(bytes, ks) finally KernelScratch.release(ks)
+  /** One flushed block as the sink hands it to a `BlockConsumer`. The
+    * view and its `chars` belong to the sink: they are valid during the
+    * `block` call only. The text is `chars[0, len)`, collapsed (`<pre>`:
+    * raw, one leading newline stripped); `nSeps` is its ' '/'\n' count;
+    * `cells` is non-empty for a table block only. */
+  final class BlockView {
+    var kind: String = "body"
+    /** `Tags.flags(kind)`. */
+    var kindFlags: Int = Tags.flags("body")
+    var cls: String = ""
+    var style: String = ""
+    var linkChars: Int = 0
+    var inBoilerplateContainer: Boolean = false
+    var startByte: Long = -1L
+    var endByte: Long = -1L
+    var chars: Array[Char] = null
+    var len: Int = 0
+    var nSeps: Int = 0
+    var cells: Vector[Vector[String]] = Vector.empty
+
+    def words: Int = if (len == 0) 0 else nSeps + 1
+    def headingLevel: Int = Tags.headingLevel(kind)
+    def toBlock: Block = Block(kind, new String(chars, 0, len), cells, cls, style, linkChars,
+      inBoilerplateContainer, startByte, endByte, nSeps)
   }
 
-  /** `blocksStreaming` on a scratch the caller fetched (and releases). */
-  private[graft] def blocks(bytes: Array[Byte], ks: KernelScratch): ArrayBuffer[Block] = {
-    val sink = new BlockSink(ks)
+  /** Receives every block of a document, in order, at its flush. */
+  trait BlockConsumer { def block(b: BlockView): Unit }
+
+  /** Fused path: bytes → blocks in one scan, no token materialization
+    * (the per-doc token array, TextRun strings and comment bodies were
+    * measured at ~40% of html kernel cost). Returns a fresh buffer per
+    * call. */
+  def blocksStreaming(bytes: Array[Byte]): ArrayBuffer[Block] = {
+    val ks = KernelScratch.get()
+    try {
+      val out = new ArrayBuffer[Block]
+      stream(bytes, ks, b => out += b.toBlock)
+      out
+    } finally KernelScratch.release(ks)
+  }
+
+  /** Streams `bytes` through one `BlockSink` into `consumer`, on a scratch
+    * the caller fetched (and releases). */
+  private[graft] def stream(bytes: Array[Byte], ks: KernelScratch, consumer: BlockConsumer): Unit = {
+    val sink = new BlockSink(ks, consumer)
     Html5Tokenizer.stream(bytes, sink, ks)
-    sink.resultBuffer()
+    sink.finish()
   }
 
   /** The single block-building state machine, fed by tokenizer events. */
-  final class BlockSink(ks: KernelScratch) extends Html5Tokenizer.TokenSink {
+  final class BlockSink(ks: KernelScratch, consumer: BlockConsumer) extends Html5Tokenizer.TokenSink {
     /** The sink reads attributes only on table (class) and block-start
       * tags (class/style via startBlock) — inline tags (a/span/b/img,
       * which carry most crawl-HTML attributes, href above all) skip
       * attr string construction in the tokenizer entirely (r6b). */
     override def wantsAttrs(name: String): Boolean =
       name == "table" || (Tags.flags(name) & Tags.FBlock) != 0
-    private val out = new ArrayBuffer[Block]
+
+    /** The current block's kind, cls and style; filled in at flush. */
+    private val view = new BlockView
 
     private var suppressDepth = 0
     private var boilerDepth = 0
     private var linkDepth = 0
-    private val stack = new ArrayBuffer[String]
+    // open block tags (interned names), innermost last
+    private var stack = new Array[String](16)
+    private var depth = 0
 
-    // current block accumulation
-    private var curKind = "body"
-    private var curCls = ""
-    private var curStyle = ""
-    // Flat char accumulator for the current block's text (r6b): a
-    // StringBuilder here paid coder checks (LATIN1/UTF16 inflation) on
-    // every append plus a full getChars copy into normalize's scratch;
-    // the flat array appends with arraycopy and normalize reads it
-    // zero-copy. Thread-scratch, reused across documents.
+    // The current block's collapsed text, written as events arrive into
+    // the thread-scratch `sinkBuf` (r6b: a flat array, not a
+    // StringBuilder, so appends pay no coder checks). `ws` is a pending
+    // whitespace run, `seps` the ' '/'\n' count written; a `<pre>` block
+    // keeps its chars and drops one leading '\n' (`preStart`).
     private var tBuf: Array[Char] = ks.sinkBuf
     private var tLen = 0
     private def tEnsure(extra: Int): Unit =
       if (tLen + extra > tBuf.length) {
         tBuf = KernelScratch.grow(tBuf, tLen + extra); ks.sinkBuf = tBuf
       }
-    private def tAppend(c: Char): Unit = { tEnsure(1); tBuf(tLen) = c; tLen += 1 }
+    private var ws = false
+    private var seps = 0
+    private var pre = false
+    private var preStart = true
     private var curLink = 0
     private var spanStart = -1L
     private var spanEnd = -1L
-    private var curPre = false
 
     // table accumulation
     private var tableDepth = 0
@@ -172,43 +187,50 @@ object Dom {
     private var tblSpanStart = -1L
     private var tblSpanEnd = -1L
 
-    private val sepsBox = new Array[Int](1)
-
+    /** Hands the current block to the consumer (trailing hard newlines
+      * stripped, unless `<pre>`) when it has text, and starts the next. */
     private def flush(): Unit = {
-      val text =
-        if (curPre) {
-          // in-place sentinel scan over the flat accumulator (r6b: no
-          // copy at all before the final String); the scan also counts
-          // separators (fused Block.words)
-          val len = tLen
-          val from = if (len > 0 && tBuf(0) == '\n') 1 else 0
-          var seps = 0
-          var i = from
-          while (i < len) {
-            if (tBuf(i) == BrSentinel) tBuf(i) = '\n'
-            if (tBuf(i) == ' ' || tBuf(i) == '\n') seps += 1
-            i += 1
-          }
-          sepsBox(0) = seps
-          new String(tBuf, from, len - from)
-        } else normalizeArr(tBuf, tLen, sepsBox)
-      if (text.nonEmpty) {
-        out += Block(curKind, text, Vector.empty, curCls, curStyle, curLink,
-          boilerDepth > 0, spanStart, spanEnd, nSeps = sepsBox(0))
-      }
-      tLen = 0; curLink = 0; spanStart = -1L; spanEnd = -1L
+      var k = tLen
+      var s = seps
+      if (!pre) while (k > 0 && tBuf(k - 1) == '\n') { k -= 1; s -= 1 }
+      if (k > 0) emit(k, s, curLink, spanStart, spanEnd)
+      tLen = 0; seps = 0; ws = false; preStart = true
+      curLink = 0; spanStart = -1L; spanEnd = -1L
+    }
+
+    private def emit(len: Int, nSeps: Int, linkChars: Int, start: Long, end: Long): Unit = {
+      val v = view
+      v.chars = tBuf; v.len = len; v.nSeps = nSeps; v.linkChars = linkChars
+      v.inBoilerplateContainer = boilerDepth > 0; v.startByte = start; v.endByte = end
+      consumer.block(v)
     }
 
     private def startBlock(kind: String, cls: String, style: String): Unit = {
-      curKind = kind; curCls = cls; curStyle = style
-      curPre = kind == "pre"
+      view.kind = kind; view.kindFlags = Tags.flags(kind)
+      view.cls = cls; view.style = style
+      pre = kind == "pre"
+    }
+
+    /** Resumes the enclosing block (or body) after a block or table closes. */
+    private def resume(): Unit = startBlock(if (depth > 0) stack(depth - 1) else "body", "", "")
+
+    /** A table's one block: its text (cells joined by ' ', rows by '\n')
+      * goes into `tBuf`, which is empty while a table is open. */
+    private def emitTable(rows: Vector[Vector[String]]): Unit = {
+      val text = rows.map(_.mkString(" ")).mkString("\n")
+      tEnsure(text.length)
+      text.getChars(0, text.length, tBuf, 0)
+      view.kind = "table"; view.kindFlags = Tags.flags("table")
+      view.cls = tblCls; view.style = ""; view.cells = rows
+      emit(text.length, text.count(c => c == ' ' || c == '\n'), 0, tblSpanStart, tblSpanEnd)
+      view.cells = Vector.empty
     }
 
     private def hasNonWs(chars: Array[Char], from: Int, len: Int): Boolean = {
       var i = from
       while (i < from + len) {
         val c = chars(i)
-        if (c != ' ' && c != '\t' && c != '\n' && c != '\r' && c != '\f') return true
+        if (charClass(c) != 1) return true
         i += 1
       }
       false
@@ -240,7 +262,7 @@ object Dom {
               case _                              => ()
             }
           } else if (name == "br") {
-            tAppend(BrSentinel)
+            hardNewline()
           } else if (name == "a") {
             linkDepth += 1
             // links never nest in practice; guard runaway depth
@@ -248,11 +270,19 @@ object Dom {
           } else if ((fl & Tags.FBlock) != 0) {
             flush()
             if ((fl & Tags.FBoiler) != 0) boilerDepth += 1
-            stack += name
+            if (depth == stack.length) stack = java.util.Arrays.copyOf(stack, 2 * depth)
+            stack(depth) = name; depth += 1
             startBlock(name, t.attrOrEmpty("class"), t.attrOrEmpty("style"))
           }
           // other inline tags (b, i, em, span, code, …) are transparent
         }
+    }
+
+    /** `<br>`: a '\n' unless at the block's start (`<pre>`: always). */
+    private def hardNewline(): Unit = {
+      if (pre) preStart = false
+      if (pre || tLen > 0) { tEnsure(1); tBuf(tLen) = '\n'; tLen += 1; seps += 1 }
+      ws = false
     }
 
     def tagClose(name: String, startByte: Int, endByte: Int): Unit = {
@@ -264,13 +294,8 @@ object Dom {
             if (tableDepth > 0) tableDepth -= 1
             if (tableDepth == 0) {
               if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
-              if (tblRows.nonEmpty) {
-                val rows = tblRows.toVector
-                val text = rows.map(_.mkString(" ")).mkString("\n")
-                out += Block("table", text, rows, tblCls, "", 0, boilerDepth > 0,
-                  tblSpanStart, tblSpanEnd)
-              }
-              startBlock(if (stack.nonEmpty) stack.last else "body", "", "")
+              if (tblRows.nonEmpty) emitTable(tblRows.toVector)
+              resume()
             }
           } else if (tableDepth > 0) {
             name match {
@@ -285,9 +310,10 @@ object Dom {
           } else if ((fl & Tags.FBlock) != 0) {
             flush()
             if ((fl & Tags.FBoiler) != 0 && boilerDepth > 0) boilerDepth -= 1
-            val idx = stack.lastIndexOf(name)
-            if (idx >= 0) stack.remove(idx, stack.length - idx)
-            startBlock(if (stack.nonEmpty) stack.last else "body", "", "")
+            var i = depth - 1
+            while (i >= 0 && stack(i) != name) i -= 1
+            if (i >= 0) depth = i
+            resume()
           }
         }
     }
@@ -303,9 +329,9 @@ object Dom {
               }
             }
           } else {
-            tEnsure(len); System.arraycopy(chars, from, tBuf, tLen, len); tLen += len
             if (linkDepth > 0) curLink += len
-            if (hasNonWs(chars, from, len)) {
+            val nonWs = if (pre) appendPre(chars, from, len) else appendCollapsed(chars, from, len)
+            if (nonWs) {
               if (spanStart < 0) spanStart = startByte.toLong
               spanEnd = endByte.toLong
             }
@@ -313,9 +339,69 @@ object Dom {
         }
     }
 
-    private[graft] def resultBuffer(): ArrayBuffer[Block] = {
-      flush()
-      out
+    /** Appends `chars[from, from + len)` collapsed: a whitespace run
+      * becomes one ' ' before the next char (none at the block's start or
+      * after a '\n'), a BR sentinel char a '\n' (none at the start).
+      * Returns whether the range held a char outside [ \t\n\r\f]. */
+    private def appendCollapsed(chars: Array[Char], from: Int, len: Int): Boolean = {
+      tEnsure(len + 1) // at most one pending space more than the input
+      val buf = tBuf
+      var k = tLen
+      var s = seps
+      var w = ws
+      var nonWs = false
+      var i = from
+      val end = from + len
+      while (i < end) {
+        val c = chars(i)
+        val cls = charClass(c)
+        if (cls == 0) {
+          if (w) {
+            if (k > 0 && buf(k - 1) != '\n') { buf(k) = ' '; k += 1; s += 1 }
+            w = false
+          }
+          buf(k) = c; k += 1
+          nonWs = true
+        } else if (cls == 1) {
+          w = true
+        } else {
+          if (k > 0) { buf(k) = '\n'; k += 1; s += 1 }
+          w = false
+          nonWs = true
+        }
+        i += 1
+      }
+      tLen = k; seps = s; ws = w
+      nonWs
     }
+
+    /** `<pre>`: appends the chars as they are (a BR sentinel char as
+      * '\n'), dropping a '\n' that starts the block. */
+    private def appendPre(chars: Array[Char], from: Int, len: Int): Boolean = {
+      tEnsure(len)
+      val buf = tBuf
+      var k = tLen
+      var s = seps
+      var nonWs = false
+      var i = from
+      val end = from + len
+      if (preStart && i < end) {
+        preStart = false
+        if (chars(i) == '\n') i += 1
+      }
+      while (i < end) {
+        val raw = chars(i)
+        if (charClass(raw) != 1) nonWs = true
+        val c = if (raw == BrSentinel) '\n' else raw
+        if (c == ' ' || c == '\n') s += 1
+        buf(k) = c; k += 1
+        i += 1
+      }
+      tLen = k; seps = s
+      nonWs
+    }
+
+    /** End of the document: the last block. */
+    def finish(): Unit = flush()
   }
 }

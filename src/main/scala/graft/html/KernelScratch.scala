@@ -10,8 +10,8 @@ package graft.html
   * chars and their byte offsets (`Html5Tokenizer.decode`; offsets for
   * non-ASCII UTF-8 only); `tokBuf`, a text run of several segments
   * (the tokenizer; one-segment runs are handed over from `decChars`);
-  * `sinkBuf`, the current block's text (`Dom.BlockSink`, collapsed in
-  * place at the block's end); `normBuf`, a table cell's or title's copy
+  * `sinkBuf`, the current block's text (`Dom.BlockSink`, collapsed as
+  * it arrives); `normBuf`, a table cell's or title's copy
   * that `Dom.normalize` collapses in place; `outText`, the output
   * text (`Extractor`). Every buffer is consumed within one kernel call,
   * and kernel calls never interleave on one thread.
@@ -30,12 +30,12 @@ final class KernelScratch {
   var tokBuf: Array[Char] = new Array[Char](4 * 1024)
   var sinkBuf: Array[Char] = new Array[Char](8 * 1024)
   var normBuf: Array[Char] = new Array[Char](16 * 1024)
-  val outText: java.lang.StringBuilder = new java.lang.StringBuilder(8 * 1024)
+  var outText: Array[Char] = new Array[Char](8 * 1024)
 
   private def oversized: Boolean = {
     import KernelScratch.RetainMark
     decChars.length > RetainMark || decOffs.length > RetainMark || tokBuf.length > RetainMark ||
-      sinkBuf.length > RetainMark || normBuf.length > RetainMark || outText.capacity > RetainMark
+      sinkBuf.length > RetainMark || normBuf.length > RetainMark || outText.length > RetainMark
   }
 }
 

@@ -1,9 +1,11 @@
 package graft.html
 
-/** The one owner of tag-name knowledge: the role sets the tokenizer and
-  * the block builder read, and the intern table their names come from.
+/** The one owner of tag-name knowledge: the role sets the tokenizer, the
+  * block builder and the classifier read, and the intern table their
+  * names come from.
   *
-  * One fixed open-addressing table (djb2 hash, linear probe) is seeded
+  * One fixed open-addressing table (linear probe on `String.hashCode`,
+  * which a String caches, so `flags` on a seen name hashes nothing) is seeded
   * from the role sets and the common tag/attribute names a crawl
   * serves. A slot holds the interned name and its role bits, so
   * `intern` returns the same String instance for every spelling of a
@@ -23,6 +25,10 @@ object Tags {
   final val FBlock = 8
   /** Semantic-HTML5 boilerplate container (classifier hard-drop). */
   final val FBoiler = 16
+  /** Content whenever it carries text and passes the link-density gate (classifier). */
+  final val FContent = 32
+  /** List item: kept with a minimum of words and few links (classifier). */
+  final val FListItem = 64
 
   private val rawtext: Set[String] = Set("script", "style", "xmp", "iframe", "noembed", "noframes")
   private val rcdata: Set[String] = Set("textarea", "title")
@@ -34,10 +40,14 @@ object Tags {
     "header", "footer", "aside", "ul", "ol", "dl", "dt", "dd", "figure",
     "figcaption", "caption", "body", "tr", "hr", "address", "details", "summary")
   private val boilerplate: Set[String] = Set("nav", "footer", "aside", "header", "form")
+  private val content: Set[String] = Set("p", "pre", "blockquote", "table", "caption",
+    "figcaption", "td", "summary")
+  private val listItem: Set[String] = Set("li", "dt", "dd")
 
   /** Each role set with its bit. */
   val roles: Seq[(Set[String], Int)] = Seq(rawtext -> FRawtext, rcdata -> FRcdata,
-    suppress -> FSuppress, block -> FBlock, boilerplate -> FBoiler)
+    suppress -> FSuppress, block -> FBlock, boilerplate -> FBoiler,
+    content -> FContent, listItem -> FListItem)
 
   /** Names interned beside the role sets: with them, the tags and
     * attributes that cover essentially every name a crawl serves. */
@@ -58,7 +68,7 @@ object Tags {
   private val vals = new Array[Int](Mask + 1)
   locally {
     def add(n: String, f: Int): Unit = {
-      var slot = hash(n) & Mask
+      var slot = n.hashCode & Mask
       while (names(slot) != null && names(slot) != n) slot = (slot + 1) & Mask
       names(slot) = n
       vals(slot) |= f
@@ -67,15 +77,9 @@ object Tags {
     common.foreach(add(_, 0))
   }
 
-  @inline private def hash(s: String): Int = {
-    var h = 5381; var i = 0
-    while (i < s.length) { h = h * 33 + s.charAt(i); i += 1 }
-    h
-  }
-
   /** Role bits of a lowercased name; 0 for a name in no role set. */
   def flags(name: String): Int = {
-    var slot = hash(name) & Mask
+    var slot = name.hashCode & Mask
     var e = names(slot)
     while (e != null) {
       if ((e eq name) || e == name) return vals(slot)
@@ -85,18 +89,22 @@ object Tags {
     0
   }
 
+  /** 1..6 for h1..h6, else 0: a block's heading level. */
+  def headingLevel(name: String): Int =
+    if (name.length == 2 && name.charAt(0) == 'h' && name.charAt(1).isDigit) name.charAt(1) - '0' else 0
+
   /** ASCII-lowercased string from a char range — the HTML5 tag/attr name
     * rule (ASCII case-insensitivity only). Seeded names return the
     * table's instance; the rest allocate a fresh string. */
   def intern(a: Array[Char], from: Int, len: Int): String = {
     // single pass: case-folded hash + uppercase detection
-    var h = 5381
+    var h = 0 // String.hashCode of the lowercased name
     var hasUpper = false
     var k = 0
     while (k < len) {
       var c = a(from + k)
       if (c >= 'A' && c <= 'Z') { hasUpper = true; c = (c + 32).toChar }
-      h = h * 33 + c
+      h = 31 * h + c
       k += 1
     }
     var slot = h & Mask

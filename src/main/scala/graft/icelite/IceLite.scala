@@ -1,5 +1,6 @@
 package graft.icelite
 
+import graft.util.Parquet
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -61,12 +62,14 @@ object IceLite {
       committedAt = m.getOrElse("committed_at", ""))
   }
 
-  /** Snapshot-scoped read; defaults to the latest committed snapshot. */
+  /** Snapshot-scoped read; defaults to the latest committed snapshot. The
+    * schema comes from one data file's footer on the driver
+    * (`util.Parquet`), so a read launches no job. */
   def read(spark: SparkSession, root: String, snapshotId: Option[Long] = None): DataFrame = {
     val id = snapshotId.orElse(currentSnapshotId(spark, root))
       .getOrElse(throw new IllegalStateException(s"IceLite table $root has no committed snapshot"))
     val mf = readManifest(spark, root, id)
-    spark.read.parquet(mf.files.map(f => s"$root/data/$f"): _*)
+    Parquet.read(spark, mf.files.map(f => s"$root/data/$f"): _*)
   }
 
   /** Commit a new snapshot. `append=true` carries the parent file set

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkEntry.SynthRoot
+import graft.util.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,8 +27,9 @@ object Query {
   lazy val all: Seq[Query] = Relational.all ++ TextDedup.all ++ Sketches.all ++
     Indexes.all ++ CrawlExtract.all ++ Streaming.all
 
+  /** Table `name` of `dir`, read without a schema-inference job. */
   private[queries] def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(s, s"$dir/$name.parquet")
 
   /** `<tag>_<8 hex>`, fresh per call: a run's memory-sink name. */
   private[queries] def runId(tag: String): String =

@@ -12,11 +12,11 @@ import org.scalatest.funsuite.AnyFunSuite
 class KernelScratchSpec extends AnyFunSuite {
   import KernelScratchSpec.page
 
-  /** Bytes the calling thread's scratch holds (`outText` at two bytes a char). */
+  /** Bytes the calling thread's scratch holds. */
   private def retained(): Long = {
     val ks = KernelScratch.get()
     2L * (ks.decChars.length + ks.tokBuf.length + ks.sinkBuf.length + ks.normBuf.length +
-      ks.outText.capacity) + 4L * ks.decOffs.length
+      ks.outText.length) + 4L * ks.decOffs.length
   }
 
   /** Runs `f` on a fresh thread (a fresh scratch) and returns its result. */
@@ -42,6 +42,18 @@ class KernelScratchSpec extends AnyFunSuite {
     assert(lens == Seq(Extractor.MaxOutChars, Extractor.MaxOutChars))
     assert(afterExtract <= (16L << 20), s"$afterExtract bytes retained after extract")
     assert(afterOthers <= (16L << 20), s"$afterOthers bytes retained after blocksStreaming/TableMd")
+  }
+
+  test("Plain output text stops at the cap on a near-MaxDocBytes single-block page") {
+    val (len, capacity) = onFreshThread {
+      val ks = KernelScratch.get() // the scratch the kernel call below uses
+      val len = Extractor.extract(page(15 << 20, "alpha beta gamma "), ExtractMode.Plain)
+        .fold(e => fail(e), _.text.length)
+      (len, ks.outText.length)
+    }
+    assert(len == Extractor.MaxOutChars)
+    // the grow rule: 1.5 × the need, here MaxOutChars + 1 chars
+    assert(capacity <= (Extractor.MaxOutChars + 1) * 3 / 2, s"outText capacity $capacity")
   }
 
   /** Runs `KernelOomChild payload` in a child JVM with a `heap` max heap;

@@ -56,8 +56,11 @@ class ProbeSpec extends AnyFunSuite {
     Probe.main(Array("kernel", "gen", f, n.toString))
     var total = 0L
     var fnv = 0xcbf29ce484222325L
+    var fnvAll = 0xcbf29ce484222325L
     def mix(x: Long): Unit = fnv = (fnv ^ x) * 0x100000001b3L
-    for (i <- 0L until n; p <- SynthCorpus.docRows(i, n)._1)
+    def mixAll(x: Long): Unit = fnvAll = (fnvAll ^ x) * 0x100000001b3L
+    val modes = Seq(ExtractMode.Plain, ExtractMode.Format, ExtractMode.Box(100, 900), ExtractMode.Color("red"))
+    for (i <- 0L until n; p <- SynthCorpus.docRows(i, n)._1) {
       Extractor.extract(p.html, ExtractMode.Plain) match {
         case Right(r) =>
           total += r.text.length
@@ -65,8 +68,23 @@ class ProbeSpec extends AnyFunSuite {
           r.spans.foreach { sp => mix(sp.start); mix(sp.end) }
         case Left(reason) => reason.foreach(c => mix(c.toLong))
       }
+      modes.foreach { m =>
+        val lens = new scala.collection.mutable.ArrayBuilder.ofInt
+        Extractor.extract(p.html, m, lens) match {
+          case Right(r) =>
+            r.text.foreach(c => mixAll(c.toLong))
+            r.spans.foreach { sp => mixAll(sp.start); mixAll(sp.end); sp.kind.foreach(c => mixAll(c.toLong)) }
+            val dm = r.metrics
+            Seq(dm.bytes_in, dm.is_pdf, dm.blocks_total, dm.blocks_kept, dm.blocks_dropped,
+              dm.kept_chars, dm.out_chars).foreach(mixAll)
+            lens.result().foreach(l => mixAll(l.toLong))
+          case Left(reason) => reason.foreach(c => mixAll(c.toLong))
+        }
+      }
+    }
     assert(total > 0)
-    assert(stdout(Probe.main(Array("kernel", "sum", f))).trim == s"SUM total_chars=$total fnv=$fnv")
+    assert(stdout(Probe.main(Array("kernel", "sum", f))).trim ==
+      s"SUM total_chars=$total fnv=$fnv fnv_all=$fnvAll")
     // the hardware anchor takes over a minute per call; a constant stands in
     val anchor = () => 1e9
     assert(stdout(Probe.kernelCost(f, 1, phases = false, anchor)).contains("TOTAL    docs_per_anchor_op="))

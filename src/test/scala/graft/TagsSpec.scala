@@ -19,7 +19,10 @@ class TagsSpec extends AnyFunSuite {
       "div", "section", "article", "main", "nav", "header", "footer", "aside",
       "ul", "ol", "dl", "dt", "dd", "figure", "figcaption", "caption", "body",
       "tr", "hr", "address", "details", "summary") -> FBlock,
-    Set("nav", "footer", "aside", "header", "form") -> FBoiler)
+    Set("nav", "footer", "aside", "header", "form") -> FBoiler,
+    Set("p", "pre", "blockquote", "table", "caption", "figcaption", "td",
+      "summary") -> FContent,
+    Set("li", "dt", "dd") -> FListItem)
 
   private def bits(name: String): Int =
     expected.collect { case (set, f) if set(name) => f }.foldLeft(0)(_ | _)
@@ -33,10 +36,13 @@ class TagsSpec extends AnyFunSuite {
     assert(Tags.flags("nav") == (FBlock | FBoiler))
     assert(Tags.flags("script") == (FRawtext | FSuppress))
     assert(Tags.flags("title") == (FRcdata | FSuppress))
+    assert(Tags.flags("p") == (FBlock | FContent))
+    assert(Tags.flags("table") == FContent)
+    assert(Tags.flags("li") == (FBlock | FListItem))
   }
 
   test("a name in no role set has no flags, interned or not") {
-    for (name <- Seq("span", "a", "table", "td", "br", "img", "class", "href",
+    for (name <- Seq("span", "a", "tbody", "th", "br", "img", "class", "href",
         "x-widget", ""))
       assert(Tags.flags(name) == 0, name)
   }

@@ -42,7 +42,8 @@ object TokenList {
   }
 
   def blocks(tokens: scala.collection.IndexedSeq[AnyRef]): Vector[Block] = {
-    val sink = new Dom.BlockSink(KernelScratch.get())
+    val out = Vector.newBuilder[Block]
+    val sink = new Dom.BlockSink(KernelScratch.get(), b => out += b.toBlock)
     tokens.foreach {
       case t: TagOpen  => sink.tagOpen(t)
       case t: TagClose => sink.tagClose(t.name, t.startByte, t.endByte)
@@ -51,6 +52,7 @@ object TokenList {
         sink.text(chars, 0, chars.length, t.startByte, t.endByte)
       case _           => () // comments, doctype
     }
-    sink.resultBuffer().toVector
+    sink.finish()
+    out.result()
   }
 }
