@@ -148,7 +148,7 @@ object Dom {
     override def wantsAttrs(name: String): Boolean =
       name == "table" || (Tags.flags(name) & Tags.FBlock) != 0
 
-    /** The current block's kind, cls and style; filled in at flush. */
+    /** Holds the current block's kind, cls and style; the rest is set at flush. */
     private val view = new BlockView
 
     private var suppressDepth = 0
