@@ -13,6 +13,7 @@ object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val spark = Sessions.local(8)
+    import spark.implicits._
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans for oracle-checked and plan-noted queries\n\n")
@@ -78,7 +79,6 @@ object ExplainAll {
       "only wide exchange is the bounded per-(query,doc) agg above the " +
       "ObjectHashAggregate top-k.",
       {
-        import spark.implicits._
         val docsT = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
         val idx = s"${SparkEntry.SynthRoot}/postings_index_plan"
         if (!graft.functions.PostingsIndex.isCurrent(spark, idx, docsT))
@@ -118,32 +118,14 @@ object ExplainAll {
       "Review point: one flatMap to adjacent pairs (SerializeFromObject " +
       "map side), ONE Exchange on the pair key with a partial " +
       "HashAggregate below it (mega-pairs like (t,h) absorb map-side), " +
-      "then TakeOrderedAndProject/Sort+Limit of a SINGLE row — the " +
-      "vocabulary itself is never collected or globally sorted.",
-      {
-        import spark.implicits._
-        val words = docs
-          .select(org.apache.spark.sql.functions.explode(
-            org.apache.spark.sql.functions.split(col("text"), " ")).as("word"))
-          .filter(col("word") =!= "")
-          .groupBy(col("word"))
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("freq"))
-          .select(col("word").cast("string"), col("freq").cast("long"))
-          .as[(String, Long)]
-          .map { case (w, f) => (w.map(_.toString): Seq[String], f) }
-        words.flatMap { case (syms, f) =>
-            if (syms.length < 2) Iterator.empty
-            else (0 until syms.length - 1).iterator.map(i => ((syms(i), syms(i + 1)), f))
-          }
-          .toDF("pair", "freq")
-          .groupBy(col("pair._1").as("left"), col("pair._2").as("right"))
-          .agg(org.apache.spark.sql.functions.sum(col("freq")).as("cnt"))
-          .orderBy(org.apache.spark.sql.functions.desc("cnt"),
-            org.apache.spark.sql.functions.asc("left"),
-            org.apache.spark.sql.functions.asc("right"))
-          .limit(1)
-      })
+      "then TakeOrderedAndProject of 4 rows per accepted merge — the " +
+      "vocabulary itself is never collected or globally sorted. This is " +
+      "Bpe.rankedPairs, the plan learnMerges runs each round (x29 accepts " +
+      "one merge a round).",
+      graft.functions.Bpe.rankedPairs(
+        graft.functions.Bpe.symbols(graft.functions.Bpe.vocabulary(docs)), 1).toDF())
+    // the micro pages table, the streaming operators' source
+    lazy val microPages = s"${SparkEntry.microTables(spark)._1}/data/*.parquet"
     add("x25 dedupStreamTtl — TTL-bounded stateful streaming plan",
       "Review point: FlatMapGroupsWithState keyed by the content hash " +
       "with ProcessingTimeTimeout (state O(hashes within the TTL " +
@@ -152,9 +134,8 @@ object ExplainAll {
       "so the state store and shuffle never see page bytes. Streaming " +
       "relations appear as placeholders pre-execution.",
       {
-        val (pagesDir, _) = SparkEntry.microTables(spark)
         graft.streaming.StreamingExtract.dedupStreamTtl(
-          graft.streaming.StreamingExtract.docSigs(spark, s"$pagesDir/data/*.parquet"),
+          graft.streaming.StreamingExtract.docSigs(spark, microPages),
           ttlMs = 3600000L).toDF()
       })
     add("x33 DedupIndex.probeDelta over the persisted band index",
@@ -185,9 +166,7 @@ object ExplainAll {
       "stream-stream join. Streaming relations appear as placeholders " +
       "pre-execution.",
       {
-        val (pagesDir, _) = SparkEntry.microTables(spark)
-        val (f, c) = graft.streaming.StreamingExtract.fetchAndChangeStreams(
-          spark, s"$pagesDir/data/*.parquet")
+        val (f, c) = graft.streaming.StreamingExtract.fetchAndChangeStreams(spark, microPages)
         graft.streaming.StreamingExtract.fetchesNearChanges(f, c)
       })
     add("Funnel.matchStages — reusable ordered-sequence matcher (q74's operator)",
@@ -203,10 +182,7 @@ object ExplainAll {
             org.apache.spark.sql.functions.unix_millis(
               col("ts").cast("timestamp")).as("tsm"),
             col("event_type"))
-        graft.functions.Funnel.matchStages(ev,
-          Seq(graft.functions.Funnel.Stage("view", "view"),
-            graft.functions.Funnel.Stage("click", "click", Some(21600000L)),
-            graft.functions.Funnel.Stage("purchase", "purchase", Some(21600000L))))
+        graft.functions.Funnel.matchStages(ev, Query.purchaseFunnel)
       })
     add("x36 funnelStream — continuous funnel state plan",
       "Review point: MapGroupsWithState keyed by the funnel key with " +
@@ -216,11 +192,7 @@ object ExplainAll {
       "by each key's own matching activity. Streaming relations appear " +
       "as placeholders pre-execution.",
       {
-        import spark.implicits._
-        val (pagesDir, _) = SparkEntry.microTables(spark)
-        val ev = spark.readStream
-          .schema(graft.streaming.StreamingExtract.pagesSchema)
-          .parquet(s"$pagesDir/data/*.parquet")
+        val ev = graft.streaming.StreamingExtract.pagesReader(spark).parquet(microPages)
           .select(org.apache.spark.sql.functions.xxhash64(col("url")).as("u"),
             org.apache.spark.sql.functions.unix_millis(col("warc_ts")).as("tsm"),
             org.apache.spark.sql.functions.lit("view").as("ty"))
@@ -235,11 +207,7 @@ object ExplainAll {
       "snapshots observed, never corpus-sized), re-intervalized per " +
       "batch. Streaming relations appear as placeholders pre-execution.",
       {
-        import spark.implicits._
-        val (pagesDir, _) = SparkEntry.microTables(spark)
-        val ev = spark.readStream
-          .schema(graft.streaming.StreamingExtract.pagesSchema)
-          .parquet(s"$pagesDir/data/*.parquet")
+        val ev = graft.streaming.StreamingExtract.pagesReader(spark).parquet(microPages)
           .select(col("url"),
             org.apache.spark.sql.functions.unix_millis(col("warc_ts")).as("snap"),
             org.apache.spark.sql.functions.md5(col("html")).as("h"),
@@ -275,8 +243,9 @@ object ExplainAll {
 
   /** `plans` with what changes from run to run masked (expression, plan
     * and RDD ids, lambda classes, identity hash codes, run ids, the input
-    * and working directories), so two regenerations differ only where a
-    * plan changed. */
+    * and working directories, the file count of a file index, which
+    * differs between builds of the synth cache), so two regenerations
+    * differ only where a plan changed. */
   private[graft] def mask(plans: String, sfDir: String): String = {
     def abs(p: String) = java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
     val cwd = abs("")
@@ -284,7 +253,8 @@ object ExplainAll {
       .replace(cwd + "/", "<cwd>/")
     Seq("""#\d+""" -> "#N", """plan_id=\d+""" -> "plan_id=N", """(RDD\d?)\[\d+\]""" -> "$1[N]",
       """\$\$Lambda[$/0-9a-fx]*@[0-9a-f]+""" -> "\\$\\$Lambda", """([A-Z][\w$]*)@[0-9a-f]{1,8}\b""" -> "$1@H",
-      """\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b""" -> "<uuid>")
+      """\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b""" -> "<uuid>",
+      """, \.\.\. \d+ entries\]""" -> ", ... N entries]")
       .foldLeft(paths) { case (t, (re, to)) => t.replaceAll(re, to) }
   }
 }

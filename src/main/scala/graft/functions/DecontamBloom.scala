@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Shared word-5-gram overlap counting against a broadcast Bloom filter
@@ -7,6 +9,15 @@ import org.apache.spark.util.sketch.BloomFilter
   * decontamination (x24) and its streaming-ingest form (x28). Kept as
   * ONE function so the two paths cannot drift. */
 object DecontamBloom {
+
+  /** A broadcast Bloom filter at fpp 1e-6 over the strings of `grams`'
+    * column `g`, sized from their actual count: a fixed capacity silently
+    * inflated the FPP, and broke x24 == q28, once the eval set outgrew
+    * it. The gram set is the small side, so its count() is cheap. */
+  def broadcastFilter(grams: DataFrame): Broadcast[BloomFilter] = {
+    val bf = grams.stat.bloomFilter("g", math.max(1000L, grams.count()), 1e-6)
+    grams.sparkSession.sparkContext.broadcast(bf)
+  }
 
   /** Number of DISTINCT word 5-grams of `text` the filter might
     * contain. FPP errs safe: may over-count (flags extra docs), never

@@ -154,7 +154,7 @@ object DedupIndex extends Serializable {
     * Cache discipline: the hb/kb pruning needs two eager collects over
     * the delta lineage, so two DELTA-sized persists back them. With
     * `materialize = true` (default) the result is computed eagerly
-    * (localCheckpoint) and BOTH persists are released before
+    * (`Checkpoints.truncator`) and BOTH persists are released before
     * returning — a per-crawl-round probe loop leaks nothing. Pass
     * false to get the lazy plan (plan inspection, custom sinks); the
     * two persists then stay pinned until the caller clears them. */
@@ -162,6 +162,8 @@ object DedupIndex extends Serializable {
                  minJaccardX100: Int = 50, maxBucket: Int = 1024,
                  materialize: Boolean = true): DataFrame = {
     import spark.implicits._
+    // resolved first: a fleet run with no checkpoint dir fails before any work
+    val truncate = if (materialize) Some(graft.util.Checkpoints.truncator(spark)) else None
     // DELTA-sized caches (never corpus-sized): the hb/kb pruning
     // collects below force two eager jobs over the delta lineage, and
     // the returned plan evaluates it once more — without these persists
@@ -217,9 +219,8 @@ object DedupIndex extends Serializable {
       .filter(col("est_jaccard") * 100 >= minJaccardX100)
       .select(col("doc_a"), col("doc_b"),
         floor(col("est_jaccard") * 100).cast("long").as("jaccard_x100"))
-    if (!materialize) pairs
-    else {
-      val out = pairs.localCheckpoint(true) // eager: result self-contained
+    truncate.fold(pairs) { eagerly =>
+      val out = eagerly(pairs) // self-contained: the persists can go
       reps.unpersist()
       newBanded.unpersist()
       out

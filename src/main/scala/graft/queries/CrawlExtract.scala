@@ -4,7 +4,7 @@ import graft.SparkEntry.{SynthRoot, entry, microTables}
 import graft.extract.ExtractMode
 import graft.icelite.IceLite
 import graft.pipeline.{Pipeline, Render}
-import graft.queries.Query.{runDir, t}
+import graft.queries.Query.{hostGaps, runDir, t}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -225,24 +225,12 @@ object CrawlExtract {
     Query("q39_crawl_politeness", (s, dir) => {
       // Per-host crawl politeness audit — the fetch-scheduler feedback
       // signal (is any host hit faster than the politeness floor?):
-      // ordered inter-arrival gaps via lag() per host, gap stats in
-      // integer millis (unix_millis and DuckDB epoch_ms both truncate
-      // micros identically), violations = gaps under the 60s floor.
-      // The window partitions by HOST — key cardinality grows WITH the
-      // data (10^8 hosts at crawl scale), the scale-safe window shape
-      // (q26's sessionization key, NOT q32's bounded-lang key); ties
-      // broken by event_id so the lag order is total.
-      val w = Window.partitionBy("host_id").orderBy(col("ts"), col("event_id"))
-      t(s, dir, "events")
-        .select(col("user_id").cast("long").as("host_id"), col("ts"),
-          col("event_id").cast("long").as("event_id"))
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .filter(col("prev_ts").isNotNull)
-        .select(col("host_id"),
-          // ts is TIMESTAMP_NTZ; the UTC session cast matches DuckDB's
-          // epoch_ms-on-naive-timestamp semantics exactly
-          (unix_millis(col("ts").cast("timestamp"))
-            - unix_millis(col("prev_ts").cast("timestamp"))).as("gap_ms"))
+      // ordered inter-arrival gaps per host (Query.hostGaps), gap stats
+      // in integer millis, violations = gaps under the 60s floor. The
+      // window partitions by HOST — 10^8 hosts at crawl scale, the
+      // scale-safe window shape (q26's sessionization key, NOT q32's
+      // bounded-lang key).
+      hostGaps(s, dir)
         .groupBy(col("host_id"))
         .agg(count(lit(1)).as("n_gaps"),
           min(col("gap_ms")).as("min_gap_ms"),
@@ -717,16 +705,7 @@ object CrawlExtract {
           val d = graft.extract.Robots.crawlDelay(robots, "graftbot").getOrElse(0.0)
           (h, (d * 1000).toLong)
         }.toDF("host_id", "declared_ms")
-      val w = Window.partitionBy("host_id").orderBy(col("ts"), col("event_id"))
-      val gaps = t(s, dir, "events")
-        .select(col("user_id").cast("long").as("host_id"), col("ts"),
-          col("event_id").cast("long").as("event_id"))
-        .withColumn("prev_ts", lag(col("ts"), 1).over(w))
-        .filter(col("prev_ts").isNotNull)
-        .select(col("host_id"),
-          (unix_millis(col("ts").cast("timestamp"))
-            - unix_millis(col("prev_ts").cast("timestamp"))).as("gap_ms"))
-      gaps.join(declared, Seq("host_id"))
+      hostGaps(s, dir).join(declared, Seq("host_id"))
         .groupBy(col("host_id"))
         .agg(max(col("declared_ms")).as("declared_ms"),
           count(lit(1)).as("n_gaps"),

@@ -2,75 +2,62 @@ package graft.queries
 
 import graft.SparkEntry.SynthRoot
 import graft.queries.Query.t
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ANN and index queries: cosine top-k, LSH/IVF/PQ approximate
   * neighbours, BM25 and phrase retrieval, and the persisted IVF,
   * postings and dedup-band indexes. */
 object Indexes {
+  /** q13's plan and oracle. q21 is the same query under its own name:
+    * the declared query set is driver-facing, so the name stays. */
+  private val cosineTopK: (SparkSession, String) => DataFrame = (s, dir) => {
+    // r6: scored by the native codegen CosineSim expression (one
+    // fused loop, no per-row intermediate arrays) instead of the
+    // interpreted aggregate(zip_with(...)) composition. Bit-identical
+    // to the old form: CosineSim accumulates dot/na/nb over the
+    // float-widened doubles in the same ascending index order and
+    // divides by sqrt(na)*sqrt(nb) through the same expression shape
+    // — value+hash green against its oracle since r2.
+    graft.functions.CosineSim.register(s)
+    val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val q = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val scored = emb.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("id"),
+        expr("cosine_sim(qv, embedding)").as("score"))
+    // bounded top-k aggregate (map-side partial agg, no per-query full
+    // sort) — value-identical to the oracle's row_number window because
+    // the tie-break (score desc, id asc) matches
+    graft.functions.TopK.perQuery(scored, 5)
+      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"))
+      .orderBy("query_id", "rank")
+  }
+  private val cosineTopKOracle =
+    """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
+      |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
+      |scored AS (
+      |  SELECT q.query_id, e.vec_id,
+      |    list_dot_product(qv, v) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS cos
+      |  FROM e, q WHERE e.vec_id <> q.query_id),
+      |r AS (SELECT query_id, vec_id,
+      |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
+      |  FROM scored)
+      |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id
+      |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin
+
+  /** The three two-term queries of q44, x31 and x32: (query_id, term,
+    * tidx = the term's position in its query). */
+  private def bm25Queries(s: SparkSession): DataFrame = {
+    import s.implicits._
+    Seq((1L, "spark", 1), (1L, "window", 2), (2L, "merge", 1), (2L, "key", 2),
+      (3L, "vector", 1), (3L, "batch", 2)).toDF("query_id", "term", "tidx")
+  }
+
   val all: Seq[Query] = Seq(
-    Query("q13_cosine_topk", (s, dir) => {
-      // r6: scored by the native codegen CosineSim expression (one
-      // fused loop, no per-row intermediate arrays) instead of the
-      // interpreted aggregate(zip_with(...)) composition. Bit-identical
-      // to the old form: CosineSim accumulates dot/na/nb over the
-      // float-widened doubles in the same ascending index order and
-      // divides by sqrt(na)*sqrt(nb) through the same expression shape
-      // — q21 carries the IDENTICAL oracle SQL and has
-      // been value+hash green against it since r2.
-      graft.functions.CosineSim.register(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val scored = emb.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("id"),
-          expr("cosine_sim(qv, embedding)").as("score"))
-      // bounded top-k aggregate (map-side partial agg, no per-query full
-      // sort) — value-identical to the oracle's row_number window because
-      // the tie-break (score desc, id asc) matches
-      graft.functions.TopK.perQuery(scored, 5)
-        .select(col("query_id"), col("rank"), col("id").as("neighbor_id"))
-        .orderBy("query_id", "rank")
-    }, oracle = Some(
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    list_dot_product(qv, v) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS cos
-        |  FROM e, q WHERE e.vec_id <> q.query_id),
-        |r AS (SELECT query_id, vec_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-        |  FROM scored)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id
-        |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
-    Query("q21_cosine_native", (s, dir) => {
-      // same semantics as q13 but scored by the native codegen
-      // CosineSim expression instead of aggregate(zip_with(...))
-      graft.functions.CosineSim.register(s)
-      val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
-      val q = emb.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      val scored = emb.crossJoin(broadcast(q))
-        .filter(col("vec_id") =!= col("query_id"))
-        .select(col("query_id"), col("vec_id").as("id"),
-          expr("cosine_sim(qv, embedding)").as("score"))
-      graft.functions.TopK.perQuery(scored, 5)
-        .select(col("query_id"), col("rank"), col("id").as("neighbor_id"))
-        .orderBy("query_id", "rank")
-    }, oracle = Some(
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id,
-        |    list_dot_product(qv, v) / (sqrt(list_dot_product(qv, qv)) * sqrt(list_dot_product(v, v))) AS cos
-        |  FROM e, q WHERE e.vec_id <> q.query_id),
-        |r AS (SELECT query_id, vec_id,
-        |  row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rank
-        |  FROM scored)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, vec_id AS neighbor_id
-        |FROM r WHERE rank <= 5 ORDER BY query_id, rank""".stripMargin)),
+    Query("q13_cosine_topk", cosineTopK, oracle = Some(cosineTopKOracle)),
+    Query("q21_cosine_native", cosineTopK, oracle = Some(cosineTopKOracle)),
     Query("q22_embed_neardup", (s, dir) => {
       // embedding-cosine near-duplicate pairs (dedup family, SURVEY
       // training-data ops). Brute-force pairwise here is the ORACLE
@@ -119,7 +106,6 @@ object Indexes {
       // applies before the shuffle) keys by (doc, term); df's agg
       // absorbs mega-terms map-side; ranking is the bounded TopKAgg,
       // not a per-query window sort.
-      import s.implicits._
       // r6b: dl == size(split(text, " ")) == spaces + 1 EXACTLY (Spark
       // split keeps trailing empty segments, so every single-space
       // match adds one segment) — computed by char counting
@@ -132,9 +118,7 @@ object Indexes {
         .select(col("doc_id").cast("long").as("doc_id"), col("text"),
           (length(col("text")) - length(translate(col("text"), " ", "")) + 1)
             .cast("long").as("dl"))
-      val queryTerms = Seq((1L, "spark", 1), (1L, "window", 2),
-        (2L, "merge", 1), (2L, "key", 2), (3L, "vector", 1), (3L, "batch", 2))
-        .toDF("query_id", "term", "tidx")
+      val queryTerms = bm25Queries(s)
       val corpus = docs.agg(count(lit(1)).cast("long").as("n_docs"),
         sum(col("dl")).cast("long").as("sum_dl"))
       // r6: the vocabulary restriction is a codegen In-filter on the
@@ -315,15 +299,12 @@ object Indexes {
       // (PartitionFilters pruning — the IvfIndex cells discipline
       // applied to text) and shares q44's exact scoring expression, so
       // PostingsIndexSpec pins index-served == scan-computed scores
-      import s.implicits._
       val docs = t(s, dir, "documents")
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       val idx = s"$SynthRoot/postings_index_${math.abs(dir.hashCode)}"
       if (!graft.functions.PostingsIndex.isCurrent(s, idx, docs))
         graft.functions.PostingsIndex.build(docs, idx)
-      val queryTerms = Seq((1L, "spark", 1), (1L, "window", 2),
-        (2L, "merge", 1), (2L, "key", 2), (3L, "vector", 1), (3L, "batch", 2))
-        .toDF("query_id", "term", "tidx")
+      val queryTerms = bm25Queries(s)
       graft.functions.PostingsIndex.query(s, idx, queryTerms)
     }),
     Query("x32_postings_upsert", (s, dir) => {
@@ -334,7 +315,6 @@ object Indexes {
       // and a tombstone kills only earlier segments. The spec pins
       // upserted == full-rebuild bit-for-bit and that the incrementally
       // XOR-maintained manifest matches the full post-delta corpus.
-      import s.implicits._
       val a = t(s, dir, "documents")
         .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       // the q42 delta recipe: %7 changed, %13 removed, %11 spawn new
@@ -350,9 +330,7 @@ object Indexes {
       graft.functions.PostingsIndex.build(a, idx)
       graft.functions.PostingsIndex.upsert(idx,
         changedOld.unionByName(removed), changedNew.unionByName(added))
-      val queryTerms = Seq((1L, "spark", 1), (1L, "window", 2),
-        (2L, "merge", 1), (2L, "key", 2), (3L, "vector", 1), (3L, "batch", 2))
-        .toDF("query_id", "term", "tidx")
+      val queryTerms = bm25Queries(s)
       graft.functions.PostingsIndex.query(s, idx, queryTerms)
     }),
     Query("x33_dedup_delta", (s, dir) => {

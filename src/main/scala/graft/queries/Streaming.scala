@@ -1,9 +1,12 @@
 package graft.queries
 
 import graft.SparkEntry.{SynthRoot, microTables}
-import graft.queries.Query.{runDir, runId, scd2Snapshots, t}
+import graft.queries.Query.{runDir, scd2Snapshots, stream, t}
+import graft.streaming.StreamingExtract
+import graft.streaming.StreamingExtract.drain
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming queries: Structured Streaming forms of extraction,
   * sessionization, dedup, decontamination, joins, Count-Min, funnels and
@@ -18,34 +21,10 @@ object Streaming {
       // filtering the ingest stream is free. Map-only per micro-batch,
       // state-free, same shared overlap kernel as x24
       // (DecontamBloom.overlapCount — the two paths cannot drift).
-      val d = t(s, dir, "documents")
-      val toksCol = split(col("text"), " ")
-      val gramsCol = transform(sequence(lit(1), size(toksCol) - 4),
-        i => concat_ws(" ", slice(toksCol, i, lit(5))))
-      val benchGrams = d
-        .filter(col("doc_id") % 101 === 0 && size(split(col("text"), " ")) >= 5)
-        .select(explode(array_distinct(gramsCol)).as("g")).distinct()
-      val bf = benchGrams.stat.bloomFilter("g", math.max(1000L, benchGrams.count()), 1e-6)
-      val bc = s.sparkContext.broadcast(bf)
-      // documents.parquet is a single FILE in the testdata layout and
-      // the file stream source only accepts directories — materialize a
-      // one-time directory copy as the stream landing zone (what a real
-      // ingest dir looks like anyway)
-      val srcDir = new java.io.File(s"$SynthRoot/sdecontam_src_${math.abs(dir.hashCode)}")
-      if (!srcDir.exists()) d.write.mode("overwrite").parquet(srcDir.getAbsolutePath)
-      val stream = s.readStream.schema(d.schema)
-        .parquet(s"${srcDir.getAbsolutePath}/*.parquet")
-      val flagged = graft.streaming.StreamingExtract.decontaminateStream(stream, bc)
-      val run = runDir("sdecontam")
-      val q = flagged.writeStream.format("parquet")
-        .option("path", s"$run/out")
-        .option("checkpointLocation", s"$run/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.schema("doc_id LONG, lang STRING, n_overlap LONG, contaminated BOOLEAN")
-        .parquet(s"$run/out")
+      val bc = graft.functions.DecontamBloom.broadcastFilter(
+        Query.benchGrams(s, t(s, dir, "documents")))
+      drain(StreamingExtract.decontaminateStream(stream(s, dir, "documents"), bc),
+          OutputMode.Append(), runDir("sdecontam"))
         .groupBy(col("contaminated"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_overlap")).as("sum_overlap"),
@@ -55,7 +34,7 @@ object Streaming {
     Query("x12_streaming_extract", (s, _) => {
       val (pagesDir, _) = microTables(s)
       val run = runDir("stream")
-      val q = graft.streaming.StreamingExtract.availableNow(
+      val q = StreamingExtract.availableNow(
         s, s"$pagesDir/data/*.parquet", s"$run/out", s"$run/ckpt")
       q.awaitTermination()
       s.read.parquet(s"$run/out")
@@ -72,20 +51,10 @@ object Streaming {
       // cross-micro-batch matches; here the micro corpus drains under
       // availableNow and the joined rows aggregate per host.
       val (pagesDir, _) = microTables(s)
-      val run = runDir("ssj")
-      val (f, c) = graft.streaming.StreamingExtract.fetchAndChangeStreams(
-        s, s"$pagesDir/data/*.parquet")
-      val joined = graft.streaming.StreamingExtract.fetchesNearChanges(
+      val (f, c) = StreamingExtract.fetchAndChangeStreams(s, s"$pagesDir/data/*.parquet")
+      val joined = StreamingExtract.fetchesNearChanges(
         f, c, horizonMinutes = 7 * 24 * 60, watermark = "1 day")
-      val q = joined.writeStream.format("parquet")
-        .option("path", s"$run/out")
-        .option("checkpointLocation", s"$run/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.schema("host STRING, fetch_ts TIMESTAMP, change_ts TIMESTAMP")
-        .parquet(s"$run/out")
+      drain(joined, OutputMode.Append(), runDir("ssj"))
         .groupBy(col("host"))
         .agg(count(lit(1)).as("n_joined"),
           countDistinct(col("change_ts")).as("n_changes"),
@@ -101,19 +70,10 @@ object Streaming {
       // republishes <= 96 rows per trigger; StreamCountMinSpec pins
       // stream == batch counters over the same rows.
       val (pagesDir, _) = microTables(s)
-      val items = s.readStream
-        .schema(graft.streaming.StreamingExtract.pagesSchema)
-        .parquet(s"$pagesDir/data/*.parquet")
+      val items = StreamingExtract.pagesReader(s).parquet(s"$pagesDir/data/*.parquet")
         .select(pmod(xxhash64(parse_url(col("url"), lit("HOST"))), lit(1024))
           .as("item"))
-      val name = runId("cmx")
-      val q = graft.streaming.StreamingExtract.countMinStream(items)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.sql(s"SELECT * FROM $name")
+      drain(StreamingExtract.countMinStream(items), OutputMode.Complete(), runDir("cmx"))
         .groupBy(col("r"))
         .agg(count(lit(1)).as("n_buckets"),
           sum(col("cnt")).as("total"),
@@ -130,44 +90,13 @@ object Streaming {
       // drains the sf events table and publishes the same cohort
       // funnel as q74, computed from the STREAM's final snapshots.
       import s.implicits._
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("ts",
-          org.apache.spark.sql.types.TimestampType),
-        org.apache.spark.sql.types.StructField("user_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("value",
-          org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("props",
-          org.apache.spark.sql.types.StringType)))
-      // readStream.parquet requires a DIRECTORY; the sf table is a
-      // single file — stage a copy under the synth cache once
-      val srcFile = java.nio.file.Paths.get(s"$dir/events.parquet")
-      val streamDir = java.nio.file.Paths.get(
-        s"$SynthRoot/x36_events_${Integer.toHexString(dir.hashCode)}")
-      java.nio.file.Files.createDirectories(streamDir)
-      java.nio.file.Files.copy(srcFile, streamDir.resolve("events.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      val ev = s.readStream.schema(schema).parquet(streamDir.toString)
+      val ev = stream(s, dir, "events")
         .select(col("user_id").cast("long").as("u"),
           unix_millis(col("ts").cast("timestamp")).as("tsm"),
           col("event_type").as("ty"))
         .as[graft.streaming.FunnelEvent]
-      val win = Some(21600000L)
-      val stages = Seq(graft.functions.Funnel.Stage("view", "view"),
-        graft.functions.Funnel.Stage("click", "click", win),
-        graft.functions.Funnel.Stage("purchase", "purchase", win))
-      val name = runId("fx")
-      val q = graft.streaming.StreamingExtract.funnelStream(ev, stages)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val latest = s.sql(s"SELECT * FROM $name")
+      val latest = drain(StreamingExtract.funnelStream(ev, Query.purchaseFunnel),
+          OutputMode.Update(), runDir("fx"))
         .withColumn("rn", row_number().over(
           Window.partitionBy("u").orderBy(desc("n_events"))))
         .filter(col("rn") === 1)
@@ -222,14 +151,7 @@ object Streaming {
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$root/*/*.parquet")
         .as[graft.streaming.ScdEvent]
-      val name = runId("scd")
-      val q = graft.streaming.StreamingExtract.scdStream(src)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val latest = s.sql(s"SELECT * FROM $name")
+      val latest = drain(StreamingExtract.scdStream(src), OutputMode.Update(), runDir("scd"))
         .withColumn("rn", row_number().over(
           Window.partitionBy("url").orderBy(desc("n_obs"))))
         .filter(col("rn") === 1)
@@ -237,19 +159,7 @@ object Streaming {
         .select(col("url"), col("iv._2").as("valid_from"),
           col("iv._3").as("valid_to"))
       val dim = snapped.select(col("url"), col("lang")).distinct()
-      latest.join(broadcast(dim), Seq("url"))
-        .groupBy(col("lang"), col("url"))
-        .agg(count(lit(1)).as("n_int"),
-          sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_open"),
-          sum(when(col("valid_to").isNotNull,
-            col("valid_to") - col("valid_from")).otherwise(0L)).as("closed_len"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_urls"),
-          sum(col("n_int")).as("n_intervals"),
-          sum(col("n_open")).as("n_open"),
-          sum(col("closed_len")).as("sum_closed_len"),
-          max(col("n_int")).as("max_versions"))
-        .orderBy("lang")
+      Query.scd2Rollup(latest.join(broadcast(dim), Seq("url")))
     }),
     Query("x20_crawl_sessions", (s, _) => {
       // custom-state streaming (flatMapGroupsWithState + event-time
@@ -264,23 +174,14 @@ object Streaming {
       // both halves.
       val (pagesDir, _) = microTables(s)
       val run = runDir("sessions")
-      val events = graft.streaming.StreamingExtract.sessionEvents(
-        s, s"$pagesDir/data/*.parquet")
-      val q = graft.streaming.StreamingExtract.crawlSessions(events, gapMinutes = 7 * 24 * 60)
-        .writeStream.format("parquet")
-        .option("path", s"$run/out")
-        .option("checkpointLocation", s"$run/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val closed = s.read.schema("host STRING, start_ms LONG, end_ms LONG, n_pages LONG, bytes LONG")
-        .parquet(s"$run/out")
+      val events = StreamingExtract.sessionEvents(s, s"$pagesDir/data/*.parquet")
+      val closed = drain(StreamingExtract.crawlSessions(events, gapMinutes = 7 * 24 * 60),
+          OutputMode.Append(), run)
         .groupBy(col("host"))
         .agg(count(lit(1)).as("n_sessions"),
           sum(col("n_pages")).as("pages_in_closed"),
           sum(col("bytes")).as("bytes_in_closed"))
-      val open = graft.streaming.StreamingExtract.openSessions(s, s"$run/ckpt")
+      val open = StreamingExtract.openSessions(s, s"$run/ckpt")
         .groupBy(col("host"))
         .agg(count(lit(1)).as("n_open"),
           sum(col("n_pages")).as("pages_in_open"),
@@ -301,7 +202,6 @@ object Streaming {
       // of the first's payloads; maxFilesPerTrigger=1 makes each file its
       // own micro-batch, so the duplicate verdicts MUST come from the
       // state store, not within-batch grouping.
-      import graft.streaming.StreamingExtract
       val dir = new java.io.File(s"$SynthRoot/dedup_stream_fixture")
       val nParts = Option(dir.listFiles())
         .map(_.count(_.getName.endsWith(".parquet"))).getOrElse(0)
@@ -320,18 +220,9 @@ object Streaming {
         rows(0 until 20, "dup", 9).coalesce(1)
           .write.mode("append").parquet(dir.getAbsolutePath)
       }
-      val run = runDir("dedupstream")
-      val q = StreamingExtract.dedupStream(
-        StreamingExtract.docSigs(s, s"${dir.getAbsolutePath}/*.parquet"))
-        .writeStream.format("parquet")
-        .option("path", s"$run/out")
-        .option("checkpointLocation", s"$run/ckpt")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.schema("url STRING, hash STRING, first_seen BOOLEAN, prior_count LONG")
-        .parquet(s"$run/out")
+      drain(StreamingExtract.dedupStream(
+          StreamingExtract.docSigs(s, s"${dir.getAbsolutePath}/*.parquet")),
+          OutputMode.Append(), runDir("dedupstream"))
         .groupBy(col("first_seen"))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("hash")).as("n_hashes"),

@@ -177,14 +177,8 @@ object TextDedup {
       // isolated singleton nodes — closed by
       // TextSketch.connectedComponents vs DuckDB's WITH RECURSIVE
       // min-label closure over the same edges.
-      val d = t(s, dir, "documents").select(col("doc_id").cast("long").as("doc_id"))
-      val nodes = d.filter(col("doc_id") % 10 <= 5)
-      val edges = d.filter(col("doc_id") % 10 < 4).select(col("doc_id").as("doc_a"))
-        .join(d.select(col("doc_id").as("doc_b")), col("doc_b") === col("doc_a") + 1)
-      val labels = graft.functions.TextSketch.connectedComponents(edges)
-      nodes.join(labels, nodes("doc_id") === labels("id"), "left")
-        .select(nodes("doc_id"),
-          coalesce(col("label"), nodes("doc_id")).as("cluster"))
+      Query.chainClusters(t(s, dir, "documents")
+          .select(col("doc_id").cast("long").as("doc_id")))
         .orderBy("doc_id")
     }, oracle = Some(
       // min-label closure via recursive reachability: reach(id, label)
@@ -266,43 +260,24 @@ object TextDedup {
       // side explodes its per-doc distinct grams map-side and the hash
       // join is shuffle-free, so the only shuffle is the per-doc overlap
       // count — never a corpus x corpus comparison.
-      // benchmark = doc_id % 101 == 0; planted contaminated docs (the
-      // first 120 chars of each benchmark doc) keep the >= 3 branch
-      // non-vacuous — natural random-word docs share no 5-grams. The
-      // planted ids offset past max(doc_id)+1 so they can NEVER collide
-      // with natural ids at any corpus size (a fixed +500000 collided
-      // once the corpus passed 500k docs; ADVICE r3) — a one-row agg,
-      // not a scan-side action.
+      // benchmark = doc_id % 101 == 0 (Query.benchGrams); planted
+      // contaminated docs keep the >= 3 branch non-vacuous — natural
+      // random-word docs share no 5-grams (Query.decontamCorpus).
       val d = t(s, dir, "documents")
-      val plantOff = d.agg(max(col("doc_id")).cast("long")).first().getLong(0) + 1L
-      val corpus = d.filter(col("doc_id") % 101 =!= 0)
-        .select(col("doc_id").cast("long").as("doc_id"), col("lang"), col("text"))
-        .unionByName(d.filter(col("doc_id") % 101 === 0)
-          .select((col("doc_id") + plantOff).cast("long").as("doc_id"),
-            lit("planted").as("lang"),
-            substring(col("text"), 1, 120).as("text")))
+      val benchGrams = Query.benchGrams(s, d)
+      val corpus = Query.decontamCorpus(d)
       // r6: 5-grams via the codegen word_ngrams expression (one fused
       // loop) instead of the interpreted transform/slice lambda; both
       // branches only evaluate grams under a size >= 5 filter, where
       // the forms are identical.
-      graft.functions.WordNgrams.register(s)
-      val toks = split(col("text"), " ")
-      val nW = size(toks)
       val grams = expr("word_ngrams(split(text, ' '), 5)")
-      val benchGrams = d.filter(col("doc_id") % 101 === 0 && size(split(col("text"), " ")) >= 5)
-        .select(explode(array_distinct(grams)).as("g")).distinct()
-      val overlaps = corpus.filter(nW >= 5)
+      val overlaps = corpus.filter(size(split(col("text"), " ")) >= 5)
         .select(col("doc_id"), explode(array_distinct(grams)).as("g"))
         .join(broadcast(benchGrams), Seq("g"))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_overlap"))
-      corpus.join(overlaps, Seq("doc_id"), "left")
-        .select(col("lang"), coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("n_overlap") >= 3, 1L).otherwise(0L)).as("n_contaminated"),
-          sum(col("n_overlap")).as("sum_overlap"))
-        .orderBy("lang")
+      Query.decontamAudit(corpus.join(overlaps, Seq("doc_id"), "left")
+        .select(col("lang"), coalesce(col("n_overlap"), lit(0L)).as("n_overlap")))
     }, oracle = Some(
       """WITH corpus AS (
         |  SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, text FROM documents WHERE doc_id % 101 <> 0
@@ -803,18 +778,9 @@ object TextDedup {
       // no second argmin shuffle needed. Scale: CC is one shuffle per
       // hop with reliable-checkpoint conf; the label join-back is
       // doc_id-keyed.
-      val docs = t(s, dir, "documents")
-        .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
-          col("n_chars").cast("long").as("n_chars"))
-      val nodes = docs.filter(col("doc_id") % 10 <= 5)
-      val edges = nodes.select(col("doc_id").as("doc_a"))
-        .filter(col("doc_a") % 10 < 4)
-        .join(nodes.select(col("doc_id").as("doc_b")),
-          col("doc_b") === col("doc_a") + 1)
-      val labels = graft.functions.TextSketch.connectedComponents(edges)
-      nodes.join(labels, nodes("doc_id") === labels("id"), "left")
-        .select(col("lang"), col("n_chars"), nodes("doc_id"),
-          coalesce(col("label"), nodes("doc_id")).as("cluster"))
+      Query.chainClusters(t(s, dir, "documents")
+          .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
+            col("n_chars").cast("long").as("n_chars")))
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
           countDistinct(col("cluster")).as("n_clusters_touched"),
@@ -1076,15 +1042,7 @@ object TextDedup {
         .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
           col("n_chars").cast("long").as("n_chars"))
         .withColumn("quality", (col("n_chars") * 7 + col("doc_id") * 13) % 1000)
-      val nodes = docs.filter(col("doc_id") % 10 <= 5)
-      val edges = nodes.select(col("doc_id").as("doc_a"))
-        .filter(col("doc_a") % 10 < 4)
-        .join(nodes.select(col("doc_id").as("doc_b")),
-          col("doc_b") === col("doc_a") + 1)
-      val labels = graft.functions.TextSketch.connectedComponents(edges)
-      val members = nodes.join(labels, nodes("doc_id") === labels("id"), "left")
-        .select(col("lang"), col("n_chars"), col("quality"), nodes("doc_id"),
-          coalesce(col("label"), nodes("doc_id")).as("cluster"))
+      val members = Query.chainClusters(docs)
       val qmax = members.groupBy(col("cluster"))
         .agg(max(col("quality")).as("q_best"))
       val keeper = members.join(qmax, Seq("cluster"))
@@ -1674,34 +1632,11 @@ object TextDedup {
       // sketch BloomFilter is seed-fixed — deterministic across runs.
       import s.implicits._
       val d = t(s, dir, "documents")
-      val plantOff = d.agg(max(col("doc_id")).cast("long")).first().getLong(0) + 1L
-      val corpus = d.filter(col("doc_id") % 101 =!= 0)
-        .select(col("doc_id").cast("long").as("doc_id"), col("lang"), col("text"))
-        .unionByName(d.filter(col("doc_id") % 101 === 0)
-          .select((col("doc_id") + plantOff).cast("long").as("doc_id"),
-            lit("planted").as("lang"),
-            substring(col("text"), 1, 120).as("text")))
-      val toksCol = split(col("text"), " ")
-      val gramsCol = transform(sequence(lit(1), size(toksCol) - 4),
-        i => concat_ws(" ", slice(toksCol, i, lit(5))))
-      val benchGrams = d
-        .filter(col("doc_id") % 101 === 0 && size(split(col("text"), " ")) >= 5)
-        .select(explode(array_distinct(gramsCol)).as("g")).distinct()
-      // size the filter from the ACTUAL distinct-gram count (a fixed
-      // 200k capacity silently inflated the FPP — and broke the
-      // exact-equality-with-q28 property — once the eval set outgrew
-      // it; ADVICE r3). benchGrams is the small side by construction,
-      // so the extra count() action is cheap.
-      val bf = benchGrams.stat.bloomFilter("g", math.max(1000L, benchGrams.count()), 1e-6)
-      val bc = s.sparkContext.broadcast(bf)
-      corpus.as[(Long, String, String)].map { case (_, lang, text) =>
-        (lang, graft.functions.DecontamBloom.overlapCount(text, bc.value))
-      }.toDF("lang", "n_overlap")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("n_overlap") >= 3, 1L).otherwise(0L)).as("n_contaminated"),
-          sum(col("n_overlap")).as("sum_overlap"))
-        .orderBy("lang")
+      val bc = graft.functions.DecontamBloom.broadcastFilter(Query.benchGrams(s, d))
+      Query.decontamAudit(Query.decontamCorpus(d).as[(Long, String, String)].map {
+        case (_, lang, text) =>
+          (lang, graft.functions.DecontamBloom.overlapCount(text, bc.value))
+      }.toDF("lang", "n_overlap"))
     },
       planNote = "Review point: the corpus side is SerializeFromObject over ONE map " +
         "(gram membership checked against the broadcast Bloom filter inside " +
@@ -1716,10 +1651,7 @@ object TextDedup {
       // merge table partitioning-invariant (BpeSpec pins it against
       // the single-threaded reference bit-for-bit).
       import s.implicits._
-      val words = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("freq"))
+      val words = graft.functions.Bpe.vocabulary(t(s, dir, "documents"))
       graft.functions.Bpe.learnMerges(s, words, 12).toDF()
         .select(col("rank"), col("left"), col("right"), col("pair_count"))
         .orderBy("rank")
@@ -1734,10 +1666,7 @@ object TextDedup {
       // encode against the trained segmentation and the concatenation
       // invariant; determinism follows from x29's total-order argmax.
       import s.implicits._
-      val words = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("word"))
-        .filter(col("word") =!= "")
-        .groupBy(col("word")).agg(count(lit(1)).as("freq"))
+      val words = graft.functions.Bpe.vocabulary(t(s, dir, "documents"))
       val merges = graft.functions.Bpe.learnMerges(s, words, 12)
         .map(m => (m.left, m.right))
       val bc = s.sparkContext.broadcast(merges)

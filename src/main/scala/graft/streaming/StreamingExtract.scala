@@ -4,7 +4,7 @@ import graft.extract.ExtractMode
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** One page observation entering sessionization. */
@@ -69,14 +69,37 @@ final case class ScdIntervals(url: String, n_obs: Long,
   */
 object StreamingExtract {
 
-  /** The `pages` schema (BASELINE.json input_hint) — readStream needs it
-    * declared explicitly. */
+  /** The `pages` schema (BASELINE.json input_hint). */
   val pagesSchema: StructType = StructType(Seq(
     StructField("url", StringType, nullable = false),
     StructField("warc_ts", TimestampType, nullable = false),
     StructField("html", BinaryType, nullable = false),
     StructField("text", StringType, nullable = true),
     StructField("lang", StringType, nullable = true)))
+
+  /** A stream reader of `pages` parquet: a file stream cannot infer its
+    * schema, so `pagesSchema` is declared here, once. */
+  def pagesReader(spark: SparkSession): DataStreamReader =
+    spark.readStream.schema(pagesSchema)
+
+  /** Runs `stream` under `Trigger.AvailableNow` until it has processed
+    * every input present at its start, and returns what it wrote. An
+    * `Append` stream goes to parquet in `run/out`, read back with the
+    * stream's own schema, so a drain over no input files returns 0 rows
+    * with the stream's columns; an `Update` or `Complete` stream fills a
+    * memory table named after the last segment of `run`. The checkpoint
+    * is `run/ckpt` either way, for a caller that reads the drained state
+    * (`openSessions`). */
+  def drain(stream: Dataset[_], mode: OutputMode, run: String): DataFrame = {
+    val spark = stream.sparkSession
+    val toMemory = mode != OutputMode.Append()
+    val name = new java.io.File(run).getName
+    val w = stream.writeStream.outputMode(mode).trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", s"$run/ckpt")
+    (if (toMemory) w.format("memory").queryName(name)
+     else w.format("parquet").option("path", s"$run/out")).start().awaitTermination()
+    if (toMemory) spark.table(name) else spark.read.schema(stream.schema).parquet(s"$run/out")
+  }
 
   /** Start an available-now streaming extraction over a parquet directory
     * of pages, writing extracted parquet via foreachBatch. Returns the
@@ -94,10 +117,7 @@ object StreamingExtract {
     * partition column via directory discovery. */
   def availableNow(spark: SparkSession, pagesGlob: String, outDir: String,
       checkpointDir: String, mode: ExtractMode = ExtractMode.Plain): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(pagesSchema)
-      .parquet(pagesGlob)
-    stream.writeStream
+    pagesReader(spark).parquet(pagesGlob).writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -193,9 +213,7 @@ object StreamingExtract {
   /** Streaming source for sessionization over a pages parquet glob. */
   def sessionEvents(spark: SparkSession, pagesGlob: String): Dataset[PageEvent] = {
     import spark.implicits._
-    spark.readStream
-      .schema(pagesSchema)
-      .parquet(pagesGlob)
+    pagesReader(spark).parquet(pagesGlob)
       .select(parse_url(col("url"), lit("HOST")).as("host"),
         col("warc_ts").as("ts"),
         length(col("html")).cast("long").as("bytes"))
@@ -223,19 +241,20 @@ object StreamingExtract {
       .groupByKey(_.hash)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (hash: String, rows: Iterator[DocSig], state: GroupState[DedupState]) =>
-          // deterministic within-batch order (micro-batch iterator order
-          // is not guaranteed): earliest ts wins, url breaks ties
-          val sorted = rows.toArray.sortBy(r => (r.ts.getTime, r.url))
-          var count = state.getOption.map(_.count).getOrElse(0L)
-          val out = sorted.map { r =>
-            val d = DedupDecision(r.url, hash, first_seen = count == 0L, prior_count = count)
-            count += 1
-            d
-          }
-          state.update(DedupState(count))
+          val prior = state.getOption.map(_.count).getOrElse(0L)
+          val out = decide(hash, rows, prior)
+          state.update(DedupState(prior + out.length))
           out.iterator
       }
   }
+
+  /** The verdicts of one hash's rows after `prior` earlier copies, in a
+    * deterministic order (micro-batch iterator order is not guaranteed):
+    * earliest ts wins, url breaks ties. */
+  private def decide(hash: String, rows: Iterator[DocSig], prior: Long): Array[DedupDecision] =
+    rows.toArray.sortBy(r => (r.ts.getTime, r.url)).zipWithIndex.map { case (r, i) =>
+      DedupDecision(r.url, hash, first_seen = prior + i == 0L, prior_count = prior + i)
+    }
 
   /** TTL-BOUNDED streaming dedup — the production form of `dedupStream`:
     * a hash not observed for `ttlMs` of processing time has its state
@@ -272,17 +291,12 @@ object StreamingExtract {
             Iterator.empty
           } else {
             val now = state.getCurrentProcessingTimeMs()
-            val sorted = rows.toArray.sortBy(r => (r.ts.getTime, r.url))
-            var count = state.getOption match {
+            val prior = state.getOption match {
               case Some(s) if now - s.lastMs <= ttlMs => s.count
               case _ => 0L // absent, or present-but-lapsed (path b)
             }
-            val out = sorted.map { r =>
-              val d = DedupDecision(r.url, hash, first_seen = count == 0L, prior_count = count)
-              count += 1
-              d
-            }
-            state.update(DedupTtlState(count, now))
+            val out = decide(hash, rows, prior)
+            state.update(DedupTtlState(prior + out.length, now))
             state.setTimeoutDuration(ttlMs)
             out.iterator
           }
@@ -385,8 +399,7 @@ object StreamingExtract {
     * hash computed map-side, payload dropped before the stateful shuffle. */
   def docSigs(spark: SparkSession, pagesGlob: String): Dataset[DocSig] = {
     import spark.implicits._
-    spark.readStream
-      .schema(pagesSchema)
+    pagesReader(spark)
       .option("maxFilesPerTrigger", 1) // one micro-batch per file: dedup is cross-batch
       .parquet(pagesGlob)
       .select(md5(col("html")).as("hash"), col("url"),
@@ -420,9 +433,7 @@ object StreamingExtract {
     * watermark + tumbling window aggregation (the streaming-native agg
     * surface; batch tests drive it with availableNow). */
   def rateByWindow(spark: SparkSession, pagesGlob: String): DataFrame = {
-    spark.readStream
-      .schema(pagesSchema)
-      .parquet(pagesGlob)
+    pagesReader(spark).parquet(pagesGlob)
       .withWatermark("warc_ts", "1 day")
       .groupBy(window(col("warc_ts"), "7 days"), col("lang"))
       .agg(count(lit(1)).as("n_pages"),
@@ -475,7 +486,7 @@ object StreamingExtract {
     * change signal for their host at the same instant. */
   def fetchAndChangeStreams(spark: SparkSession,
       pagesGlob: String): (DataFrame, DataFrame) = {
-    def read() = spark.readStream.schema(pagesSchema).parquet(pagesGlob)
+    def read() = pagesReader(spark).parquet(pagesGlob)
       .select(parse_url(col("url"), lit("HOST")).as("host"),
         col("warc_ts"), col("url"))
     val fetches = read().select(col("host"), col("warc_ts").as("fetch_ts"))

@@ -28,6 +28,15 @@ class RegistrySpec extends AnyFunSuite {
     Query.all.foreach(q => assert(SparkEntry.oracleSql.get(q.name) == q.oracle, q.name))
   }
 
+  test("the oracle SQL is pinned: one digest over every name and its SQL") {
+    // a change to any oracle, added or removed one changes the
+    // driver-facing oracle_sql.json; this digest makes it deliberate
+    val text = SparkEntry.oracleSql.toSeq.sorted.map { case (k, v) => s"$k\n$v\n" }.mkString
+    val hex = java.security.MessageDigest.getInstance("SHA-256").digest(text.getBytes(UTF_8))
+      .map(b => f"$b%02x").mkString
+    assert(hex == "3a93cba933830f62dc6bcafd28aa4e301433a81edcb7cd949827e4a8dd123dc9")
+  }
+
   test("every Bench headline query is declared") {
     assert(Bench.headline.filterNot(names.toSet).isEmpty)
   }

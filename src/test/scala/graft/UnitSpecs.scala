@@ -297,6 +297,23 @@ class ExtractModeSpec extends AnyFunSuite {
   }
 }
 
+class CheckpointsSpec extends AnyFunSuite {
+  import graft.util.Checkpoints.{ConfKey, reliable}
+
+  test("truncation: reliable when the dir is set, local only on a local master, else an error") {
+    val dir = Some("hdfs:///ckpt")
+    Seq("local", "local[4]", "local[*]", "local[2,3]").foreach { m =>
+      assert(!reliable(m, None), m)
+      assert(reliable(m, dir), m)
+    }
+    Seq("spark://host:7077", "yarn", "k8s://https://api:6443", "local-cluster[2,1,1024]").foreach { m =>
+      assert(reliable(m, dir), m)
+      val e = intercept[IllegalArgumentException](reliable(m, None))
+      assert(e.getMessage.contains(ConfKey), m)
+    }
+  }
+}
+
 class ExplainAllSpec extends AnyFunSuite {
   test("PLANS.md masking: run-specific tokens and absolute input paths") {
     val cwd = java.nio.file.Paths.get("").toAbsolutePath.toString
@@ -305,13 +322,15 @@ class ExplainAllSpec extends AnyFunSuite {
       s"Arguments: FileSource[$cwd/target/synth/micro_v2/pages/data/*.parquet], [url#7]\n" +
       "Arguments: a.B$$$Lambda$3658/0x00007f5d9101a388@4f1cb802, l_qty#12L, plan_id=19, " +
       "TopKAgg@4b808, runId = 12911bc7-dba0-48c3-8ad0-11280ce97f22, ## q01, x >= 1.5@2\n" +
-      " |  ZippedPartitionsRDD2[818] at zipPartitions at HostRank.scala:123 []"
+      " |  ZippedPartitionsRDD2[818] at zipPartitions at HostRank.scala:123 []\n" +
+      s"Location: InMemoryFileIndex [file:$cwd/target/synth/p/00000-00000.parquet, ... 31 entries]"
     assert(ExplainAll.mask(raw, "/data/sf") ==
       "Location: InMemoryFileIndex [file:<input>/lineitem.parquet]\n" +
       "Location: InMemoryFileIndex [file:<cwd>/target/synth/ivf]\n" +
       "Arguments: FileSource[<cwd>/target/synth/micro_v2/pages/data/*.parquet], [url#N]\n" +
       "Arguments: a.B$$$Lambda, l_qty#NL, plan_id=N, " +
       "TopKAgg@H, runId = <uuid>, ## q01, x >= 1.5@2\n" +
-      " |  ZippedPartitionsRDD2[N] at zipPartitions at HostRank.scala:123 []")
+      " |  ZippedPartitionsRDD2[N] at zipPartitions at HostRank.scala:123 []\n" +
+      "Location: InMemoryFileIndex [file:<cwd>/target/synth/p/00000-00000.parquet, ... N entries]")
   }
 }
