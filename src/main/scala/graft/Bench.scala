@@ -228,9 +228,10 @@ object Bench {
          |as (anti-)scaling; throughputs are per-level bests.
          |
          |Production path = map-only extraction (payload bytes never
-         |shuffle; the salted url-host repartition applies to the stages
-         |that group — reassembly, lineage shards). The salted variant
-         |below forces that shuffle onto the scan side as a bound.
+         |shuffle). The salted variant below is
+         |`Pipeline.extract(repartitionByHost = true)`, the one user of
+         |the salted url-host repartition: it forces a payload shuffle
+         |onto the scan side as a bound.
          |
          || run | cores | elapsed (s) | docs/sec |
          ||---|---|---|---|

@@ -244,8 +244,10 @@ object ExplainAll {
   /** `plans` with what changes from run to run masked (expression, plan
     * and RDD ids, lambda classes, identity hash codes, run ids, the input
     * and working directories, the file count of a file index, which
-    * differs between builds of the synth cache), so two regenerations
-    * differ only where a plan changed. */
+    * differs between builds of the synth cache, lambda variable numbers,
+    * which a JVM-wide counter hands out, and a broadcast stage's size,
+    * which follows the heap through the Tungsten page size), so two
+    * regenerations differ only where a plan changed. */
   private[graft] def mask(plans: String, sfDir: String): String = {
     def abs(p: String) = java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
     val cwd = abs("")
@@ -254,7 +256,8 @@ object ExplainAll {
     Seq("""#\d+""" -> "#N", """plan_id=\d+""" -> "plan_id=N", """(RDD\d?)\[\d+\]""" -> "$1[N]",
       """\$\$Lambda[$/0-9a-fx]*@[0-9a-f]+""" -> "\\$\\$Lambda", """([A-Z][\w$]*)@[0-9a-f]{1,8}\b""" -> "$1@H",
       """\b[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}\b""" -> "<uuid>",
-      """, \.\.\. \d+ entries\]""" -> ", ... N entries]")
+      """, \.\.\. \d+ entries\]""" -> ", ... N entries]", """(lambda \w+?)_\d+#N""" -> "$1_N#N",
+      """(BroadcastQueryStage \(\d+\), Statistics\(sizeInBytes=)[^,)]+""" -> "$1N")
       .foldLeft(paths) { case (t, (re, to)) => t.replaceAll(re, to) }
   }
 }

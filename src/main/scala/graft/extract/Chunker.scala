@@ -8,44 +8,6 @@ package graft.extract
   */
 object Chunker {
 
-  /** Exact port of the reference grid chooser
-    * `find_closest_aspect_ratio` (run_ocr_2.0_crop.py:40-54) including
-    * the `area > 0.5 * size² * i * j` tie-break, kept as a pure function
-    * with unit tests (SURVEY.md §5). Not used for byte chunking (documents
-    * are 1-D); retained because it defines the reference's fan-out
-    * semantics and budget arithmetic.
-    */
-  def findClosestAspectRatio(aspectRatio: Double, targetRatios: Seq[(Int, Int)],
-      width: Int, height: Int, imageSize: Int): (Int, Int) = {
-    var bestDiff = Double.PositiveInfinity
-    var best = (1, 1)
-    val area = width.toDouble * height.toDouble
-    targetRatios.foreach { ratio =>
-      val target = ratio._1.toDouble / ratio._2.toDouble
-      val diff = math.abs(aspectRatio - target)
-      if (diff < bestDiff) { bestDiff = diff; best = ratio }
-      else if (diff == bestDiff) {
-        if (area > 0.5 * imageSize.toDouble * imageSize.toDouble * ratio._1 * ratio._2)
-          best = ratio
-      }
-    }
-    best
-  }
-
-  /** The (i,j) candidate grid of `dynamic_preprocess`
-    * (run_ocr_2.0_crop.py:61-66): all pairs with minNum ≤ i*j ≤ maxNum,
-    * sorted by area i*j (stable, insertion order of the original set
-    * does not matter for the chooser which scans in sorted order). */
-  def targetRatios(minNum: Int = 1, maxNum: Int = 6): Seq[(Int, Int)] = {
-    val set = for {
-      n <- minNum to maxNum
-      i <- 1 to n
-      j <- 1 to n
-      if i * j <= maxNum && i * j >= minNum
-    } yield (i, j)
-    set.distinct.sortBy(r => r._1 * r._2)
-  }
-
   /** Max segments per document (reference max_num=6). */
   final val MaxSegments = 6
   /** Per-segment character budget — the analog of the reference's

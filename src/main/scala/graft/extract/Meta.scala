@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Dom, Html5Tokenizer, KernelScratch, TagOpen}
+import graft.html.{Html5Tokenizer, KernelScratch, TagOpen, TextBuf}
 import scala.util.control.ControlThrowable
 
 /** Page metadata extraction — title, description, OpenGraph, canonical
@@ -18,7 +18,8 @@ import scala.util.control.ControlThrowable
   *    ControlThrowable (no stack trace cost; thrown once per doc);
   *  - FIRST occurrence wins for every field (browser/crawler behavior);
   *  - `<title>` text is entity-decoded by the tokenizer and
-  *    whitespace-normalized ([[Dom.normalize]]);
+  *    whitespace-collapsed as it arrives ([[graft.html.TextBuf]], the
+  *    extraction kernel's collapse);
   *  - `<meta name="description">`, `<meta property="og:title">`,
   *    `og:description`, `article:published_time` read `content`;
   *    name/property match case-insensitively (crawl HTML mixes case);
@@ -50,7 +51,7 @@ object Meta {
     val ks = KernelScratch.get()
     val sink = new Html5Tokenizer.TokenSink {
       private var inTitle = false
-      private val titleBuf = new java.lang.StringBuilder
+      private val titleBuf = new TextBuf(ks)
 
       private def relHasToken(rel: String, tok: String): Boolean =
         rel.toLowerCase.split("[ \t\r\n]+").contains(tok)
@@ -60,7 +61,7 @@ object Meta {
           if (lang.isEmpty) lang = t.attrOrEmpty("lang").toLowerCase
         case "title" if !t.selfClosing =>
           inTitle = title.isEmpty
-          titleBuf.setLength(0)
+          titleBuf.clear()
         case "meta" =>
           val key = {
             val n = t.attrOrEmpty("name")
@@ -83,7 +84,7 @@ object Meta {
       def tagClose(name: String, startByte: Int, endByte: Int): Unit =
         name match {
           case "title" =>
-            if (inTitle) { title = Dom.normalize(titleBuf, ks); inTitle = false }
+            if (inTitle) { title = titleBuf.take(); inTitle = false }
           case "head" => throw new Done
           case _      => ()
         }

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Dom, Html5Tokenizer, KernelScratch, TagOpen}
+import graft.html.{Html5Tokenizer, KernelScratch, TableReader, Tags, TagOpen, TextBuf}
 import scala.collection.mutable.ArrayBuffer
 
 /** HTML table → GitHub-flavored-markdown extraction — the web-payload
@@ -10,23 +10,20 @@ import scala.collection.mutable.ArrayBuffer
   * the structured-table signal comes from real `<table>` markup instead
   * of a vision model).
   *
-  * Semantics (mirrors the Dom block-builder's table discipline, byte
-  * offsets aside):
-  *  - row/cell structure tracked at table depth 1 only; a NESTED
-  *    table's text folds into the enclosing cell (crawl HTML nests
-  *    layout tables everywhere);
-  *  - cell text is entity-decoded by the tokenizer and
-  *    whitespace-normalized ([[Dom.normalize]]);
+  * Semantics: rows and cells are `TableReader`'s (the extraction
+  * kernel's table rules: depth-1 structure, a nested table folded into
+  * the enclosing cell, HTML5's implied closes, cell text entity-decoded
+  * by the tokenizer and whitespace-collapsed as it arrives), over the
+  * kernel's suppression (`Tags.FSuppress`: no script, style or button
+  * text in a cell). On top of them:
   *  - `colspan=k` flattens to the cell followed by k-1 empty cells
   *    (k clamped to [1,16]); `rowspan` is ignored — the cell appears
   *    in its first row only (documented md-flattening convention);
   *  - the table's markdown header is the longest prefix of rows made
   *    entirely of `<th>` cells (0 rows → a synthesized empty header,
   *    GFM requires one); all rows pad to the widest row;
-  *  - `|` in a cell escapes to `\|`; newlines are already collapsed
-  *    by normalization; other characters pass through;
-  *  - unclosed cells/rows/tables close at EOF (truncated-payload
-  *    leniency, same as the extraction kernel).
+  *  - `|` in a cell escapes to `\|`; newlines are already collapsed;
+  *    other characters pass through.
   *
   * Scale shape: pure map over the payload via the streaming tokenizer
   * (no DOM build, no token list); emits one row per table map-side —
@@ -62,83 +59,30 @@ object TableMd {
     if (Extractor.payloadKind(bytes) != "html") return Nil
     val out = ArrayBuffer.empty[Table]
     val ks = KernelScratch.get()
-    class TableSink extends Html5Tokenizer.TokenSink {
-      private var depth = 0
-      private val rows = ArrayBuffer.empty[Vector[String]]
-      private val rowIsTh = ArrayBuffer.empty[Boolean]
-      private val row = ArrayBuffer.empty[String]
-      private val cell = new java.lang.StringBuilder
-      private var inCell = false
-      private var cellTh = false
-      private var rowAllTh = true
-      private var cellPad = 0 // colspan-1 empty cells to append
-
-      private def closeCell(): Unit = if (inCell) {
-        row += Dom.normalize(cell, ks)
-        var i = 0
-        while (i < cellPad) { row += ""; i += 1 }
-        if (!cellTh) rowAllTh = false
-        inCell = false
-      }
-      private def closeRow(): Unit = {
-        closeCell()
-        if (row.nonEmpty) {
-          rows += row.toVector
-          rowIsTh += rowAllTh
-          row.clear()
-        }
-        rowAllTh = true
-      }
-      private def closeTable(): Unit = {
-        closeRow()
-        if (rows.nonEmpty) {
-          val grid = rows.toVector
-          val header = rowIsTh.takeWhile(identity).length
-          out += Table(grid, header, render(grid, header))
-        }
-        rows.clear(); rowIsTh.clear()
-      }
-
-      /** Unwind any unclosed table at EOF. */
-      def finish(): Unit = while (depth > 0) {
-        depth -= 1
-        if (depth == 0) closeTable()
-      }
-
-      def tagOpen(t: TagOpen): Unit = t.name match {
-        case "table" if !t.selfClosing =>
-          if (depth == 0) { rows.clear(); rowIsTh.clear(); row.clear()
-            cell.setLength(0); inCell = false; rowAllTh = true }
-          depth += 1
-        case "td" | "th" if depth == 1 =>
-          closeCell()
-          inCell = true; cellTh = t.name == "th"; cell.setLength(0)
-          val cs = t.attrOrEmpty("colspan")
-          cellPad =
-            if (cs.isEmpty || !cs.forall(_.isDigit)) 0
-            else math.max(1, math.min(16, cs.toInt)) - 1
-        case "tr" if depth == 1 => closeRow()
-        case "br" if depth >= 1 => if (inCell) cell.append(' ')
-        case _ => ()
-      }
+    val reader = new TableReader(new TextBuf(ks), rows => if (rows.nonEmpty) out += table(rows))
+    val sink = new Html5Tokenizer.TokenSink {
+      private var suppressDepth = 0
+      override def wantsAttrs(name: String): Boolean = name == "td" || name == "th"
+      def tagOpen(t: TagOpen): Unit =
+        if ((Tags.flags(t.name) & Tags.FSuppress) != 0) { if (!t.selfClosing) suppressDepth += 1 }
+        else if (suppressDepth == 0) reader.tagOpen(t)
       def tagClose(name: String, startByte: Int, endByte: Int): Unit =
-        name match {
-          case "table" if depth > 0 =>
-            depth -= 1
-            if (depth == 0) closeTable()
-          case "td" | "th" if depth == 1 => closeCell()
-          case "tr" if depth == 1        => closeRow()
-          case _                         => ()
-        }
+        if ((Tags.flags(name) & Tags.FSuppress) != 0) { if (suppressDepth > 0) suppressDepth -= 1 }
+        else if (suppressDepth == 0) reader.tagClose(name)
       def text(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit =
-        if (depth >= 1 && inCell) cell.append(chars, from, len)
+        if (suppressDepth == 0) reader.text(chars, from, len, sb, eb)
     }
-    val sink = new TableSink
     try {
       Html5Tokenizer.stream(bytes, sink, ks)
-      // EOF closes any open table (truncated payloads keep complete rows)
-      sink.finish()
+      reader.finish() // EOF closes an open table (truncated payloads keep their cells)
     } finally KernelScratch.release(ks)
     out.toSeq
+  }
+
+  /** The colspan-padded grid and its all-`<th>` header prefix. */
+  private def table(rows: Vector[Vector[TableReader.Cell]]): Table = {
+    val grid = rows.map(_.flatMap(c => c.text +: Vector.fill(c.colspan - 1)("")))
+    val header = rows.takeWhile(_.forall(_.th)).length
+    Table(grid, header, render(grid, header))
   }
 }

@@ -29,7 +29,7 @@ import org.apache.spark.storage.StorageLevel
   * `spark.sql.shuffle.partitions`, so a small graph runs one task per
   * stage. With `spark.graft.cc.checkpointDir` set (fleet runs), every
   * 4th hop is reliably checkpointed so executor loss never replays more
-  * than 4 hops; without it, shuffle lineage is the recovery path.
+  * than 4 hops; unset, only a local master runs (`Checkpoints.reliable`).
   *
   * Determinism: EVERY floating sum in the pipeline is quantized to 1e-9
   * units (longs) BEFORE it is shuffled — input edge weights on entry
@@ -71,7 +71,7 @@ object HostRank {
     * (host, rank) with sum(rank) ~= 1. */
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame = {
     val spark = edges.sparkSession
-    val reliable = Checkpoints.reliableDir(spark).isDefined
+    val reliable = Checkpoints.reliable(spark.sparkContext.master, Checkpoints.reliableDir(spark))
     // quantize each input weight BEFORE any aggregation, with Spark's
     // HALF_UP Round: long sums are partitioning-invariant where double
     // sums are not

@@ -30,6 +30,95 @@ final case class Block(
   def headingLevel: Int = Tags.headingLevel(kind)
 }
 
+/** Text collapsed as it arrives — the kernel's one whitespace-collapse
+  * loop (SURVEY.md §7 hard part (b)): a [ \t\n\r\f]+ run becomes one
+  * ' ' before the next char (none at the start or after a '\n'), a BR
+  * sentinel char (U+0001, a hard newline as `<br>` is) a '\n' (none at
+  * the start). A block's text (`Dom.BlockSink`), a table cell's
+  * (`TableReader`) and `Meta`'s title go through it.
+  *
+  * The chars live in the scratch's `sinkBuf` (r6b: a flat array, not a
+  * StringBuilder, so appends pay no coder checks): one buffer of a
+  * kernel call writes it, and the block sink's table cells share the
+  * sink's buffer, which is empty while a table is open.
+  */
+final class TextBuf(ks: KernelScratch) {
+  var chars: Array[Char] = ks.sinkBuf
+  var len = 0
+  /** The ' '/'\n' count of `chars[0, len)`. */
+  var seps = 0
+  /** A whitespace run is pending. */
+  var ws = false
+
+  def ensure(extra: Int): Unit =
+    if (len + extra > chars.length) { chars = KernelScratch.grow(chars, len + extra); ks.sinkBuf = chars }
+
+  def clear(): Unit = { len = 0; seps = 0; ws = false }
+
+  /** Appends `in[from, from + n)` collapsed; returns whether the range
+    * held a char outside [ \t\n\r\f]. */
+  def append(in: Array[Char], from: Int, n: Int): Boolean = {
+    ensure(n + 1) // at most one pending space more than the input
+    val buf = chars
+    var k = len
+    var s = seps
+    var w = ws
+    var nonWs = false
+    var i = from
+    val end = from + n
+    while (i < end) {
+      val c = in(i)
+      val cls = TextBuf.charClass(c)
+      if (cls == 0) {
+        if (w) {
+          if (k > 0 && buf(k - 1) != '\n') { buf(k) = ' '; k += 1; s += 1 }
+          w = false
+        }
+        buf(k) = c; k += 1
+        nonWs = true
+      } else if (cls == 1) {
+        w = true
+      } else {
+        if (k > 0) { buf(k) = '\n'; k += 1; s += 1 }
+        w = false
+        nonWs = true
+      }
+      i += 1
+    }
+    len = k; seps = s; ws = w
+    nonWs
+  }
+
+  /** `len` without trailing hard newlines. */
+  def trimmedLen: Int = {
+    var k = len
+    while (k > 0 && chars(k - 1) == '\n') k -= 1
+    k
+  }
+
+  /** The text without trailing hard newlines; clears the buffer. */
+  def take(): String = {
+    val s = new String(chars, 0, trimmedLen)
+    clear()
+    s
+  }
+}
+
+object TextBuf {
+  final val BrSentinel = '\u0001'
+
+  // Char classes: 0=regular, 1=ws, 2=BR sentinel. Every whitespace char
+  // and the sentinel are <= ' ', so a char above ' ' is regular after
+  // one compare; the table covers the rest.
+  private val cls: Array[Byte] = {
+    val t = new Array[Byte](' ' + 1)
+    t(' ') = 1; t('\t') = 1; t('\n') = 1; t('\r') = 1; t('\f') = 1
+    t(BrSentinel) = 2
+    t
+  }
+  @inline def charClass(c: Char): Int = if (c > ' ') 0 else cls(c)
+}
+
 /** Builds the flat blocks from the token stream — the lightweight
   * "DOM" (SURVEY.md §7 module `html/Dom.scala`). No tree is materialized;
   * a tag stack tracks ancestry, which is all the classifier needs. Which
@@ -43,52 +132,6 @@ final case class Block(
   * is the consumer that builds `Block`s.
   */
 object Dom {
-  /** A U+0001 char in text is a hard newline, as `<br>` is: the builder
-    * once marked `<br>` with it in the raw text, and output keeps the rule. */
-  private final val BrSentinel = '\u0001'
-
-  // Char classes of the collapse loops: 0=regular, 1=ws, 2=BR sentinel.
-  // Every whitespace char and the sentinel are <= ' ', so a char above
-  // ' ' is regular after one compare; the table covers the rest.
-  private val normCls: Array[Byte] = {
-    val t = new Array[Byte](' ' + 1)
-    t(' ') = 1; t('\t') = 1; t('\n') = 1; t('\r') = 1; t('\f') = 1
-    t(BrSentinel) = 2
-    t
-  }
-  @inline private def charClass(c: Char): Int = if (c > ' ') 0 else normCls(c)
-
-  /** Collapse [ \t\n\r\f]+ → ' ', honor BR sentinels as hard newlines;
-    * leading/trailing hard newlines are stripped. The builder's chars
-    * are copied into `ks.normBuf` and collapsed there in one pass (a
-    * table cell, a title). `ks` is passed in by the caller (r6b): a
-    * ThreadLocal.get per call was itself hot on executor threads. */
-  private[graft] def normalize(raw: java.lang.StringBuilder, ks: KernelScratch): String = {
-    val len = raw.length
-    val buf = KernelScratch.grow(ks.normBuf, len)
-    ks.normBuf = buf
-    raw.getChars(0, len, buf, 0)
-    var k = 0 // output length; never passes the read cursor
-    var ws = false
-    var i = 0
-    while (i < len) {
-      val c = buf(i)
-      val cls = charClass(c)
-      if (cls == 0) {
-        if (ws && k > 0 && buf(k - 1) != '\n') { buf(k) = ' '; k += 1 }
-        ws = false
-        buf(k) = c; k += 1
-      } else if (cls == 1) ws = true
-      else { // BR sentinel: skip leading hard newlines
-        if (k > 0) { buf(k) = '\n'; k += 1 }
-        ws = false
-      }
-      i += 1
-    }
-    while (k > 0 && buf(k - 1) == '\n') k -= 1
-    new String(buf, 0, k)
-  }
-
   /** One flushed block as the sink hands it to a `BlockConsumer`. The
     * view and its `chars` belong to the sink: they are valid during the
     * `block` call only. The text is `chars[0, len)`, collapsed (`<pre>`:
@@ -139,12 +182,14 @@ object Dom {
     sink.finish()
   }
 
-  /** The single block-building state machine, fed by tokenizer events. */
+  /** The single block-building state machine, fed by tokenizer events.
+    * While a table is open, every unsuppressed event goes to its
+    * `TableReader`, and the table is one block at its close. */
   final class BlockSink(ks: KernelScratch, consumer: BlockConsumer) extends Html5Tokenizer.TokenSink {
     /** The sink reads attributes only on table (class) and block-start
       * tags (class/style via startBlock) — inline tags (a/span/b/img,
-      * which carry most crawl-HTML attributes, href above all) skip
-      * attr string construction in the tokenizer entirely (r6b). */
+      * which carry most crawl-HTML attributes, href above all) and cells
+      * skip attr string construction in the tokenizer entirely (r6b). */
     override def wantsAttrs(name: String): Boolean =
       name == "table" || (Tags.flags(name) & Tags.FBlock) != 0
 
@@ -158,49 +203,32 @@ object Dom {
     private var stack = new Array[String](16)
     private var depth = 0
 
-    // The current block's collapsed text, written as events arrive into
-    // the thread-scratch `sinkBuf` (r6b: a flat array, not a
-    // StringBuilder, so appends pay no coder checks). `ws` is a pending
-    // whitespace run, `seps` the ' '/'\n' count written; a `<pre>` block
-    // keeps its chars and drops one leading '\n' (`preStart`).
-    private var tBuf: Array[Char] = ks.sinkBuf
-    private var tLen = 0
-    private def tEnsure(extra: Int): Unit =
-      if (tLen + extra > tBuf.length) {
-        tBuf = KernelScratch.grow(tBuf, tLen + extra); ks.sinkBuf = tBuf
-      }
-    private var ws = false
-    private var seps = 0
+    // The current block's text, or the open table's current cell. A
+    // `<pre>` block keeps its chars and drops one leading '\n' (`preStart`).
+    private val buf = new TextBuf(ks)
     private var pre = false
     private var preStart = true
     private var curLink = 0
     private var spanStart = -1L
     private var spanEnd = -1L
 
-    // table accumulation
-    private var tableDepth = 0
+    // created at the document's first table; `tblCls` is the open table's class
+    private var table: TableReader = null
     private var tblCls = ""
-    private val tblRows = new ArrayBuffer[Vector[String]]
-    private val tblRow = new ArrayBuffer[String]
-    private val tblCell = new java.lang.StringBuilder
-    private var inCell = false
-    private var tblSpanStart = -1L
-    private var tblSpanEnd = -1L
+    private def inTable: Boolean = table != null && table.isOpen
 
     /** Hands the current block to the consumer (trailing hard newlines
       * stripped, unless `<pre>`) when it has text, and starts the next. */
     private def flush(): Unit = {
-      var k = tLen
-      var s = seps
-      if (!pre) while (k > 0 && tBuf(k - 1) == '\n') { k -= 1; s -= 1 }
-      if (k > 0) emit(k, s, curLink, spanStart, spanEnd)
-      tLen = 0; seps = 0; ws = false; preStart = true
+      val k = if (pre) buf.len else buf.trimmedLen
+      if (k > 0) emit(k, buf.seps - (buf.len - k), curLink, spanStart, spanEnd)
+      buf.clear(); preStart = true
       curLink = 0; spanStart = -1L; spanEnd = -1L
     }
 
     private def emit(len: Int, nSeps: Int, linkChars: Int, start: Long, end: Long): Unit = {
       val v = view
-      v.chars = tBuf; v.len = len; v.nSeps = nSeps; v.linkChars = linkChars
+      v.chars = buf.chars; v.len = len; v.nSeps = nSeps; v.linkChars = linkChars
       v.inBoilerplateContainer = boilerDepth > 0; v.startByte = start; v.endByte = end
       consumer.block(v)
     }
@@ -214,26 +242,28 @@ object Dom {
     /** Resumes the enclosing block (or body) after a block or table closes. */
     private def resume(): Unit = startBlock(if (depth > 0) stack(depth - 1) else "body", "", "")
 
-    /** A table's one block: its text (cells joined by ' ', rows by '\n')
-      * goes into `tBuf`, which is empty while a table is open. */
-    private def emitTable(rows: Vector[Vector[String]]): Unit = {
-      val text = rows.map(_.mkString(" ")).mkString("\n")
-      tEnsure(text.length)
-      text.getChars(0, text.length, tBuf, 0)
-      view.kind = "table"; view.kindFlags = Tags.flags("table")
-      view.cls = tblCls; view.style = ""; view.cells = rows
-      emit(text.length, text.count(c => c == ' ' || c == '\n'), 0, tblSpanStart, tblSpanEnd)
-      view.cells = Vector.empty
+    /** The table's close: its one block, when it has rows, then the
+      * enclosing block resumes. */
+    private def closeTable(rows: Vector[Vector[TableReader.Cell]]): Unit = {
+      if (rows.nonEmpty) emitTable(rows)
+      resume()
     }
 
-    private def hasNonWs(chars: Array[Char], from: Int, len: Int): Boolean = {
-      var i = from
-      while (i < from + len) {
-        val c = chars(i)
-        if (charClass(c) != 1) return true
-        i += 1
-      }
-      false
+    /** A table's block: unpadded cells, its text (cells joined by ' ',
+      * rows by '\n') written into `buf`, which is empty once the table
+      * has closed, and the span of its cells' text. */
+    private def emitTable(rows: Vector[Vector[TableReader.Cell]]): Unit = {
+      val cells = rows.map(_.map(_.text))
+      val text = cells.map(_.mkString(" ")).mkString("\n")
+      var start = -1L
+      var end = -1L
+      rows.foreach(_.foreach(c => if (c.startByte >= 0) { if (start < 0) start = c.startByte; end = c.endByte }))
+      buf.ensure(text.length)
+      text.getChars(0, text.length, buf.chars, 0)
+      view.kind = "table"; view.kindFlags = Tags.flags("table")
+      view.cls = tblCls; view.style = ""; view.cells = cells
+      emit(text.length, text.count(c => c == ' ' || c == '\n'), 0, start, end)
+      view.cells = Vector.empty
     }
 
     def tagOpen(t: TagOpen): Unit = {
@@ -242,24 +272,13 @@ object Dom {
         if ((fl & Tags.FSuppress) != 0) {
           if (!t.selfClosing) suppressDepth += 1
         } else if (suppressDepth == 0) {
-          if (name == "table") {
-            if (tableDepth == 0) {
+          if (inTable) table.tagOpen(t)
+          else if (name == "table") {
+            if (!t.selfClosing) {
               flush()
               tblCls = t.attrOrEmpty("class")
-              tblRows.clear(); tblRow.clear(); tblCell.setLength(0); inCell = false
-              tblSpanStart = -1L; tblSpanEnd = -1L
-            }
-            tableDepth += 1
-          } else if (tableDepth > 0) {
-            // row/cell structure is tracked at depth 1 only: a NESTED
-            // table's td/tr must not clear the outer row or cell —
-            // its text folds into the enclosing cell (layout-table
-            // nesting is ubiquitous in real crawl HTML)
-            name match {
-              case "td" | "th" if tableDepth == 1 => inCell = true; tblCell.setLength(0)
-              case "tr" if tableDepth == 1        => tblRow.clear()
-              case "br"                           => if (inCell) tblCell.append(' ')
-              case _                              => ()
+              if (table == null) table = new TableReader(buf, closeTable)
+              table.tagOpen(t)
             }
           } else if (name == "br") {
             hardNewline()
@@ -281,8 +300,8 @@ object Dom {
     /** `<br>`: a '\n' unless at the block's start (`<pre>`: always). */
     private def hardNewline(): Unit = {
       if (pre) preStart = false
-      if (pre || tLen > 0) { tEnsure(1); tBuf(tLen) = '\n'; tLen += 1; seps += 1 }
-      ws = false
+      if (pre || buf.len > 0) { buf.ensure(1); buf.chars(buf.len) = '\n'; buf.len += 1; buf.seps += 1 }
+      buf.ws = false
     }
 
     def tagClose(name: String, startByte: Int, endByte: Int): Unit = {
@@ -290,22 +309,8 @@ object Dom {
         if ((fl & Tags.FSuppress) != 0) {
           if (suppressDepth > 0) suppressDepth -= 1
         } else if (suppressDepth == 0) {
-          if (name == "table") {
-            if (tableDepth > 0) tableDepth -= 1
-            if (tableDepth == 0) {
-              if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
-              if (tblRows.nonEmpty) emitTable(tblRows.toVector)
-              resume()
-            }
-          } else if (tableDepth > 0) {
-            name match {
-              case "td" | "th" if tableDepth == 1 =>
-                if (inCell) { tblRow += Dom.normalize(tblCell, ks); inCell = false }
-              case "tr" if tableDepth == 1 =>
-                if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
-              case _ => ()
-            }
-          } else if (name == "a") {
+          if (inTable) table.tagClose(name)
+          else if (name == "a") {
             if (linkDepth > 0) linkDepth -= 1
           } else if ((fl & Tags.FBlock) != 0) {
             flush()
@@ -320,17 +325,10 @@ object Dom {
 
     def text(chars: Array[Char], from: Int, len: Int, startByte: Int, endByte: Int): Unit = {
         if (suppressDepth == 0) {
-          if (tableDepth > 0) {
-            if (inCell) {
-              tblCell.append(chars, from, len)
-              if (hasNonWs(chars, from, len)) {
-                if (tblSpanStart < 0) tblSpanStart = startByte.toLong
-                tblSpanEnd = endByte.toLong
-              }
-            }
-          } else {
+          if (inTable) table.text(chars, from, len, startByte, endByte)
+          else {
             if (linkDepth > 0) curLink += len
-            val nonWs = if (pre) appendPre(chars, from, len) else appendCollapsed(chars, from, len)
+            val nonWs = if (pre) appendPre(chars, from, len) else buf.append(chars, from, len)
             if (nonWs) {
               if (spanStart < 0) spanStart = startByte.toLong
               spanEnd = endByte.toLong
@@ -339,49 +337,13 @@ object Dom {
         }
     }
 
-    /** Appends `chars[from, from + len)` collapsed: a whitespace run
-      * becomes one ' ' before the next char (none at the block's start or
-      * after a '\n'), a BR sentinel char a '\n' (none at the start).
-      * Returns whether the range held a char outside [ \t\n\r\f]. */
-    private def appendCollapsed(chars: Array[Char], from: Int, len: Int): Boolean = {
-      tEnsure(len + 1) // at most one pending space more than the input
-      val buf = tBuf
-      var k = tLen
-      var s = seps
-      var w = ws
-      var nonWs = false
-      var i = from
-      val end = from + len
-      while (i < end) {
-        val c = chars(i)
-        val cls = charClass(c)
-        if (cls == 0) {
-          if (w) {
-            if (k > 0 && buf(k - 1) != '\n') { buf(k) = ' '; k += 1; s += 1 }
-            w = false
-          }
-          buf(k) = c; k += 1
-          nonWs = true
-        } else if (cls == 1) {
-          w = true
-        } else {
-          if (k > 0) { buf(k) = '\n'; k += 1; s += 1 }
-          w = false
-          nonWs = true
-        }
-        i += 1
-      }
-      tLen = k; seps = s; ws = w
-      nonWs
-    }
-
     /** `<pre>`: appends the chars as they are (a BR sentinel char as
       * '\n'), dropping a '\n' that starts the block. */
     private def appendPre(chars: Array[Char], from: Int, len: Int): Boolean = {
-      tEnsure(len)
-      val buf = tBuf
-      var k = tLen
-      var s = seps
+      buf.ensure(len)
+      val out = buf.chars
+      var k = buf.len
+      var s = buf.seps
       var nonWs = false
       var i = from
       val end = from + len
@@ -391,17 +353,20 @@ object Dom {
       }
       while (i < end) {
         val raw = chars(i)
-        if (charClass(raw) != 1) nonWs = true
-        val c = if (raw == BrSentinel) '\n' else raw
+        if (TextBuf.charClass(raw) != 1) nonWs = true
+        val c = if (raw == TextBuf.BrSentinel) '\n' else raw
         if (c == ' ' || c == '\n') s += 1
-        buf(k) = c; k += 1
+        out(k) = c; k += 1
         i += 1
       }
-      tLen = k; seps = s
+      buf.len = k; buf.seps = s
       nonWs
     }
 
-    /** End of the document: the last block. */
-    def finish(): Unit = flush()
+    /** End of the document: a table still open, then the last block. */
+    def finish(): Unit = {
+      if (table != null) table.finish()
+      flush()
+    }
   }
 }

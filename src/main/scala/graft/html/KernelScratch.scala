@@ -10,11 +10,11 @@ package graft.html
   * chars and their byte offsets (`Html5Tokenizer.decode`; offsets for
   * non-ASCII UTF-8 only); `tokBuf`, a text run of several segments
   * (the tokenizer; one-segment runs are handed over from `decChars`);
-  * `sinkBuf`, the current block's text (`Dom.BlockSink`, collapsed as
-  * it arrives); `normBuf`, a table cell's or title's copy
-  * that `Dom.normalize` collapses in place; `outText`, the output
-  * text (`Extractor`). Every buffer is consumed within one kernel call,
-  * and kernel calls never interleave on one thread.
+  * `sinkBuf`, text collapsed as it arrives (`TextBuf`: a block's text
+  * or a table cell's in `Dom.BlockSink`, a cell in `TableMd`, the title
+  * in `Meta`); `outText`, the output text (`Extractor`). Every buffer
+  * is consumed within one kernel call, and kernel calls never
+  * interleave on one thread.
   *
   * Arrays grow through `grow`. The entries that fetch the scratch
   * (`Extractor.extract`, `Dom.blocksStreaming`, `Html5Tokenizer.stream`,
@@ -29,13 +29,12 @@ final class KernelScratch {
   var decOffs: Array[Int] = new Array[Int](64 * 1024 + 1)
   var tokBuf: Array[Char] = new Array[Char](4 * 1024)
   var sinkBuf: Array[Char] = new Array[Char](8 * 1024)
-  var normBuf: Array[Char] = new Array[Char](16 * 1024)
   var outText: Array[Char] = new Array[Char](8 * 1024)
 
   private def oversized: Boolean = {
     import KernelScratch.RetainMark
     decChars.length > RetainMark || decOffs.length > RetainMark || tokBuf.length > RetainMark ||
-      sinkBuf.length > RetainMark || normBuf.length > RetainMark || outText.length > RetainMark
+      sinkBuf.length > RetainMark || outText.length > RetainMark
   }
 }
 

@@ -15,9 +15,9 @@ final case class ExtractedDoc(url: String, warc_ts: java.sql.Timestamp,
 
 /** The distributed extraction pipeline (SURVEY.md §3 entry-point
   * mappings): narrow select (column-pruning help — Catalyst cannot see
-  * inside the kernel closure) → salted url-host repartition (explicit
-  * crawl-domain skew defuse, BASELINE.json) → mapPartitions(kernel) →
-  * optional grouped reassembly.
+  * inside the kernel closure) → optional salted url-host repartition
+  * (explicit crawl-domain skew defuse, BASELINE.json) →
+  * mapPartitions(kernel) → optional grouped reassembly.
   */
 object Pipeline {
 
@@ -25,8 +25,8 @@ object Pipeline {
     * many partitions (SURVEY.md §4 custom rule #1). */
   final val Salts = 8
 
-  /** Salted repartition by url-host hash. Kept as a reusable stage so
-    * every entry point shares the same skew policy. */
+  /** Salted repartition by url-host hash: the payload shuffle of
+    * `extract(repartitionByHost = true)`, its one caller. */
   def saltedByHost(df: DataFrame, numPartitions: Int): DataFrame =
     df.repartition(numPartitions,
       xxhash64(parse_url(col("url"), lit("HOST"))),
@@ -38,12 +38,12 @@ object Pipeline {
     * payload bytes never cross the network — at 10^12-document scale,
     * shuffling raw html is the anti-pattern; balance comes from source
     * splits (`maxPartitionBytes`) and the `MaxDocBytes` kernel guard.
-    * The salted url-host repartition (north rule) applies where a
-    * shuffle is REQUIRED anyway: grouped reassembly (multipage/chunked),
-    * per-host aggregation, and the lineage shard assignment — pass
-    * `repartitionByHost = true` to force it here too, into
-    * `spark.sql.shuffle.partitions` partitions (e.g. when source files
-    * are host-clustered AND pathologically size-skewed). */
+    * `repartitionByHost = true` adds the salted url-host repartition
+    * (`saltedByHost`, into `spark.sql.shuffle.partitions` partitions)
+    * before the kernel, for source files that are host-clustered AND
+    * pathologically size-skewed; nothing else shares it (multi-page
+    * reassembly groups by base url, `perHostStats` is a plain groupBy,
+    * lineage shards hash on their own). */
   def extract(pages: DataFrame, mode: ExtractMode,
       repartitionByHost: Boolean = false): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession

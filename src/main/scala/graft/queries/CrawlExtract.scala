@@ -5,7 +5,7 @@ import graft.extract.ExtractMode
 import graft.icelite.IceLite
 import graft.pipeline.{Pipeline, Render}
 import graft.queries.Query.{hostGaps, runDir, t}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,6 +13,23 @@ import org.apache.spark.sql.functions._
   * corpus, URL canonicalization, robots and sitemaps, link graphs,
   * frontier and recrawl policy, snapshots, tables, PDFs and page metadata. */
 object CrawlExtract {
+  /** The micro corpus's host link edges, one row per extracted outlink:
+    * (src_host, dst_host, external). Map-side link extraction (streaming
+    * tokenizer, no DOM); external, protocol-relative and relative hrefs
+    * all resolve; PDF payloads contribute nothing (magic-byte dispatch). */
+  private def hostLinks(s: SparkSession): DataFrame = {
+    import s.implicits._
+    val (pagesDir, _) = microTables(s)
+    IceLite.read(s, pagesDir).select(col("url"), col("html"))
+      .as[(String, Array[Byte])]
+      .flatMap { case (url, bytes) =>
+        val src = graft.extract.Outlinks.host(url)
+        graft.extract.Outlinks.extract(bytes, url)
+          .map(l => (src, l.targetHost, l.external))
+      }
+      .toDF("src_host", "dst_host", "external")
+  }
+
   val all: Seq[Query] = Seq(
     Query("q31_url_canonical", (s, dir) => {
       // URL canonicalization (crawl-dedup key, functions/UrlCanon.scala):
@@ -1231,26 +1248,14 @@ object CrawlExtract {
         .toDF("url", "html_render")
         .orderBy("url")
     }),
-    Query("x22_outlinks", (s, _) => {
-      // host link-graph construction: map-side link extraction (streaming
-      // tokenizer, no DOM), ONE shuffle keyed by (src_host, dst_host) —
-      // the standard webgraph build at crawl scale. External + protocol-
-      // relative + relative hrefs all resolve; PDF payloads contribute
-      // nothing (magic-byte dispatch).
-      import s.implicits._
-      val (pagesDir, _) = microTables(s)
-      IceLite.read(s, pagesDir).select(col("url"), col("html"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (url, bytes) =>
-          val src = graft.extract.Outlinks.host(url)
-          graft.extract.Outlinks.extract(bytes, url)
-            .map(l => (src, l.targetHost, l.external))
-        }
-        .toDF("src_host", "dst_host", "external")
+    Query("x22_outlinks", (s, _) =>
+      // host link-graph construction: ONE shuffle keyed by (src_host,
+      // dst_host) over the map-side edges — the standard webgraph build
+      // at crawl scale
+      hostLinks(s)
         .groupBy(col("src_host"), col("dst_host"), col("external"))
         .agg(count(lit(1)).as("n_links"))
-        .orderBy("src_host", "dst_host")
-    },
+        .orderBy("src_host", "dst_host"),
       planNote = "Review point: link extraction is a map-side SerializeFromObject " +
         "over the kernel flatMap (no payload shuffle); the ONE hash-partitioned " +
         "Exchange is the (src_host, dst_host, external) edge aggregate with " +
@@ -1260,16 +1265,8 @@ object CrawlExtract {
       // PageRank over the x22 host link graph (crawl-quality prior):
       // one shuffle per power iteration, quantized contribution sums so
       // ranks are bit-identical under any partitioning (HostRank).
-      import s.implicits._
-      val (pagesDir, _) = microTables(s)
-      val edges = IceLite.read(s, pagesDir).select(col("url"), col("html"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (url, bytes) =>
-          val src = graft.extract.Outlinks.host(url)
-          graft.extract.Outlinks.extract(bytes, url).map(l => (src, l.targetHost))
-        }
-        .toDF("src", "dst")
-        .groupBy("src", "dst").agg(count(lit(1)).cast("double").as("weight"))
+      val edges = hostLinks(s).groupBy(col("src_host").as("src"), col("dst_host").as("dst"))
+        .agg(count(lit(1)).cast("double").as("weight"))
       graft.functions.HostRank.pageRank(edges)
         .select(col("host"), floor(col("rank") * 1e9).cast("long").as("rank_x1e9"))
         .orderBy(desc("rank_x1e9"), col("host"))

@@ -3,8 +3,8 @@ package graft.util
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lineage-truncation policy shared by every iterative operator
-  * (connected components, BPE merge learning) and by the materialized
-  * dedup probe: set `spark.graft.cc.checkpointDir` to an
+  * (connected components, BPE merge learning, host PageRank) and by the
+  * materialized dedup probe: set `spark.graft.cc.checkpointDir` to an
   * HDFS/object-store path and truncation goes through a RELIABLE
   * `checkpoint` (survives executor loss — the mode for 10^12-row fleet
   * runs); unset, a local master uses `localCheckpoint` (executor storage

@@ -12,7 +12,11 @@ import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
   * repeats through a `HashSet[String]`, renders and cuts. The kernel
   * (`Extractor.extract` over `Dom.BlockSink`) collapses as text arrives
   * and classifies at flush; `KernelReferenceSpec` demands byte-identical
-  * results from both. */
+  * results from both. Tables follow HTML5's implied closes on their own
+  * here (the kernel's are `TableReader`'s): `<td>`/`<th>` closes the open
+  * cell, `<tr>` the open row, `</table>` or the end of input everything;
+  * `<table/>` opens nothing and a `</table>` with no table open is
+  * ignored. */
 object BlockListReference {
 
   private final val BrSentinel = '\u0001'
@@ -82,6 +86,22 @@ object BlockListReference {
       normalizeArr(a, a.length, sepsBox)
     }
 
+    private def closeCell(): Unit = if (inCell) { tblRow += cellText(); inCell = false }
+    private def closeRow(): Unit = {
+      closeCell()
+      if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
+    }
+    private def closeTable(): Unit = {
+      closeRow()
+      if (tblRows.nonEmpty) {
+        val rows = tblRows.toVector
+        val text = rows.map(_.mkString(" ")).mkString("\n")
+        out += Block("table", text, rows, tblCls, "", 0, boilerDepth > 0,
+          tblSpanStart, tblSpanEnd, nSeps = text.count(c => c == ' ' || c == '\n'))
+      }
+      startBlock(if (stack.nonEmpty) stack.last else "body", "", "")
+    }
+
     private def flush(): Unit = {
       val text =
         if (curPre) {
@@ -119,17 +139,19 @@ object BlockListReference {
         if (!t.selfClosing) suppressDepth += 1
       } else if (suppressDepth == 0) {
         if (name == "table") {
-          if (tableDepth == 0) {
-            flush()
-            tblCls = t.attrOrEmpty("class")
-            tblRows.clear(); tblRow.clear(); tblCell.setLength(0); inCell = false
-            tblSpanStart = -1L; tblSpanEnd = -1L
+          if (!t.selfClosing) {
+            if (tableDepth == 0) {
+              flush()
+              tblCls = t.attrOrEmpty("class")
+              tblRows.clear(); tblRow.clear(); tblCell.setLength(0); inCell = false
+              tblSpanStart = -1L; tblSpanEnd = -1L
+            }
+            tableDepth += 1
           }
-          tableDepth += 1
         } else if (tableDepth > 0) {
           name match {
-            case "td" | "th" if tableDepth == 1 => inCell = true; tblCell.setLength(0)
-            case "tr" if tableDepth == 1        => tblRow.clear()
+            case "td" | "th" if tableDepth == 1 => closeCell(); inCell = true; tblCell.setLength(0)
+            case "tr" if tableDepth == 1        => closeRow()
             case "br"                           => if (inCell) tblCell.append(' ')
             case _                              => ()
           }
@@ -153,24 +175,15 @@ object BlockListReference {
         if (suppressDepth > 0) suppressDepth -= 1
       } else if (suppressDepth == 0) {
         if (name == "table") {
-          if (tableDepth > 0) tableDepth -= 1
-          if (tableDepth == 0) {
-            if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
-            if (tblRows.nonEmpty) {
-              val rows = tblRows.toVector
-              val text = rows.map(_.mkString(" ")).mkString("\n")
-              out += Block("table", text, rows, tblCls, "", 0, boilerDepth > 0,
-                tblSpanStart, tblSpanEnd, nSeps = text.count(c => c == ' ' || c == '\n'))
-            }
-            startBlock(if (stack.nonEmpty) stack.last else "body", "", "")
+          if (tableDepth > 0) {
+            tableDepth -= 1
+            if (tableDepth == 0) closeTable()
           }
         } else if (tableDepth > 0) {
           name match {
-            case "td" | "th" if tableDepth == 1 =>
-              if (inCell) { tblRow += cellText(); inCell = false }
-            case "tr" if tableDepth == 1 =>
-              if (tblRow.nonEmpty) { tblRows += tblRow.toVector; tblRow.clear() }
-            case _ => ()
+            case "td" | "th" if tableDepth == 1 => closeCell()
+            case "tr" if tableDepth == 1        => closeRow()
+            case _                              => ()
           }
         } else if (name == "a") {
           if (linkDepth > 0) linkDepth -= 1
@@ -204,7 +217,11 @@ object BlockListReference {
         }
       }
 
-    def result(): ArrayBuffer[Block] = { flush(); out }
+    def result(): ArrayBuffer[Block] = {
+      if (tableDepth > 0) { tableDepth = 0; closeTable() }
+      flush()
+      out
+    }
   }
 
   /** `Extractor.extract` over the reference blocks: the same guards and

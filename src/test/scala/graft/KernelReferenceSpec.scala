@@ -52,7 +52,14 @@ class KernelReferenceSpec extends AnyFunSuite {
     "<p>" + "é中 " * 50 + "</p><p>" + "é中 " * 50 + "</p>",
     "plain text with no tags at all but more than eight words in it",
     "<p>" + "<b>" * 3000 + "deep" + "</b>" * 3000 + "</p>" + "<div>" * 2000 + "nested" + "</div>" * 2000,
-    "<p>t\t\r\f\n tabs</p><p> nbsp em space</p>")
+    "<p>t\t\r\f\n tabs</p><p> nbsp em space</p>",
+    // implied table closes: no </td>, no </tr>, open at EOF, <table/>,
+    // and a </table> with no table open
+    "<table><tr><td>a<td>b</tr></table>",
+    "<div class=red><table><tr><td>r1</td><tr><th>r2<br>x</table>tail</div>",
+    "<p>lead</p><table class=red><tr><td>open <table><tr><td>in",
+    "<p>before</p><table/><p>after</p><div><table/>x</div>",
+    "<div class=red>a</table>b</div><table><tr><td>t</td></tr></table></table>c")
 
   test("hostile fixtures: kernel == Block-list reference in every mode") {
     hostile.zipWithIndex.foreach { case (h, i) => check(s"hostile $i", h.getBytes(UTF_8)) }

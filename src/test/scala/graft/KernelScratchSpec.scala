@@ -15,8 +15,8 @@ class KernelScratchSpec extends AnyFunSuite {
   /** Bytes the calling thread's scratch holds. */
   private def retained(): Long = {
     val ks = KernelScratch.get()
-    2L * (ks.decChars.length + ks.tokBuf.length + ks.sinkBuf.length + ks.normBuf.length +
-      ks.outText.length) + 4L * ks.decOffs.length
+    2L * (ks.decChars.length + ks.tokBuf.length + ks.sinkBuf.length + ks.outText.length) +
+      4L * ks.decOffs.length
   }
 
   /** Runs `f` on a fresh thread (a fresh scratch) and returns its result. */

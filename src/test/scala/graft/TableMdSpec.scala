@@ -74,6 +74,17 @@ class TableMdSpec extends AnyFunSuite {
     assert(TableMd.extract("<p>no tables</p>".getBytes("UTF-8")).isEmpty)
   }
 
+  test("script, style and button text never reaches a cell") {
+    val t = one("<table><tr><td>x<script>var s = 1</script>y</td>" +
+      "<td>a<style>td { color: red }</style>b<button>Go</button>c</td></tr></table>")
+    assert(t.rows == Vector(Vector("xy", "abc")))
+  }
+
+  test("a colspan past Int range clamps to 16 instead of throwing") {
+    val t = one("<table><tr><td colspan=\"99999999999\">w</td></tr></table>")
+    assert(t.rows == Vector(Vector("w") ++ Vector.fill(15)("")))
+  }
+
   test("header prefix counts multiple all-th rows; mixed row ends it") {
     val t = one("<table><tr><th>a</th></tr><tr><th>b</th></tr>" +
       "<tr><th>h</th></tr><tr><td>d</td></tr></table>")

@@ -81,25 +81,6 @@ class DomSpec extends AnyFunSuite {
 }
 
 class ChunkerSpec extends AnyFunSuite {
-  test("findClosestAspectRatio ports the reference exactly (incl. tie-break)") {
-    val ratios = Chunker.targetRatios(1, 6)
-    // square image, small: ties between (1,1),(2,2) resolved by area rule
-    assert(Chunker.findClosestAspectRatio(1.0, ratios, 800, 800, 1024) == (1, 1))
-    // big square: area > 0.5*1024²*4 → prefers later tied ratio (2,2)... then (1,1)? area 3000² = 9e6 > 0.5*1024²*1*1 → each tie moves best forward
-    assert(Chunker.findClosestAspectRatio(1.0, ratios, 3000, 3000, 1024) == (2, 2))
-    // wide 3:1
-    assert(Chunker.findClosestAspectRatio(3.0, ratios, 3072, 1024, 1024) == (3, 1))
-    // tall 1:2
-    assert(Chunker.findClosestAspectRatio(0.5, ratios, 512, 1024, 1024) == (1, 2))
-  }
-
-  test("targetRatios covers 1..6 area, sorted") {
-    val r = Chunker.targetRatios(1, 6)
-    assert(r.head == (1, 1))
-    assert(r.forall { case (i, j) => i * j >= 1 && i * j <= 6 })
-    assert(r.map { case (i, j) => i * j }.sliding(2).forall(s => s.head <= s.last))
-  }
-
   test("segments: contiguous, order-preserving, ≤6, reassembly identity") {
     val r = new SplitMix64(7L)
     (0 until 50).foreach { _ =>
@@ -323,7 +304,9 @@ class ExplainAllSpec extends AnyFunSuite {
       "Arguments: a.B$$$Lambda$3658/0x00007f5d9101a388@4f1cb802, l_qty#12L, plan_id=19, " +
       "TopKAgg@4b808, runId = 12911bc7-dba0-48c3-8ad0-11280ce97f22, ## q01, x >= 1.5@2\n" +
       " |  ZippedPartitionsRDD2[818] at zipPartitions at HostRank.scala:123 []\n" +
-      s"Location: InMemoryFileIndex [file:$cwd/target/synth/p/00000-00000.parquet, ... 31 entries]"
+      s"Location: InMemoryFileIndex [file:$cwd/target/synth/p/00000-00000.parquet, ... 31 entries]\n" +
+      "Join condition: (lambda x_34#101 * lambda acc_y_35#102) > 0\n" +
+      "+- BroadcastQueryStage (72), Statistics(sizeInBytes=16.0 MiB, rowCount=250)"
     assert(ExplainAll.mask(raw, "/data/sf") ==
       "Location: InMemoryFileIndex [file:<input>/lineitem.parquet]\n" +
       "Location: InMemoryFileIndex [file:<cwd>/target/synth/ivf]\n" +
@@ -331,6 +314,8 @@ class ExplainAllSpec extends AnyFunSuite {
       "Arguments: a.B$$$Lambda, l_qty#NL, plan_id=N, " +
       "TopKAgg@H, runId = <uuid>, ## q01, x >= 1.5@2\n" +
       " |  ZippedPartitionsRDD2[N] at zipPartitions at HostRank.scala:123 []\n" +
-      "Location: InMemoryFileIndex [file:<cwd>/target/synth/p/00000-00000.parquet, ... N entries]")
+      "Location: InMemoryFileIndex [file:<cwd>/target/synth/p/00000-00000.parquet, ... N entries]\n" +
+      "Join condition: (lambda x_N#N * lambda acc_y_N#N) > 0\n" +
+      "+- BroadcastQueryStage (72), Statistics(sizeInBytes=N, rowCount=250)")
   }
 }
