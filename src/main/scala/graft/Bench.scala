@@ -114,8 +114,9 @@ object Bench {
         // rows shuffle
         val secChunked = timed(Pipeline.perHostStats(
           Pipeline.extract(pages, ExtractMode.Plain).toDF()).count())._2
-        val secSalted = timed(Pipeline.extract(pages, ExtractMode.Plain,
-          repartitionByHost = true).count())._2
+        val salted = Pipeline.saltedByHost(pages.select("url", "warc_ts", "html"),
+          s.conf.get("spark.sql.shuffle.partitions").toInt)
+        val secSalted = timed(Pipeline.extract(salted, ExtractMode.Plain).count())._2
         Pass(n, sec, secChunked, secSalted)
       } finally {
         s.stop()
@@ -228,10 +229,10 @@ object Bench {
          |as (anti-)scaling; throughputs are per-level bests.
          |
          |Production path = map-only extraction (payload bytes never
-         |shuffle). The salted variant below is
-         |`Pipeline.extract(repartitionByHost = true)`, the one user of
-         |the salted url-host repartition: it forces a payload shuffle
-         |onto the scan side as a bound.
+         |shuffle). The salted variant below is `Pipeline.extract` over
+         |`Pipeline.saltedByHost(pages.select("url", "warc_ts", "html"),
+         |<shuffle partitions>)`, the salted url-host repartition: it
+         |forces a payload shuffle onto the scan side as a bound.
          |
          || run | cores | elapsed (s) | docs/sec |
          ||---|---|---|---|

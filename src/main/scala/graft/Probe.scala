@@ -79,9 +79,13 @@ object Probe {
     val pages = IceLite.read(s, Bench.benchPages(s))
     if (what == "kinds") kinds(s, pages)
     else {
+      val input =
+        if (what == "salted") Pipeline.saltedByHost(pages.select("url", "warc_ts", "html"),
+          s.conf.get("spark.sql.shuffle.partitions").toInt)
+        else pages
       val runs = timedRuns(s, 3) {
         if (what == "chunked") Pipeline.extractChunked(pages).count()
-        else Pipeline.extract(pages, ExtractMode.Plain, repartitionByHost = what == "salted").count()
+        else Pipeline.extract(input, ExtractMode.Plain).count()
       }
       runs.zipWithIndex.foreach { case ((n, sec, gcMs, rec), i) =>
         println(f"EXTRACT pass=${i + 1} cores=$cores variant=$what docs=$n secs=$sec%.2f dps=${n / sec}%.0f gc_ms=$gcMs")

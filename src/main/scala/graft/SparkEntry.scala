@@ -33,13 +33,13 @@ object SparkEntry {
     val (pagesDir, goldenDir) = microTables(spark)
     val pages = IceLite.read(spark, pagesDir)
     val golden = IceLite.read(spark, goldenDir)
-    goldenMatches(spark, pages, golden)
+    goldenMatches(pages, golden)
   }
 
   /** All-mode golden evaluation (J1): extract each fixture with its own
     * mode, reassemble multipage, inner-join golden (broadcast — fixture
     * side is small), compare bytes. */
-  def goldenMatches(spark: SparkSession, pages: DataFrame, golden: DataFrame): DataFrame = {
+  def goldenMatches(pages: DataFrame, golden: DataFrame): DataFrame = {
     val single = golden.filter(col("mode") =!= "multipage")
       .join(pages, Seq("url"))
       .select(col("url"), col("warc_ts"), col("html"), col("mode"), col("mode_args"))

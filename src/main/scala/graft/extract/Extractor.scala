@@ -168,7 +168,7 @@ object Extractor {
         val level = b.headingLevel
         if (level > 0) put("#" * level + " ")
         else if (b.kind == "li") put("- ")
-        else if (b.kind == "table" && b.cells.nonEmpty) { put(renderTabular(b.cells)); return -1 }
+        else if (b.rows.nonEmpty) { put(renderTabular(b.rows.map(_.map(_.text)))); return -1 }
         else if (b.kind == "blockquote") put("> ")
         val at = n
         put(b.chars, 0, b.len)

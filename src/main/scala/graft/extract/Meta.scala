@@ -15,7 +15,9 @@ import scala.util.control.ControlThrowable
   *    HTML spec; a body-placed og tag is spam-shaped, not metadata) —
   *    and because `<head>` precedes all content, the kernel reads a few
   *    KB of a crawl payload, not the whole document. Early exit rides a
-  *    ControlThrowable (no stack trace cost; thrown once per doc);
+  *    ControlThrowable (no stack trace cost; thrown once per doc). This
+  *    is the only code that knows where the head ends: the block builder
+  *    gives `head` no role (`Tags`);
   *  - FIRST occurrence wins for every field (browser/crawler behavior);
   *  - `<title>` text is entity-decoded by the tokenizer and
   *    whitespace-collapsed as it arrives ([[graft.html.TextBuf]], the

@@ -1,6 +1,6 @@
 package graft.extract
 
-import graft.html.{Html5Tokenizer, KernelScratch, TableReader, Tags, TagOpen, TextBuf}
+import graft.html.{Dom, TableReader}
 import scala.collection.mutable.ArrayBuffer
 
 /** HTML table → GitHub-flavored-markdown extraction — the web-payload
@@ -10,12 +10,13 @@ import scala.collection.mutable.ArrayBuffer
   * the structured-table signal comes from real `<table>` markup instead
   * of a vision model).
   *
-  * Semantics: rows and cells are `TableReader`'s (the extraction
-  * kernel's table rules: depth-1 structure, a nested table folded into
+  * Semantics: a table is the extraction kernel's table block
+  * (`Dom.BlockSink`), and its rows and cells are that block's
+  * `TableReader` rows: depth-1 structure, a nested table folded into
   * the enclosing cell, HTML5's implied closes, cell text entity-decoded
-  * by the tokenizer and whitespace-collapsed as it arrives), over the
-  * kernel's suppression (`Tags.FSuppress`: no script, style or button
-  * text in a cell). On top of them:
+  * by the tokenizer and whitespace-collapsed as it arrives, and the
+  * kernel's suppression (no script, style or button text in a cell).
+  * On top of them:
   *  - `colspan=k` flattens to the cell followed by k-1 empty cells
   *    (k clamped to [1,16]); `rowspan` is ignored — the cell appears
   *    in its first row only (documented md-flattening convention);
@@ -25,8 +26,8 @@ import scala.collection.mutable.ArrayBuffer
   *  - `|` in a cell escapes to `\|`; newlines are already collapsed;
   *    other characters pass through.
   *
-  * Scale shape: pure map over the payload via the streaming tokenizer
-  * (no DOM build, no token list); emits one row per table map-side —
+  * Scale shape: pure map over the payload via the streaming block
+  * builder (no DOM build, no token list); emits one row per table map-side —
   * the Outlinks fan-out shape, shuffle-free until the caller's
   * aggregate.
   */
@@ -58,24 +59,9 @@ object TableMd {
   def extract(bytes: Array[Byte]): Seq[Table] = {
     if (Extractor.payloadKind(bytes) != "html") return Nil
     val out = ArrayBuffer.empty[Table]
-    val ks = KernelScratch.get()
-    val reader = new TableReader(new TextBuf(ks), rows => if (rows.nonEmpty) out += table(rows))
-    val sink = new Html5Tokenizer.TokenSink {
-      private var suppressDepth = 0
-      override def wantsAttrs(name: String): Boolean = name == "td" || name == "th"
-      def tagOpen(t: TagOpen): Unit =
-        if ((Tags.flags(t.name) & Tags.FSuppress) != 0) { if (!t.selfClosing) suppressDepth += 1 }
-        else if (suppressDepth == 0) reader.tagOpen(t)
-      def tagClose(name: String, startByte: Int, endByte: Int): Unit =
-        if ((Tags.flags(name) & Tags.FSuppress) != 0) { if (suppressDepth > 0) suppressDepth -= 1 }
-        else if (suppressDepth == 0) reader.tagClose(name)
-      def text(chars: Array[Char], from: Int, len: Int, sb: Int, eb: Int): Unit =
-        if (suppressDepth == 0) reader.text(chars, from, len, sb, eb)
-    }
-    try {
-      Html5Tokenizer.stream(bytes, sink, ks)
-      reader.finish() // EOF closes an open table (truncated payloads keep their cells)
-    } finally KernelScratch.release(ks)
+    // a table block's rows; the end of input closes an open table
+    // (truncated payloads keep their cells)
+    Dom.stream(bytes, b => if (b.rows.nonEmpty) out += table(b.rows))
     out.toSeq
   }
 

@@ -42,9 +42,9 @@ object CountMin extends Serializable {
   private def bucketExpr(r: Int, itemCol: String, w: Int): String =
     s"pmod(pmod(${DefaultA(r)} * $itemCol + ${DefaultB(r)}, $P), $w)"
 
-  /** (r, bucket) fan-out shared by the batch build, the estimate path
-    * and the STREAMING counter form (StreamingExtract.countMinStream) —
-    * one hashing kernel so the paths cannot drift. */
+  /** (r, bucket) fan-out shared by the counter build (batch and
+    * streaming) and the estimate path — one hashing kernel so the paths
+    * cannot drift. */
   def expand(items: DataFrame, d: Int = 3, w: Int = 32): DataFrame = {
     require(d <= DefaultA.length, s"at most ${DefaultA.length} rows")
     items
@@ -60,7 +60,10 @@ object CountMin extends Serializable {
 
   /** Build the d x w counter table from `items` (long column `item`;
     * one stream element per row). Output: (r, bucket, cnt) — at most
-    * d*w rows. */
+    * d*w rows. It runs unchanged on a streaming DataFrame (x35): the
+    * aggregation key is (r, bucket), so streaming state is the counter
+    * grid whatever the key cardinality, and stream counters equal batch
+    * counters over the same rows (StreamCountMinSpec). */
   def buildCounters(items: DataFrame, d: Int = 3, w: Int = 32): DataFrame =
     expand(items, d, w)
       .groupBy(col("r"), col("bucket"))

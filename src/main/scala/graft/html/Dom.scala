@@ -34,13 +34,13 @@ final case class Block(
   * loop (SURVEY.md §7 hard part (b)): a [ \t\n\r\f]+ run becomes one
   * ' ' before the next char (none at the start or after a '\n'), a BR
   * sentinel char (U+0001, a hard newline as `<br>` is) a '\n' (none at
-  * the start). A block's text (`Dom.BlockSink`), a table cell's
-  * (`TableReader`) and `Meta`'s title go through it.
+  * the start). `Dom.BlockSink`'s blocks and table cells (through its
+  * `TableReader`) and `Meta`'s title go through it.
   *
   * The chars live in the scratch's `sinkBuf` (r6b: a flat array, not a
   * StringBuilder, so appends pay no coder checks): one buffer of a
-  * kernel call writes it, and the block sink's table cells share the
-  * sink's buffer, which is empty while a table is open.
+  * kernel call writes it. The block sink's table cells share the sink's
+  * buffer, which is empty while a table is open.
   */
 final class TextBuf(ks: KernelScratch) {
   var chars: Array[Char] = ks.sinkBuf
@@ -136,7 +136,7 @@ object Dom {
     * view and its `chars` belong to the sink: they are valid during the
     * `block` call only. The text is `chars[0, len)`, collapsed (`<pre>`:
     * raw, one leading newline stripped); `nSeps` is its ' '/'\n' count;
-    * `cells` is non-empty for a table block only. */
+    * `rows` (`TableReader`'s cells) is non-empty for a table block only. */
   final class BlockView {
     var kind: String = "body"
     /** `Tags.flags(kind)`. */
@@ -150,12 +150,12 @@ object Dom {
     var chars: Array[Char] = null
     var len: Int = 0
     var nSeps: Int = 0
-    var cells: Vector[Vector[String]] = Vector.empty
+    var rows: Vector[Vector[TableReader.Cell]] = Vector.empty
 
     def words: Int = if (len == 0) 0 else nSeps + 1
     def headingLevel: Int = Tags.headingLevel(kind)
-    def toBlock: Block = Block(kind, new String(chars, 0, len), cells, cls, style, linkChars,
-      inBoilerplateContainer, startByte, endByte, nSeps)
+    def toBlock: Block = Block(kind, new String(chars, 0, len), rows.map(_.map(_.text)), cls, style,
+      linkChars, inBoilerplateContainer, startByte, endByte, nSeps)
   }
 
   /** Receives every block of a document, in order, at its flush. */
@@ -166,32 +166,37 @@ object Dom {
     * measured at ~40% of html kernel cost). Returns a fresh buffer per
     * call. */
   def blocksStreaming(bytes: Array[Byte]): ArrayBuffer[Block] = {
-    val ks = KernelScratch.get()
-    try {
-      val out = new ArrayBuffer[Block]
-      stream(bytes, ks, b => out += b.toBlock)
-      out
-    } finally KernelScratch.release(ks)
+    val out = new ArrayBuffer[Block]
+    stream(bytes, b => out += b.toBlock)
+    out
   }
 
-  /** Streams `bytes` through one `BlockSink` into `consumer`, on a scratch
-    * the caller fetched (and releases). */
+  /** Streams `bytes` through one `BlockSink` into `consumer`. */
+  def stream(bytes: Array[Byte], consumer: BlockConsumer): Unit = {
+    val ks = KernelScratch.get()
+    try stream(bytes, ks, consumer) finally KernelScratch.release(ks)
+  }
+
+  /** `stream` on a scratch the caller fetched (and releases). */
   private[graft] def stream(bytes: Array[Byte], ks: KernelScratch, consumer: BlockConsumer): Unit = {
     val sink = new BlockSink(ks, consumer)
     Html5Tokenizer.stream(bytes, sink, ks)
     sink.finish()
   }
 
-  /** The single block-building state machine, fed by tokenizer events.
-    * While a table is open, every unsuppressed event goes to its
-    * `TableReader`, and the table is one block at its close. */
+  /** The single block-building state machine, fed by tokenizer events,
+    * and the one place that decides which content is suppressed
+    * (`Tags.FSuppress`). While a table is open, every unsuppressed event
+    * goes to its `TableReader`, and the table is one block at its close. */
   final class BlockSink(ks: KernelScratch, consumer: BlockConsumer) extends Html5Tokenizer.TokenSink {
-    /** The sink reads attributes only on table (class) and block-start
-      * tags (class/style via startBlock) — inline tags (a/span/b/img,
-      * which carry most crawl-HTML attributes, href above all) and cells
-      * skip attr string construction in the tokenizer entirely (r6b). */
+    /** The sink reads attributes only on cells while a table is open
+      * (colspan), and otherwise on table (class) and block-start tags
+      * (class/style via startBlock) — inline tags (a/span/b/img, which
+      * carry most crawl-HTML attributes, href above all) and a table's
+      * rows skip attr string construction in the tokenizer entirely (r6b). */
     override def wantsAttrs(name: String): Boolean =
-      name == "table" || (Tags.flags(name) & Tags.FBlock) != 0
+      if (inTable) name == "td" || name == "th"
+      else name == "table" || (Tags.flags(name) & Tags.FBlock) != 0
 
     /** Holds the current block's kind, cls and style; the rest is set at flush. */
     private val view = new BlockView
@@ -249,21 +254,20 @@ object Dom {
       resume()
     }
 
-    /** A table's block: unpadded cells, its text (cells joined by ' ',
-      * rows by '\n') written into `buf`, which is empty once the table
-      * has closed, and the span of its cells' text. */
+    /** A table's block: its rows, its text (cells joined by ' ', rows by
+      * '\n') written into `buf`, which is empty once the table has
+      * closed, and the span of its cells' text. */
     private def emitTable(rows: Vector[Vector[TableReader.Cell]]): Unit = {
-      val cells = rows.map(_.map(_.text))
-      val text = cells.map(_.mkString(" ")).mkString("\n")
+      val text = rows.map(_.map(_.text).mkString(" ")).mkString("\n")
       var start = -1L
       var end = -1L
       rows.foreach(_.foreach(c => if (c.startByte >= 0) { if (start < 0) start = c.startByte; end = c.endByte }))
       buf.ensure(text.length)
       text.getChars(0, text.length, buf.chars, 0)
       view.kind = "table"; view.kindFlags = Tags.flags("table")
-      view.cls = tblCls; view.style = ""; view.cells = cells
+      view.cls = tblCls; view.style = ""; view.rows = rows
       emit(text.length, text.count(c => c == ' ' || c == '\n'), 0, start, end)
-      view.cells = Vector.empty
+      view.rows = Vector.empty
     }
 
     def tagOpen(t: TagOpen): Unit = {

@@ -439,7 +439,7 @@ object Html5Tokenizer {
     // inline tags — a/span/b/img carry the bulk of crawl attrs) skip
     // the name/value string building and entity decode entirely; the
     // scan movement below is IDENTICAL either way.
-    val want = sink == null || sink.wantsAttrs(name)
+    val want = sink.wantsAttrs(name)
     // r6: the builder is allocated only when a first attribute appears —
     // most tags in crawl HTML carry none, and the ListBuffer-per-tag
     // allocation showed in the kernel profile

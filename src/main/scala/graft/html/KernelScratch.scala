@@ -11,14 +11,14 @@ package graft.html
   * non-ASCII UTF-8 only); `tokBuf`, a text run of several segments
   * (the tokenizer; one-segment runs are handed over from `decChars`);
   * `sinkBuf`, text collapsed as it arrives (`TextBuf`: a block's text
-  * or a table cell's in `Dom.BlockSink`, a cell in `TableMd`, the title
-  * in `Meta`); `outText`, the output text (`Extractor`). Every buffer
+  * or a table cell's in `Dom.BlockSink`, the title in `Meta`);
+  * `outText`, the output text (`Extractor`). Every buffer
   * is consumed within one kernel call, and kernel calls never
   * interleave on one thread.
   *
   * Arrays grow through `grow`. The entries that fetch the scratch
-  * (`Extractor.extract`, `Dom.blocksStreaming`, `Html5Tokenizer.stream`,
-  * `Meta`, `TableMd`) `release` it after the document: a scratch with a buffer above
+  * (`Extractor.extract`, `Dom.stream`, `Html5Tokenizer.stream`, `Meta`)
+  * `release` it after the document: a scratch with a buffer above
   * `RetainMark` elements is dropped, so the thread's next document
   * starts from the initial sizes (under 0.5 MiB) instead of keeping the
   * largest page's buffers for life (~135 MiB after a 15 MiB and an

@@ -2,10 +2,10 @@ package graft.html
 
 import scala.collection.mutable.ArrayBuffer
 
-/** The one table state machine: `Dom.BlockSink` feeds it while a table
-  * is open (the table's block), and `TableMd` feeds it for markdown
-  * tables. The caller drops suppressed content (script, style, …) before
-  * it gets here. Rules:
+/** The one table state machine: `Dom.BlockSink`, its one caller, feeds
+  * it while a table is open and drops suppressed content (script,
+  * style, …) before it gets here. The rows it reads become the table's
+  * block, which `Extractor` and `TableMd` read. Rules:
   *  - `<table>` opens a table; `<table/>` opens nothing;
   *  - rows and cells are tracked at table depth 1 only: a NESTED table's
   *    text folds into the enclosing cell (crawl HTML nests layout tables
@@ -17,8 +17,8 @@ import scala.collection.mutable.ArrayBuffer
   *    space; text outside a cell is dropped, and so is a row without
   *    cells;
   *  - a cell keeps its `<th>` flag, its colspan (digits only, clamped to
-  *    [1, 16]; 1 when absent, so a sink that reads no `td`/`th`
-  *    attributes sees 1) and the byte span of its non-whitespace text.
+  *    [1, 16]; 1 when absent) and the byte span of its non-whitespace
+  *    text.
   *
   * `done` gets each outermost table's rows at its close, none for a
   * table without rows; `cell` is empty whenever no cell is open.

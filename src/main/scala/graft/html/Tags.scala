@@ -32,8 +32,13 @@ object Tags {
 
   private val rawtext: Set[String] = Set("script", "style", "xmp", "iframe", "noembed", "noframes")
   private val rcdata: Set[String] = Set("textarea", "title")
+  /** `head` is absent: its text-bearing children (title, script, style,
+    * noscript, template) suppress themselves, and HTML5's "in head"
+    * insertion mode sends any other text to the body. So the block
+    * builder never waits for an optional `</head>`; where the head ends
+    * is `Meta`'s alone to decide. */
   private val suppress: Set[String] = Set("script", "style", "noscript", "template",
-    "svg", "head", "title", "textarea", "select", "button", "iframe",
+    "svg", "title", "textarea", "select", "button", "iframe",
     "object", "xmp", "noembed", "noframes")
   private val block: Set[String] = Set("p", "h1", "h2", "h3", "h4", "h5", "h6", "li",
     "pre", "blockquote", "div", "section", "article", "main", "nav",
@@ -54,7 +59,7 @@ object Tags {
   private val common = Seq(
     // elements
     "a", "abbr", "area", "b", "base", "br", "code", "col", "em", "embed",
-    "fieldset", "html", "i", "img", "input", "label", "legend",
+    "fieldset", "head", "html", "i", "img", "input", "label", "legend",
     "link", "meta", "option", "param", "small", "source", "span",
     "strong", "sup", "table", "tbody", "td", "tfoot", "th", "thead",
     "time", "track", "u", "wbr",

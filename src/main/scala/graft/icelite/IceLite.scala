@@ -1,6 +1,6 @@
 package graft.icelite
 
-import graft.util.Parquet
+import graft.util.{FsText, Parquet}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.charset.StandardCharsets.UTF_8
@@ -39,17 +39,9 @@ object IceLite {
   }
 
   def readManifest(spark: SparkSession, root: String, snapshotId: Long): Manifest = {
-    val f = fs(spark, root)
-    val p = new Path(root, s"snapshots/v$snapshotId.manifest")
-    val in = f.open(p)
-    val bytes = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      out.toByteArray
-    } finally in.close()
-    val lines = new String(bytes, UTF_8).split('\n').filter(_.nonEmpty)
+    val text = FsText.read(spark.sparkContext.hadoopConfiguration,
+      new Path(root, s"snapshots/v$snapshotId.manifest").toString)
+    val lines = text.split('\n').filter(_.nonEmpty)
     val kv = lines.filter(_.contains('=')).map { l =>
       val i = l.indexOf('='); (l.substring(0, i), l.substring(i + 1))
     }
@@ -104,6 +96,8 @@ object IceLite {
     body.append(s"row_count=$rowCount\n")
     body.append(s"committed_at=${java.time.Instant.ofEpochMilli(System.currentTimeMillis()).toString}\n")
     files.foreach(n => body.append(s"file=$n\n"))
+    // not FsText.write, which overwrites: this rename fails when a
+    // concurrent commit took the same snapshot id first
     val tmp = new Path(rootP, s"snapshots/.v$snap.manifest.tmp")
     val out = f.create(tmp, true)
     try out.write(body.toString.getBytes(UTF_8)) finally out.close()

@@ -89,7 +89,7 @@ object Metrics {
   def editDistance(a: String, b: String): Int = {
     if (a.isEmpty) return b.length
     if (b.isEmpty) return a.length
-    var prev = Array.tabulate(b.length + 1)(identity)
+    val prev = Array.tabulate(b.length + 1)(identity)
     val cur = new Array[Int](b.length + 1)
     var i = 1
     while (i <= a.length) {

@@ -15,9 +15,10 @@ final case class ExtractedDoc(url: String, warc_ts: java.sql.Timestamp,
 
 /** The distributed extraction pipeline (SURVEY.md §3 entry-point
   * mappings): narrow select (column-pruning help — Catalyst cannot see
-  * inside the kernel closure) → optional salted url-host repartition
-  * (explicit crawl-domain skew defuse, BASELINE.json) →
-  * mapPartitions(kernel) → optional grouped reassembly.
+  * inside the kernel closure) → mapPartitions(kernel) → optional
+  * grouped reassembly. A caller that wants the salted url-host
+  * repartition (explicit crawl-domain skew defuse, BASELINE.json)
+  * composes `saltedByHost` before `extract`.
   */
 object Pipeline {
 
@@ -25,8 +26,14 @@ object Pipeline {
     * many partitions (SURVEY.md §4 custom rule #1). */
   final val Salts = 8
 
-  /** Salted repartition by url-host hash: the payload shuffle of
-    * `extract(repartitionByHost = true)`, its one caller. */
+  /** Salted repartition by url-host hash: a payload shuffle that a
+    * caller composes before `extract` — over the narrowed
+    * `pages.select("url", "warc_ts", "html")`, into
+    * `spark.sql.shuffle.partitions` partitions — for source files that
+    * are host-clustered AND pathologically size-skewed (Bench's salted
+    * pass and `Probe extract salted`). Nothing else shares it
+    * (multi-page reassembly groups by base url, `perHostStats` is a
+    * plain groupBy, lineage shards hash on their own). */
   def saltedByHost(df: DataFrame, numPartitions: Int): DataFrame =
     df.repartition(numPartitions,
       xxhash64(parse_url(col("url"), lit("HOST"))),
@@ -34,25 +41,14 @@ object Pipeline {
 
   /** Single-mode extraction over a `pages`-shaped DataFrame.
     *
-    * Map-only by default: extraction is a pure per-row function, so the
-    * payload bytes never cross the network — at 10^12-document scale,
-    * shuffling raw html is the anti-pattern; balance comes from source
-    * splits (`maxPartitionBytes`) and the `MaxDocBytes` kernel guard.
-    * `repartitionByHost = true` adds the salted url-host repartition
-    * (`saltedByHost`, into `spark.sql.shuffle.partitions` partitions)
-    * before the kernel, for source files that are host-clustered AND
-    * pathologically size-skewed; nothing else shares it (multi-page
-    * reassembly groups by base url, `perHostStats` is a plain groupBy,
-    * lineage shards hash on their own). */
-  def extract(pages: DataFrame, mode: ExtractMode,
-      repartitionByHost: Boolean = false): Dataset[ExtractedDoc] = {
+    * Map-only: extraction is a pure per-row function, so the payload
+    * bytes never cross the network — at 10^12-document scale, shuffling
+    * raw html is the anti-pattern; balance comes from source splits
+    * (`maxPartitionBytes`) and the `MaxDocBytes` kernel guard. */
+  def extract(pages: DataFrame, mode: ExtractMode): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val narrowed0 = pages.select(col("url"), col("warc_ts"), col("html"))
-    val narrowed =
-      if (repartitionByHost)
-        saltedByHost(narrowed0, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      else narrowed0
+    val narrowed = pages.select(col("url"), col("warc_ts"), col("html"))
     val modeName = mode.name
     narrowed.as[(String, java.sql.Timestamp, Array[Byte])].mapPartitions { it =>
       it.map { case (url, ts, html) => extractOne(url, ts, html, mode, modeName) }

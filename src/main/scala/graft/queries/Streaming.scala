@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkEntry.{SynthRoot, microTables}
+import graft.functions.CountMin
 import graft.queries.Query.{runDir, scd2Snapshots, stream, t}
 import graft.streaming.StreamingExtract
 import graft.streaming.StreamingExtract.drain
@@ -73,7 +74,7 @@ object Streaming {
       val items = StreamingExtract.pagesReader(s).parquet(s"$pagesDir/data/*.parquet")
         .select(pmod(xxhash64(parse_url(col("url"), lit("HOST"))), lit(1024))
           .as("item"))
-      drain(StreamingExtract.countMinStream(items), OutputMode.Complete(), runDir("cmx"))
+      drain(CountMin.buildCounters(items), OutputMode.Complete(), runDir("cmx"))
         .groupBy(col("r"))
         .agg(count(lit(1)).as("n_buckets"),
           sum(col("cnt")).as("total"),

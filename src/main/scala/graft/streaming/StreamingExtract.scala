@@ -464,23 +464,6 @@ object StreamingExtract {
       .select(col("f.host").as("host"), col("fetch_ts"), col("change_ts"))
   }
 
-  /** Streaming Count-Min heavy-hitter counters — hot-key detection on
-    * LIVE ingest ("which hosts just got heavy") in FIXED state: the
-    * aggregation key is (r, bucket), so streaming state is the d*w
-    * counter grid whatever the key cardinality — per-key stateful
-    * dedup (x25) holds a row per distinct key; this holds 96 longs,
-    * period. Complete output mode republishes the grid per trigger;
-    * estimates come from CountMin.estimate over the latest snapshot.
-    * The hashing kernel is CountMin.expand — SHARED with the batch
-    * build, so stream counters provably equal batch counters over the
-    * same rows (StreamCountMinSpec). */
-  def countMinStream(items: DataFrame, d: Int = 3, w: Int = 32): DataFrame =
-    // the WHOLE batch pipeline, not just the hashing kernel —
-    // buildCounters works unchanged on a streaming DataFrame, so a
-    // future change to the aggregation (weighted counts, say) cannot
-    // drift the pinned stream == batch equality
-    graft.functions.CountMin.buildCounters(items, d, w)
-
   /** The two sides of [[fetchesNearChanges]] from a pages glob: every
     * page is a fetch; pages whose url hash lands in a 1/4 slice mark a
     * change signal for their host at the same instant. */

@@ -218,4 +218,26 @@ class HostileHtmlSpec extends AnyFunSuite {
       assert(r.spans.map(_.start) == r.spans.map(_.start).sorted, html)
     }
   }
+
+  test("an unclosed <head> ends where HTML5 ends it: the body's text is kept") {
+    val h = "<html><head><title>T</title><body><p>visible paragraph text</p>"
+    val kept = plain(h) == "visible paragraph text"
+    assert(kept)
+    assert(Dom.blocksStreaming(h.getBytes(UTF_8)).length == 1)
+  }
+
+  test("a stray </head> inside <svg> does not end the svg's suppression") {
+    val h = "<svg><text>x</text></head>one two three four five six seven eight nine</svg><p>ok para</p>"
+    val plainOnlyPara = plain(h) == "ok para"
+    assert(plainOnlyPara)
+    val blocksOnlyPara = blocks(h).map(_._2) == Seq("ok para")
+    assert(blocksOnlyPara)
+  }
+
+  test("non-whitespace text directly inside <head> becomes a body block") {
+    val h = "<html><head><title>T</title>stray head text<meta charset=\"utf-8\"></head>" +
+      "<body><p>para</p></body></html>"
+    val bodyBlock = blocks(h).map(b => (b._1, b._2)) == Seq(("body", "stray head text"), ("p", "para"))
+    assert(bodyBlock)
+  }
 }

@@ -59,7 +59,12 @@ class KernelReferenceSpec extends AnyFunSuite {
     "<div class=red><table><tr><td>r1</td><tr><th>r2<br>x</table>tail</div>",
     "<p>lead</p><table class=red><tr><td>open <table><tr><td>in",
     "<p>before</p><table/><p>after</p><div><table/>x</div>",
-    "<div class=red>a</table>b</div><table><tr><td>t</td></tr></table></table>c")
+    "<div class=red>a</table>b</div><table><tr><td>t</td></tr></table></table>c",
+    // the head ends without </head>; a stray </head> ends no suppressed
+    // element; text directly inside <head> goes to the body
+    "<html><head><title>T</title><body><p>visible paragraph text</p>",
+    "<svg><text>x</text></head>one two three four five six seven eight nine</svg><p>ok para</p>",
+    "<html><head><title>T</title>stray head text<meta charset=utf-8></head><body><p>para</p>")
 
   test("hostile fixtures: kernel == Block-list reference in every mode") {
     hostile.zipWithIndex.foreach { case (h, i) => check(s"hostile $i", h.getBytes(UTF_8)) }

@@ -4,6 +4,7 @@ import graft.extract.ExtractMode
 import graft.icelite.IceLite
 import graft.pipeline.{Pipeline, ResumableRun}
 import graft.util.Sessions
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -121,14 +122,14 @@ class PipelineSpec extends AnyFunSuite {
   test("extraction output is invariant under partitioning (1 vs 16 partitions)") {
     import graft.extract.ExtractMode
     val pages = IceLite.read(spark, dirs._1)
-    def run(p: Int, salted: Boolean = false) =
-      Pipeline.extract(pages.repartition(p), ExtractMode.Plain, repartitionByHost = salted)
-        .collect().sortBy(_.url)
+    def run(in: DataFrame) =
+      Pipeline.extract(in, ExtractMode.Plain).collect().sortBy(_.url)
         .map(d => (d.url, d.status, d.text, d.spans.mkString(","), d.metrics))
-    val one = run(1)
-    val many = run(16)
+    val one = run(pages.repartition(1))
+    val many = run(pages.repartition(16))
     // the salted url-host repartition: a shuffle into spark.sql.shuffle.partitions
-    val salted = run(1, salted = true)
+    val salted = run(Pipeline.saltedByHost(pages.repartition(1).select("url", "warc_ts", "html"),
+      spark.conf.get("spark.sql.shuffle.partitions").toInt))
     assert(one.length == many.length && one.sameElements(many))
     assert(one.length == salted.length && one.sameElements(salted))
   }

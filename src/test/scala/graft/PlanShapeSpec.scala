@@ -23,14 +23,14 @@ class PlanShapeSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def plan(df: DataFrame): SparkPlan = df.queryExecution.executedPlan
 
-  test("Pipeline.extract is map-only; repartitionByHost adds exactly one Exchange") {
+  test("Pipeline.extract is map-only; saltedByHost adds exactly one Exchange") {
     val pages = IceLite.read(spark, SparkEntry.microTables(spark)._1)
-    def exchanges(byHost: Boolean) = collect(plan(
-      Pipeline.extract(pages, ExtractMode.Plain, repartitionByHost = byHost).toDF())) {
+    def exchanges(in: DataFrame) = collect(plan(Pipeline.extract(in, ExtractMode.Plain).toDF())) {
       case e: Exchange => e
     }
-    assert(exchanges(byHost = false).isEmpty)
-    assert(exchanges(byHost = true).size == 1)
+    assert(exchanges(pages).isEmpty)
+    assert(exchanges(Pipeline.saltedByHost(pages.select("url", "warc_ts", "html"),
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)).size == 1)
   }
 
   test("lshCandidatePairs has no global Sort") {

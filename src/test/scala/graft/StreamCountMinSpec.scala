@@ -1,7 +1,6 @@
 package graft
 
 import graft.functions.CountMin
-import graft.streaming.StreamingExtract
 import graft.util.Sessions
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -19,7 +18,7 @@ class StreamCountMinSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[Long]
-    val counters = StreamingExtract.countMinStream(in.toDF().toDF("item"))
+    val counters = CountMin.buildCounters(in.toDF().toDF("item"))
     val name = s"cm_${System.nanoTime()}"
     val q = counters.writeStream.format("memory").queryName(name)
       .outputMode("complete").start()

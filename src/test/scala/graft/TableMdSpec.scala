@@ -93,4 +93,10 @@ class TableMdSpec extends AnyFunSuite {
       "<tr><td>c</td><td>d</td></tr></table>")
     assert(mixed.headerRows == 0)
   }
+
+  test("a table after an unclosed <head> is found") {
+    val t = one("<html><head><title>T</title><body><table><tr><td>a</td></tr></table>")
+    val found = t.rows == Vector(Vector("a"))
+    assert(found)
+  }
 }

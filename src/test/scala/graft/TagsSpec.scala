@@ -12,7 +12,7 @@ class TagsSpec extends AnyFunSuite {
   private val expected: Seq[(Set[String], Int)] = Seq(
     Set("script", "style", "xmp", "iframe", "noembed", "noframes") -> FRawtext,
     Set("textarea", "title") -> FRcdata,
-    Set("script", "style", "noscript", "template", "svg", "head", "title",
+    Set("script", "style", "noscript", "template", "svg", "title",
       "textarea", "select", "button", "iframe", "object", "xmp", "noembed",
       "noframes") -> FSuppress,
     Set("p", "h1", "h2", "h3", "h4", "h5", "h6", "li", "pre", "blockquote",
