@@ -222,7 +222,6 @@ object ExplainAll {
       "of BroadcastNestedLoopJoin — the rewrite happens inside Catalyst, " +
       "no operator call in user code.",
       {
-        spark.experimental.extraOptimizations = Seq(graft.plans.RangeJoinRewrite)
         spark.conf.set(graft.plans.RangeJoinRewrite.WidthConf, "64")
         val ranges = spark.range(0, 40).toDF("r")
           .withColumn("lo", org.apache.spark.sql.functions.expr("r * r * 25"))
@@ -233,7 +232,6 @@ object ExplainAll {
           probe("n_chars") >= ranges("lo") && probe("n_chars") < ranges("hi"))
         out
       })
-    spark.experimental.extraOptimizations = Nil
     spark.conf.unset(graft.plans.RangeJoinRewrite.WidthConf)
     val out = java.nio.file.Paths.get("PLANS.md").toAbsolutePath
     java.nio.file.Files.writeString(out, mask(sb.toString, sfDir))

@@ -1,34 +1,52 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.functions.{CosineSim, NfcNormalize, SimHash64Expr, WordNgrams}
+import graft.plans.RangeJoinRewrite
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session-extension entry point: the idiomatic way to ship the engine's
-  * native functions to a cluster —
-  * `--conf spark.sql.extensions=graft.GraftExtensions`.
-  * Injects `cosine_sim`, `simhash64` and `nfc_normalize` (codegen
-  * Catalyst expressions, functions/CosineSim, functions/SimHash64Expr
-  * and functions/NfcNormalize) into every session built with the
-  * extension, no per-session register call needed. */
+/** Session-extension entry point: the way to ship the engine's Catalyst
+  * surface to a cluster — `--conf spark.sql.extensions=graft.GraftExtensions`.
+  * Injects every function of `GraftExtensions.functions` and the
+  * `RangeJoinRewrite` optimizer rule into each session built with it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[graft.functions.CosineSim].getName, "cosine_sim"),
-      exprs => graft.functions.CosineSim(exprs(0), exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[graft.functions.SimHash64Expr].getName, "simhash64"),
-      exprs => graft.functions.SimHash64Expr(exprs.head)))
-    ext.injectFunction((
-      FunctionIdentifier("nfc_normalize"),
-      new ExpressionInfo(classOf[graft.functions.NfcNormalize].getName, "nfc_normalize"),
-      exprs => graft.functions.NfcNormalize(exprs.head)))
-    // plan-level surface: range-containment theta joins become
-    // bucket-expansion equi-joins (plans/RangeJoinRewrite). Inert until
-    // the session opts in with spark.graft.rangejoin.bucketWidth — the
-    // bin size must be chosen against the data's interval widths.
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    ext.injectOptimizerRule(_ => RangeJoinRewrite)
+  }
+}
+
+/** The one table of the engine's native functions, and `install`, which
+  * puts the same surface into a session that already exists. */
+object GraftExtensions {
+
+  private def fn(name: String, cls: Class[_ <: Expression])(
+      build: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build)
+
+  /** Codegen Catalyst expressions, callable from `expr(...)` and SQL. */
+  private[graft] val functions = Seq(
+    fn("cosine_sim", classOf[CosineSim])(e => CosineSim(e(0), e(1))),
+    fn("simhash64", classOf[SimHash64Expr])(e => SimHash64Expr(e.head)),
+    fn("nfc_normalize", classOf[NfcNormalize])(e => NfcNormalize(e.head)),
+    // the window `n` must be a foldable integer literal
+    fn("word_ngrams", classOf[WordNgrams])(e =>
+      WordNgrams(e.head, e(1).eval(null).asInstanceOf[Int])))
+
+  /** Registers every function of the table in `spark`'s function
+    * registry, and appends `RangeJoinRewrite` to its extra optimizations
+    * unless it is there already, keeping any other rule. Idempotent: a
+    * second call changes nothing (re-registering the same entry is a
+    * no-op). The rule is inert until the session sets
+    * `RangeJoinRewrite.WidthConf`; a session built with the extension
+    * also carries it in its operator-optimization batch, where a join it
+    * rewrote cannot match again. */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    functions.foreach { case (id, info, build) => registry.registerFunction(id, info, build) }
+    val rules = spark.experimental.extraOptimizations
+    if (!rules.contains(RangeJoinRewrite))
+      spark.experimental.extraOptimizations = rules :+ RangeJoinRewrite
   }
 }

@@ -8,7 +8,12 @@ import scala.util.control.NonFatal
   * a name that is no declared query fails the run before Spark starts. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Seq(sfDir, outDir, names @ _*) = args.toSeq
+    val (sfDir, outDir, names) = args.toSeq match {
+      case Seq(sf, out, rest @ _*) => (sf, out, rest)
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [name,...]")
+        sys.exit(2)
+    }
     val listed = names.headOption.map(_.split(",").toSet)
     val unknown = listed.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
     if (unknown.nonEmpty) {

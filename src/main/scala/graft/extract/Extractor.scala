@@ -63,6 +63,11 @@ object Extractor {
     }
   }
 
+  /** True when `extract` takes the HTML path: within `MaxDocBytes` and
+    * sniffed as HTML. The side extractors read only such payloads. */
+  private[graft] def isKernelHtml(bytes: Array[Byte]): Boolean =
+    bytes.length <= MaxDocBytes && payloadKind(bytes) == "html"
+
   def extract(bytes: Array[Byte], mode: ExtractMode): Either[String, ExtractResult] =
     extract(bytes, mode, null)
 

@@ -47,7 +47,7 @@ object Meta {
   private final class Done extends ControlThrowable
 
   def extract(bytes: Array[Byte]): PageMeta = {
-    if (Extractor.payloadKind(bytes) != "html") return Empty
+    if (!Extractor.isKernelHtml(bytes)) return Empty
     var title = ""; var desc = ""; var ogt = ""; var ogd = ""
     var canon = ""; var pub = ""; var lang = ""
     val ks = KernelScratch.get()

@@ -80,7 +80,7 @@ object Outlinks {
     * "in body" behavior). Streams tokenizer events — no token list is
     * materialized (same fused shape as the extraction kernel). */
   def extract(bytes: Array[Byte], pageUrl: String): Seq[Link] = {
-    if (Extractor.payloadKind(bytes) != "html") return Nil
+    if (!Extractor.isKernelHtml(bytes)) return Nil
     val baseHost = host(pageUrl)
     val out = ArrayBuffer.empty[Link]
     final class AnchorSink extends Html5Tokenizer.TokenSink {

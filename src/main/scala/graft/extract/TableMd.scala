@@ -55,9 +55,10 @@ object TableMd {
   }
 
   /** Extract every top-level table from an HTML payload. Non-HTML
-    * payloads (magic-byte dispatch) yield no tables. */
+    * payloads (magic-byte dispatch) and pages past `Extractor.MaxDocBytes`
+    * yield no tables. */
   def extract(bytes: Array[Byte]): Seq[Table] = {
-    if (Extractor.payloadKind(bytes) != "html") return Nil
+    if (!Extractor.isKernelHtml(bytes)) return Nil
     val out = ArrayBuffer.empty[Table]
     // a table block's rows; the end of input closes an open table
     // (truncated payloads keep their cells)

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -83,11 +82,4 @@ object WordNgrams {
     }
     new GenericArrayData(out)
   }
-
-  /** Register `word_ngrams(arr, n)` in the session's function registry
-    * (n must be a foldable integer literal). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams", exprs => WordNgrams(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Int]), "scala_udf")
 }

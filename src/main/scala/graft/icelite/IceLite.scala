@@ -86,9 +86,9 @@ object IceLite {
     f.delete(stage, true)
     val parentMf = if (append && parent >= 0) Some(readManifest(spark, root, parent)) else None
     val files = parentMf.map(_.files).getOrElse(Seq.empty) ++ newFiles
-    // metadata-only count over the NEW files (parquet count pushdown);
-    // never re-reads the carried-forward data.
-    val newRows = spark.read.parquet(newFiles.map(n => s"$root/data/$n").toSeq: _*).count()
+    // metadata-only count over the NEW files (parquet count pushdown, no
+    // footer job); never re-reads the carried-forward data.
+    val newRows = Parquet.read(spark, newFiles.map(n => s"$root/data/$n").toSeq: _*).count()
     val rowCount = parentMf.map(_.rowCount).getOrElse(0L) + newRows
     val body = new StringBuilder
     body.append(s"snapshot_id=$snap\n")

@@ -100,8 +100,8 @@ object ResumableRun {
 
   /** Read everything extracted so far (all committed batches). */
   def readOutput(spark: SparkSession, outDir: String): DataFrame = {
-    // one root per committed batch (each carries its own shard=N
-    // partition dirs); enumerating roots keeps partition discovery happy
+    // one root per committed batch directory (the commit unit); `shard`
+    // is a data column of each batch's files, not a partition directory
     val p = new org.apache.hadoop.fs.Path(outDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batches = fs.listStatus(p).map(_.getPath.toString)

@@ -1322,8 +1322,7 @@ object CrawlExtract {
       val out = runDir("health")
       graft.pipeline.ResumableRun.run(s, pagesDir, s"$out/extracted", s"$out/lineage",
         nShards = 8, batchSize = 8)
-      // ResumableRun commits per-batch subdirectories (the commit unit)
-      val extracted = s.read.parquet(s"$out/extracted/batch_*")
+      val extracted = graft.pipeline.ResumableRun.readOutput(s, s"$out/extracted")
       val hosts = Pipeline.perHostStats(extracted)
       val totals = hosts.agg(
         sum(col("n_docs")).as("t_docs"), sum(col("n_ok")).as("t_ok"),

@@ -19,7 +19,6 @@ object Indexes {
     // float-widened doubles in the same ascending index order and
     // divides by sqrt(na)*sqrt(nb) through the same expression shape
     // — value+hash green against its oracle since r2.
-    graft.functions.CosineSim.register(s)
     val emb = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val q = emb.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.GraftExtensions
 import graft.SparkEntry.SynthRoot
 import graft.util.Parquet
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -25,9 +26,13 @@ final case class Query(name: String, build: (SparkSession, String) => DataFrame,
 object Query {
 
   /** The registry: every declared query, one family per file. Lazy, since
-    * each family's entries call `Query.apply` while it initializes. */
-  lazy val all: Seq[Query] = Relational.all ++ TextDedup.all ++ Sketches.all ++
-    Indexes.all ++ CrawlExtract.all ++ Streaming.all
+    * each family's entries call `Query.apply` while it initializes. Each
+    * build first installs the engine's functions and rule in the session
+    * it is given (`GraftExtensions.install`), so a query also plans in a
+    * session the repo did not build. */
+  lazy val all: Seq[Query] = (Relational.all ++ TextDedup.all ++ Sketches.all ++
+    Indexes.all ++ CrawlExtract.all ++ Streaming.all).map(q =>
+    q.copy(build = (s, dir) => { GraftExtensions.install(s); q.build(s, dir) }))
 
   /** Table `name` of `dir`, read without a schema-inference job. */
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
@@ -142,12 +147,10 @@ object Query {
 
   /** The benchmark grams of q28, x24 and x28: the distinct word 5-grams
     * (`g`) of the eval split of `docs`, the docs with doc_id % 101 == 0. */
-  private[queries] def benchGrams(s: SparkSession, docs: DataFrame): DataFrame = {
-    graft.functions.WordNgrams.register(s)
+  private[queries] def benchGrams(docs: DataFrame): DataFrame =
     docs.filter(col("doc_id") % 101 === 0 && size(split(col("text"), " ")) >= 5)
       .select(explode(array_distinct(expr("word_ngrams(split(text, ' '), 5)"))).as("g"))
       .distinct()
-  }
 
   /** The corpus side of q28 and x24: every doc outside the eval split,
     * plus a planted contaminated copy (lang `planted`, the first 120

@@ -23,7 +23,7 @@ object Streaming {
       // state-free, same shared overlap kernel as x24
       // (DecontamBloom.overlapCount — the two paths cannot drift).
       val bc = graft.functions.DecontamBloom.broadcastFilter(
-        Query.benchGrams(s, t(s, dir, "documents")))
+        Query.benchGrams(t(s, dir, "documents")))
       drain(StreamingExtract.decontaminateStream(stream(s, dir, "documents"), bc),
           OutputMode.Append(), runDir("sdecontam"))
         .groupBy(col("contaminated"))

@@ -56,7 +56,6 @@ object TextDedup {
       // r6: trigrams via the codegen word_ngrams expression (one fused
       // loop) instead of the interpreted transform/element_at lambda;
       // size<3 yields an empty gram array in both forms.
-      graft.functions.WordNgrams.register(s)
       val docs = t(s, dir, "documents")
       val grams = docs.select(col("doc_id"), col("lang"), split(col("text"), " ").as("w"))
         .select(col("doc_id"), col("lang"),
@@ -264,7 +263,7 @@ object TextDedup {
       // contaminated docs keep the >= 3 branch non-vacuous — natural
       // random-word docs share no 5-grams (Query.decontamCorpus).
       val d = t(s, dir, "documents")
-      val benchGrams = Query.benchGrams(s, d)
+      val benchGrams = Query.benchGrams(d)
       val corpus = Query.decontamCorpus(d)
       // r6: 5-grams via the codegen word_ngrams expression (one fused
       // loop) instead of the interpreted transform/slice lambda; both
@@ -632,7 +631,6 @@ object TextDedup {
       // Canonical mappings are frozen by Unicode stability policy, so
       // the JVM and DuckDB's utf8proc agree — that is what makes this
       // oracle-able. Map-only until the audit agg.
-      graft.functions.NfcNormalize.register(s)
       val d0 = t(s, dir, "documents")
       val planted = d0.filter(col("doc_id") < 40)
       val d = d0.select(col("lang"), col("text"))
@@ -970,7 +968,6 @@ object TextDedup {
       // loop, no slice-allocated intermediates or interpreted zip_with
       // lambda); concat(a,' ',b) == concat_ws(' ',a,b) on split's
       // non-null tokens, and size<2 yields empty in both forms.
-      graft.functions.WordNgrams.register(s)
       val toks = t(s, dir, "documents")
         .select(col("doc_id").cast("long").as("doc_id"), col("lang"),
           split(col("text"), " ").as("t"))
@@ -1350,7 +1347,6 @@ object TextDedup {
         .filter(col("doc_id") % 17 === 0)
       // r6: trigrams via the codegen word_ngrams expression (same
       // rewrite as q12; size<3 empty in both forms)
-      graft.functions.WordNgrams.register(s)
       def grams3(colName: String): Column =
         array_distinct(expr(s"word_ngrams(split($colName, ' '), 3)"))
       val quoters = donors.select(col("doc_id"),
@@ -1573,7 +1569,6 @@ object TextDedup {
       // serialization boundary — the sketch stays inside whole-stage
       // codegen (the Dataset.map form broke the span with
       // DeserializeToObject/MapElements)
-      graft.functions.SimHash64Expr.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"), expr("simhash64(text)").as("simhash"))
         .withColumn("band", shiftrightunsigned(col("simhash"), 48).cast("int"))
@@ -1632,7 +1627,7 @@ object TextDedup {
       // sketch BloomFilter is seed-fixed — deterministic across runs.
       import s.implicits._
       val d = t(s, dir, "documents")
-      val bc = graft.functions.DecontamBloom.broadcastFilter(Query.benchGrams(s, d))
+      val bc = graft.functions.DecontamBloom.broadcastFilter(Query.benchGrams(d))
       Query.decontamAudit(Query.decontamCorpus(d).as[(Long, String, String)].map {
         case (_, lang, text) =>
           (lang, graft.functions.DecontamBloom.overlapCount(text, bc.value))

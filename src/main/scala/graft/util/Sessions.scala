@@ -8,7 +8,10 @@ import org.apache.spark.sql.SparkSession
   * property (`-Dspark.k=v`): `SparkConf` loads those for every key not
   * set here. When a session already exists (one test JVM, many suites),
   * `getOrCreate` returns it and re-applies the runtime SQL confs below;
-  * the master and the other context confs stay those of the first call. */
+  * the master and the other context confs stay those of the first call.
+  * Every session it returns carries the engine's functions and optimizer
+  * rule (`GraftExtensions.install`), as a cluster session built with
+  * `spark.sql.extensions=graft.GraftExtensions` does. */
 object Sessions {
 
   def local(cores: Int): SparkSession = {
@@ -26,6 +29,7 @@ object Sessions {
       .config("spark.sql.files.openCostInBytes", (1024 * 1024).toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.GraftExtensions.install(s)
     s
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.extract.{ExtractMode, Extractor}
+import graft.extract.{ExtractMode, Extractor, Meta, Outlinks, TableMd}
 import graft.html.Dom
 import java.nio.charset.StandardCharsets.{ISO_8859_1, UTF_8}
 import org.scalatest.funsuite.AnyFunSuite
@@ -239,5 +239,21 @@ class HostileHtmlSpec extends AnyFunSuite {
       "<body><p>para</p></body></html>"
     val bodyBlock = blocks(h).map(b => (b._1, b._2)) == Seq(("body", "stray head text"), ("p", "para"))
     assert(bodyBlock)
+  }
+
+  test("a page past MaxDocBytes is skipped by Meta, Outlinks and TableMd, as the kernel quarantines it") {
+    val page = "<html><head><title>T</title></head><body>" +
+      "<a href=\"http://other.example/x\">link</a><table><tr><td>a</td><td>b</td></tr></table>"
+    val padded = (page + "<!--" + "x" * Extractor.MaxDocBytes + "-->").getBytes(UTF_8)
+    val url = "http://site.example/"
+    val small = page.getBytes(UTF_8)
+    val seenSmall = Meta.extract(small) != Meta.Empty &&
+      Outlinks.extract(small, url).nonEmpty && TableMd.extract(small).nonEmpty
+    assert(seenSmall)
+    val tooLarge = Extractor.extract(padded, ExtractMode.Plain) == Left("too_large")
+    assert(tooLarge)
+    val skipped = Meta.extract(padded) == Meta.Empty &&
+      Outlinks.extract(padded, url).isEmpty && TableMd.extract(padded).isEmpty
+    assert(skipped)
   }
 }

@@ -9,32 +9,27 @@ import org.scalatest.funsuite.AnyFunSuite
   * inner theta join — nested-loop in stock Spark — must come out as an
   * equi-join with IDENTICAL results (overlaps, boundaries, nulls, empty
   * intervals), fire in either join orientation, and NOT fire on shapes
-  * it cannot prove (inclusive upper bound). */
+  * it cannot prove (inclusive upper bound). The shared session carries
+  * the rule (`Sessions.local` installs it); each case sets or unsets only
+  * the width conf. */
 class RangeJoinRuleSpec extends AnyFunSuite {
 
   private lazy val spark = Sessions.local(4)
 
   private def withRule[T](f: => T): T = {
-    spark.experimental.extraOptimizations = Seq(graft.plans.RangeJoinRewrite)
     spark.conf.set(graft.plans.RangeJoinRewrite.WidthConf, "64")
-    try f finally {
-      spark.experimental.extraOptimizations = Nil
-      spark.conf.unset(graft.plans.RangeJoinRewrite.WidthConf)
-    }
+    try f finally spark.conf.unset(graft.plans.RangeJoinRewrite.WidthConf)
   }
 
   test("rule is inert while the width conf is unset (opt-in contract)") {
-    spark.experimental.extraOptimizations = Seq(graft.plans.RangeJoinRewrite)
-    try {
-      val q = probe.join(ranges,
-        probe("x") >= ranges("lo") && probe("x") < ranges("hi"))
-      assert(q.queryExecution.executedPlan.toString.contains("NestedLoop"),
-        "without spark.graft.rangejoin.bucketWidth the rule must not fire")
-    } finally { spark.experimental.extraOptimizations = Nil }
+    assert(spark.experimental.extraOptimizations.contains(graft.plans.RangeJoinRewrite))
+    val q = probe.join(ranges,
+      probe("x") >= ranges("lo") && probe("x") < ranges("hi"))
+    assert(q.queryExecution.executedPlan.toString.contains("NestedLoop"),
+      "without spark.graft.rangejoin.bucketWidth the rule must not fire")
   }
 
   test("an explicitly-set but invalid width ERRORS instead of silently disabling") {
-    spark.experimental.extraOptimizations = Seq(graft.plans.RangeJoinRewrite)
     try {
       for (bad <- Seq("64x", "0", "-1")) {
         spark.conf.set(graft.plans.RangeJoinRewrite.WidthConf, bad)
@@ -50,10 +45,7 @@ class RangeJoinRuleSpec extends AnyFunSuite {
       val q = probe.join(ranges,
         probe("x") >= ranges("lo") && probe("x") < ranges("hi"))
       assert(!q.queryExecution.executedPlan.toString.contains("NestedLoop"))
-    } finally {
-      spark.experimental.extraOptimizations = Nil
-      spark.conf.unset(graft.plans.RangeJoinRewrite.WidthConf)
-    }
+    } finally spark.conf.unset(graft.plans.RangeJoinRewrite.WidthConf)
   }
 
   private lazy val probe: DataFrame = {

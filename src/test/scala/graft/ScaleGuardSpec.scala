@@ -167,7 +167,6 @@ class ScaleGuardSpec extends AnyFunSuite {
 
   test("simhash64 expression: codegen path equals the kernel, stays in WSCG") {
     import spark.implicits._
-    graft.functions.SimHash64Expr.register(spark)
     val texts = Seq("the quick brown fox", "", "一 二 三 mixed script",
       "a " * 200 + "long tail", "single")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")

@@ -149,21 +149,37 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     assert(est > 0.05 && est < 0.9)
   }
 
-  test("GraftExtensions injects cosine_sim into sessions via spark.sql.extensions") {
+  /** Runs `f` on a NEW session of the shared context, made by `make`,
+    * then restores the shared session as default and active. */
+  private def withFreshSession[T](make: SparkSession.Builder => SparkSession)(
+      f: SparkSession => T): T = {
     spark // force the shared session (and its SparkContext) to exist
     // getOrCreate returns the default session (applying only the runtime
     // SQL confs, never extensions), so clear it to force a NEW
-    // SparkSession (same context) with extensions
+    // SparkSession (same context)
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
-    try {
-      // spark.sql.extensions is a STATIC conf read at SparkContext
-      // creation; this JVM's context already exists, so exercise the
-      // same injection through the programmatic builder hook
-      val s2 = SparkSession.builder()
-        .withExtensions(new GraftExtensions())
-        .getOrCreate()
+    try f(make(SparkSession.builder()))
+    finally {
+      SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  private def thetaJoinPlan(s: SparkSession): String = {
+    val probe = s.range(0, 100).toDF("x")
+    val ranges = s.range(0, 10).selectExpr("id * 10 AS lo", "id * 10 + 10 AS hi")
+    probe.join(ranges, probe("x") >= ranges("lo") && probe("x") < ranges("hi"))
+      .queryExecution.executedPlan.toString
+  }
+
+  test("GraftExtensions injects cosine_sim into sessions via spark.sql.extensions") {
+    // spark.sql.extensions is a STATIC conf read at SparkContext
+    // creation; this JVM's context already exists, so exercise the
+    // same injection through the programmatic builder hook
+    withFreshSession(_.withExtensions(new GraftExtensions()).getOrCreate()) { s2 =>
       val r = s2.sql(
         """SELECT cosine_sim(array(cast(1.0 as float), cast(0.0 as float)),
           |                  array(cast(1.0 as float), cast(0.0 as float))) AS c""".stripMargin)
@@ -171,15 +187,51 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
       assert(math.abs(r.head.getDouble(0) - 1.0) < 1e-12)
       // nfc_normalize rides the same extension: decomposed e+COMBINING
       // ACUTE collapses to the composed codepoint (2 chars -> 1)
-      val n = s2.sql("SELECT nfc_normalize('café') AS t, length(nfc_normalize('café')) AS l")
+      val n = s2.sql("SELECT nfc_normalize('café') AS t, length(nfc_normalize('café')) AS l")
         .collect().head
       assert(n.getString(0) == "café" && n.getInt(1) == 4)
       // idempotent on already-NFC text (incl. the fast path)
       assert(s2.sql("SELECT nfc_normalize('café') AS t").collect().head.getString(0) == "café")
-    } finally {
-      SparkSession.clearDefaultSession(); SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+      assert(s2.sql("SELECT simhash64('the quick brown fox')").head().getLong(0) ==
+        TextSketch.simhash64("the quick brown fox"))
+      assert(s2.sql("SELECT word_ngrams(split('a b c', ' '), 2)").head().getSeq[String](0) ==
+        Seq("a b", "b c"))
+      assert(GraftExtensions.functions.forall(f => s2.catalog.functionExists(f._1.funcName)))
+      // the rule: inert until the width is set, then the theta join
+      // plans as an equi-join
+      assert(thetaJoinPlan(s2).contains("NestedLoop"))
+      s2.conf.set(graft.plans.RangeJoinRewrite.WidthConf, "16")
+      assert(!thetaJoinPlan(s2).contains("NestedLoop"))
+    }
+  }
+
+  test("a declared query plans in a session built without the extension") {
+    val dir = "/root/testdata/sf0.001"
+    val names = Seq("q12_ngram_jaccard", "q13_cosine_topk", "q38_nfc_normalize", "x07_simhash_dedup")
+    def rows(s: SparkSession, name: String): Seq[String] =
+      SparkEntry.queries(name)(s, dir).collect().map(_.toString).sorted.toSeq
+    val want = names.map(n => rows(spark, n))
+    val got = withFreshSession(_.getOrCreate()) { s2 =>
+      assert(!s2.catalog.functionExists("cosine_sim"))
+      names.map(n => rows(s2, n))
+    }
+    names.indices.foreach { i =>
+      val same = got(i) == want(i) && want(i).nonEmpty
+      assert(same, names(i))
+    }
+  }
+
+  test("install is idempotent and keeps an unrelated optimizer rule") {
+    object KeepPlan extends org.apache.spark.sql.catalyst.rules.Rule[
+        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
+      def apply(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = p
+    }
+    withFreshSession(_.getOrCreate()) { s2 =>
+      s2.experimental.extraOptimizations = Seq(KeepPlan)
+      GraftExtensions.install(s2)
+      GraftExtensions.install(s2)
+      assert(s2.experimental.extraOptimizations == Seq(KeepPlan, graft.plans.RangeJoinRewrite))
+      assert(GraftExtensions.functions.forall(f => s2.catalog.functionExists(f._1.funcName)))
     }
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.WordNgrams
 import graft.util.Sessions
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -26,7 +25,6 @@ class WordNgramsSpec extends AnyFunSuite {
   )
 
   test("word_ngrams(t, 2) == zip_with(slice, slice, concat) (q49 form)") {
-    WordNgrams.register(spark)
     val df = texts.toDF("text").select(split(col("text"), " ").as("t"))
     val got = df.select(expr("word_ngrams(t, 2)").as("g")).collect().map(_.getSeq[String](0))
     val want = df.select(zip_with(
@@ -38,7 +36,6 @@ class WordNgramsSpec extends AnyFunSuite {
   }
 
   test("word_ngrams(t, 3) == guarded transform/element_at (q12/q78 form)") {
-    WordNgrams.register(spark)
     val df = texts.toDF("text").select(split(col("text"), " ").as("w"))
     val got = df.select(expr("word_ngrams(w, 3)").as("g")).collect().map(_.getSeq[String](0))
     val want = df.select(
@@ -52,7 +49,6 @@ class WordNgramsSpec extends AnyFunSuite {
   }
 
   test("word_ngrams(t, 5) == transform(sequence, concat_ws(slice)) under size>=5 (q28 form)") {
-    WordNgrams.register(spark)
     val df = texts.toDF("text").select(split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 5)
     val got = df.select(expr("word_ngrams(t, 5)").as("g")).collect().map(_.getSeq[String](0))
@@ -65,7 +61,6 @@ class WordNgramsSpec extends AnyFunSuite {
   }
 
   test("size < n yields an empty array, n == 1 yields the tokens") {
-    WordNgrams.register(spark)
     val df = Seq("one two").toDF("text").select(split(col("text"), " ").as("t"))
     assert(df.select(expr("word_ngrams(t, 5)")).head().getSeq[String](0).isEmpty)
     assert(df.select(expr("word_ngrams(t, 1)")).head().getSeq[String](0) == Seq("one", "two"))
