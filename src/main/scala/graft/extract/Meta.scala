@@ -1,6 +1,7 @@
 package graft.extract
 
 import graft.html.{Html5Tokenizer, KernelScratch, TagOpen, TextBuf}
+import java.util.Locale
 import scala.util.control.ControlThrowable
 
 /** Page metadata extraction — title, description, OpenGraph, canonical
@@ -56,11 +57,11 @@ object Meta {
       private val titleBuf = new TextBuf(ks)
 
       private def relHasToken(rel: String, tok: String): Boolean =
-        rel.toLowerCase.split("[ \t\r\n]+").contains(tok)
+        rel.toLowerCase(Locale.ROOT).split("[ \t\r\n]+").contains(tok)
 
       def tagOpen(t: TagOpen): Unit = t.name match {
         case "html" =>
-          if (lang.isEmpty) lang = t.attrOrEmpty("lang").toLowerCase
+          if (lang.isEmpty) lang = t.attrOrEmpty("lang").toLowerCase(Locale.ROOT)
         case "title" if !t.selfClosing =>
           inTitle = title.isEmpty
           titleBuf.clear()
@@ -68,7 +69,7 @@ object Meta {
           val key = {
             val n = t.attrOrEmpty("name")
             if (n.nonEmpty) n else t.attrOrEmpty("property")
-          }.toLowerCase
+          }.toLowerCase(Locale.ROOT)
           val v = t.attrOrEmpty("content")
           key match {
             case "description"            => if (desc.isEmpty) desc = v

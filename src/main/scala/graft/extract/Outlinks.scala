@@ -1,6 +1,7 @@
 package graft.extract
 
 import graft.html.{Html5Tokenizer, TagOpen}
+import java.util.Locale
 import scala.collection.mutable.ArrayBuffer
 
 /** Outlink extraction — the web-graph construction operator a crawl-scale
@@ -30,7 +31,8 @@ object Outlinks {
 
   /** Host of an absolute http(s) URL; "" when unparseable. Manual parse —
     * no java.net.URI (throws on hostile crawl URLs) and no allocation
-    * beyond the substring. Strips userinfo and port, lowercases. */
+    * beyond the substring. Strips userinfo and port, lowercases; an
+    * unclosed `[` gives "". */
   def host(url: String): String = {
     val sep = url.indexOf("://")
     val start =
@@ -48,11 +50,17 @@ object Outlinks {
     var i = start
     while (i < end) { if (url.charAt(i) == '@') at = i; i += 1 }
     if (at >= 0) s = at + 1
+    // [IPv6 literal]: brackets kept, as java.net.URI.getHost keeps them
+    if (s < end && url.charAt(s) == '[') {
+      val close = url.indexOf(']', s)
+      if (close < 0 || close >= end) return ""
+      return url.substring(s, close + 1).toLowerCase(Locale.ROOT)
+    }
     // host:port
     var colon = end
     i = s
     while (i < colon) { if (url.charAt(i) == ':') colon = i else i += 1 }
-    if (s >= colon) "" else url.substring(s, colon).toLowerCase
+    if (s >= colon) "" else url.substring(s, colon).toLowerCase(Locale.ROOT)
   }
 
   /** Resolve an href against the page's host. Returns "" for
@@ -67,7 +75,7 @@ object Outlinks {
       val slash = h.indexOf('/')
       if (colon > 0 && (slash < 0 || colon < slash)) {
         // scheme-qualified
-        val scheme = h.substring(0, colon).toLowerCase
+        val scheme = h.substring(0, colon).toLowerCase(Locale.ROOT)
         if (scheme == "http" || scheme == "https") host(h) else ""
       } else baseHost // relative or root-relative path
     }

@@ -1,5 +1,7 @@
 package graft.extract
 
+import java.util.Locale
+
 /** robots.txt parsing + allow/disallow evaluation per RFC 9309 — the
   * crawl-politeness operator every web-scale ingest runs BEFORE fetch
   * scheduling (the reference consumes already-fetched documents; a
@@ -41,7 +43,7 @@ object Robots {
       }.trim
       val c = line.indexOf(':')
       if (c > 0) {
-        val k = line.substring(0, c).trim.toLowerCase
+        val k = line.substring(0, c).trim.toLowerCase(Locale.ROOT)
         val v = line.substring(c + 1).trim
         if (k == "sitemap" && v.nonEmpty) seen += v
       }
@@ -63,7 +65,7 @@ object Robots {
     selectGroups(txt, agent)._2
 
   private def selectGroups(txt: String, agent: String): (Seq[Rule], Option[Double]) = {
-    val want = agent.toLowerCase
+    val want = agent.toLowerCase(Locale.ROOT)
     // collect groups: (agent tokens, rules, crawl-delay)
     val groups = scala.collection.mutable.ArrayBuffer
       .empty[(List[String], List[Rule], Option[Double])]
@@ -80,12 +82,12 @@ object Robots {
       if (line.nonEmpty) {
         val colon = line.indexOf(':')
         if (colon > 0) {
-          val key = line.substring(0, colon).trim.toLowerCase
+          val key = line.substring(0, colon).trim.toLowerCase(Locale.ROOT)
           val value = line.substring(colon + 1).trim
           key match {
             case "user-agent" =>
               if (!inHeader) closeGroup()
-              curAgents = value.toLowerCase :: curAgents
+              curAgents = value.toLowerCase(Locale.ROOT) :: curAgents
               inHeader = true
             case "allow" if curAgents.nonEmpty =>
               curRules = Rule(allow = true, value) :: curRules; inHeader = false

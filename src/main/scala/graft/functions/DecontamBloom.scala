@@ -2,13 +2,18 @@ package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Shared word-5-gram overlap counting against a broadcast Bloom filter
-  * of benchmark grams — the map-side core of both the batch map-only
-  * decontamination (x24) and its streaming-ingest form (x28). Kept as
-  * ONE function so the two paths cannot drift. */
+/** Word-5-gram overlap counting against a broadcast Bloom filter of
+  * benchmark grams: ONE map operator that the batch decontamination
+  * (x24) and its streaming-ingest form (x28) both apply, so the two
+  * paths cannot drift. */
 object DecontamBloom {
+
+  /** A doc sharing at least this many distinct grams with the benchmark
+    * counts as contaminated (q28, x24, x28). */
+  val MinOverlap = 3
 
   /** A broadcast Bloom filter at fpp 1e-6 over the strings of `grams`'
     * column `g`, sized from their actual count: a fixed capacity silently
@@ -17,6 +22,17 @@ object DecontamBloom {
   def broadcastFilter(grams: DataFrame): Broadcast[BloomFilter] = {
     val bf = grams.stat.bloomFilter("g", math.max(1000L, grams.count()), 1e-6)
     grams.sparkSession.sparkContext.broadcast(bf)
+  }
+
+  /** `(doc_id, lang, text)` rows, batch or stream, to `(doc_id long,
+    * lang, n_overlap)`: a map-only, state-free operator, so a stream
+    * needs no form of its own. */
+  def overlaps(docs: DataFrame, bf: Broadcast[BloomFilter]): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select(col("doc_id").cast("long"), col("lang"), col("text"))
+      .as[(Long, String, String)]
+      .map { case (id, lang, text) => (id, lang, overlapCount(text, bf.value)) }
+      .toDF("doc_id", "lang", "n_overlap")
   }
 
   /** Number of DISTINCT word 5-grams of `text` the filter might

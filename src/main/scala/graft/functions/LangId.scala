@@ -1,5 +1,7 @@
 package graft.functions
 
+import java.util.Locale
+
 /** N-gram-heuristic language identifier (training-data pipeline op).
   *
   * Deterministic and dependency-free: scores a text against small
@@ -50,7 +52,7 @@ object LangId {
     if (cjk * 20 > scriptChars) return "zh"
     if (cyr * 5 > scriptChars) return "ru"
     // latin-script languages: profile n-gram hit rate per 1000 chars
-    val hay = " " + probe.toLowerCase + " "
+    val hay = " " + probe.toLowerCase(Locale.ROOT) + " "
     val scored = profiles.map { case (lang, grams) =>
       lang -> grams.map(g => countOcc(hay, g)).sum
     }

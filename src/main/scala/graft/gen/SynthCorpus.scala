@@ -5,6 +5,7 @@ import graft.html.Entities
 import graft.pdf.PdfWriter
 import graft.util.{Hash64, SplitMix64, Zipf}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.Locale
 
 /** One row of the `pages` table (BASELINE.json input_hint shape). */
 final case class PageRow(url: String, warc_ts: java.sql.Timestamp,
@@ -317,7 +318,7 @@ object SynthCorpus {
         i += 1
       } else if (withMath) {
         if (r.nextInt(2) == 0)
-          out += Para(Seq(Txt(s"The identity \\(x^{${1 + r.nextInt(9)}} + y = ${r.nextInt(50)}\\) holds " + sentence(r).toLowerCase)))
+          out += Para(Seq(Txt(s"The identity \\(x^{${1 + r.nextInt(9)}} + y = ${r.nextInt(50)}\\) holds " + sentence(r).toLowerCase(Locale.ROOT))))
         else
           out += Para(Seq(Txt(s"\\[ \\sum_{i=0}^{${1 + r.nextInt(20)}} i^2 = ${r.nextInt(999)} \\]")))
         i += 1
@@ -400,7 +401,7 @@ object SynthCorpus {
         var blocks = contentBlocks(r, zh, nBlocks, withMath, colored = other == "color")
         if (other == "unbalanced") {
           // inject an unbalanced \left to trigger the repair path
-          blocks = blocks :+ Para(Seq(Txt("Broken math \\left( a + b follows " + sentence(r).toLowerCase)))
+          blocks = blocks :+ Para(Seq(Txt("Broken math \\left( a + b follows " + sentence(r).toLowerCase(Locale.ROOT))))
         }
         if (other == "color" && !blocks.exists(_.cls.nonEmpty)) {
           // guarantee at least one colored block for the color fixture

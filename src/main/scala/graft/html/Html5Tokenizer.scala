@@ -1,5 +1,7 @@
 package graft.html
 
+import java.util.Locale
+
 /** A start tag, the tokenizer's one materialized event. The span is the
   * BYTE span [startByte, endByte) it was decoded from, so downstream
   * span offsets always index into the original payload (BASELINE.json:
@@ -76,7 +78,8 @@ object Html5Tokenizer {
     // either way — both paths fall through to utf-8).
     val ws = found + CharsetLit.length
     val we = math.min(ws + 40, n)
-    val head = new String(bytes, ws, we - ws, java.nio.charset.StandardCharsets.ISO_8859_1).toLowerCase
+    val head = new String(bytes, ws, we - ws, java.nio.charset.StandardCharsets.ISO_8859_1)
+      .toLowerCase(Locale.ROOT)
     var j = 0
     if (j < head.length && (head.charAt(j) == '"' || head.charAt(j) == '\'')) j += 1
     val start = j

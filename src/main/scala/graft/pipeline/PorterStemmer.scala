@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.Locale
+
 /** The Porter stemming algorithm in TWO published flavors:
   *
   *  - [[stemOriginal]]: M.F. Porter, "An algorithm for suffix
@@ -51,7 +53,7 @@ object PorterStemmer {
   /** nltk NLTK_EXTENSIONS behavior — what `nltk.meteor_score` stems
     * with. */
   def stem(word: String): String = {
-    val lower = word.toLowerCase
+    val lower = word.toLowerCase(Locale.ROOT)
     Pool.get(lower) match {
       case Some(s) => s
       case None => run(lower, nltk = true)
@@ -59,7 +61,7 @@ object PorterStemmer {
   }
 
   /** The unextended 1980 algorithm. */
-  def stemOriginal(word: String): String = run(word.toLowerCase, nltk = false)
+  def stemOriginal(word: String): String = run(word.toLowerCase(Locale.ROOT), nltk = false)
 
   private def run(word: String, nltk: Boolean): String = {
     if (word.length <= 2) return word

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.GraftExtensions
 import graft.SparkEntry.SynthRoot
+import graft.functions.DecontamBloom
 import graft.util.Parquet
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.apache.spark.sql.expressions.Window
@@ -169,11 +170,13 @@ object Query {
   }
 
   /** The per-lang audit of q28 and x24 over (lang, n_overlap): a doc
-    * sharing >= 3 grams with the benchmark counts as contaminated. */
+    * sharing at least `DecontamBloom.MinOverlap` grams with the benchmark
+    * counts as contaminated. */
   private[queries] def decontamAudit(overlaps: DataFrame): DataFrame =
     overlaps.groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("n_overlap") >= 3, 1L).otherwise(0L)).as("n_contaminated"),
+        sum(when(col("n_overlap") >= DecontamBloom.MinOverlap, 1L).otherwise(0L))
+          .as("n_contaminated"),
         sum(col("n_overlap")).as("sum_overlap"))
       .orderBy("lang")
 }

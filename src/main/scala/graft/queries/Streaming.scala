@@ -1,7 +1,9 @@
 package graft.queries
 
 import graft.SparkEntry.{SynthRoot, microTables}
-import graft.functions.CountMin
+import graft.extract.ExtractMode
+import graft.functions.{CountMin, DecontamBloom}
+import graft.pipeline.Pipeline
 import graft.queries.Query.{runDir, scd2Snapshots, stream, t}
 import graft.streaming.StreamingExtract
 import graft.streaming.StreamingExtract.drain
@@ -11,20 +13,19 @@ import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming queries: Structured Streaming forms of extraction,
   * sessionization, dedup, decontamination, joins, Count-Min, funnels and
-  * SCD2, each drained with an AvailableNow trigger. */
+  * SCD2, each a stream source drained by `StreamingExtract.drain`. */
 object Streaming {
   val all: Seq[Query] = Seq(
     Query("x28_stream_decontam", (s, dir) => {
-      // decontamination AT THE STREAM BOUNDARY: the x24 broadcast Bloom
-      // filter applied to a streaming ingest of the documents table, so
-      // contaminated docs are flagged BEFORE entering the corpus —
-      // filtering a 100 TB corpus after the fact re-reads 100 TB;
-      // filtering the ingest stream is free. Map-only per micro-batch,
-      // state-free, same shared overlap kernel as x24
-      // (DecontamBloom.overlapCount — the two paths cannot drift).
-      val bc = graft.functions.DecontamBloom.broadcastFilter(
-        Query.benchGrams(t(s, dir, "documents")))
-      drain(StreamingExtract.decontaminateStream(stream(s, dir, "documents"), bc),
+      // decontamination AT THE STREAM BOUNDARY: x24's overlap map over a
+      // streaming ingest of the documents table, so contaminated docs are
+      // flagged BEFORE entering the corpus — filtering a 100 TB corpus
+      // after the fact re-reads 100 TB; filtering the ingest stream is
+      // free. Map-only per micro-batch and state-free; the operator is
+      // x24's own (DecontamBloom.overlaps), so the two cannot drift.
+      val bc = DecontamBloom.broadcastFilter(Query.benchGrams(t(s, dir, "documents")))
+      drain(DecontamBloom.overlaps(stream(s, dir, "documents"), bc)
+          .withColumn("contaminated", col("n_overlap") >= DecontamBloom.MinOverlap),
           OutputMode.Append(), runDir("sdecontam"))
         .groupBy(col("contaminated"))
         .agg(count(lit(1)).as("n_docs"),
@@ -33,12 +34,13 @@ object Streaming {
         .orderBy("contaminated")
     }),
     Query("x12_streaming_extract", (s, _) => {
+      // batch extraction over a stream source: Pipeline.extract is
+      // applied unchanged, and the file sink's commit log makes the
+      // drain exactly-once on replay
       val (pagesDir, _) = microTables(s)
-      val run = runDir("stream")
-      val q = StreamingExtract.availableNow(
-        s, s"$pagesDir/data/*.parquet", s"$run/out", s"$run/ckpt")
-      q.awaitTermination()
-      s.read.parquet(s"$run/out")
+      val pages = StreamingExtract.pagesReader(s).parquet(s"$pagesDir/data/*.parquet")
+      drain(Pipeline.extract(pages, ExtractMode.Plain).toDF(), OutputMode.Append(),
+          runDir("stream"))
         .groupBy(col("status"))
         .agg(count(lit(1)).as("n"), sum(length(col("text"))).as("out_chars"))
         .orderBy("status")
@@ -50,7 +52,7 @@ object Streaming {
       // right after a config change" audit as continuous ingest.
       // StreamJoinSpec pins streaming == batch-join equality incl.
       // cross-micro-batch matches; here the micro corpus drains under
-      // availableNow and the joined rows aggregate per host.
+      // AvailableNow and the joined rows aggregate per host.
       val (pagesDir, _) = microTables(s)
       val (f, c) = StreamingExtract.fetchAndChangeStreams(s, s"$pagesDir/data/*.parquet")
       val joined = StreamingExtract.fetchesNearChanges(
@@ -165,7 +167,7 @@ object Streaming {
     Query("x20_crawl_sessions", (s, _) => {
       // custom-state streaming (flatMapGroupsWithState + event-time
       // timeout): per-host crawl sessionization with a 7-day gap over the
-      // micro corpus. availableNow drains the corpus in one batch, so the
+      // micro corpus. The drain takes the corpus in one batch, so the
       // STREAM emits only sessions CLOSED by in-data gaps; each host's
       // trailing session stays in state. The state store is then read
       // back (state data source) and published as the OPEN side, so

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.functions.DecontamBloom
 import graft.queries.Query.t
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
@@ -278,7 +279,7 @@ object TextDedup {
       Query.decontamAudit(corpus.join(overlaps, Seq("doc_id"), "left")
         .select(col("lang"), coalesce(col("n_overlap"), lit(0L)).as("n_overlap")))
     }, oracle = Some(
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT CAST(doc_id AS BIGINT) AS doc_id, lang, text FROM documents WHERE doc_id % 101 <> 0
         |  UNION ALL
         |  SELECT CAST(doc_id + (SELECT max(doc_id) + 1 FROM documents) AS BIGINT),
@@ -295,7 +296,7 @@ object TextDedup {
         |ov AS (
         |  SELECT doc_id, count(*) AS n_overlap FROM cg JOIN bgrams USING (g) GROUP BY doc_id)
         |SELECT lang, count(*) AS n_docs,
-        |  CAST(sum(CASE WHEN coalesce(n_overlap, 0) >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
+        |  CAST(sum(CASE WHEN coalesce(n_overlap, 0) >= ${DecontamBloom.MinOverlap} THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated,
         |  CAST(sum(coalesce(n_overlap, 0)) AS BIGINT) AS sum_overlap
         |FROM corpus LEFT JOIN ov USING (doc_id)
         |GROUP BY lang ORDER BY lang""".stripMargin)),
@@ -1625,13 +1626,9 @@ object TextDedup {
       // misses contamination); at fpp 1e-6 over this corpus the result
       // is exactly q28's (DecontamBloomSpec asserts equality). Spark's
       // sketch BloomFilter is seed-fixed — deterministic across runs.
-      import s.implicits._
       val d = t(s, dir, "documents")
-      val bc = graft.functions.DecontamBloom.broadcastFilter(Query.benchGrams(d))
-      Query.decontamAudit(Query.decontamCorpus(d).as[(Long, String, String)].map {
-        case (_, lang, text) =>
-          (lang, graft.functions.DecontamBloom.overlapCount(text, bc.value))
-      }.toDF("lang", "n_overlap"))
+      val bc = DecontamBloom.broadcastFilter(Query.benchGrams(d))
+      Query.decontamAudit(DecontamBloom.overlaps(Query.decontamCorpus(d), bc))
     },
       planNote = "Review point: the corpus side is SerializeFromObject over ONE map " +
         "(gram membership checked against the broadcast Bloom filter inside " +

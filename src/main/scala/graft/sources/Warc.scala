@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.util.Locale
 import java.util.zip.GZIPInputStream
 
 /** Minimal WARC/1.0–1.1 reader for Common-Crawl-style captures — the
@@ -89,7 +90,7 @@ object Warc {
     header.split("\r\n").foreach { line =>
       val ci = line.indexOf(':')
       if (ci > 0) {
-        val k = line.substring(0, ci).trim.toLowerCase
+        val k = line.substring(0, ci).trim.toLowerCase(Locale.ROOT)
         val v = line.substring(ci + 1).trim
         k match {
           case "warc-type"      => recType = v
@@ -125,7 +126,7 @@ object Warc {
     val headers = new String(b, start, he - start,
       java.nio.charset.StandardCharsets.ISO_8859_1)
     val ctype = headers.split("\r\n").collectFirst {
-      case l if l.toLowerCase.startsWith("content-type:") => l.substring(13).trim
+      case l if l.toLowerCase(Locale.ROOT).startsWith("content-type:") => l.substring(13).trim
     }.getOrElse("")
     (java.util.Arrays.copyOfRange(b, he + 4, end), ctype)
   }

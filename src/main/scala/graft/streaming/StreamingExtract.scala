@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.extract.ExtractMode
-import graft.pipeline.Pipeline
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamReader, GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
 /** One page observation entering sessionization. */
@@ -60,12 +58,14 @@ final case class ScdKeyState(obs: Seq[(Long, String, Boolean)])
 final case class ScdIntervals(url: String, n_obs: Long,
     intervals: Seq[(String, Long, Option[Long])])
 
-/** Incremental extraction as a Structured Streaming job (SURVEY.md §2.9):
-  * the idiomatic Spark home for the reference's resume-loop behavior.
-  * `Trigger.AvailableNow` drains everything currently committed and stops
-  * — batch semantics with streaming checkpoints, so a re-run picks up
-  * exactly where the checkpoint left off (the streaming twin of the
-  * lineage anti-join in ResumableRun).
+/** The engine's Structured Streaming surface (SURVEY.md §2.9), the
+  * Spark home of the reference's resume loop. A streaming query is a
+  * batch operator applied to a stream source and drained through
+  * `drain`: the parquet file sink's commit log makes the drain
+  * exactly-once on replay, so no query needs a sink of its own. This
+  * module holds the stream sources, that drain, and the operators that
+  * need cross-batch state: sessions, dedup, funnel, SCD2 and the
+  * interval join.
   */
 object StreamingExtract {
 
@@ -84,12 +84,14 @@ object StreamingExtract {
 
   /** Runs `stream` under `Trigger.AvailableNow` until it has processed
     * every input present at its start, and returns what it wrote. An
-    * `Append` stream goes to parquet in `run/out`, read back with the
-    * stream's own schema, so a drain over no input files returns 0 rows
-    * with the stream's columns; an `Update` or `Complete` stream fills a
-    * memory table named after the last segment of `run`. The checkpoint
-    * is `run/ckpt` either way, for a caller that reads the drained state
-    * (`openSessions`). */
+    * `Append` stream goes to parquet in `run/out`, exactly-once: a batch
+    * replayed after a lost commit marker finds its files already in the
+    * sink's log (`run/out/_spark_metadata`) and adds none. It is read
+    * back with the stream's own schema, so a drain over no input files
+    * returns 0 rows with the stream's columns. An `Update` or `Complete`
+    * stream fills a memory table named after the last segment of `run`.
+    * The checkpoint is `run/ckpt` either way, for a caller that reads the
+    * drained state (`openSessions`). */
   def drain(stream: Dataset[_], mode: OutputMode, run: String): DataFrame = {
     val spark = stream.sparkSession
     val toMemory = mode != OutputMode.Append()
@@ -99,32 +101,6 @@ object StreamingExtract {
     (if (toMemory) w.format("memory").queryName(name)
      else w.format("parquet").option("path", s"$run/out")).start().awaitTermination()
     if (toMemory) spark.table(name) else spark.read.schema(stream.schema).parquet(s"$run/out")
-  }
-
-  /** Start an available-now streaming extraction over a parquet directory
-    * of pages, writing extracted parquet via foreachBatch. Returns the
-    * query; caller awaits termination.
-    *
-    * The sink is IDEMPOTENT under micro-batch retry: foreachBatch is
-    * at-least-once (a batch that fails after a partial — or even
-    * complete — write is replayed from the checkpoint on restart), so a
-    * plain `mode("append").parquet(outDir)` would duplicate rows. Each
-    * batch instead overwrites its own `batch_id=<id>` partition
-    * directory: a replay rewrites the same path with the same
-    * deterministic content, so re-running after a mid-batch kill yields
-    * exactly the single-shot result (asserted by the kill/rerun test in
-    * StreamingAndMultimodalSpec). Readers see `batch_id` as a normal
-    * partition column via directory discovery. */
-  def availableNow(spark: SparkSession, pagesGlob: String, outDir: String,
-      checkpointDir: String, mode: ExtractMode = ExtractMode.Plain): StreamingQuery = {
-    pagesReader(spark).parquet(pagesGlob).writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val extracted = Pipeline.extract(batch, mode).toDF()
-        extracted.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .start()
   }
 
   /** Per-host crawl sessionization — the CUSTOM-STATE streaming surface
@@ -190,7 +166,7 @@ object StreamingExtract {
 
   /** OPEN sessions left in the state store after a (drained) run — the
     * other half of the session accounting (VERDICT r2 missing #1): an
-    * availableNow drain emits only sessions CLOSED by in-data gaps, so
+    * AvailableNow drain emits only sessions CLOSED by in-data gaps, so
     * every host's trailing session is still in state; a static-corpus
     * user summing only closed pages can never reconcile against input
     * row counts. This reads the query's state directly via Spark's state
@@ -407,31 +383,9 @@ object StreamingExtract {
       .as[DocSig]
   }
 
-  /** Decontamination AT THE STREAM BOUNDARY: flag each arriving doc's
-    * word-5-gram overlap against a broadcast Bloom filter of benchmark
-    * grams (the x24 filter applied on ingest), so contaminated
-    * documents are split off BEFORE they ever enter the corpus — the
-    * production place for this check (filtering a 100 TB corpus after
-    * the fact re-reads 100 TB; filtering the ingest stream is free).
-    * Map-only per micro-batch, state-free, AvailableNow-safe. Input:
-    * any streaming frame with (doc_id, lang, text). */
-  def decontaminateStream(docs: DataFrame,
-      bf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter],
-      minOverlap: Int = 3): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col("lang"), col("text"))
-      .as[(Long, String, String)]
-      .map { case (id, lang, text) =>
-        val n = graft.functions.DecontamBloom.overlapCount(text, bf.value)
-        (id, lang, n, n >= minOverlap)
-      }
-      .toDF("doc_id", "lang", "n_overlap", "contaminated")
-  }
-
   /** Windowed extraction-rate monitoring over the crawl timestamps —
     * watermark + tumbling window aggregation (the streaming-native agg
-    * surface; batch tests drive it with availableNow). */
+    * surface; tests drain it under AvailableNow). */
   def rateByWindow(spark: SparkSession, pagesGlob: String): DataFrame = {
     pagesReader(spark).parquet(pagesGlob)
       .withWatermark("warc_ts", "1 day")

@@ -19,6 +19,13 @@ class OutlinksSpec extends AnyFunSuite {
     assert(Outlinks.host("https://") == "")
   }
 
+  test("host: an IPv6 literal keeps its brackets, as java.net.URI.getHost does") {
+    assert(Outlinks.host("http://[::1]:8080/x") == "[::1]")
+    assert(new java.net.URI("http://[::1]:8080/x").getHost == "[::1]")
+    assert(Outlinks.host("https://user@[2001:DB8::1]/p") == "[2001:db8::1]")
+    assert(Outlinks.host("http://[::1/x") == "")
+  }
+
   test("relative and root-relative hrefs resolve to the page host") {
     val ls = links("""<a href="/s1">Nav</a> <a href="sub/page.html">Rel</a>""")
     assert(ls.map(_.targetHost) == Seq("src.example.com", "src.example.com"))

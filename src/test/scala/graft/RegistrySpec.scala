@@ -53,4 +53,20 @@ class RegistrySpec extends AnyFunSuite {
     assert(log.contains("unknown query names: q01_typo"), log)
     assert(!out.exists)
   }
+
+  test("every case fold in main code names its locale") {
+    // under tr-TR "I".toLowerCase is "ı": a bare String fold makes the
+    // output depend on the JVM's default locale. Character.toUpperCase(c)
+    // and c.toLower fold one char and stay allowed.
+    import scala.jdk.CollectionConverters._
+    val bare = """\.to(Lower|Upper)Case(\(\s*\)|(?![\w(]))""".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val hits = files.flatMap { f =>
+      java.nio.file.Files.readAllLines(f, UTF_8).asScala.zipWithIndex.collect {
+        case (l, i) if bare.findFirstIn(l).isDefined => s"$f:${i + 1}"
+      }
+    }
+    assert(files.nonEmpty && hits.isEmpty, hits)
+  }
 }

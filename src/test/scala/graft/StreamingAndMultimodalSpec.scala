@@ -1,46 +1,47 @@
 package graft
 
+import graft.extract.ExtractMode
 import graft.functions.{Multimodal, TextSketch}
 import graft.icelite.IceLite
+import graft.pipeline.Pipeline
+import graft.streaming.StreamingExtract
 import graft.util.Sessions
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingAndMultimodalSpec extends AnyFunSuite {
 
   private lazy val spark = Sessions.local(4)
 
-  test("availableNow streaming extraction drains the snapshot and is resumable") {
+  private def pagesGlob: String = s"${SparkEntry.microTables(spark)._1}/data/*.parquet"
+
+  /** x12's stream: batch Plain extraction over a stream of the micro
+    * pages, drained into `run`. */
+  private def drainExtract(run: String) =
+    StreamingExtract.drain(Pipeline.extract(StreamingExtract.pagesReader(spark)
+      .parquet(pagesGlob), ExtractMode.Plain).toDF(), OutputMode.Append(), run)
+
+  test("drained stream extraction covers the snapshot and is resumable") {
     val (pagesDir, _) = SparkEntry.microTables(spark)
     val run = s"${SparkEntry.SynthRoot}/stream_test_${System.nanoTime()}"
-    val q = graft.streaming.StreamingExtract.availableNow(
-      spark, s"$pagesDir/data/*.parquet", s"$run/out", s"$run/ckpt")
-    q.awaitTermination()
-    val out = spark.read.parquet(s"$run/out")
     val expected = IceLite.read(spark, pagesDir).count()
-    assert(out.count() == expected)
-    // second run with the same checkpoint: nothing new to process
-    val q2 = graft.streaming.StreamingExtract.availableNow(
-      spark, s"$pagesDir/data/*.parquet", s"$run/out", s"$run/ckpt")
-    q2.awaitTermination()
-    assert(spark.read.parquet(s"$run/out").count() == expected)
+    assert(drainExtract(run).count() == expected)
+    // second drain on the same checkpoint: nothing new to process
+    assert(drainExtract(run).count() == expected)
   }
 
-  test("availableNow sink is idempotent under micro-batch replay") {
-    val (pagesDir, _) = SparkEntry.microTables(spark)
+  test("drained stream extraction is exactly-once under micro-batch replay") {
     val run = s"${SparkEntry.SynthRoot}/stream_replay_${System.nanoTime()}"
-    val q = graft.streaming.StreamingExtract.availableNow(
-      spark, s"$pagesDir/data/*.parquet", s"$run/out", s"$run/ckpt")
-    q.awaitTermination()
-    val once = spark.read.parquet(s"$run/out")
+    val once = drainExtract(run)
     val expected = once.count()
     val urlsOnce = once.select("url").distinct().count()
     assert(expected > 0 && urlsOnce == expected)
     // simulate a crash AFTER the batch wrote its output but BEFORE the
     // checkpoint committed: delete the commit marker so the restart
-    // replays the batch (the foreachBatch at-least-once path). The
-    // batch_id-keyed overwrite must make the replay a no-op.
+    // replays the batch. The file sink's log already holds the batch,
+    // so the replay must add nothing.
     val commits = new java.io.File(s"$run/ckpt/commits")
     val markers = commits.listFiles().filter(_.getName.forall(_.isDigit))
     assert(markers.nonEmpty)
@@ -49,24 +50,32 @@ class StreamingAndMultimodalSpec extends AnyFunSuite {
     // the replay's atomic rename
     new java.io.File(commits, s".${marker.getName}.crc").delete()
     assert(marker.delete())
-    val q2 = graft.streaming.StreamingExtract.availableNow(
-      spark, s"$pagesDir/data/*.parquet", s"$run/out", s"$run/ckpt")
-    q2.awaitTermination()
-    val twice = spark.read.parquet(s"$run/out")
+    val twice = drainExtract(run)
     assert(twice.count() == expected, "replayed batch must not duplicate rows")
     assert(twice.select("url").distinct().count() == urlsOnce)
   }
 
-  test("windowed streaming agg over crawl timestamps produces rows") {
+  test("drained stream extraction equals batch extraction row for row") {
     val (pagesDir, _) = SparkEntry.microTables(spark)
-    val agg = graft.streaming.StreamingExtract.rateByWindow(spark, s"$pagesDir/data/*.parquet")
-    val q = agg.writeStream.outputMode("complete")
-      .format("memory").queryName(s"rate_${System.nanoTime()}")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val name = q.name
-    assert(spark.sql(s"SELECT * FROM $name").count() > 0)
+    def rows(df: DataFrame) =
+      df.select("url", "status", "text", "spans").collect().sortBy(_.getString(0)).toSeq
+    val streamed = rows(drainExtract(s"${SparkEntry.SynthRoot}/stream_eq_${System.nanoTime()}"))
+    val batch = rows(Pipeline.extract(IceLite.read(spark, pagesDir), ExtractMode.Plain).toDF())
+    // texts may hold lone surrogates: compare to a boolean first
+    val same = streamed == batch
+    assert(streamed.nonEmpty && same)
+  }
+
+  test("windowed streaming agg over crawl timestamps produces rows") {
+    val run = s"${SparkEntry.SynthRoot}/rate_${System.nanoTime()}"
+    val streamed = StreamingExtract.drain(StreamingExtract.rateByWindow(spark, pagesGlob),
+      OutputMode.Complete(), run)
+    val batch = spark.read.schema(StreamingExtract.pagesSchema).parquet(pagesGlob)
+      .groupBy(window(col("warc_ts"), "7 days"), col("lang"))
+      .agg(count(lit(1)).as("n_pages"), sum(length(col("html"))).as("bytes_in"))
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val got = rows(streamed)
+    assert(got.nonEmpty && got == rows(batch))
   }
 
   test("multimodal: thumbnail arithmetic, frame sampling, batched features") {

@@ -141,4 +141,24 @@ class TokenizerSpec extends AnyFunSuite {
     val r = toks("<SCRIPT>var a = '<p>';</SCRIPT><p>after</p>")
     assert(r.collect { case x: TextRun => x.text }.mkString == "var a = '<p>';after")
   }
+
+  test("protocol tokens fold the same under a Turkish default locale") {
+    // under tr-TR "I".toLowerCase is "ı": every keyword fold passes
+    // Locale.ROOT, so extracted bytes never depend on the JVM's locale
+    import graft.extract.{Meta, Outlinks, Robots}
+    import graft.sources.Warc
+    val warc = Warc.write(Seq(Warc.Record("https://a.example.com/x",
+      "2024-01-02T03:04:05Z", "text/html", "<p>x</p>".getBytes(UTF_8))))
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      assert(Html5Tokenizer.sniffCharset("<meta charset=ISO-8859-1>".getBytes(UTF_8)) == "iso-8859-1")
+      assert(Meta.extract("""<META NAME="DESCRIPTION" CONTENT="d">""".getBytes(UTF_8))
+        .description == "d")
+      assert(Outlinks.host("HTTP://WIKI.ORG/x") == "wiki.org")
+      assert(Robots.parse("USER-AGENT: *\nDISALLOW: /private", "graftbot") ==
+        Seq(Robots.Rule(allow = false, "/private")))
+      assert(Warc.records(warc).map(_.url) == Vector("https://a.example.com/x"))
+    } finally java.util.Locale.setDefault(prev)
+  }
 }
